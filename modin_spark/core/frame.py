@@ -47,6 +47,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import uuid
 from typing import Iterable, Sequence
 
 import pandas as pd
@@ -71,6 +72,51 @@ def _fresh_name() -> str:
 
 def fresh_names(n: int) -> list[str]:
     return [_fresh_name() for _ in range(n)]
+
+
+# ---------------------------------------------------------------------------
+# pinned intermediates
+# ---------------------------------------------------------------------------
+
+# Bounded FIFO of persisted intermediates (bounded window inputs, transpose
+# inputs, shape-changing-apply task outputs). Evicting beyond PIN_CAP bounds
+# executor storage without coupling cache lifetime to driver GC. Recompute
+# after eviction is correct because every pinned plan is a pure function of
+# its inputs (the apply contract assumes a PURE func, as pandas itself
+# re-invokes apply funcs; an impure func could diverge from the alignment
+# decision baked in at call time — documented limitation).
+PIN_CAP = 16
+PIN_TAG = "__pin__"
+_PINNED: list = []
+
+
+def pin(sdf: SDF) -> SDF:
+    """Persist ``sdf`` and register it in the bounded FIFO; returns the
+    persisted DataFrame, which carries an extra ``PIN_TAG`` column.
+
+    The tag is a fresh uuid literal, so this call's canonical plan is
+    unique: Spark's CacheManager is keyed by canonicalized plan, so two
+    identically-shaped builds (e.g. a bench's second run) would otherwise
+    share one cache entry, and evicting one would clear the other's cache
+    mid-flight."""
+    pinned = sdf.withColumn(PIN_TAG, F.lit(uuid.uuid4().hex)).persist()
+    _PINNED.append(pinned)
+    while len(_PINNED) > PIN_CAP:
+        _unpersist(_PINNED.pop(0))
+    return pinned
+
+
+def unpin(sdf: SDF) -> None:
+    """Release a DataFrame returned by ``pin`` ahead of its FIFO eviction."""
+    _unpersist(sdf)
+    _PINNED[:] = [c for c in _PINNED if c is not sdf]
+
+
+def _unpersist(sdf: SDF) -> None:
+    try:  # session may already be gone at interpreter shutdown
+        sdf.unpersist()
+    except Exception:
+        pass
 
 
 # ---------------------------------------------------------------------------

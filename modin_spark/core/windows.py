@@ -26,7 +26,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from modin_spark.core.frame import ORDER_COL, SparkFrame, fresh_names
+from modin_spark.core.frame import ORDER_COL, PIN_TAG, SparkFrame, fresh_names, pin
 
 BLOCK = 1 << 16  # rows per block: bounds window-state size per task
 _POS = "__pos__"
@@ -89,9 +89,7 @@ def _with_blocks(frame: SparkFrame) -> SparkFrame:
     # replay regime flips — each branch would re-run a full-data
     # TakeOrderedAndProject (ewm_mean's plan held 12 of them: 12 complete
     # scans of the source at 100 TB) while the cache holds <= 65536 rows.
-    # The uuid tag keeps this call's canonical plan unique so a later
-    # identically-shaped build (the bench's second run) can never hit this
-    # cache; lifetime is the shared reshape-cache FIFO.
+    # Lifetime is the shared pin FIFO (core.frame.pin).
     ordered = frame.ensure_order()
     # probe the bound BEFORE the position attach: the offsets broadcast
     # join multiplies Catalyst's maxRows (4000-row head -> 16M), hiding
@@ -113,53 +111,12 @@ def _with_blocks(frame: SparkFrame) -> SparkFrame:
     fr = ordered.with_global_position(_POS)
     fr = fr._same_rows(fr.sdf.withColumn(_BLK, (F.col(_POS) / F.lit(BLOCK)).cast("long")))
     if bounded:
-        import uuid as _uuid
-
-        from modin_spark.pandas.dataframe import _retire_reshape_caches
-
-        fr = fr._same_rows(
-            fr.sdf.withColumn("__wbc__", F.lit(_uuid.uuid4().hex)).persist()
-        )
-        _retire_reshape_caches(fr.sdf)
-        fr = fr._same_rows(fr.sdf.drop("__wbc__"))
+        fr = fr._same_rows(pin(fr.sdf).drop(PIN_TAG))
     return fr
 
 
 def _drop_aux(fr: SparkFrame) -> SparkFrame:
     return fr._same_rows(fr.sdf.drop(_POS, _BLK))
-
-
-def _carry_base(fr: SparkFrame, phys_needed: Sequence[str]) -> SparkFrame:
-    """Column-pruned persist below a carry-branch point (guide §5, §2.4).
-
-    cum/expanding consumers read ``fr.sdf`` from several plan branches (the
-    within-block window, the per-block totals aggregate, the anchor mean) and
-    each branch otherwise replays the full upstream lineage. When the frame's
-    order came from a SORT (order_epoch "sort"), that replay re-runs an
-    O(data) range shuffle + sort per branch; pinning the pruned rows here
-    makes every later branch read the materialized result instead. Gated on
-    the sort epoch because for plain scan-ordered frames the replay is just
-    one extra pruned parquet pass, which measured cheaper than a persist.
-
-    Pruned to exactly index + ORDER + _POS + _BLK + the value columns the
-    caller touches, so it does NOT defeat the scan's column pruning — the
-    failure mode that sank the r15 full-width persist (rolling_pair
-    2.45->4.09 s at sf1). The uuid literal keeps this call's canonical plan
-    unique, so a later identically-shaped build (e.g. the bench's second run)
-    can never hit this cache; the shared reshape-cache FIFO bounds executor
-    storage. NOTE: the returned frame's sdf holds ONLY the pruned columns —
-    callers must touch no data column outside ``phys_needed``.
-    """
-    # MEASURED AND REJECTED at the 10x sf1 rung (r16, interleaved A/B):
-    #   - pruned .persist(): expanding_stats count 0.66 -> 0.91 s (the
-    #     columnar cache build costs more than the one pruned sort replay it
-    #     saves, even though the r15 full-width pruning objection is fixed)
-    #   - .localCheckpoint(eager=False): build time 0.4 -> 5-7 s (RDD
-    #     conversion + materialization dwarfs everything)
-    # The per-branch replay it targeted is ONE extra column-pruned pass per
-    # carry consumer (the halo-explode and narrow-offsets changes removed the
-    # multiplicative replays); leaving it as the documented better regime.
-    return fr
 
 
 def _halo_union(fr_sdf, back: int, fwd: int = 0):
@@ -222,7 +179,7 @@ def cum_op(frame: SparkFrame, positions: Sequence[int], op: str, skipna: bool = 
 
     pandas semantics: NaN rows stay NaN but do not reset the accumulator.
     """
-    fr = _carry_base(_with_blocks(frame), [frame.data_cols[i] for i in positions])
+    fr = _with_blocks(frame)
     w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
     w_carry = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
 
@@ -402,11 +359,7 @@ def interpolate_linear(frame: SparkFrame, positions: Sequence[int], x_col=None, 
     """
     phys = [frame.data_cols[i] for i in positions]
     labels = [frame.columns[i] for i in positions]
-    # keep_all passes every column through to the output — prune to all of
-    # them; otherwise only the interpolated columns (+ the abscissa) are read
-    need = list(frame.data_cols) if keep_all else phys + (
-        [x_col] if x_col is not None else [])
-    fr = _carry_base(_with_blocks(frame), need)
+    fr = _with_blocks(frame)
     xe = F.col(x_col).cast("double") if x_col is not None else F.col(_POS).cast("double")
     w_f = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
     w_b = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(0, Window.unboundedFollowing)
@@ -816,7 +769,7 @@ def expanding_agg(frame: SparkFrame, positions: Sequence[int], agg, min_periods:
     # expanding_pair). sum/mean/min/max/count keep the raw carries.
     need_shift = need_mom or need_var
     phys = [frame.data_cols[i] for i in positions]
-    fr = _carry_base(_with_blocks(frame), phys)
+    fr = _with_blocks(frame)
     labels = [frame.columns[i] for i in positions]
     w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
     w_carry = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
@@ -951,7 +904,7 @@ def expanding_pair(frame: SparkFrame, px: str, py: str, stat: str, min_periods: 
     aggregate broadcasts onto every row, and ALL sums (within-block and
     block carries) accumulate (x−ax), (x−ax)(y−ay), … — centred ≈0, so
     the shortcut formula is well-conditioned at any mean/std ratio."""
-    fr = _carry_base(_with_blocks(frame), [px, py])
+    fr = _with_blocks(frame)
     w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
     w_carry = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
     x, y = F.col(px).cast("double"), F.col(py).cast("double")
@@ -1025,7 +978,7 @@ def expanding_pairwise(frame: SparkFrame, positions: Sequence[int], stat: str,
     fr0 = frame.ensure_order()
     phys = [fr0.data_cols[i] for i in positions]
     labels = [fr0.columns[i] for i in positions]
-    fr = _carry_base(_with_blocks(fr0), phys)
+    fr = _with_blocks(fr0)
     w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
     w_carry = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
     pairs = [(i, j) for i in range(len(phys)) for j in range(i, len(phys))]
@@ -1794,7 +1747,7 @@ def ffill(frame: SparkFrame, positions: Sequence[int], limit: int | None = None,
     distance is checkable; same plan shape."""
     phys = [frame.data_cols[i] for i in positions]
     labels = [frame.columns[i] for i in positions]
-    fr = _carry_base(_with_blocks(frame), list(frame.data_cols) if keep_all else phys)
+    fr = _with_blocks(frame)
     w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
     w_carry = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
 
@@ -1839,7 +1792,7 @@ def bfill(frame: SparkFrame, positions: Sequence[int], limit: int | None = None,
     """Backward-fill: mirror of ffill with following-windows."""
     phys = [frame.data_cols[i] for i in positions]
     labels = [frame.columns[i] for i in positions]
-    fr = _carry_base(_with_blocks(frame), list(frame.data_cols) if keep_all else phys)
+    fr = _with_blocks(frame)
     w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(0, Window.unboundedFollowing)
     w_carry = Window.orderBy(_BLK).rowsBetween(1, Window.unboundedFollowing)
 

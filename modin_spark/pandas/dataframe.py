@@ -18,31 +18,8 @@ from pyspark.sql import functions as F
 from modin_spark.core import compiler as qc
 from modin_spark.core import windows as win
 from modin_spark.pandas import native as _native
-from modin_spark.core.frame import ORDER_COL, SparkFrame, pandas_dtype_to_spark
+from modin_spark.core.frame import ORDER_COL, SparkFrame, pandas_dtype_to_spark, pin, unpin
 from modin_spark.pandas.series import Series, _lit
-
-# Bounded FIFO of persisted shape-changing-apply task outputs (see
-# _apply_axis0's reshape branch): each call persists its UDF output so the
-# alignment fingerprint doesn't run func twice; evicting beyond the cap
-# ($SPARK_GRAFT_APPLY_CACHE_CAP, default 16) bounds executor storage
-# without coupling cache lifetime to driver GC. Recompute after eviction
-# is correct because the apply contract assumes a PURE func (pandas itself
-# re-invokes apply funcs); an impure func could diverge from the alignment
-# decision baked in at call time — documented limitation.
-_RESHAPE_CACHES: list = []
-
-
-def _retire_reshape_caches(new_sdf) -> None:
-    cap = int(os.environ.get("SPARK_GRAFT_APPLY_CACHE_CAP", "16"))
-    _RESHAPE_CACHES.append(new_sdf)
-    while len(_RESHAPE_CACHES) > cap:
-        old = _RESHAPE_CACHES.pop(0)
-        try:  # session may already be gone at interpreter shutdown
-            old.unpersist()
-        except Exception:
-            pass
-
-
 
 _MASKED_EXT_NAMES = {"Int8", "Int16", "Int32", "Int64", "UInt8", "UInt16",
                      "UInt32", "UInt64", "Float32", "Float64", "boolean"}
@@ -386,18 +363,23 @@ class DataFrame:
         if isinstance(value, (list, tuple, pd.Index, np.ndarray, pd.Categorical)):
             # raw sequences have NO labels: pandas assigns POSITIONALLY —
             # join on the contiguous global position, not the label stash
+            # (fresh helper names: a second raw-sequence setitem on the same
+            # lineage must not collide with the first one's value column)
+            from modin_spark.core.frame import fresh_names as _fnames
+
+            sp, vp, vv = _fnames(3)
             vals = pd.Series(value).reset_index(drop=True)
             vfr = Series._from_pandas(vals)._to_frame("__v__").ensure_order()
-            fr2 = fr.ensure_order().with_global_position("__sp0__")
+            fr = fr.ensure_order()
+            fr2 = fr.with_global_position(sp)
             vsdf = vfr.sdf.select(
-                F.col(ORDER_COL).cast("long").alias("__vp0__"),
-                F.col(vfr.data_cols[0]).alias("__vv0__"),
+                F.col(ORDER_COL).cast("long").alias(vp),
+                F.col(vfr.data_cols[0]).alias(vv),
             )
-            joined = fr2.sdf.join(vsdf, F.col("__sp0__") == F.col("__vp0__"), "left").drop(
-                "__vp0__", "__sp0__")
-            nf = SparkFrame(joined, fr.columns, fr.data_cols, fr.index_cols,
-                            fr.index_names, _lid=fr._lid, _chain=fr._chain)
-            self._frame = nf.with_columns([key], [F.col("__vv0__")])
+            joined = fr2.sdf.join(vsdf, F.col(sp) == F.col(vp), "left").drop(vp, sp)
+            # left join on unique positions keeps the target's rows/order, so
+            # its row metadata (positional-label facts included) carries over
+            self._frame = fr._same_rows(joined).with_columns([key], [F.col(vv)])
             return
         self._frame = fr.with_columns([key], [_lit(value)], refs=set())
 
@@ -3798,12 +3780,7 @@ class DataFrame:
         # nondeterministic monotonically_increasing_id in two plan branches,
         # and the cached compilation can partition them differently, so the
         # branch pids diverge and the join drops rows; freezing the ORDER
-        # values below the join makes both branches read identical ids. The
-        # uuid literal keeps this call's canonical plan unique, so Spark's
-        # CacheManager can never serve one run's cache to a later
-        # identically-shaped build (same trick as the apply-axis0 reshape
-        # cache); lifetime is the same FIFO registry.
-        import uuid as _uuid
+        # values below the join makes both branches read identical ids.
 
         # a transpose OUTPUT's index values live on the driver already (they
         # are the source frame's column labels, embedded as literals in the
@@ -3826,10 +3803,7 @@ class DataFrame:
         # otherwise). Positions on this path are a pure projection of the
         # dense transpose-output ORDER, adding no second consumer either.
         if not (known is not None and numeric_only):
-            base = base._same_rows(
-                base.sdf.withColumn("__tc__", F.lit(_uuid.uuid4().hex)).persist()
-            )
-            _retire_reshape_caches(base.sdf)
+            base = base._same_rows(pin(base.sdf))
             # per-pid position offsets read the PERSISTED rows (<= max_cols
             # by the transpose guard), not the attach-time lineage: for an
             # aggregate source the "narrow" replay still re-runs the whole
@@ -4407,20 +4381,10 @@ class DataFrame:
                 data["__o__"] = encode_out(r)
                 return pd.DataFrame(data)
 
-            import uuid
-
             rp = fresh_names(k)
-            # the unused literal makes this call's canonical plan UNIQUE:
-            # Spark's cache is keyed by canonicalized plan, so two calls
-            # with identical lineage would share one cache entry and the
-            # registry's eviction of one would clear the other's cache
-            # mid-flight (recomputing the UDF pass)
-            res = (
-                melted.groupBy("__cid__").applyInPandas(apply_reshape, schema)
-                .withColumn("__u__", F.lit(uuid.uuid4().hex))
-                .persist()
-            )
-            _retire_reshape_caches(res)
+            # pinned so the alignment fingerprint below and the final
+            # projection read one UDF pass instead of running func twice
+            res = pin(melted.groupBy("__cid__").applyInPandas(apply_reshape, schema))
             # per-column fingerprint of the (position, label-tuple) multiset:
             # a SUM of per-row 60-bit hashes — order-independent, fully
             # distributed (partial aggregation; no collect_list holding a
@@ -4452,8 +4416,7 @@ class DataFrame:
                 and len({r["n"] for r in fp}) == 1
             )
             if not aligned and any(r["nd"] != r["n"] for r in fp):
-                res.unpersist()
-                _RESHAPE_CACHES[:] = [c for c in _RESHAPE_CACHES if c is not res]
+                unpin(res)
                 raise ValueError("cannot reindex on an axis with duplicate labels")
             idx_casts = [
                 {"i": "bigint", "u": "bigint", "f": "double", "b": "boolean",

@@ -1675,12 +1675,15 @@ class Series:
 
     def value_counts(self, normalize=False, sort=True, ascending=False, dropna=True,
                      bins=None) -> "Series":
-        nat = _native.maybe_series(self, "value_counts", normalize=normalize,
-                                   sort=sort, ascending=ascending,
-                                   dropna=dropna, bins=bins)
-        if nat is not None:
-            return nat
-        if bins is not None:
+        if bins is None:
+            # (the native path is bins-free: pandas bins= returns an
+            # IntervalIndex, which the lazy ingest cannot type)
+            nat = _native.maybe_series(self, "value_counts", normalize=normalize,
+                                       sort=sort, ascending=ascending,
+                                       dropna=dropna)
+            if nat is not None:
+                return nat
+        else:
             # pandas bins=: counts of fixed-width intervals — cut() stays a
             # JVM when-chain; the k-row result is reindexed driver-side so
             # EMPTY bins appear with count 0 (pandas semantics)
@@ -3073,6 +3076,9 @@ Series.to_clipboard = lambda self, **k: self.to_pandas().to_clipboard(**k)
 def _ser_maybe_inplace(self, out, inplace: bool):
     if inplace:
         self.__dict__.update(out.__dict__)
+        # a plain-column marker describes the PRE-mutation values: keep it
+        # only if the result carries its own
+        self._native_col = getattr(out, "_native_col", None)
         return None
     return out
 

@@ -12,12 +12,6 @@ import os
 from pyspark.sql import SparkSession
 
 _DEFAULTS = {
-    # ~#cores shuffle partitions locally; a real cluster overrides this (or
-    # relies on AQE coalescing, which we leave enabled).
-    # NPartitions.put() (config parity) records the user's choice in
-    # MODIN_SPARK_SHUFFLE_PARTITIONS so sessions built later honor it
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "MODIN_SPARK_SHUFFLE_PARTITIONS", os.environ.get("SPARK_GRAFT_CPUS", "32")),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -57,6 +51,8 @@ _DEFAULTS = {
     "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
+SPREAD_BYTES_PER_TASK = 96 * 1024
+
 
 def get_spark() -> SparkSession:
     """Return the active SparkSession, creating a local one if absent."""
@@ -67,9 +63,11 @@ def get_spark() -> SparkSession:
     builder = SparkSession.builder.master(f"local[{cpus}]").appName("modin_spark")
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
-    # NPartitions.put() records its choice in MODIN_SPARK_SHUFFLE_PARTITIONS;
-    # read it at session-BUILD time, not module import — the module imports
-    # on `import modin_spark.pandas`, before any user put() can run
+    # ~#cores shuffle partitions locally; a real cluster overrides this (or
+    # relies on AQE coalescing, which we leave enabled). NPartitions.put()
+    # records its choice in MODIN_SPARK_SHUFFLE_PARTITIONS; read it at
+    # session-BUILD time, not module import — the module imports on
+    # `import modin_spark.pandas`, before any user put() can run
     builder = builder.config(
         "spark.sql.shuffle.partitions",
         os.environ.get("MODIN_SPARK_SHUFFLE_PARTITIONS",
@@ -84,23 +82,20 @@ def spread_target(spark: SparkSession, input_bytes: int | None = None) -> int:
     expression/UDF-heavy stages (guide §2.5 input skew — the unsplittable-
     file case — and §2.2 scale-adaptive partitioning).
 
-    Derived from input size (~``MODIN_SPARK_SPREAD_BYTES_PER_TASK`` of input
-    per task, default 96 KiB) and capped at the session's parallelism,
-    instead of the raw core count: on a tiny corpus a 32-way spread leaves
+    Derived from input size (~``SPREAD_BYTES_PER_TASK`` = 96 KiB of input
+    per task) and capped at the session's parallelism, instead of the raw
+    core count: on a tiny corpus a 32-way spread leaves
     ~15 ms of real work per task, so scheduling dominates — the r16
     quiet-window bench measured the spread pipelines FASTER at 8 cores than
     32 (docs_topk_ngrams 0.24 s vs 0.66 s). With the byte rule the same
     query costs the same at any core count on small inputs, and at real
     scale (GB+ per table) the rule saturates every core long before the
-    cap. ``MODIN_SPARK_SPREAD_TARGET`` forces the value (probe hook)."""
-    env = os.environ.get("MODIN_SPARK_SPREAD_TARGET")
-    if env:
-        return max(1, int(env))
+    cap."""
     par = spark.sparkContext.defaultParallelism
     if input_bytes is None or input_bytes <= 0:
         return par
-    per_task = int(os.environ.get("MODIN_SPARK_SPREAD_BYTES_PER_TASK", str(96 * 1024)))
-    return max(1, min(par, (int(input_bytes) + per_task - 1) // per_task))
+    tasks = (int(input_bytes) + SPREAD_BYTES_PER_TASK - 1) // SPREAD_BYTES_PER_TASK
+    return max(1, min(par, tasks))
 
 
 def stop_spark() -> None:

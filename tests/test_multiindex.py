@@ -144,11 +144,26 @@ def test_explode_multiple_columns(spark):
     import modin_spark.pandas as mpd
 
     pdf = pd.DataFrame({"a": [[1, 2], [3]], "b": [["x", "y"], ["z"]], "k": [1, 2]})
-    got = mpd.from_pandas(pdf).explode(["a", "b"]).to_pandas()
-    want = pdf.explode(["a", "b"])
-    assert got["a"].tolist() == want["a"].tolist()
-    assert got["b"].tolist() == want["b"].tolist()
-    assert got["k"].tolist() == want["k"].tolist()
+    base = pd.DataFrame({"k": [1, 2, 3]})
+
+    def set_raw_list(df):
+        # raw-sequence setitem on a default-index frame: the exploded rows
+        # must repeat the original positional labels
+        df["l1"] = [[1, 2]] * 3
+        return df.explode("l1")
+
+    cases = [
+        (pdf, lambda df: df.explode(["a", "b"])),
+        # two raw-list columns set on the same lineage, exploded together
+        (base, lambda df: df.assign(l1=[[1, 2]] * 3, l2=[[3, 4]] * 3).explode(["l1", "l2"])),
+        (base, set_raw_list),
+    ]
+    for src, op in cases:
+        got = op(mpd.from_pandas(src)).to_pandas()
+        want = op(src.copy())
+        assert got.index.tolist() == want.index.tolist()
+        for c in want.columns:
+            assert got[c].tolist() == want[c].tolist(), c
 
 
 # ---------------------------------------------------------------------------

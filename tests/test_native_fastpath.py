@@ -223,6 +223,9 @@ def test_native_series_ops_match_pandas(native_on, spark):
         ("nsmallest", lambda s: s.nsmallest(4)),
         ("drop_duplicates", lambda s: s.drop_duplicates()),
         ("value_counts", lambda s: s.value_counts()),
+        # bins= returns an IntervalIndex the lazy native ingest cannot type:
+        # it must take the Spark path
+        ("value_counts(bins)", lambda s: s.value_counts(bins=3)),
     ]:
         want = fn(p["a"])
         got = fn(m["a"]).to_pandas()
@@ -293,3 +296,17 @@ def test_native_groupby_agg_zero_jvm(native_on, spark):
     assert r2.values.tolist() == p.groupby("k").sum().values.tolist()
     assert r3.values.tolist() == p.groupby("k")["v"].agg(["sum", "mean"]).values.tolist()
     assert r4.values.tolist() == p.groupby("k", as_index=False, sort=False).mean().values.tolist()
+
+
+def test_native_series_inplace_mutators(native_on, spark):
+    # an inplace mutator on a plain-column extraction must not leave the
+    # series reading the pristine native column it came from
+    p = _pdf()
+    m = mpd.from_pandas(p)
+    for name, args in [("fillna", (-1,)), ("clip", (0.2, 0.8)), ("sort_values", ())]:
+        sm, sp = m["c"], p["c"].copy()
+        assert getattr(sm, name)(*args, inplace=True) is None
+        getattr(sp, name)(*args, inplace=True)
+        got = sm.to_pandas()
+        assert got.index.tolist() == sp.index.tolist(), name
+        np.testing.assert_array_equal(got.values, sp.values, err_msg=name)

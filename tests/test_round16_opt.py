@@ -118,7 +118,7 @@ def test_rolling_after_shift_single_scan_plan(events_pdf):
     np.testing.assert_allclose(got.values, exp.values, equal_nan=True, rtol=1e-9, atol=1e-9)
 
 
-def test_spread_target_size_adaptive(monkeypatch):
+def test_spread_target_size_adaptive():
     # guide §2.2: the spread fan-out must derive from input size, not the
     # core count — a tiny corpus round-robined to 32 tasks anti-scales
     # (quiet-window bench: docs family faster at 8 cores than 32), while a
@@ -127,8 +127,6 @@ def test_spread_target_size_adaptive(monkeypatch):
 
     spark = get_spark()
     par = spark.sparkContext.defaultParallelism
-    monkeypatch.delenv("MODIN_SPARK_SPREAD_TARGET", raising=False)
-    monkeypatch.delenv("MODIN_SPARK_SPREAD_BYTES_PER_TASK", raising=False)
     # ~600 KB (the sf0.1 corpus): a handful of tasks, NOT one per core
     small = spread_target(spark, 600 * 1024)
     assert 1 <= small <= 8
@@ -136,19 +134,15 @@ def test_spread_target_size_adaptive(monkeypatch):
     assert spread_target(spark, None) == par
     # big input saturates the cap at any realistic parallelism
     assert spread_target(spark, 50 << 30) == par
-    # explicit override wins (probe hook)
-    monkeypatch.setenv("MODIN_SPARK_SPREAD_TARGET", "3")
-    assert spread_target(spark, 50 << 30) == 3
 
 
-def test_spread_for_udf_uses_size_estimate(monkeypatch):
+def test_spread_for_udf_uses_size_estimate():
     # the dedup/similarity UDF spread must follow the same size rule: a
     # tiny frame gets a small fan-out, and the repartition count shows up
     # in the physical plan
     from modin_spark.operators.dedup import _spread_for_udf
     from modin_spark.session import get_spark
 
-    monkeypatch.delenv("MODIN_SPARK_SPREAD_TARGET", raising=False)
     spark = get_spark()
     pdf = pd.DataFrame({"doc_id": range(2000), "text": ["alpha beta gamma"] * 2000})
     df = spark.createDataFrame(pdf).coalesce(1)
@@ -220,3 +214,21 @@ def test_bounded_window_input_is_pinned(events_pdf):
     r2 = m2["b"].rolling(5).mean()
     plan2 = r2._frame.sdf._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" not in plan2
+
+
+def test_pin_fifo_evicts_beyond_cap(spark):
+    # persisted intermediates never outlive the FIFO bound: pinning past
+    # PIN_CAP unpersists the oldest entries, newest PIN_CAP stay cached
+    from modin_spark.core import frame as cf
+
+    pinned = [cf.pin(spark.range(3)) for _ in range(20)]
+    try:
+        assert cf.PIN_CAP == 16
+        assert len(cf._PINNED) == 16
+        assert all(a is b for a, b in zip(cf._PINNED, pinned[4:]))
+        assert not any(p.is_cached for p in pinned[:4])
+        assert all(p.is_cached for p in pinned[4:])
+    finally:
+        for p in pinned:
+            cf.unpin(p)
+    assert not any(p.is_cached for p in pinned)
