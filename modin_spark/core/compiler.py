@@ -540,35 +540,15 @@ def _catalog_has_tables(spark) -> bool:
 def _shallow_catalog_scan(sdf) -> bool:
     """True when the frame is a bare catalog-table scan (filters/projections
     only) — the only shape where bucketed co-location exists and the merge
-    null-pattern split pays off. Walks logical-plan node CLASSES instead of
-    stringifying the whole analyzed tree (toString is O(plan-text) driver
-    work per merge on deep chains); only SubqueryAlias nodes render a short
-    simpleString to spot the catalog qualifier."""
+    null-pattern split pays off (``plans.shallow_catalog_scan``)."""
+    from modin_spark.plans import shallow_catalog_scan
+
     try:
         if not _catalog_has_tables(sdf.sparkSession):
             return False
-        plan = sdf._jdf.queryExecution().analyzed()
     except Exception:
         return False
-    deep = {
-        "Join", "Aggregate", "Sort", "Window", "Union", "Generate",
-        "Repartition", "RepartitionByExpression", "RebalancePartitions",
-    }
-    stack, catalog = [plan], False
-    try:
-        while stack:
-            p = stack.pop()
-            name = p.nodeName()
-            if name in deep:
-                return False
-            if name == "SubqueryAlias" and "spark_catalog" in p.simpleString(2):
-                catalog = True
-            ch = p.children()
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-    except Exception:
-        return False
-    return catalog
+    return shallow_catalog_scan(sdf)
 
 
 def merge(

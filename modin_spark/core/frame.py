@@ -54,7 +54,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame as SDF, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 try:  # user-facing knobs (modin.config parity); standalone module, no cycle
     from modin_spark import config as _config
@@ -120,6 +119,70 @@ def _unpersist(sdf: SDF) -> None:
 
 
 # ---------------------------------------------------------------------------
+# prefix carry: per-bucket totals -> exclusive prefix -> broadcast join-back
+# ---------------------------------------------------------------------------
+
+# window frames of a carry: every bucket before / after the row's own
+CARRY_FWD = "UNBOUNDED PRECEDING AND 1 PRECEDING"
+CARRY_BWD = "1 FOLLOWING AND UNBOUNDED FOLLOWING"
+
+
+def sql_name(name) -> str:
+    return "`%s`" % str(name).replace("`", "``")
+
+
+def carry_key(key: str) -> str:
+    """The carry table's name for bucket column ``key``: ``__blk__`` ->
+    ``__blk2__``, so the join back is unambiguous."""
+    return key[:-2] + "2__"
+
+
+def carry_table(totals: SDF, key: str, carries, keep: Sequence[str] = ()) -> SDF:
+    """Carry-in of every bucket: an exclusive prefix, in bucket ``key``
+    order, over ``totals`` (one row per bucket). This is the reference's
+    Fold carry across row partitions (modin/core/dataframe/algebra/fold.py)
+    as one Spark stage; #buckets rows is tiny, so the single-partition
+    window over it is bounded, unlike a global window over the rows.
+
+    ``carries``: ``(alias, aggregate, frame[, zero])`` — ``aggregate`` is
+    SQL over a totals column (``sum(count)``, ``last(`x`, true)``), ``frame``
+    CARRY_FWD or CARRY_BWD, and ``zero`` replaces the NULL carry of the
+    first bucket. ``keep`` passes totals columns through unchanged. One
+    selectExpr: one py4j round trip however many carries."""
+    sel = [f"{key} as {carry_key(key)}", *keep]
+    for alias, agg, frame, *zero in carries:
+        e = f"{agg} OVER (ORDER BY {key} ROWS BETWEEN {frame})"
+        if zero:
+            e = f"coalesce({e}, {zero[0]})"
+        sel.append(f"{e} as {sql_name(alias)}")
+    return totals.selectExpr(*sel)
+
+
+def carry_join(stream: SDF, table: SDF, key: str, how: str = "left") -> SDF:
+    """Join a ``carry_table`` back onto the rows of each bucket, broadcast-
+    side. Callers that reuse one table (the mid-offsets memo) get one
+    broadcast that Spark plans once. The stream keeps ``carry_key(key)``:
+    callers drop it with their own scaffolding columns (one py4j drop, not
+    two), and before a second carry_join on the result."""
+    return stream.join(F.broadcast(table), F.expr(f"{key} = {carry_key(key)}"), how)
+
+
+def dense_positions(sdf: SDF, bucket: str, order: str, out: str,
+                    local: str = "__lr__", offset: str = "__off__") -> SDF:
+    """Attach ``out``: contiguous 0-based positions in (``bucket``,
+    ``order``) order — ``row_number`` within the bucket (as ``local``) plus
+    the carry of the row counts of every earlier bucket (as ``offset``).
+    ``bucket`` must be a deterministic function of the row (see
+    ``SparkFrame._order_bucket_sql``), never a range-shuffle partition id."""
+    sdf = sdf.selectExpr(
+        "*", f"row_number() OVER (PARTITION BY {bucket} ORDER BY {order}) - 1 as {local}")
+    counts = carry_table(sdf.groupBy(bucket).count(), bucket,
+                         [(offset, "sum(count)", CARRY_FWD, 0)])
+    sdf = carry_join(sdf, counts, bucket, "inner")
+    return sdf.selectExpr("*", f"cast({local} + {offset} as bigint) as {sql_name(out)}")
+
+
+# ---------------------------------------------------------------------------
 # dtype mapping
 # ---------------------------------------------------------------------------
 
@@ -180,6 +243,20 @@ _PANDAS_TO_SPARK_CAST = {
     "timedelta64[ns]": T.DayTimeIntervalType(),
     "category": T.StringType(),
 }
+
+
+def leaf_bucket_sql(dtype: T.DataType | None, path: str) -> str | None:
+    """``shiftright(leaf, 16)`` as SQL: a 65536-wide, order-monotone bucket of
+    the integral value at ``path`` (of type ``dtype``). A struct recurses into
+    its field 0 — struct comparison is lexicographic, so a monotone function
+    of the leading leaf is monotone in the whole struct. None when that leaf
+    is not integral."""
+    while isinstance(dtype, T.StructType) and dtype.fields:
+        path = f"{path}.{dtype.fields[0].name}"
+        dtype = dtype.fields[0].dataType
+    if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType)):
+        return f"shiftright(cast({path} as bigint), 16)"
+    return None
 
 
 def order_bucket_expr(sdf, colname: str, nparts: int = 0):
@@ -873,51 +950,32 @@ class SparkFrame:
             return base._same_rows(base.sdf.withColumn(name, F.col(lc).cast("long")))
         return base.with_global_position(name)
 
-    def _order_bucket_expr(self) -> Column | None:
+    def _order_bucket_sql(self) -> str | None:
         """A DETERMINISTIC, order-monotone bucket id derived from the stored
-        ORDER value: ``order >> 16`` (65536-row buckets for contiguous
+        ORDER value, as SQL (one py4j round trip when embedded in
+        selectExpr): ``order >> 16`` (65536-row buckets for contiguous
         range-ingest orders; per-scan-partition sub-buckets for
         monotonically_increasing_id orders, whose upper bits are the scan
-        partition). Struct orders (merge outputs) recurse into field 0 —
-        struct comparison is lexicographic, so a monotone function of the
-        leading field is order-monotone. None when the leading leaf is not
+        partition). Struct orders (merge outputs) bucket on their leading
+        integral leaf (``leaf_bucket_sql``). None when that leaf is not
         integral (caller falls back to a range shuffle)."""
-        t = self.schema_map.get(ORDER_COL)
-        path = ORDER_COL
-        while isinstance(t, T.StructType) and t.fields:
-            path = f"{path}.{t.fields[0].name}"
-            t = t.fields[0].dataType
-        if isinstance(t, (T.LongType, T.IntegerType, T.ShortType)):
-            return F.shiftright(F.col(path).cast("long"), 16)
-        return None
-
-    def _order_bucket_sql(self) -> str | None:
-        """SQL-string form of ``_order_bucket_expr`` (one py4j round trip
-        when embedded in selectExpr)."""
-        t = self.schema_map.get(ORDER_COL)
-        path = "`%s`" % ORDER_COL.replace("`", "``")
-        while isinstance(t, T.StructType) and t.fields:
-            path = f"{path}.{t.fields[0].name}"
-            t = t.fields[0].dataType
-        if isinstance(t, (T.LongType, T.IntegerType, T.ShortType)):
-            return f"shiftright(cast({path} as bigint), 16)"
-        return None
+        return leaf_bucket_sql(self.schema_map.get(ORDER_COL), sql_name(ORDER_COL))
 
     def with_global_position(self, pos_col: str) -> "SparkFrame":
         """Attach a contiguous 0-based global position column.
 
         Scale-safe AND branch-deterministic: rows bucket by a pure function
-        of the stored ORDER value (``_order_bucket_expr``), rank within each
+        of the stored ORDER value (``_order_bucket_sql``), rank within each
         bucket, and add per-bucket offsets from a tiny aggregate — no
-        single-task global window. The bucket id must NOT come from
-        ``spark_partition_id`` over a range shuffle: AQE coalescing and the
-        range sampler can assign DIFFERENT pids in the offsets branch vs the
-        stream branch of the same query, and the inner join then silently
-        drops every row whose pid has no offsets entry.
+        single-task global window (``dense_positions``). The bucket id must
+        NOT come from ``spark_partition_id`` over a range shuffle: AQE
+        coalescing and the range sampler can assign DIFFERENT pids in the
+        offsets branch vs the stream branch of the same query, and the inner
+        join then silently drops every row whose pid has no offsets entry.
         """
         if not self.has_order:
             return self.ensure_order().with_global_position(pos_col)
-        oq = "`%s`" % ORDER_COL.replace("`", "``")
+        oq = sql_name(ORDER_COL)
         if self.order_dense:
             # ORDER values ARE the contiguous positions 0..n-1 (transpose
             # output / fresh default-index ingest): a pure projection — no
@@ -960,18 +1018,15 @@ class SparkFrame:
             offsets = memo.get("offsets") if memo is not None else None
             if offsets is None:
                 src = self._mid_offsets_src if self._mid_offsets_src is not None else self.sdf
-                offsets = src.selectExpr(f"shiftright({oq}, 33) as __pid__").groupBy(
-                    "__pid__").count().selectExpr(
-                    "__pid__ as __pid2__",
-                    "coalesce(sum(count) OVER (ORDER BY __pid__"
-                    " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) as __offset__")
+                offsets = carry_table(
+                    src.selectExpr(f"shiftright({oq}, 33) as __pid__").groupBy("__pid__").count(),
+                    "__pid__", [("__offset__", "sum(count)", CARRY_FWD, 0)])
                 if memo is not None:
                     memo["offsets"] = offsets
-            sdf = sdf.join(F.broadcast(offsets), F.expr("__pid__ = __pid2__"), "inner")
+            sdf = carry_join(sdf, offsets, "__pid__", "inner")
             sdf = sdf.selectExpr(
-                "*", "cast(__local_rank__ + __offset__ as bigint) as `%s`"
-                     % str(pos_col).replace("`", "``"))
-            sdf = sdf.drop("__pid__", "__pid2__", "__local_rank__", "__offset__")
+                "*", f"cast(__local_rank__ + __offset__ as bigint) as {sql_name(pos_col)}")
+            sdf = sdf.drop("__pid__", carry_key("__pid__"), "__local_rank__", "__offset__")
             if os.environ.get("MODIN_SPARK_DEBUG_ORDER"):
                 # opt-in invariant audit: order_mid_complete promises the mid
                 # assignment is complete (no row dropped/duplicated since
@@ -980,7 +1035,7 @@ class SparkFrame:
                 # would silently corrupt every positional consumer — under
                 # MODIN_SPARK_DEBUG_ORDER it fails fast here instead (one
                 # extra action per positional derivation; debug only).
-                pq = "`%s`" % str(pos_col).replace("`", "``")
+                pq = sql_name(pos_col)
                 n, mx, nd = sdf.selectExpr(
                     "count(1)", f"max({pq})", f"count(distinct {pq})").first()
                 assert n == nd and (n == 0 or mx == n - 1), (
@@ -998,20 +1053,9 @@ class SparkFrame:
             np_ = int(self.sdf.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
             sdf = self.sdf.repartitionByRange(np_, F.col(ORDER_COL)).withColumn(
                 "__pid__", F.spark_partition_id())
-        sdf = sdf.selectExpr(
-            "*",
-            f"row_number() OVER (PARTITION BY __pid__ ORDER BY {oq}) - 1"
-            " as __local_rank__")
-        offsets = sdf.groupBy("__pid__").count().selectExpr(
-            "__pid__ as __pid2__",
-            "coalesce(sum(count) OVER (ORDER BY __pid__"
-            " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) as __offset__")
-        sdf = sdf.join(F.broadcast(offsets), F.expr("__pid__ = __pid2__"), "inner")
-        sdf = sdf.selectExpr(
-            "*", "cast(__local_rank__ + __offset__ as bigint) as `%s`"
-                 % str(pos_col).replace("`", "``"))
-        sdf = sdf.drop("__pid__", "__pid2__", "__local_rank__", "__offset__")
-        return self._same_rows(sdf)
+        sdf = dense_positions(sdf, "__pid__", oq, pos_col, "__local_rank__", "__offset__")
+        return self._same_rows(
+            sdf.drop("__pid__", carry_key("__pid__"), "__local_rank__", "__offset__"))
 
     def head(self, n: int) -> "SparkFrame":
         if n < 0:

@@ -9,7 +9,8 @@ Everything here instead uses the block-partitioned two-pass scheme:
        tiny offset join — see SparkFrame.with_global_position),
     2. split into fixed-size blocks (position // B),
     3. compute within-block results with a *partitioned* window,
-    4. combine with per-block carry-ins from a (#blocks)-row prefix pass.
+    4. combine with per-block carry-ins from a (#blocks)-row prefix pass
+       (``core.frame.carry_table`` / ``carry_join``).
 
 This is the same decomposition the reference uses across its row partitions
 for Fold ops (/root/reference/modin/core/dataframe/algebra/fold.py:28 applied
@@ -22,11 +23,13 @@ from __future__ import annotations
 from typing import Sequence
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from modin_spark.core.frame import ORDER_COL, PIN_TAG, SparkFrame, fresh_names, pin
+from modin_spark.core.frame import (
+    CARRY_BWD, CARRY_FWD, ORDER_COL, PIN_TAG, SparkFrame, carry_join, carry_key, carry_table,
+    dense_positions, fresh_names, pin, sql_name)
+from modin_spark.plans import limit_bounded
 
 BLOCK = 1 << 16  # rows per block: bounds window-state size per task
 _POS = "__pos__"
@@ -94,20 +97,7 @@ def _with_blocks(frame: SparkFrame) -> SparkFrame:
     # probe the bound BEFORE the position attach: the offsets broadcast
     # join multiplies Catalyst's maxRows (4000-row head -> 16M), hiding
     # the proof; the pre-position plan carries the limit's exact bound
-    try:
-        # the ANALYZED plan (already computed for schema access — the
-        # optimizer pass would cost ~0.2 s of driver build per window op).
-        # The bound must come from a LIMIT truncating a bigger source: a
-        # LocalRelation's own row count also defines maxRows, but replaying
-        # driver-resident rows is free and pinning them is pure overhead.
-        analyzed = ordered.sdf._jdf.queryExecution().analyzed()
-        mx = analyzed.maxRows()
-        bounded = (
-            mx.isDefined() and int(mx.get()) <= BLOCK
-            and "GlobalLimit" in analyzed.toString()
-        )
-    except Exception:
-        bounded = False
+    bounded = limit_bounded(ordered.sdf, BLOCK)
     fr = ordered.with_global_position(_POS)
     fr = fr._same_rows(fr.sdf.withColumn(_BLK, (F.col(_POS) / F.lit(BLOCK)).cast("long")))
     if bounded:
@@ -117,6 +107,12 @@ def _with_blocks(frame: SparkFrame) -> SparkFrame:
 
 def _drop_aux(fr: SparkFrame) -> SparkFrame:
     return fr._same_rows(fr.sdf.drop(_POS, _BLK))
+
+
+def _block_carry(sdf, table):
+    """``carry_join`` on the block id. The carry key goes at once: the op's
+    output may feed another block carry."""
+    return carry_join(sdf, table, _BLK).drop(carry_key(_BLK))
 
 
 def _halo_union(fr_sdf, back: int, fwd: int = 0):
@@ -181,20 +177,18 @@ def cum_op(frame: SparkFrame, positions: Sequence[int], op: str, skipna: bool = 
     """
     fr = _with_blocks(frame)
     w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
-    w_carry = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
 
     combine = {
         # a NULL carry (first block) falls through to the outer
         # coalesce(merged, carry, within) -> within, so no typed zero is
         # needed — which also keeps interval (timedelta) columns legal,
         # where coalesce(carry, 0) is a DATATYPE_MISMATCH
-        "cumsum": (F.sum, lambda within, carry: within + carry),
-        "cumprod": (F.product, lambda within, carry: within * carry),
-        "cummax": (F.max, lambda within, carry: F.greatest(within, carry)),
-        "cummin": (F.min, lambda within, carry: F.least(within, carry)),
+        "cumsum": (F.sum, "sum", lambda within, carry: within + carry),
+        "cumprod": (F.product, None, lambda within, carry: within * carry),
+        "cummax": (F.max, "max", lambda within, carry: F.greatest(within, carry)),
+        "cummin": (F.min, "min", lambda within, carry: F.least(within, carry)),
     }
-    agg_fn, merge_fn = combine[op]
-    carry_agg = {"cumsum": F.sum, "cumprod": F.product, "cummax": F.max, "cummin": F.min}[op]
+    agg_fn, agg_sql, merge_fn = combine[op]
 
     phys = [frame.data_cols[i] for i in positions]
 
@@ -218,11 +212,15 @@ def cum_op(frame: SparkFrame, positions: Sequence[int], op: str, skipna: bool = 
 
     # per-block totals -> prefix carry (tiny: #blocks rows, single light task)
     totals = sdf.groupBy(_BLK).agg(*[agg_fn(_src(p)).alias(f"__t_{wc}") for p, wc in zip(phys, within_cols)])
-    carry_sel = [F.col(_BLK).alias("__blk2__")]
-    for wc in within_cols:
-        carry_sel.append(carry_agg(F.col(f"__t_{wc}")).over(w_carry).alias(f"__carry_{wc}"))
-    carries = totals.select(*carry_sel)
-    sdf = sdf.join(F.broadcast(carries), sdf[_BLK] == carries["__blk2__"], "left").drop("__blk2__")
+    if op == "cumprod":
+        # product() has no SQL name: the same carry table, in the Column API
+        w_carry = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
+        table = totals.select(F.col(_BLK).alias(carry_key(_BLK)), *[
+            F.product(F.col(f"__t_{wc}")).over(w_carry).alias(f"__carry_{wc}") for wc in within_cols])
+    else:
+        table = carry_table(totals, _BLK, [
+            (f"__carry_{wc}", f"{agg_sql}(__t_{wc})", CARRY_FWD) for wc in within_cols])
+    sdf = _block_carry(sdf, table)
 
     labels, exprs = [], []
     for i, (p, wc) in enumerate(zip(phys, within_cols)):
@@ -320,12 +318,12 @@ def pct_change(frame: SparkFrame, positions: Sequence[int], periods: int = 1,
     """pandas ``pct_change`` — cur/prev - 1 along frame order (same
     position-equijoin plan as shift; no global window). pandas pads missing
     values before differencing (fill_method), so the diff runs on the
-    ffilled series — one extra block-carry pass. ``fill_method=None``
+    ffilled series — one extra ``carry_join`` pass. ``fill_method=None``
     (pandas 2.x direction) skips the pad; NaNs propagate."""
     if fill_method is None:
         filled = frame.select_positions(list(positions))
     else:
-        filled = ffill(frame, positions)
+        filled = fill(frame, positions)
     shifted = shift(filled, list(range(len(positions))), periods)
     from modin_spark.pandas.series import _true_div  # call-time: no core<-pandas import cycle
 
@@ -345,10 +343,10 @@ def interpolate_linear(frame: SparkFrame, positions: Sequence[int], x_col=None, 
     """pandas ``interpolate(method="linear")`` along frame order.
 
     Needs, per null cell, the nearest non-null (value, position) before and
-    after. Both are ffill/bfill of a (value, pos) struct — computed with the
-    same two-pass block scheme as ffill: within-block window + per-block
-    carry joined broadcast-side. Leading NaNs stay NaN; trailing NaNs extend
-    the last value (pandas limit_direction='forward' default).
+    after. Both are ffill/bfill of a (value, pos) struct — a within-block
+    window plus a forward and a backward ``carry_join`` in one carry table.
+    Leading NaNs stay NaN; trailing NaNs extend the last value (pandas
+    limit_direction='forward' default).
     ``limit_direction``: which NaN runs are eligible — 'forward' (leading
     stay NaN), 'backward' (trailing stay NaN, leading backfill), 'both'.
     Same plan either way; only the final projection's when-chain changes.
@@ -363,8 +361,6 @@ def interpolate_linear(frame: SparkFrame, positions: Sequence[int], x_col=None, 
     xe = F.col(x_col).cast("double") if x_col is not None else F.col(_POS).cast("double")
     w_f = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
     w_b = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(0, Window.unboundedFollowing)
-    w_cf = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
-    w_cb = Window.orderBy(_BLK).rowsBetween(1, Window.unboundedFollowing)
 
     sdf = fr.sdf
     prev_c, next_c = fresh_names(len(phys)), fresh_names(len(phys))
@@ -377,12 +373,10 @@ def interpolate_linear(frame: SparkFrame, positions: Sequence[int], x_col=None, 
         *[F.max_by(F.col(pc), F.when(F.col(pc).isNotNull(), F.col(_POS))).alias(f"__l_{pc}") for pc in prev_c],
         *[F.min_by(F.col(nc), F.when(F.col(nc).isNotNull(), F.col(_POS))).alias(f"__f_{nc}") for nc in next_c],
     )
-    carries = blk.select(
-        F.col(_BLK).alias("__blk2__"),
-        *[F.last(F.col(f"__l_{pc}"), ignorenulls=True).over(w_cf).alias(f"__cp_{pc}") for pc in prev_c],
-        *[F.first(F.col(f"__f_{nc}"), ignorenulls=True).over(w_cb).alias(f"__cn_{nc}") for nc in next_c],
-    )
-    sdf = sdf.join(F.broadcast(carries), sdf[_BLK] == carries["__blk2__"], "left").drop("__blk2__")
+    sdf = _block_carry(sdf, carry_table(blk, _BLK, [
+        *[(f"__cp_{pc}", f"last(__l_{pc}, true)", CARRY_FWD) for pc in prev_c],
+        *[(f"__cn_{nc}", f"first(__f_{nc}, true)", CARRY_BWD) for nc in next_c],
+    ]))
 
     exprs = []
     for p, pc, nc in zip(phys, prev_c, next_c):
@@ -752,8 +746,8 @@ def expanding_agg(frame: SparkFrame, positions: Sequence[int], agg, min_periods:
                   ddof: int = 1) -> SparkFrame:
     """pandas ``expanding().agg()`` — cumulative aggregate with min_periods.
 
-    sum/min/max/mean/count/var/std decompose into the cum_op two-pass scheme;
-    built here from cumsum-style primitives to stay shuffle-parallel.
+    sum/min/max/mean/count/var/std decompose into within-block partials plus
+    one ``carry_join`` of their per-block totals, as cum_op does.
 
     ``agg`` may be a single name or a list of names; a list is computed in ONE
     block pass (one sort, one carry broadcast) — output columns are
@@ -772,7 +766,6 @@ def expanding_agg(frame: SparkFrame, positions: Sequence[int], agg, min_periods:
     fr = _with_blocks(frame)
     labels = [frame.columns[i] for i in positions]
     w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
-    w_carry = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
 
     sdf = fr.sdf
     if need_shift:
@@ -812,21 +805,15 @@ def expanding_agg(frame: SparkFrame, positions: Sequence[int], agg, min_periods:
         tot_aggs += [F.sum(shifted_of[p] * shifted_of[p] * shifted_of[p]).alias(f"__d3_{p}") for p in phys]
         tot_aggs += [F.sum(shifted_of[p] * shifted_of[p] * shifted_of[p] * shifted_of[p]).alias(f"__d4_{p}") for p in phys]
     tot = sdf.groupBy(_BLK).agg(*tot_aggs)
-    carry_sel = [
-        F.col(_BLK).alias("__blk2__"),
-        *[F.coalesce(F.sum(F.col(f"__n_{p}")).over(w_carry), F.lit(0)).alias(f"__cn_{p}") for p in phys],
-        *[F.coalesce(F.sum(F.col(f"__s_{p}")).over(w_carry), F.lit(0)).alias(f"__cs_{p}") for p in phys],
-        *[F.min(F.col(f"__mn_{p}")).over(w_carry).alias(f"__cmn_{p}") for p in phys],
-        *[F.max(F.col(f"__mx_{p}")).over(w_carry).alias(f"__cmx_{p}") for p in phys],
-    ]
+    # (carry, total, aggregate[, zero for the first block])
+    kinds = [("cn", "n", "sum", 0), ("cs", "s", "sum", 0), ("cmn", "mn", "min"), ("cmx", "mx", "max")]
     if need_shift:
-        carry_sel += [F.coalesce(F.sum(F.col(f"__d_{p}")).over(w_carry), F.lit(0)).alias(f"__cd_{p}") for p in phys]
-        carry_sel += [F.coalesce(F.sum(F.col(f"__d2_{p}")).over(w_carry), F.lit(0)).alias(f"__cd2_{p}") for p in phys]
+        kinds += [("cd", "d", "sum", 0), ("cd2", "d2", "sum", 0)]
     if need_mom:
-        carry_sel += [F.coalesce(F.sum(F.col(f"__d3_{p}")).over(w_carry), F.lit(0)).alias(f"__cd3_{p}") for p in phys]
-        carry_sel += [F.coalesce(F.sum(F.col(f"__d4_{p}")).over(w_carry), F.lit(0)).alias(f"__cd4_{p}") for p in phys]
-    carry = tot.select(*carry_sel)
-    sdf = sdf.join(F.broadcast(carry), sdf[_BLK] == carry["__blk2__"], "left").drop("__blk2__")
+        kinds += [("cd3", "d3", "sum", 0), ("cd4", "d4", "sum", 0)]
+    sdf = _block_carry(sdf, carry_table(tot, _BLK, [
+        (f"__{c}_{p}", f"{agg}({sql_name(f'__{t}_{p}')})", CARRY_FWD, *zero)
+        for c, t, agg, *zero in kinds for p in phys]))
 
     exprs = []
     out_labels = []
@@ -891,10 +878,18 @@ def expanding_agg(frame: SparkFrame, positions: Sequence[int], agg, min_periods:
     return _drop_aux(out)
 
 
+def _sum_carries(sdf, terms: dict):
+    """Attach ``__c_{k}``: the sum of term ``k`` over every earlier block
+    (0 for the first) — the carry of the expanding pair moments."""
+    tot = sdf.groupBy(_BLK).agg(*[F.sum(v).alias(f"__t_{k}") for k, v in terms.items()])
+    return _block_carry(sdf, carry_table(tot, _BLK, [
+        (f"__c_{k}", f"sum(__t_{k})", CARRY_FWD, 0) for k in terms]))
+
+
 def expanding_pair(frame: SparkFrame, px: str, py: str, stat: str, min_periods: int = 1, out_label="0") -> SparkFrame:
     """Expanding corr/cov between two physical columns — algebraic carries
-    over pairwise-complete rows (n, Σx', Σy', Σx'y', Σx'², Σy'²), same
-    two-pass block scheme as expanding_agg. Shuffle-parallel at any scale.
+    over pairwise-complete rows (n, Σx', Σy', Σx'y', Σx'², Σy'²): block
+    sums plus their ``carry_join``. Shuffle-parallel at any scale.
 
     FP stability: cov/corr are shift-invariant, and the naive one-pass
     Σxy − ΣxΣy/n cancels catastrophically when |mean| ≫ std — the result
@@ -906,7 +901,6 @@ def expanding_pair(frame: SparkFrame, px: str, py: str, stat: str, min_periods: 
     the shortcut formula is well-conditioned at any mean/std ratio."""
     fr = _with_blocks(frame)
     w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
-    w_carry = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
     x, y = F.col(px).cast("double"), F.col(py).cast("double")
     both = x.isNotNull() & y.isNotNull()
     # global anchor = mean over complete pairs, one extra NARROW scan
@@ -925,12 +919,7 @@ def expanding_pair(frame: SparkFrame, px: str, py: str, stat: str, min_periods: 
         "sxy": F.when(both, xs * ys), "sxx": F.when(both, xs * xs), "syy": F.when(both, ys * ys),
     }
     within = {k: F.sum(v).over(w_in) for k, v in terms.items()}
-    tot = sdf.groupBy(_BLK).agg(*[F.sum(v).alias(f"__t_{k}") for k, v in terms.items()])
-    carry = tot.select(
-        F.col(_BLK).alias("__blk2__"),
-        *[F.coalesce(F.sum(F.col(f"__t_{k}")).over(w_carry), F.lit(0)).alias(f"__c_{k}") for k in terms],
-    )
-    sdf = sdf.join(F.broadcast(carry), sdf[_BLK] == carry["__blk2__"], "left").drop("__blk2__")
+    sdf = _sum_carries(sdf, terms)
     g = {k: F.coalesce(within[k], F.lit(0)) + F.coalesce(F.col(f"__c_{k}"), F.lit(0)) for k in terms}
     n = g["n"]
     cov = (g["sxy"] - g["sx"] * g["sy"] / n) / (n - 1)
@@ -972,15 +961,14 @@ def expanding_pairwise(frame: SparkFrame, positions: Sequence[int], stat: str,
                        min_periods: int = 1) -> SparkFrame:
     """``df.expanding().corr()`` / ``.cov()`` pairwise — the full k×k matrix
     per row.  corr/cov are algebraic, so all k(k+1)/2 distinct pairs ride
-    ONE two-pass block+carry pipeline (6 carried sums per pair over
-    pairwise-complete rows, same scheme as expanding_pair), then posexplode
+    ONE block pass and one ``carry_join`` (6 carried sums per pair over
+    pairwise-complete rows, as in expanding_pair), then posexplode
     lays the matrix out in pandas' (row, column) block order."""
     fr0 = frame.ensure_order()
     phys = [fr0.data_cols[i] for i in positions]
     labels = [fr0.columns[i] for i in positions]
     fr = _with_blocks(fr0)
     w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
-    w_carry = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
     pairs = [(i, j) for i in range(len(phys)) for j in range(i, len(phys))]
     # anchor-shift every column by its global mean (same FP-stability
     # scheme as expanding_pair: one extra narrow global agg, broadcast on)
@@ -1000,13 +988,7 @@ def expanding_pairwise(frame: SparkFrame, positions: Sequence[int], stat: str,
         terms[f"sxx_{i}_{j}"] = F.when(both, x * x)
         terms[f"syy_{i}_{j}"] = F.when(both, y * y)
     within = {k: F.sum(v).over(w_in) for k, v in terms.items()}
-    tot = sdf.groupBy(_BLK).agg(*[F.sum(v).alias(f"__t_{k}") for k, v in terms.items()])
-    carry = tot.select(
-        F.col(_BLK).alias("__blk2__"),
-        *[F.coalesce(F.sum(F.col(f"__t_{k}")).over(w_carry), F.lit(0)).alias(f"__c_{k}")
-          for k in terms],
-    )
-    sdf = sdf.join(F.broadcast(carry), sdf[_BLK] == carry["__blk2__"], "left").drop("__blk2__")
+    sdf = _sum_carries(sdf, terms)
     cells = {}
     for i, j in pairs:
         g = {t: (F.coalesce(within[f"{t}_{i}_{j}"], F.lit(0))
@@ -1048,6 +1030,52 @@ def expanding_pairwise(frame: SparkFrame, positions: Sequence[int], stat: str,
     )
     return SparkFrame(sdf, pd.Index(labels), out_phys, idx_cols + [lvl],
                       idx_names + [None], has_order=True)
+
+
+def _value_bucket_grid(rows, nparts: int, null_bucket: bool):
+    """Value buckets of ``rows.__xv__`` and the (pos block × bucket) count
+    grid: the first stage shared by expanding_rank and expanding_quantile.
+    Returns ``(s, s_nn, cells)`` — ``rows`` plus ``__vb__``, hash-
+    partitioned on it; its non-null rows; and one ``(__cblk__, __cvb__,
+    count, __prev__)`` row per cell, where ``__prev__`` counts the bucket's
+    rows in EARLIER blocks.
+
+    Buckets come from approx-quantile boundaries baked as LITERALS (one
+    build-time pass, like blocked_pandas' max-block literal).
+    repartitionByRange + spark_partition_id would re-SAMPLE different
+    boundaries on every re-evaluation of the plan's branches — the bucket
+    ids must be one consistent function of the value. Boundary accuracy
+    only affects balance, never the result; ties always land in one bucket
+    (same value ⇒ same comparisons). ``null_bucket``: null values ride
+    along in bucket -1 and stay out of the grid.
+
+    The grid is tiny, cumulated plan-side (fresh column names: cogrouping
+    cells back against s would otherwise trip the ambiguous-self-join
+    check), and DENSE: a block with no rows in some bucket still needs that
+    bucket's earlier-block counts in its cumulative row, else the window
+    prefix sums skip them."""
+    nn = rows.where(F.col("__xv__").isNotNull()) if null_bucket else rows
+    bounds = sorted(set(nn.approxQuantile(
+        "__xv__", [j / nparts for j in range(1, nparts)], 0.001)))
+    if bounds:
+        vb = F.aggregate(
+            F.array(*[F.lit(float(b)) for b in bounds]), F.lit(0),
+            lambda acc, b: acc + F.when(F.col("__xv__") > b, 1).otherwise(0))
+    else:
+        vb = F.lit(0)
+    if null_bucket:
+        vb = F.when(F.col("__xv__").isNotNull(), vb).otherwise(F.lit(-1))
+    s = rows.withColumn("__vb__", vb).repartition(nparts, "__vb__")
+    s_nn = s.where(F.col("__vb__") >= 0) if null_bucket else s
+    counts = s_nn.groupBy(
+        F.col(_BLK).alias("__cblk__"), F.col("__vb__").alias("__cvb__")).count()
+    grid = (s.select(F.col(_BLK).alias("__cblk__")).distinct()
+            .crossJoin(s_nn.select(F.col("__vb__").alias("__cvb__")).distinct()))
+    cells = grid.join(counts, ["__cblk__", "__cvb__"], "left").select(
+        "__cblk__", "__cvb__", F.coalesce(F.col("count"), F.lit(0)).alias("count"))
+    w_bprev = Window.partitionBy("__cvb__").orderBy("__cblk__").rowsBetween(
+        Window.unboundedPreceding, -1)
+    return s, s_nn, cells.withColumn("__prev__", F.coalesce(F.sum("count").over(w_bprev), F.lit(0)))
 
 
 def expanding_rank(frame: SparkFrame, positions: Sequence[int], method: str = "average",
@@ -1093,39 +1121,7 @@ def expanding_rank(frame: SparkFrame, positions: Sequence[int], method: str = "a
         xv = x if ascending else -x
         nn = fr.sdf.where(x.isNotNull()).select(
             F.col(_POS), F.col(_BLK), xv.alias("__xv__"))
-        # value buckets from approx-quantile boundaries baked as LITERALS
-        # (one build-time pass, like blocked_pandas' max-block literal).
-        # repartitionByRange + spark_partition_id would re-SAMPLE different
-        # boundaries on every re-evaluation of the plan's branches — the
-        # bucket ids must be one consistent function of the value. Boundary
-        # accuracy only affects balance, never the result; ties always land
-        # in one bucket (same value ⇒ same comparisons).
-        bounds = nn.approxQuantile(
-            "__xv__", [i / nparts for i in range(1, nparts)], 0.001)
-        bounds = sorted(set(bounds))
-        if bounds:
-            s = nn.withColumn("__vb__", F.aggregate(
-                F.array(*[F.lit(float(b)) for b in bounds]), F.lit(0),
-                lambda acc, b: acc + F.when(F.col("__xv__") > b, 1).otherwise(0)))
-        else:
-            s = nn.withColumn("__vb__", F.lit(0))
-        s = s.repartition(nparts, "__vb__")
-        # tiny (#blocks × #buckets) count matrix, cumulated plan-side
-        # (fresh column names: cogrouping cells back against s would
-        # otherwise trip the ambiguous-self-join check). The grid must be
-        # DENSE: a block with no rows in some bucket still needs that
-        # bucket's earlier-block counts in its cumulative row, else the
-        # window prefix sums skip them.
-        counts = s.groupBy(
-            F.col(_BLK).alias("__cblk__"), F.col("__vb__").alias("__cvb__")).count()
-        grid = (s.select(F.col(_BLK).alias("__cblk__")).distinct()
-                .crossJoin(s.select(F.col("__vb__").alias("__cvb__")).distinct()))
-        cells = grid.join(counts, ["__cblk__", "__cvb__"], "left").select(
-            "__cblk__", "__cvb__", F.coalesce(F.col("count"), F.lit(0)).alias("count"))
-        w_bprev = Window.partitionBy("__cvb__").orderBy("__cblk__").rowsBetween(
-            Window.unboundedPreceding, -1)
-        cells = cells.withColumn(
-            "__prev__", F.coalesce(F.sum("count").over(w_bprev), F.lit(0)))
+        s, _, cells = _value_bucket_grid(nn, nparts, null_bucket=False)
         # per (block, bucket): rows in EARLIER blocks with bucket < vb —
         # same-bucket earlier rows are covered BY VALUE in stage 2; the
         # all-bucket earlier-row count feeds nn_prefix
@@ -1267,29 +1263,7 @@ def expanding_quantile(frame: SparkFrame, positions: Sequence[int], q: float,
         # quantile at NaN rows too (a NaN contributes nothing but still
         # reads); null rows carry bucket -1 and never enter a histogram
         base = fr.sdf.select(F.col(_POS), F.col(_BLK), x.alias("__xv__"))
-        bounds = base.where(F.col("__xv__").isNotNull()).approxQuantile(
-            "__xv__", [j / nparts for j in range(1, nparts)], 0.001)
-        bounds = sorted(set(bounds))
-        if bounds:
-            vb_e = F.aggregate(
-                F.array(*[F.lit(float(b)) for b in bounds]), F.lit(0),
-                lambda acc, b: acc + F.when(F.col("__xv__") > b, 1).otherwise(0))
-        else:
-            vb_e = F.lit(0)
-        s = base.withColumn(
-            "__vb__", F.when(F.col("__xv__").isNotNull(), vb_e).otherwise(F.lit(-1)))
-        s = s.repartition(nparts, "__vb__")
-        s_nn = s.where(F.col("__vb__") >= 0)
-        counts = s_nn.groupBy(
-            F.col(_BLK).alias("__cblk__"), F.col("__vb__").alias("__cvb__")).count()
-        grid = (s.select(F.col(_BLK).alias("__cblk__")).distinct()
-                .crossJoin(s_nn.select(F.col("__vb__").alias("__cvb__")).distinct()))
-        cells = grid.join(counts, ["__cblk__", "__cvb__"], "left").select(
-            "__cblk__", "__cvb__", F.coalesce(F.col("count"), F.lit(0)).alias("count"))
-        w_bprev = Window.partitionBy("__cvb__").orderBy("__cblk__").rowsBetween(
-            Window.unboundedPreceding, -1)
-        cells = cells.withColumn(
-            "__prev__", F.coalesce(F.sum("count").over(w_bprev), F.lit(0)))
+        s, s_nn, cells = _value_bucket_grid(base, nparts, null_bucket=True)
 
         q_schema = T.StructType([
             T.StructField(_POS, T.LongType()),
@@ -1738,9 +1712,11 @@ def blocked_pandas(frame: SparkFrame, positions: Sequence[int], pd_fn, halo_rows
 # ffill / bfill
 # ---------------------------------------------------------------------------
 
-def ffill(frame: SparkFrame, positions: Sequence[int], limit: int | None = None, keep_all: bool = False) -> SparkFrame:
-    """Forward-fill along frame order. Two-pass block scheme: last non-null
-    within block + carry of each block's last non-null from preceding blocks.
+def fill(frame: SparkFrame, positions: Sequence[int], limit: int | None = None,
+         backward: bool = False) -> SparkFrame:
+    """Forward-fill (``backward``: backward-fill) along frame order: the last
+    (first) non-null within the block, else the ``carry_join`` of the
+    nearest non-null from the blocks before (after) it.
 
     ``limit``: fill at most that many consecutive nulls (pandas limit=) —
     the carried value becomes a (position, value) struct so the fill
@@ -1748,87 +1724,36 @@ def ffill(frame: SparkFrame, positions: Sequence[int], limit: int | None = None,
     phys = [frame.data_cols[i] for i in positions]
     labels = [frame.columns[i] for i in positions]
     fr = _with_blocks(frame)
-    w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
-    w_carry = Window.orderBy(_BLK).rowsBetween(Window.unboundedPreceding, -1)
+    if backward:
+        w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(0, Window.unboundedFollowing)
+        pick, edge, edge_sql, tot, frame_sql = F.first, F.min_by, "first", "__bf_", CARRY_BWD
+    else:
+        w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(Window.unboundedPreceding, 0)
+        pick, edge, edge_sql, tot, frame_sql = F.last, F.max_by, "last", "__bl_", CARRY_FWD
 
     sdf = fr.sdf
     within = fresh_names(len(phys))
     for p, wc in zip(phys, within):
         src = (F.col(p) if limit is None else
                F.when(F.col(p).isNotNull(), F.struct(F.col(_POS).alias("p"), F.col(p).alias("v"))))
-        sdf = sdf.withColumn(wc, F.last(src, ignorenulls=True).over(w_in))
-    blk_last = sdf.groupBy(_BLK).agg(
-        *[F.max_by(F.col(wc), F.when(F.col(wc).isNotNull(), F.col(_POS))).alias(f"__bl_{wc}") for wc in within]
+        sdf = sdf.withColumn(wc, pick(src, ignorenulls=True).over(w_in))
+    # the block's own nearest non-null to its far edge
+    blk_edge = sdf.groupBy(_BLK).agg(
+        *[edge(F.col(wc), F.when(F.col(wc).isNotNull(), F.col(_POS))).alias(f"{tot}{wc}") for wc in within]
     )
-    carries = blk_last.select(
-        F.col(_BLK).alias("__blk2__"),
-        *[F.last(F.col(f"__bl_{wc}"), ignorenulls=True).over(w_carry).alias(f"__cr_{wc}") for wc in within],
-    )
-    sdf = sdf.join(F.broadcast(carries), sdf[_BLK] == carries["__blk2__"], "left").drop("__blk2__")
+    sdf = _block_carry(sdf, carry_table(blk_edge, _BLK, [
+        (f"__cr_{wc}", f"{edge_sql}({tot}{wc}, true)", frame_sql) for wc in within]))
     if limit is None:
         exprs = [F.coalesce(F.col(wc), F.col(f"__cr_{wc}")) for wc in within]
     else:
         exprs = []
         for p, wc in zip(phys, within):
-            prev = F.coalesce(F.col(wc), F.col(f"__cr_{wc}"))
+            near = F.coalesce(F.col(wc), F.col(f"__cr_{wc}"))
+            gap = near["p"] - F.col(_POS) if backward else F.col(_POS) - near["p"]
             exprs.append(
                 F.when(F.col(p).isNotNull(), F.col(p))
-                .when(prev.isNotNull() & (F.col(_POS) - prev["p"] <= limit), prev["v"])
+                .when(near.isNotNull() & (gap <= limit), near["v"])
             )
-    if keep_all:
-        # pandas frame interpolate keeps EVERY column: non-interpolated
-        # columns (strings, NaN-free ints) pass through unchanged
-        by_pos = dict(zip(positions, exprs))
-        all_labels = list(frame.columns)
-        all_exprs = [by_pos.get(i, F.col(frame.data_cols[i]))
-                     for i in range(len(all_labels))]
-        out = fr._same_rows(sdf).project(all_labels, all_exprs)
-        return _drop_aux(out)
-    out = fr._same_rows(sdf).project(labels, exprs)
-    return _drop_aux(out)
-
-
-def bfill(frame: SparkFrame, positions: Sequence[int], limit: int | None = None, keep_all: bool = False) -> SparkFrame:
-    """Backward-fill: mirror of ffill with following-windows."""
-    phys = [frame.data_cols[i] for i in positions]
-    labels = [frame.columns[i] for i in positions]
-    fr = _with_blocks(frame)
-    w_in = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(0, Window.unboundedFollowing)
-    w_carry = Window.orderBy(_BLK).rowsBetween(1, Window.unboundedFollowing)
-
-    sdf = fr.sdf
-    within = fresh_names(len(phys))
-    for p, wc in zip(phys, within):
-        src = (F.col(p) if limit is None else
-               F.when(F.col(p).isNotNull(), F.struct(F.col(_POS).alias("p"), F.col(p).alias("v"))))
-        sdf = sdf.withColumn(wc, F.first(src, ignorenulls=True).over(w_in))
-    blk_first = sdf.groupBy(_BLK).agg(
-        *[F.min_by(F.col(wc), F.when(F.col(wc).isNotNull(), F.col(_POS))).alias(f"__bf_{wc}") for wc in within]
-    )
-    carries = blk_first.select(
-        F.col(_BLK).alias("__blk2__"),
-        *[F.first(F.col(f"__bf_{wc}"), ignorenulls=True).over(w_carry).alias(f"__cr_{wc}") for wc in within],
-    )
-    sdf = sdf.join(F.broadcast(carries), sdf[_BLK] == carries["__blk2__"], "left").drop("__blk2__")
-    if limit is None:
-        exprs = [F.coalesce(F.col(wc), F.col(f"__cr_{wc}")) for wc in within]
-    else:
-        exprs = []
-        for p, wc in zip(phys, within):
-            nxt = F.coalesce(F.col(wc), F.col(f"__cr_{wc}"))
-            exprs.append(
-                F.when(F.col(p).isNotNull(), F.col(p))
-                .when(nxt.isNotNull() & (nxt["p"] - F.col(_POS) <= limit), nxt["v"])
-            )
-    if keep_all:
-        # pandas frame interpolate keeps EVERY column: non-interpolated
-        # columns (strings, NaN-free ints) pass through unchanged
-        by_pos = dict(zip(positions, exprs))
-        all_labels = list(frame.columns)
-        all_exprs = [by_pos.get(i, F.col(frame.data_cols[i]))
-                     for i in range(len(all_labels))]
-        out = fr._same_rows(sdf).project(all_labels, all_exprs)
-        return _drop_aux(out)
     out = fr._same_rows(sdf).project(labels, exprs)
     return _drop_aux(out)
 
@@ -1860,9 +1785,6 @@ def rank(
     fr = frame.ensure_order()
     out_labels = [frame.columns[i] for i in positions]
 
-    def _q(name: str) -> str:
-        return "`%s`" % str(name).replace("`", "``")
-
     # group ranked columns by exact Spark dtype: each group melts without any
     # lossy cast (a double cast would collapse distinct int64 > 2^53)
     by_dtype: dict[str, list[int]] = {}
@@ -1879,10 +1801,10 @@ def rank(
     for dt, pos_group in by_dtype.items():
         k = len(pos_group)
         structs = ", ".join(
-            f"struct({ci} as __cid__, {_q(frame.data_cols[i])} as __v__)"
+            f"struct({ci} as __cid__, {sql_name(frame.data_cols[i])} as __v__)"
             for ci, i in enumerate(pos_group))
         melted = base_sdf.selectExpr(
-            f"{_q(ORDER_COL)} as __gp__",  # the frame's own order key: join-back target
+            f"{sql_name(ORDER_COL)} as __gp__",  # the frame's own order key: join-back target
             f"inline(array({structs}))")
         if na_option == "keep":
             melted = melted.where("__v__ IS NOT NULL")  # NaN keeps NaN rank
@@ -1924,21 +1846,15 @@ def rank(
             s = melted.repartitionByRange(
                 _np, F.col("__cid__").asc(), vord, F.col("__gp__").asc()
             ).withColumn("__pid__", F.spark_partition_id())
-        s = s.selectExpr(
-            "*",
-            f"row_number() OVER (PARTITION BY __pid__ ORDER BY {ord_sql}) - 1 as __lr__")
-        offsets = s.groupBy("__pid__").count().selectExpr(
-            "__pid__ as __pid2__",
-            "coalesce(sum(count) OVER (ORDER BY __pid__"
-            " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) as __off__")
-        s = s.join(F.broadcast(offsets), F.expr("__pid__ = __pid2__"), "inner")
-        s = s.selectExpr("*", f"cast(__lr__ + __off__ as bigint) as {_POS}")
+        s = dense_positions(s, "__pid__", ord_sql, _POS)
         # per-cid base position and count (pct denominator) — positions are
         # assigned cid-major, so the base is just the PREFIX SUM of per-cid
         # counts: both come from one k-row aggregate over the UNSHUFFLED melt
         # (map-side combined), instead of min(pos) over the ranked stream,
         # which replayed the pid exchange + row_number window per dtype
         # group (r16 opt)
+        # (the USING join keeps this table at two columns; carry_table's
+        # renamed key would widen it by one)
         cid_agg = melted.groupBy("__cid__").agg(F.expr("count(1) as __cn__")).selectExpr(
             "__cid__", "__cn__",
             "coalesce(sum(__cn__) OVER (ORDER BY __cid__"
@@ -1960,16 +1876,8 @@ def rank(
                 f"cast(__cid__ as bigint) * {1 << 48}"
                 " + shiftright(cast(__blo__ as bigint), 16) as __bpid__"
             ).repartition(_np, "__bpid__")
-            b = b.selectExpr(
-                "*",
-                "row_number() OVER (PARTITION BY __bpid__"
-                " ORDER BY __cid__ ASC, __blo__ ASC) - 1 as __blr__")
-            boff = b.groupBy("__bpid__").count().selectExpr(
-                "__bpid__ as __bpid2__",
-                "coalesce(sum(count) OVER (ORDER BY __bpid__"
-                " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) as __boff__")
-            b = b.join(F.broadcast(boff), F.expr("__bpid__ = __bpid2__"), "inner")
-            b = b.selectExpr("*", "cast(__blr__ + __boff__ as bigint) as __bpos__")
+            b = dense_positions(b, "__bpid__", "__cid__ ASC, __blo__ ASC", "__bpos__",
+                                "__blr__", "__boff__")
             cbb = b.groupBy("__cid__").agg(
                 F.expr("min(__bpos__) as __cbb__"), F.expr("count(1) as __cnd__"))
             b = b.join(F.broadcast(cbb), "__cid__").selectExpr(
@@ -2004,11 +1912,11 @@ def rank(
         rp = fresh_names(k)
         if k == 1:
             # one ranked column: rows are already unique per __gp__ — no pivot
-            piv = res.selectExpr("__gpr__", f"__rank__ as {_q(rp[0])}")
+            piv = res.selectExpr("__gpr__", f"__rank__ as {sql_name(rp[0])}")
         else:
             piv = res.groupBy("__gpr__").pivot("__cid__", list(range(k))).agg(F.first("__rank__"))
             piv = piv.selectExpr(
-                "__gpr__", *[f"`{ci}` as {_q(rp[ci])}" for ci in range(k)])
+                "__gpr__", *[f"`{ci}` as {sql_name(rp[ci])}" for ci in range(k)])
         sdf = sdf.join(piv, sdf[ORDER_COL] == piv["__gpr__"], "left").drop("__gpr__")
         for ci, i in enumerate(pos_group):
             rank_for_pos[i] = rp[ci]

@@ -114,8 +114,9 @@ def pack_sequences(df: SDF, id_col: str, token_col: str, capacity: int) -> SDF:
     """
     # deterministic value-derived buckets: range-shuffle pids re-sample
     # boundaries per plan branch and would misalign the offsets join (see
-    # core.frame.order_bucket_expr)
-    from modin_spark.core.frame import ORDER_BUCKET_LO, order_bucket_expr
+    # core.frame.order_bucket_sql)
+    from modin_spark.core.frame import (
+        CARRY_FWD, ORDER_BUCKET_LO, carry_join, carry_key, carry_table, order_bucket_expr)
 
     _np = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     bkt = order_bucket_expr(df, id_col)
@@ -140,12 +141,8 @@ def pack_sequences(df: SDF, id_col: str, token_col: str, capacity: int) -> SDF:
     else:
         # range-shuffle pids only exist post-shuffle
         parts = t.groupBy("__pid__").agg(F.max("__run__").alias("__psum__"))
-    woff = Window.orderBy("__pid__").rowsBetween(Window.unboundedPreceding, -1)
-    offs = parts.select(
-        F.col("__pid__").alias("__pid2__"),
-        F.coalesce(F.sum("__psum__").over(woff), F.lit(0)).alias("__off__"),
-    )
-    t = t.join(F.broadcast(offs), t["__pid__"] == offs["__pid2__"], "inner")
+    offs = carry_table(parts, "__pid__", [("__off__", "sum(__psum__)", CARRY_FWD, 0)])
+    t = carry_join(t, offs, "__pid__", "inner")
     end = F.col("__off__") + F.col("__run__")  # exclusive end of this doc's span
     start = end - F.col(token_col)
 
@@ -161,7 +158,7 @@ def pack_sequences(df: SDF, id_col: str, token_col: str, capacity: int) -> SDF:
         .withColumn("last_bin", _bin(end - 1))
     )
     out = out.withColumn("straddles", F.col("first_bin") != F.col("last_bin"))
-    return out.drop("__pid__", "__pid2__", "__run__", "__psum__", "__off__")
+    return out.drop("__pid__", carry_key("__pid__"), "__run__", "__psum__", "__off__")
 
 
 def _md5_bucket(key: Column) -> Column:

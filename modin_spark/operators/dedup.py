@@ -340,6 +340,7 @@ def _spread_for_udf(df: SDF) -> SDF:
     can't split those) otherwise funnels the whole Python-side computation
     through one core; at real scale inputs already have >= cores partitions
     and this is a no-op."""
+    from modin_spark.plans import output_partitions, size_estimate
     from modin_spark.session import spread_target
 
     # size-adaptive target (guide §2.2): ~96 KiB of input per task via the
@@ -348,25 +349,13 @@ def _spread_for_udf(df: SDF) -> SDF:
     # scheduling dominates (the r16 quiet bench had the spread family
     # FASTER at 8 cores than 32); at real scale the byte rule saturates
     # every core long before the cap.
-    try:
-        est_bytes = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est_bytes = None
-    target = spread_target(df.sparkSession, est_bytes)
+    target = spread_target(df.sparkSession, size_estimate(df))
     # read the scan's split count from the physical plan instead of df.rdd
     # (the RDD conversion forces a full plan translation per call); if the
     # plan has no file scan (in-memory relation etc.) fall back to the RDD
     # probe. At real scale inputs already carry >= cores splits and the
     # repartition is skipped either way.
-    try:
-        nparts = df.sparkSession._jsparkSession.sessionState().executePlan(
-            df._jdf.queryExecution().logical(),
-            df._jdf.queryExecution().mode(),
-        ).executedPlan().outputPartitioning().numPartitions()
-    except Exception:
-        nparts = df.rdd.getNumPartitions()
+    nparts = output_partitions(df)
     # target 1 means "don't spread" (input too small to benefit) — emitting
     # repartition(1) would be a SinglePartition exchange over raw rows, the
     # exact plan shape the scale-safety sweep forbids

@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from modin_spark.core.frame import ORDER_COL, SparkFrame, fresh_names
 
@@ -59,7 +58,8 @@ def _pick_direction(u, direction: str, allow_exact: bool, by_cols: list[str], ou
     # (observed: ~5 stale matches per boundary at 300k rows). The value-
     # derived bucket costs no build-time pass; equal keys always share a
     # block (hot-key bound, same as groupby).
-    from modin_spark.core.frame import ORDER_BUCKET_LO, order_bucket_sql
+    from modin_spark.core.frame import (
+        CARRY_BWD, CARRY_FWD, ORDER_BUCKET_LO, carry_join, carry_key, carry_table, order_bucket_sql)
 
     _np = int(u.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     blk = order_bucket_sql(u, "__k__")  # __k__ is always numeric here
@@ -71,26 +71,21 @@ def _pick_direction(u, direction: str, allow_exact: bool, by_cols: list[str], ou
         within = (f"last(__rs__, true) OVER (PARTITION BY {_BLK} ORDER BY {ord_sql}"
                   " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
         cand = f"max_by({r_val}, {r_ord})"
-        carry = (f"last(__cand__, true) OVER (ORDER BY {_BLK}"
-                 " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)")
+        carry = ("__carry__", "last(__cand__, true)", CARRY_FWD)
     else:
         within = (f"first(__rs__, true) OVER (PARTITION BY {_BLK} ORDER BY {ord_sql}"
                   " ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)")
         cand = f"min_by({r_val}, {r_ord})"
-        carry = (f"first(__cand__, true) OVER (ORDER BY {_BLK}"
-                 " ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)")
+        carry = ("__carry__", "first(__cand__, true)", CARRY_BWD)
     u2 = u2.selectExpr("*", f"{within} as __win__")
     # per-block candidates -> cross-block carry (tiny: #blocks rows). The
     # candidate aggregate is order-independent, so it runs on the
     # PRE-repartition union — map-side partial agg on the scans instead of
     # replaying the block exchange in this branch (guide §2.3/§2.4)
-    carries = (
-        u_blk.groupBy(_BLK).agg(F.expr(f"{cand} as __cand__"))
-        .selectExpr(f"{_BLK} as __blk2__", f"{carry} as __carry__")
-    )
-    u2 = u2.join(F.broadcast(carries), F.expr(f"{_BLK} = __blk2__"), "left")
+    carries = carry_table(u_blk.groupBy(_BLK).agg(F.expr(f"{cand} as __cand__")), _BLK, [carry])
+    u2 = carry_join(u2, carries, _BLK)
     return u2.selectExpr("*", f"coalesce(__win__, __carry__) as {out_col}").drop(
-        "__win__", "__carry__", "__blk2__", _BLK
+        "__win__", "__carry__", carry_key(_BLK), _BLK
     )
 
 

@@ -802,12 +802,13 @@ class DataFrame:
     def ffill(self, limit=None, axis=0) -> "DataFrame":
         if axis in (1, "columns"):
             return self._fill_axis1(False, limit)
-        return DataFrame(_frame=win.ffill(self._frame, list(range(len(self._frame.columns))), limit=limit))
+        return DataFrame(_frame=win.fill(self._frame, list(range(len(self._frame.columns))), limit=limit))
 
     def bfill(self, limit=None, axis=0) -> "DataFrame":
         if axis in (1, "columns"):
             return self._fill_axis1(True, limit)
-        return DataFrame(_frame=win.bfill(self._frame, list(range(len(self._frame.columns))), limit=limit))
+        return DataFrame(_frame=win.fill(self._frame, list(range(len(self._frame.columns))), limit=limit,
+                                        backward=True))
 
     def replace(self, to_replace=None, value=None, regex: bool = False) -> "DataFrame":
         if to_replace is None and isinstance(regex, (dict, str)):

@@ -531,46 +531,36 @@ class DataFrameGroupBy:
         join). pandas order: sorted keys (NaN last) when groupby(sort=True),
         first appearance when sort=False; null-key rows get NaN when
         dropna=True. ascending=False reverses the numbering (G-1-ng)."""
+        from modin_spark.core.frame import (
+            dense_positions, leaf_bucket_sql, order_bucket_expr as _obe, sql_name)
+
         fr = self._df._frame
         keys = [fr.data_cols[i] for i in self._by_pos]
         if self._sort:
             d = fr.sdf.select(*keys).distinct()
-            obc = []
-            for k in keys:  # NaN-last key order (False < True on the flag)
-                obc.append(F.col(k).isNull())
-                obc.append(F.col(k))
+            # NaN-last key order (False < True on the flag)
+            order = [e for k in keys for e in (f"isnull({sql_name(k)})", sql_name(k))]
         else:
             fr = fr.ensure_order()
             d = fr.sdf.groupBy(*keys).agg(F.min(ORDER_COL).alias("__mo__"))
-            obc = [F.col("__mo__")]
+            order = ["__mo__"]
         if self._dropna:
             for k in keys:
                 d = d.where(F.col(k).isNotNull())
         _np = int(d.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        # deterministic bucket (see core.frame.order_bucket_expr): range-
+        # deterministic bucket (see core.frame.order_bucket_sql): range-
         # shuffle pids re-sample per branch and would misalign the offsets
         # join. Bucket on the leading sort key (monotone under the full
         # composite order: leading-key major); nulls sort last here.
-        from modin_spark.core.frame import order_bucket_expr as _obe
-
-        if len(obc) == 1:
+        if not self._sort:
             # sort=False: __mo__ is the min-ORDER value — a LONG for scan/
             # range lineages, but a STRUCT after merge/concat/groupby (the
-            # cast to long would raise AnalysisException). Struct comparison
-            # is lexicographic, so bucketing on the leading integral leaf is
-            # order-monotone (same recursion as SparkFrame._order_bucket_expr);
-            # a non-integral leaf falls back to the explicit-N range shuffle.
-            from pyspark.sql import types as T
-
+            # cast to long would raise AnalysisException): bucket its leading
+            # integral leaf, as SparkFrame._order_bucket_sql does; a
+            # non-integral leaf falls back to the explicit-N range shuffle.
             t = dict((f.name, f.dataType) for f in d.schema.fields)["__mo__"]
-            path = "__mo__"
-            while isinstance(t, T.StructType) and t.fields:
-                path = f"{path}.{t.fields[0].name}"
-                t = t.fields[0].dataType
-            if isinstance(t, (T.LongType, T.IntegerType, T.ShortType)):
-                bkt = F.shiftright(F.col(path).cast("long"), 16)
-            else:
-                bkt = None
+            leaf = leaf_bucket_sql(t, "__mo__")
+            bkt = F.expr(leaf) if leaf is not None else None
         else:
             k0 = keys[0]
             b0 = _obe(d, k0)
@@ -579,15 +569,9 @@ class DataFrameGroupBy:
         if bkt is not None:
             d = d.withColumn("__pid__", bkt).repartition(_np, "__pid__")
         else:
-            d = d.repartitionByRange(_np, *obc).withColumn("__pid__", F.spark_partition_id())
-        w = Window.partitionBy("__pid__").orderBy(*obc)
-        d = d.withColumn("__lr__", F.row_number().over(w) - F.lit(1))
-        offsets = d.groupBy("__pid__").count().selectExpr(
-            "__pid__ as __p2__",
-            "coalesce(sum(count) OVER (ORDER BY __pid__"
-            " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) as __off__")
-        d = d.join(F.broadcast(offsets), F.expr("__pid__ = __p2__"), "inner")
-        d = d.selectExpr("*", "cast(__lr__ + __off__ as bigint) as __ng__")
+            d = d.repartitionByRange(_np, *map(F.expr, order)).withColumn(
+                "__pid__", F.spark_partition_id())
+        d = dense_positions(d, "__pid__", ", ".join(order), "__ng__")
         if not ascending:
             total = d.count()  # one job over the (already aggregated) keys
             d = d.withColumn("__ng__", F.lit(total - 1) - F.col("__ng__"))

@@ -399,7 +399,7 @@ class Resampler:
 
     def interpolate(self, method: str = "linear"):
         """asfreq + linear interpolation over the gap rows (the blocked
-        two-pass scheme in core.windows — positions are proportional to time
+        ``carry_join`` scheme in core.windows — positions are proportional to time
         on the equally-spaced generated timeline, so positional-linear ==
         time-linear)."""
         from modin_spark.core import windows as win

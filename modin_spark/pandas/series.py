@@ -1950,13 +1950,13 @@ class Series:
 
     def ffill(self, limit=None) -> "Series":
         """Forward fill along frame order: last non-null via ordered window
-        partitioned by blocks with carry (scale-safe two-pass)."""
+        partitioned by blocks plus a ``carry_join`` (scale-safe)."""
         fr = self._to_frame()
-        return self._rewrap(win.ffill(fr, [0], limit=limit))
+        return self._rewrap(win.fill(fr, [0], limit=limit))
 
     def bfill(self, limit=None) -> "Series":
         fr = self._to_frame()
-        return self._rewrap(win.bfill(fr, [0], limit=limit))
+        return self._rewrap(win.fill(fr, [0], limit=limit, backward=True))
 
     # ------------------------------------------------------------------ UDF
     def map(self, arg, na_action=None) -> "Series":

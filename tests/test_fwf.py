@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 import modin_spark.pandas as mpd
+from modin_spark.plans import physical_plan
 from modin_spark.sources.fwf import read_fwf_spark
 
 
@@ -62,7 +63,7 @@ def test_fwf_explicit_colspecs(fwf_file, spark):
 
 def test_fwf_plan_is_distributed_csv_scan(fwf_file, spark):
     sdf = read_fwf_spark(fwf_file)
-    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(sdf)
     assert "csv" in plan.lower()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 

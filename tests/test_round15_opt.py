@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 
 import modin_spark.pandas as mpd
+from modin_spark.plans import physical_plan
 from modin_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -152,8 +153,8 @@ def test_repartition_by_shares_one_exchange_across_groupbys():
     got = fast.to_pandas().sort_values("l_orderkey").reset_index(drop=True)
     pd.testing.assert_frame_equal(base, got)
 
-    plan = fast._frame.sdf._jdf.queryExecution().executedPlan().toString()
-    slow_plan = agg(li)._frame.sdf._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(fast._frame.sdf)
+    slow_plan = physical_plan(agg(li)._frame.sdf)
     assert plan.count("Exchange hashpartitioning") == 1
     assert slow_plan.count("Exchange hashpartitioning") == 2
 

@@ -5,6 +5,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from modin_spark.plans import optimized_plan, physical_plan
 from tests.conftest import assert_series_equal
 
 
@@ -110,7 +111,7 @@ def test_rolling_after_shift_single_scan_plan(events_pdf):
     m = _mk(events_pdf).sort_values("a")
     x = m["b"]
     r = x.rolling(7).corr(x.shift(1))
-    plan = r._frame.sdf._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(r._frame.sdf)
     assert plan.count("Scan ExistingRDD") + plan.count("Scan parquet") <= 8
     got = r.to_pandas()
     p = events_pdf.sort_values("a")
@@ -163,9 +164,9 @@ def test_transpose_output_order_is_dense_projection(monkeypatch):
     pdf = pd.DataFrame({"a": [1.0, 2.0, 3.0], "b": [4.0, 5.0, 6.0], "c": [7.0, 8.0, 9.0]})
     t = mpd.DataFrame(pdf).T
     assert t._frame.order_dense
-    before = t._frame.sdf._jdf.queryExecution().executedPlan().toString().count("Exchange")
+    before = physical_plan(t._frame.sdf).count("Exchange")
     pos = t._frame.with_global_position("__p__")
-    after = pos.sdf._jdf.queryExecution().executedPlan().toString().count("Exchange")
+    after = physical_plan(pos.sdf).count("Exchange")
     assert after == before  # pure projection: no new exchange
     got = [r["__p__"] for r in pos.sdf.orderBy("__p__").select("__p__").collect()]
     assert got == [0, 1, 2]
@@ -187,8 +188,8 @@ def test_second_transpose_skips_persist():
     pdf = pd.DataFrame({"x": [1.0, 2.0], "y": [3.0, 4.0]})
     t1 = mpd.DataFrame(pdf).T
     t2 = t1.T
-    p1 = t1._frame.sdf._jdf.queryExecution().optimizedPlan().toString()
-    p2 = t2._frame.sdf._jdf.queryExecution().optimizedPlan().toString()
+    p1 = optimized_plan(t1._frame.sdf)
+    p2 = optimized_plan(t2._frame.sdf)
     assert p2.count("InMemoryRelation") == p1.count("InMemoryRelation")
 
 
@@ -202,7 +203,7 @@ def test_bounded_window_input_is_pinned(events_pdf):
 
     m = mpd.DataFrame(events_pdf).sort_values("a").head(500)
     r = m["b"].rolling(5).mean()
-    plan = r._frame.sdf._jdf.queryExecution().optimizedPlan().toString()
+    plan = optimized_plan(r._frame.sdf)
     assert "InMemoryRelation" in plan
     # parity against pandas on the same head
     p = events_pdf.sort_values("a").head(500)
@@ -212,7 +213,7 @@ def test_bounded_window_input_is_pinned(events_pdf):
 
     m2 = mpd.DataFrame(events_pdf).sort_values("a")
     r2 = m2["b"].rolling(5).mean()
-    plan2 = r2._frame.sdf._jdf.queryExecution().optimizedPlan().toString()
+    plan2 = optimized_plan(r2._frame.sdf)
     assert "InMemoryRelation" not in plan2
 
 

@@ -18,6 +18,7 @@ import pandas as pd
 import pytest
 
 import modin_spark.pandas as mpd
+from modin_spark.plans import optimized_plan
 
 
 def test_dt_round_odd_freq_rounds_up(spark):
@@ -193,7 +194,7 @@ def test_transpose_mixed_no_driver_materialization(spark):
     # parallelized driver collect — it must still read the source
     pdf = pd.DataFrame({"a": list(range(50)), "s": [f"v{i}" for i in range(50)]})
     t = mpd.from_pandas(pdf).T
-    plan = t._frame.sdf._jdf.queryExecution().optimizedPlan().toString()
+    plan = optimized_plan(t._frame.sdf)
     assert "Expand" in plan or "Generate" in plan or "Aggregate" in plan, plan
 
 

@@ -6,6 +6,7 @@ import numpy as np
 import pandas as pd
 
 import modin_spark.pandas as mpd
+from modin_spark.plans import optimized_plan
 
 
 def S(ps):
@@ -67,7 +68,7 @@ def test_apply_axis0_bigint_exact(spark):
 def _plan_is_distributed(df):
     # the transposed frame's plan must not be a driver LocalRelation /
     # parallelized pandas payload
-    plan = df._frame.sdf._jdf.queryExecution().optimizedPlan().toString()
+    plan = optimized_plan(df._frame.sdf)
     return "LocalRelation" not in plan.split("\n")[0]
 
 

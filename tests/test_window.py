@@ -4,7 +4,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from tests.conftest import assert_series_equal
+from tests.conftest import assert_df_equal, assert_series_equal
 
 
 @pytest.mark.parametrize("op", ["cumsum", "cummax", "cummin", "cumprod"])
@@ -85,20 +85,91 @@ def test_groupby_rolling(mdf, pdf):
     np.testing.assert_allclose(got.values, ref.values, rtol=1e-9, equal_nan=True)
 
 
-def test_block_boundary_correctness(spark):
-    """Rolling/cumsum across block boundaries (the halo/carry logic)."""
+def _arange():
+    return pd.DataFrame({"v": np.arange(100, dtype="float64")})
+
+
+def _carry_input():
+    """100 rows over 16-row blocks: NaN runs that cross block edges (13-19,
+    46-50, 78-81), a lone NaN at an edge (32), a NaN-free tail."""
+    rng = np.random.default_rng(7)
+    v = rng.normal(3.0, 2.0, 100)
+    for lo, hi in ((13, 20), (32, 33), (46, 51), (78, 82)):
+        v[lo:hi] = np.nan
+    w = rng.normal(-1.0, 0.5, 100)
+    w[[5, 15, 16, 17, 60]] = np.nan
+    return pd.DataFrame({"v": v, "w": w})
+
+
+def _null_first_block():
+    """The whole first block (and then some) is NaN: its carry is null."""
+    v = np.arange(100, dtype="float64")
+    v[:20] = np.nan
+    v[40:43] = np.nan
+    return pd.DataFrame({"v": v, "w": np.cos(np.arange(100.0))})
+
+
+_BLOCK_CASES = {
+    "cumsum": (_arange, lambda d: d.v.cumsum()),
+    "rolling7_sum": (_arange, lambda d: d.v.rolling(7).sum()),
+    "expanding_mean": (_arange, lambda d: d.v.expanding().mean()),
+    "ffill": (_arange, lambda d: d.v.ffill()),
+    "bfill": (_carry_input, lambda d: d.v.bfill()),
+    "ffill_limit2": (_carry_input, lambda d: d.v.ffill(limit=2)),
+    "bfill_limit2": (_carry_input, lambda d: d.v.bfill(limit=2)),
+    "frame_ffill_bfill": (_carry_input, lambda d: d.ffill(limit=2).bfill()),
+    "null_block_ffill": (_null_first_block, lambda d: d.v.ffill()),
+    "null_block_bfill_limit": (_null_first_block, lambda d: d.v.bfill(limit=2)),
+    "null_block_cumsum": (_null_first_block, lambda d: d.v.cumsum()),
+    "null_block_cummax": (_null_first_block, lambda d: d.v.cummax()),
+    "null_block_expanding_mean": (
+        _null_first_block, lambda d: d.v.expanding(min_periods=3).mean()),
+    "cumprod": (_carry_input, lambda d: (1.0 + d.w / 50.0).cumprod()),
+    "cummax": (_carry_input, lambda d: d.v.cummax()),
+    "cummin": (_carry_input, lambda d: d.v.cummin()),
+    "bool_cumsum": (_carry_input, lambda d: (d.w > -1.0).cumsum()),
+    **{f"expanding_{agg}": (_carry_input,
+                            lambda d, agg=agg: getattr(d.v.expanding(min_periods=3), agg)())
+       for agg in ("var", "std", "skew", "kurt", "min", "max", "count")},
+    "expanding_corr_pair": (_carry_input, lambda d: d.v.expanding(min_periods=3).corr(d.w)),
+    "expanding_cov_pair": (_carry_input, lambda d: d.v.expanding(min_periods=3).cov(d.w)),
+    "expanding_corr_pairwise": (_carry_input, lambda d: d.expanding(min_periods=3).corr()),
+    "expanding_cov_pairwise": (_carry_input, lambda d: d.expanding(min_periods=3).cov()),
+    **{f"interpolate_{ld}": (_carry_input,
+                             lambda d, ld=ld: d.interpolate(limit_direction=ld))
+       for ld in ("forward", "backward", "both")},
+    **{f"interpolate_{ld}_limit2": (_carry_input,
+                                    lambda d, ld=ld: d.interpolate(limit=2, limit_direction=ld))
+       for ld in ("forward", "backward", "both")},
+    "interpolate_null_block_both": (
+        _null_first_block, lambda d: d.interpolate(limit_direction="both")),
+    "interpolate_inside": (_carry_input, lambda d: d.interpolate(limit_area="inside")),
+    "interpolate_outside_both": (
+        _null_first_block, lambda d: d.interpolate(limit_direction="both", limit_area="outside")),
+}
+
+
+@pytest.mark.parametrize("case", list(_BLOCK_CASES))
+def test_block_boundary_correctness(spark, case):
+    """Rolling halos and block carries (prefix over per-block totals,
+    forward and backward) across many 16-row blocks, against pandas on the
+    same input."""
     import modin_spark.pandas as mpd
     from modin_spark.core import windows
 
+    make, op = _BLOCK_CASES[case]
+    p = make()
     old = windows.BLOCK
     windows.BLOCK = 16  # force many blocks
     try:
-        p = pd.DataFrame({"v": np.arange(100, dtype="float64")})
-        m = mpd.from_pandas(p)
-        assert_series_equal(m.v.cumsum(), p.v.cumsum())
-        assert_series_equal(m.v.rolling(7).sum(), p.v.rolling(7).sum())
-        assert_series_equal(m.v.expanding().mean(), p.v.expanding().mean())
-        assert_series_equal(m.v.ffill(), p.v.ffill())
+        got, ref = op(mpd.from_pandas(p)), op(p)
+        if isinstance(ref, pd.DataFrame):
+            got = got.to_pandas()
+            if isinstance(ref.index, pd.MultiIndex):  # pairwise: (row, column)
+                assert got.index.tolist() == ref.index.tolist()
+            assert_df_equal(got, ref)
+        else:
+            assert_series_equal(got, ref)
     finally:
         windows.BLOCK = old
 

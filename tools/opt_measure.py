@@ -4,20 +4,18 @@ For each named query (default: the full bench HEADLINE list):
   - build the DataFrame, timing driver-side plan construction (build)
   - time count() (the bench's action) min-of-N
   - time the noop sink (computes every column, guide §1.4) min-of-N
-  - optionally dump .explain("formatted") to plans/r16/<q>_<tag>.txt
+
+Plans are dumped by tools/dump_plans.py, not here.
 
 Usage:
-  python tools/opt_measure.py [--sf DIR] [--runs N] [--tag before|after|none]
-                              [query ...]
+  python tools/opt_measure.py [--sf DIR] [--runs N] [--noop] [query ...]
 Prints one JSON line per query and a totals line; also appends to
-/tmp/opt_measure_<tag>.jsonl so partial runs survive.
+/tmp/opt_measure.jsonl so partial runs survive.
 """
 
 from __future__ import annotations
 
 import argparse
-import contextlib
-import io
 import json
 import os
 import sys
@@ -31,7 +29,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--tag", default="none", help="plans/r16/<q>_<tag>.txt; 'none' skips the dump")
     ap.add_argument("--noop", action="store_true", help="also time the noop sink")
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
@@ -54,9 +51,7 @@ def main() -> None:
     spark.range(100_000, numPartitions=ncpu).select(_warm("id")).count()
     spark.range(100_000, numPartitions=ncpu).mapInPandas(lambda it: it, "id long").count()
 
-    plans_dir = os.path.join(REPO, "plans", "r16")
-    os.makedirs(plans_dir, exist_ok=True)
-    out_path = f"/tmp/opt_measure_{args.tag}.jsonl"
+    out_path = "/tmp/opt_measure.jsonl"
     totals = {"build": 0.0, "count": 0.0, "noop": 0.0}
     for name in names:
         fn = qs[name]
@@ -83,12 +78,6 @@ def main() -> None:
             totals["build"] += rec["build"]
             totals["count"] += rec["count"]
             totals["noop"] += rec.get("noop", 0.0)
-            if args.tag != "none":
-                buf = io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    df.explain("formatted")
-                with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
-                    f.write(buf.getvalue())
         except Exception as e:
             rec["err"] = f"{type(e).__name__}: {str(e)[:160]}"
         print(json.dumps(rec), flush=True)
