@@ -34,6 +34,7 @@ from modin_spark.plans import limit_bounded
 BLOCK = 1 << 16  # rows per block: bounds window-state size per task
 _POS = "__pos__"
 _BLK = "__blk__"
+_HALO = "__halo__"
 
 
 def _count_smaller_before(keys, m):
@@ -79,8 +80,8 @@ def _count_smaller_before(keys, m):
 
 def _with_blocks(frame: SparkFrame) -> SparkFrame:
     # NOT persisted in general, although the block consumers read this
-    # lineage from several plan branches (halo union, carry aggregates,
-    # join-backs): an interleaved A/B at BOTH sf0.1 and the 10x sf1 rung
+    # lineage from several plan branches (carry aggregates, join-backs):
+    # an interleaved A/B at BOTH sf0.1 and the 10x sf1 rung
     # showed the persist LOSES (rolling_pair 2.45->4.09s at sf1) — the cache
     # materializes the full row width and defeats the parquet scan's column
     # pruning, which costs more than the pruned scan+sort replays it saves
@@ -115,47 +116,60 @@ def _block_carry(sdf, table):
     return carry_join(sdf, table, _BLK).drop(carry_key(_BLK))
 
 
-def _halo_union(fr_sdf, back: int, fwd: int = 0):
-    """Base rows (__halo__=0) plus halo copies: the last ``back`` rows of each
-    block copied into the NEXT block (backward-looking context) and the first
-    ``fwd`` rows copied into the PREVIOUS block (forward-looking context, used
-    by centered windows). Every genuine row then sees its full window inside
-    one bounded partition. Halo extents must fit one block — callers guard
-    window <= BLOCK (use blocked_pandas, whose explode-sequence halo spans
-    multiple blocks, for wider context).
+def halo(sdf, back: int | None, fwd: int = 0):
+    """Block + halo rows: each row in its own block, plus one copy in every
+    other block that needs it as context — the ``back`` rows before the
+    block (``None``: the block's whole prefix) and the ``fwd`` rows after it
+    (centered windows). Copies carry ``__halo__`` true: a kernel computes
+    over block + halo and keeps only the rows whose ``__halo__`` is false.
+    Negative extents clamp to 0 (``closed='left'`` passes ``fwd=-1``).
 
-    Emitted as ONE pass over the input — each row explodes into its base
-    (blk, 0) assignment plus 0-2 conditional halo assignments — instead of a
-    union of filtered branches, which replayed the entire upstream lineage
-    once per branch (3 full scans per rolling op at scale; guide §2.4).
+    ONE projection over the input: the row at position p serves blocks
+    (p - fwd) div BLOCK .. (p + back) div BLOCK, exploded from
+    ``CASE WHEN lo < hi THEN sequence(lo, hi) END``. A union of a base branch
+    with filtered halo branches replayed the whole upstream lineage once per
+    branch (3 full scans per rolling op at scale). Rows that
+    serve no other block (all but the block-edge rows) get a NULL array, so
+    explode_outer passes them through once and builds no array for them.
+    The same expression gives 0-2 neighbour copies, the multi-block decay
+    halos of EWM and the whole prefix.
     """
+    if back is not None and back <= 0 and fwd <= 0:
+        return sdf.withColumn(_HALO, F.lit(False))
+    if back is None:
+        # deliberate ACTION during construction: the max block id bakes into
+        # the plan as a LITERAL, so every subsequent action on the
+        # (frequently re-executed) lineage skips the extra scan. The lazy
+        # alternative (1-row broadcast cross join) was measured WORSE
+        # end-to-end: build 1.5s -> 0.8s but exec 0.7s -> 1.7s per action,
+        # because the max-agg subjob then runs inside every action and the
+        # non-literal bound defeats pruning.
+        hi = f"{sdf.agg(F.max(_BLK)).collect()[0][0] or 0}L"
+    else:
+        hi = f"({_POS} + {max(back, 0)}) div {BLOCK}"
+    lo = f"greatest(({_POS} - {fwd}) div {BLOCK}, 0L)" if fwd > 0 else _BLK
+    sdf = sdf.selectExpr(
+        "*", f"explode_outer(CASE WHEN {lo} < {hi} THEN sequence({lo}, {hi}) END) AS __e__")
+    return sdf.withColumns({
+        _BLK: F.expr(f"coalesce(__e__, {_BLK})"),
+        _HALO: F.expr(f"__e__ IS NOT NULL AND __e__ <> {_BLK}"),
+    }).drop("__e__")
+
+
+def _window_halo(sdf, back: int, fwd: int = 0):
+    """``halo`` for the SQL window kernels, which hold one block + halo per
+    window partition: their extents must fit one block (blocked_pandas takes
+    wider context)."""
     if back >= BLOCK or fwd >= BLOCK:
         raise NotImplementedError(
             f"rolling window wider than one {BLOCK}-row block (back={back}, fwd={fwd})"
         )
-    if back <= 0 and fwd <= 0:
-        return fr_sdf.withColumn("__halo__", F.lit(0))
-    copies = [F.struct(F.col(_BLK).alias("b"), F.lit(0).alias("h"))]
-    if back > 0:
-        copies.append(
-            F.when(
-                (F.col(_POS) % BLOCK) >= (BLOCK - back),
-                F.struct((F.col(_BLK) + 1).alias("b"), F.lit(1).alias("h")),
-            )
-        )
-    if fwd > 0:
-        copies.append(
-            F.when(
-                ((F.col(_POS) % BLOCK) < fwd) & (F.col(_BLK) > 0),
-                F.struct((F.col(_BLK) - 1).alias("b"), F.lit(1).alias("h")),
-            )
-        )
-    sdf = fr_sdf.withColumn("__asg__", F.explode(F.array_compact(F.array(*copies))))
-    return (
-        sdf.withColumn(_BLK, F.col("__asg__.b"))
-        .withColumn("__halo__", F.col("__asg__.h"))
-        .drop("__asg__")
-    )
+    return halo(sdf, back, fwd)
+
+
+def _core_rows(sdf):
+    """Drop the halo copies: the kernel's output rows."""
+    return sdf.where(f"NOT {_HALO}").drop(_HALO)
 
 
 def _center_extents(window: int, center: bool) -> tuple[int, int]:
@@ -252,7 +266,7 @@ def shift(frame: SparkFrame, positions: Sequence[int], periods: int = 1, fill_va
     if 0 < abs(periods) < BLOCK and not (fill_value is not None and periods < 0):
         fr = _with_blocks(frame)
         back, fwd = (periods, 0) if periods > 0 else (0, -periods)
-        sdf = _halo_union(fr.sdf, back, fwd)
+        sdf = _window_halo(fr.sdf, back, fwd)
         w = Window.partitionBy(_BLK).orderBy(_POS)
         phys = [frame.data_cols[i] for i in positions]
         out_cols = fresh_names(len(phys))
@@ -266,7 +280,7 @@ def shift(frame: SparkFrame, positions: Sequence[int], periods: int = 1, fill_va
             if fill_value is not None:  # periods > 0 here (guard above)
                 e = F.when(F.col(_POS) < periods, F.lit(fill_value)).otherwise(e)
             sel.append(e.alias(oc))
-        sdf = sdf.select("*", *sel).where(F.col("__halo__") == 0).drop("__halo__")
+        sdf = _core_rows(sdf.select("*", *sel))
         labels = [frame.columns[i] for i in positions]
         out = fr._same_rows(sdf).project(labels, [F.col(oc) for oc in out_cols])
         return _drop_aux(out)
@@ -549,7 +563,7 @@ def rolling_apply(frame, positions, window, func, min_periods=None, center=False
     labels = [frame2.columns[i] for i in positions]
     fr = _with_blocks(frame2)
     back, fwd = _center_extents(window, center)
-    sdf = _halo_union(fr.sdf, back, fwd)
+    sdf = _window_halo(fr.sdf, back, fwd)
     w = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(-back, fwd)
     out_phys = fresh_names(len(phys))
     for p, op_ in zip(phys, out_phys):
@@ -560,7 +574,7 @@ def rolling_apply(frame, positions, window, func, min_periods=None, center=False
         ).over(w)
         pos_cnt = F.count(F.lit(1)).over(w)
         sdf = sdf.withColumn(op_, F.when(pos_cnt >= 1, _apply(arr)))
-    sdf = sdf.where(F.col("__halo__") == 0).drop("__halo__")
+    sdf = _core_rows(sdf)
     out = fr._same_rows(sdf).project(labels, [F.col(op_) for op_ in out_phys])
     return _drop_aux(out)
 
@@ -652,13 +666,13 @@ def rolling_agg(
         return frame.project(labels, exprs)
 
     fr = _with_blocks(frame)
-    sdf = _halo_union(fr.sdf, back, fwd)
+    sdf = _window_halo(fr.sdf, back, fwd)
     w = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(-back, fwd)
     out_phys = fresh_names(len(phys))
     for p, op_ in zip(phys, out_phys):
         val = over_fn(F.col(p), w)
         sdf = sdf.withColumn(op_, F.when(gate(p, w) >= min_periods, val).otherwise(F.lit(None)))
-    sdf = sdf.where(F.col("__halo__") == 0).drop("__halo__")
+    sdf = _core_rows(sdf)
     out = fr._same_rows(sdf).project(labels, [F.col(op_) for op_ in out_phys])
     return _drop_aux(out)
 
@@ -711,7 +725,7 @@ def rolling_weighted(
     labels = [frame.columns[i] for i in positions]
     fr = _with_blocks(frame)
     back, fwd = _center_extents(window, center)
-    sdf = _halo_union(fr.sdf, back, fwd)
+    sdf = _window_halo(fr.sdf, back, fwd)
     w_ord = Window.partitionBy(_BLK).orderBy(_POS)
     out_phys = fresh_names(len(phys))
     wsum = float(np.sum(weights))
@@ -737,7 +751,7 @@ def rolling_weighted(
         else:
             e = acc
         sdf = sdf.withColumn(op_, e)
-    sdf = sdf.where(F.col("__halo__") == 0).drop("__halo__")
+    sdf = _core_rows(sdf)
     out = fr._same_rows(sdf).project(labels, [F.col(op_) for op_ in out_phys])
     return _drop_aux(out)
 
@@ -934,6 +948,16 @@ def expanding_pair(frame: SparkFrame, px: str, py: str, stat: str, min_periods: 
     return _drop_aux(out)
 
 
+def _pair_window(x, y, stat: str, w, min_periods: int):
+    """Rolling corr/cov of ``x`` and ``y`` over window ``w``, pairwise-
+    complete (pandas semantics): only rows where both are present count,
+    and fewer than ``min_periods`` of them give NULL."""
+    both = x.isNotNull() & y.isNotNull()
+    n_pair = F.sum(F.when(both, F.lit(1)).otherwise(F.lit(0))).over(w)
+    fn = F.covar_samp if stat == "cov" else F.corr
+    return F.when(n_pair >= min_periods, fn(F.when(both, x), F.when(both, y)).over(w))
+
+
 def rolling_pair(
     frame: SparkFrame, px: str, py: str, window: int, stat: str, min_periods=None, out_label="0",
     center: bool = False,
@@ -944,15 +968,10 @@ def rolling_pair(
         min_periods = window
     fr = _with_blocks(frame)
     back, fwd = _center_extents(window, center)
-    sdf = _halo_union(fr.sdf, back, fwd)
+    sdf = _window_halo(fr.sdf, back, fwd)
     w = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(-back, fwd)
-    x, y = F.col(px), F.col(py)
-    both = x.isNotNull() & y.isNotNull()
-    n_pair = F.sum(F.when(both, F.lit(1)).otherwise(F.lit(0))).over(w)
-    fn = F.covar_samp if stat == "cov" else F.corr
-    val = fn(F.when(both, x), F.when(both, y)).over(w)
-    sdf = sdf.withColumn("__pv__", F.when(n_pair >= min_periods, val))
-    sdf = sdf.where(F.col("__halo__") == 0).drop("__halo__")
+    sdf = sdf.withColumn("__pv__", _pair_window(F.col(px), F.col(py), stat, w, min_periods))
+    sdf = _core_rows(sdf)
     out = fr._same_rows(sdf).project([out_label], [F.col("__pv__")])
     return _drop_aux(out)
 
@@ -1041,7 +1060,7 @@ def _value_bucket_grid(rows, nparts: int, null_bucket: bool):
     rows in EARLIER blocks.
 
     Buckets come from approx-quantile boundaries baked as LITERALS (one
-    build-time pass, like blocked_pandas' max-block literal).
+    build-time pass, like halo's max-block literal).
     repartitionByRange + spark_partition_id would re-SAMPLE different
     boundaries on every re-evaluation of the plan's branches — the bucket
     ids must be one consistent function of the value. Boundary accuracy
@@ -1474,20 +1493,15 @@ def rolling_pair_frame(frame: SparkFrame, positions: Sequence[int], py: str, win
         min_periods = window
     fr = _with_blocks(frame)
     back, fwd = _center_extents(window, center)
-    sdf = _halo_union(fr.sdf, back, fwd)
+    sdf = _window_halo(fr.sdf, back, fwd)
     w = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(-back, fwd)
-    fn = F.covar_samp if stat == "cov" else F.corr
     phys = [frame.data_cols[i] for i in positions]
     labels = [frame.columns[i] for i in positions]
     out_phys = fresh_names(len(phys))
     y = F.col(py).cast("double")
     for p, op_ in zip(phys, out_phys):
-        x = F.col(p).cast("double")
-        both = x.isNotNull() & y.isNotNull()
-        n_pair = F.sum(F.when(both, F.lit(1)).otherwise(F.lit(0))).over(w)
-        val = fn(F.when(both, x), F.when(both, y)).over(w)
-        sdf = sdf.withColumn(op_, F.when(n_pair >= min_periods, val))
-    sdf = sdf.where(F.col("__halo__") == 0).drop("__halo__")
+        sdf = sdf.withColumn(op_, _pair_window(F.col(p).cast("double"), y, stat, w, min_periods))
+    sdf = _core_rows(sdf)
     out = fr._same_rows(sdf).project(labels, [F.col(op_) for op_ in out_phys])
     return _drop_aux(out)
 
@@ -1507,24 +1521,20 @@ def rolling_pairwise(frame: SparkFrame, positions: Sequence[int], window: int, s
     labels = [fr0.columns[i] for i in positions]
     fr = _with_blocks(fr0)
     back, fwd = _center_extents(window, center)
-    sdf = _halo_union(fr.sdf, back, fwd)
+    sdf = _window_halo(fr.sdf, back, fwd)
     w = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(-back, fwd)
-    fn = F.covar_samp if stat == "cov" else F.corr
     cell = {}
     for i, pi in enumerate(phys):
         for j, pj in enumerate(phys):
             if stat == "cov" and j < i:
                 continue  # symmetric: reuse the upper triangle
-            x, y = F.col(pi).cast("double"), F.col(pj).cast("double")
-            both = x.isNotNull() & y.isNotNull()
-            n_pair = F.sum(F.when(both, F.lit(1)).otherwise(F.lit(0))).over(w)
-            val = fn(F.when(both, x), F.when(both, y)).over(w)
             nm = f"__pw_{i}_{j}__"
-            sdf = sdf.withColumn(nm, F.when(n_pair >= min_periods, val))
+            sdf = sdf.withColumn(nm, _pair_window(
+                F.col(pi).cast("double"), F.col(pj).cast("double"), stat, w, min_periods))
             cell[(i, j)] = nm
             if stat == "cov":
                 cell[(j, i)] = nm
-    sdf = sdf.where(F.col("__halo__") == 0).drop("__halo__")
+    sdf = _core_rows(sdf)
     lvl = fresh_names(1)[0]
     out_phys = fresh_names(len(phys))
     structs = [
@@ -1552,160 +1562,79 @@ def rolling_pairwise(frame: SparkFrame, positions: Sequence[int], window: int, s
                       idx_names + [None], has_order=True)
 
 
-def grouped_pandas_transform(frame: SparkFrame, positions: Sequence[int],
-                             group_phys: Sequence[str], pd_fn) -> SparkFrame:
-    """Length-preserving per-group pandas transform (``groupby().ewm()``,
-    ``groupby().rolling().apply()``): the group keys already partition the
-    work, so each group runs exact pandas inside ONE applyInPandas task
-    (same groups-fit-in-a-task contract as groupby.apply).  Rows sort by
-    frame order inside the task and the result rejoins on position, so
-    labels and order survive (same scheme as blocked_pandas)."""
+def _pandas_by(fr: SparkFrame, sdf, keys: Sequence[str], phys: Sequence[str], labels,
+               pd_fn) -> SparkFrame:
+    """Exact pandas per ``keys`` group in ONE applyInPandas pass, rejoined to
+    ``fr`` on position so labels and order survive. Each group's rows sort
+    by position; ``pd_fn`` gets the float64 DataFrame of ``phys`` (columns
+    0..k-1, positional: labels may collide or be tuples) and returns a
+    DataFrame or Series with one column per output label. Rows whose
+    ``__halo__`` is true are context only: computed on, not returned."""
     from pyspark.sql import types as T
 
-    frame2 = frame.ensure_order()
-    phys = [frame2.data_cols[i] for i in positions]
-    fr = _with_blocks(frame2)
-    labels = [frame2.columns[i] for i in positions]
-    sel = list(dict.fromkeys([_POS, *group_phys, *phys]))
-    narrow = fr.sdf.select(*sel)
-    out_names = fresh_names(len(phys))
-    schema = T.StructType(
-        [T.StructField(_POS, T.LongType())]
-        + [T.StructField(o, T.DoubleType()) for o in out_names]
-    )
-
-    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(_POS)
-        sub = pdf[phys].astype("float64")
-        sub.columns = range(len(phys))  # positional: labels may collide/be tuples
-        res = pd_fn(sub)
-        out = {_POS: pdf[_POS].to_numpy()}
-        for j, o in enumerate(out_names):
-            out[o] = res.iloc[:, j].to_numpy(dtype="float64")
-        return pd.DataFrame(out)
-
-    res = narrow.groupBy(*[F.col(k) for k in group_phys]).applyInPandas(apply_fn, schema)
-    res = res.select(F.col(_POS).alias("__pos_r__"), *[F.col(o) for o in out_names])
-    joined = fr.sdf.join(res, fr.sdf[_POS] == res["__pos_r__"], "left").drop("__pos_r__")
-    out = fr._same_rows(joined).project(labels, [F.col(o) for o in out_names])
-    return _drop_aux(out)
-
-
-def blocked_pandas_pair(frame: SparkFrame, px: str, py: str, pd_fn2,
-                        halo_rows: int | None, out_label="0") -> SparkFrame:
-    """Two-column blocked pandas (``ewm().corr/cov(other)``, time-decayed
-    ``ewm(times=)``): the same block+halo scheme as blocked_pandas, with
-    ``pd_fn2(sx, sy) -> Series`` computed over both columns together.
-    ``halo_rows=None`` gives each block the ENTIRE prefix (exact
-    non-row-bounded context — same documented slow path as blocked_pandas)."""
-    from pyspark.sql import types as T
-
-    fr = _with_blocks(frame.ensure_order())
-    narrow = fr.sdf.select(_POS, _BLK, px, py)
-    if halo_rows is None:
-        maxblk = narrow.agg(F.max(F.col(_BLK)).alias("m")).collect()[0].m or 0
-        halo = narrow.where(F.col(_BLK) < maxblk).withColumn(
-            _BLK, F.explode(F.sequence(F.col(_BLK) + 1, F.lit(maxblk)))
-        )
-    else:
-        lo_blk = F.col(_BLK) + 1
-        hi_blk = ((F.col(_POS) + F.lit(halo_rows)) / F.lit(BLOCK)).cast("long")
-        halo = narrow.where(hi_blk >= lo_blk).withColumn(
-            _BLK, F.explode(F.sequence(lo_blk, hi_blk))
-        )
-    u = narrow.withColumn("__halo__", F.lit(0)).unionByName(
-        halo.withColumn("__halo__", F.lit(1))
-    )
-    o = fresh_names(1)[0]
-    schema = T.StructType([T.StructField(_POS, T.LongType()), T.StructField(o, T.DoubleType())])
-
-    def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(_POS)
-        keep = (pdf["__halo__"] == 0).to_numpy()
-        r = pd_fn2(pdf[px].astype("float64"), pdf[py].astype("float64"))
-        return pd.DataFrame({_POS: pdf[_POS].to_numpy()[keep],
-                             o: r.to_numpy(dtype="float64")[keep]})
-
-    res = u.groupBy(_BLK).applyInPandas(apply_fn, schema)
-    res = res.select(F.col(_POS).alias("__pos_r__"), F.col(o))
-    joined = fr.sdf.join(res, fr.sdf[_POS] == res["__pos_r__"], "left").drop("__pos_r__")
-    out = fr._same_rows(joined).project([out_label], [F.col(o)])
-    return _drop_aux(out)
-
-
-def blocked_pandas(frame: SparkFrame, positions: Sequence[int], pd_fn, halo_rows: int | None,
-                   fwd_halo_rows: int = 0):
-    """Run a pandas Series->Series positional function per block with enough
-    preceding context, via one applyInPandas pass.
-
-    ``halo_rows=k``: each block sees the k preceding rows (rolling-style).
-    ``halo_rows=None``: each block sees the ENTIRE prefix (expanding order
-    statistics: median/quantile/rank/apply are not algebraically
-    decomposable, so the exact answer needs all prior values — cost is
-    O(n·#blocks) rows shipped and the last block holds the full column;
-    use the algebraic expanding aggs wherever possible, this is the
-    documented exact-order-statistic slow path).
-    ``fwd_halo_rows=k``: each block additionally sees the k FOLLOWING rows
-    (centered windows; must be < BLOCK).
-    """
-    from pyspark.sql import types as T
-
-    frame2 = frame.ensure_order()
-    phys = [frame2.data_cols[i] for i in positions]
-    labels = [frame2.columns[i] for i in positions]
-    fr = _with_blocks(frame2)
-    narrow = fr.sdf.select(_POS, _BLK, *phys)
-    if halo_rows is None:
-        # deliberate ACTION during construction: the max block id bakes into
-        # the plan as a LITERAL, so the where-filter prunes at scan time and
-        # every subsequent action on the (frequently re-executed) lineage
-        # skips the extra scan. The lazy alternative (1-row broadcast cross
-        # join) was measured WORSE end-to-end: build 1.5s -> 0.8s but exec
-        # 0.7s -> 1.7s per action, because the max-agg subjob then runs
-        # inside every action and the non-literal bound defeats pruning.
-        maxblk = narrow.agg(F.max(F.col(_BLK)).alias("m")).collect()[0].m or 0
-        halo = narrow.where(F.col(_BLK) < maxblk).withColumn(
-            _BLK, F.explode(F.sequence(F.col(_BLK) + 1, F.lit(maxblk)))
-        )
-    else:
-        # a row at position p serves as halo for every block b with
-        # b*BLOCK - halo_rows <= p < b*BLOCK — one block when halo < BLOCK,
-        # several when the context exceeds a block (e.g. EWM decay halos with
-        # small test BLOCK). Blocks past the end produce halo-only groups
-        # that emit nothing (all rows filtered) — harmless.
-        lo_blk = F.col(_BLK) + 1
-        hi_blk = ((F.col(_POS) + F.lit(halo_rows)) / F.lit(BLOCK)).cast("long")
-        halo = narrow.where(hi_blk >= lo_blk).withColumn(
-            _BLK, F.explode(F.sequence(lo_blk, hi_blk))
-        )
-    u = narrow.withColumn("__halo__", F.lit(0)).unionByName(halo.withColumn("__halo__", F.lit(1)))
-    if fwd_halo_rows:
-        fhalo = (
-            narrow.where(((F.col(_POS) % BLOCK) < fwd_halo_rows) & (F.col(_BLK) > 0))
-            .withColumn(_BLK, F.col(_BLK) - 1)
-            .withColumn("__halo__", F.lit(1))
-        )
-        u = u.unionByName(fhalo)
-
-    out_names = fresh_names(len(phys))
+    out_names = fresh_names(len(labels))
     schema = T.StructType(
         [T.StructField(_POS, T.LongType())] + [T.StructField(o, T.DoubleType()) for o in out_names]
     )
 
     def apply_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(_POS)
-        keep = (pdf["__halo__"] == 0).to_numpy()
-        res = {_POS: pdf[_POS].to_numpy()[keep]}
-        for p, o in zip(phys, out_names):
-            r = pd_fn(pdf[p].astype("float64"))
-            res[o] = r.to_numpy(dtype="float64")[keep]
-        return pd.DataFrame(res)
+        sub = pdf[list(phys)].astype("float64")
+        sub.columns = range(len(phys))
+        res = pd_fn(sub)
+        if isinstance(res, pd.Series):
+            res = res.to_frame()
+        keep = ~pdf[_HALO].to_numpy() if _HALO in pdf.columns else slice(None)
+        out = {_POS: pdf[_POS].to_numpy()[keep]}
+        for j, o in enumerate(out_names):
+            out[o] = res.iloc[:, j].to_numpy(dtype="float64")[keep]
+        return pd.DataFrame(out)
 
-    res = u.groupBy(_BLK).applyInPandas(apply_fn, schema)
+    res = sdf.groupBy(*keys).applyInPandas(apply_fn, schema)
     res = res.select(F.col(_POS).alias("__pos_r__"), *[F.col(o) for o in out_names])
     joined = fr.sdf.join(res, fr.sdf[_POS] == res["__pos_r__"], "left").drop("__pos_r__")
     out = fr._same_rows(joined).project(labels, [F.col(o) for o in out_names])
     return _drop_aux(out)
+
+
+def grouped_pandas_transform(frame: SparkFrame, positions: Sequence[int],
+                             group_phys: Sequence[str], pd_fn) -> SparkFrame:
+    """Length-preserving per-group pandas transform (``groupby().ewm()``,
+    ``groupby().rolling().apply()``): the group keys already partition the
+    work, so each group runs exact pandas inside ONE applyInPandas task
+    (same groups-fit-in-a-task contract as groupby.apply), with no halo."""
+    frame = frame.ensure_order()
+    phys = [frame.data_cols[i] for i in positions]
+    labels = [frame.columns[i] for i in positions]
+    fr = _with_blocks(frame)
+    sdf = fr.sdf.select(*dict.fromkeys([_POS, *group_phys, *phys]))
+    return _pandas_by(fr, sdf, group_phys, phys, labels, pd_fn)
+
+
+def blocked_pandas(frame: SparkFrame, positions: Sequence[int], pd_fn, back: int | None,
+                   fwd: int = 0, labels=None) -> SparkFrame:
+    """Exact pandas per block with its halo, via one applyInPandas pass:
+    ``pd_fn`` maps the block + halo rows' float64 DataFrame of the
+    ``positions`` columns to a DataFrame or Series (see ``_pandas_by``).
+
+    ``back=k``: each block sees the k preceding rows (rolling-style; EWM
+    decay halos may span several blocks). ``back=None``: each block sees
+    its ENTIRE prefix (expanding order statistics: median/quantile/rank/
+    apply are not algebraically decomposable, so the exact answer needs all
+    prior values — cost is O(n·#blocks) rows shipped and the last block
+    holds the full column; use the algebraic expanding aggs wherever
+    possible, this is the documented exact-order-statistic slow path).
+    ``fwd=k``: each block also sees the k FOLLOWING rows (centered windows).
+    ``labels``: the output labels, one per column ``pd_fn`` returns
+    (default: the input columns' labels).
+    """
+    frame = frame.ensure_order()
+    phys = [frame.data_cols[i] for i in positions]
+    if labels is None:
+        labels = [frame.columns[i] for i in positions]
+    fr = _with_blocks(frame)
+    sdf = halo(fr.sdf.select(_POS, _BLK, *phys), back, fwd)
+    return _pandas_by(fr, sdf, [_BLK], phys, labels, pd_fn)
 
 
 # ---------------------------------------------------------------------------

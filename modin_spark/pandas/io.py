@@ -669,8 +669,7 @@ def read_feather(path, columns=None, **kw) -> DataFrame:
                     out.columns = [str(c) for c in out.columns]
                     yield out[cols]
 
-    n_parts = max(1, min(n_batches, spark.sparkContext.defaultParallelism))
-    ids = spark.range(n_batches, numPartitions=n_parts)
+    ids = spark.range(n_batches, numPartitions=max(1, n_batches))
     sdf = ids.mapInPandas(read_batches, schema)
     return DataFrame(_frame=SparkFrame.from_spark(sdf))
 

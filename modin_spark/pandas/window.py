@@ -17,6 +17,17 @@ _ROLL = ["sum", "mean", "min", "max", "count", "std", "var", "median", "sem", "s
 _EXP = ["sum", "mean", "min", "max", "count", "std", "var", "sem", "skew", "kurt"]
 
 
+def _run_on(obj, kernel, *args, **kw):
+    """``kernel(frame, positions, *args, **kw)`` over a Series (its one
+    column; the result keeps the Series' name, None included) or a
+    DataFrame (its numeric columns)."""
+    if isinstance(obj, Series):
+        return obj._rewrap(kernel(obj._to_frame(), [0], *args, **kw))
+    from modin_spark.pandas.dataframe import DataFrame
+
+    return DataFrame(_frame=kernel(obj._frame, obj._numeric_positions(), *args, **kw))
+
+
 def _pair_name(left, other):
     """pandas' binary-result name rule for window pairs: keep the name only
     when both operands agree (corr/cov of 'a' with 'b' -> unnamed)."""
@@ -95,46 +106,23 @@ class Rolling:
 
     def _run(self, agg: str, **agg_kwargs):
         out = self._run_impl(agg, **agg_kwargs)
-        if isinstance(self._obj, Series) and isinstance(out, Series):
-            # preserve the source series' name (the 1-col frame round trip
-            # would otherwise surface the positional placeholder label)
-            out._name = self._obj._name
         if self._step and self._step > 1:
             # positional stride over the computed result (original labels kept)
             if isinstance(out, Series):
-                from modin_spark.pandas.dataframe import DataFrame
-
-                fr = out._to_frame().slice_positions(0, 2**62, int(self._step))
-                out = Series._from_frame(fr)
-                # the 1-col frame round trip surfaces the placeholder label
-                # for UNNAMED sources; restore the source name (incl None)
-                if isinstance(self._obj, Series):
-                    out._name = self._obj._name
+                out = out._rewrap(out._to_frame().slice_positions(0, 2**62, int(self._step)))
             else:
                 out = out.iloc[:: int(self._step)]
         return out
 
     def _run_impl(self, agg: str, **agg_kwargs):
-        from modin_spark.pandas.dataframe import DataFrame
-
         if self._win_type is not None:
             # pandas accepts the window parameter at either site:
             # rolling(win_type='gaussian', std=3).mean() or .mean(std=3)
             wkw = {**self._win_kwargs, **agg_kwargs}
             if agg not in ("sum", "mean", "var", "std"):
                 raise NotImplementedError(f"win_type rolling supports sum/mean/var/std, not {agg}")
-            if isinstance(self._obj, Series):
-                out = win.rolling_weighted(
-                    self._obj._to_frame(), [0], self._window, self._win_type, agg,
-                    center=self._center, **wkw
-                )
-                return self._obj._rewrap(out)
-            df = self._obj
-            out = win.rolling_weighted(
-                df._frame, df._numeric_positions(), self._window, self._win_type, agg,
-                center=self._center, **wkw
-            )
-            return DataFrame(_frame=out)
+            return _run_on(self._obj, win.rolling_weighted, self._window, self._win_type, agg,
+                           center=self._center, **wkw)
         ddof = agg_kwargs.pop("ddof", 1) if agg in ("var", "std", "sem") else 1
         if agg_kwargs:
             raise TypeError(f"{agg}() got unexpected keyword arguments {sorted(agg_kwargs)} (only win_type windows take window parameters here)")
@@ -145,67 +133,29 @@ class Rolling:
                 raise NotImplementedError("center=True with an offset window")
             dur_us = int(_pd.Timedelta(self._window).value // 1000)
             mp = self._min_periods if self._min_periods is not None else 1
-            closed = self._closed or "right"
-            if isinstance(self._obj, Series):
-                fr = self._obj._to_frame()
-                out = win.rolling_time_agg(fr, [0], dur_us, agg, mp, closed=closed)
-                return Series._from_frame(out)
-            df = self._obj
-            out = win.rolling_time_agg(df._frame, df._numeric_positions(), dur_us, agg, mp, closed=closed)
-            return DataFrame(_frame=out)
-        if isinstance(self._obj, Series):
-            fr = self._obj._to_frame()
-            out = win.rolling_agg(fr, [0], self._window, agg, self._min_periods,
-                                  center=self._center, closed=self._closed, ddof=ddof)
-            return Series._from_frame(out)
-        df = self._obj
-        pos = df._numeric_positions()
-        out = win.rolling_agg(df._frame, pos, self._window, agg, self._min_periods,
-                              center=self._center, closed=self._closed, ddof=ddof)
-        return DataFrame(_frame=out)
+            return _run_on(self._obj, win.rolling_time_agg, dur_us, agg, mp,
+                           closed=self._closed or "right")
+        return _run_on(self._obj, win.rolling_agg, self._window, agg, self._min_periods,
+                       center=self._center, closed=self._closed, ddof=ddof)
 
     def quantile(self, q=0.5):
-        from modin_spark.pandas.dataframe import DataFrame
-
-        if isinstance(self._obj, Series):
-            out = win.rolling_quantile(self._obj._to_frame(), [0], self._window, q, self._min_periods,
-                                       center=self._center)
-            return self._obj._rewrap(out)
-        df = self._obj
-        out = win.rolling_quantile(df._frame, df._numeric_positions(), self._window, q, self._min_periods,
-                                   center=self._center)
-        return DataFrame(_frame=out)
+        return _run_on(self._obj, win.rolling_quantile, self._window, q, self._min_periods,
+                       center=self._center)
 
     def apply(self, func, raw=False):
-        from modin_spark.pandas.dataframe import DataFrame
-
-        if isinstance(self._obj, Series):
-            out = win.rolling_apply(self._obj._to_frame(), [0], self._window, func, self._min_periods,
-                                    center=self._center, raw=raw)
-            return self._obj._rewrap(out)
-        df = self._obj
-        out = win.rolling_apply(df._frame, df._numeric_positions(), self._window, func, self._min_periods,
-                                center=self._center, raw=raw)
-        return DataFrame(_frame=out)
+        return _run_on(self._obj, win.rolling_apply, self._window, func, self._min_periods,
+                       center=self._center, raw=raw)
 
     def rank(self, method="average", ascending=True, pct=False):
-        from modin_spark.pandas.dataframe import DataFrame
-
         w, mp, center = self._window, self._min_periods, self._center
-        back = w - 1 - ((w - 1) // 2) if center else w - 1
-        fwd = (w - 1) // 2 if center else 0
+        back, fwd = win._center_extents(w, center)
 
-        def pd_fn(s):
-            return s.rolling(w, min_periods=mp, center=center).rank(
+        def pd_fn(d):
+            return d.rolling(w, min_periods=mp, center=center).rank(
                 method=method, ascending=ascending, pct=pct
             )
 
-        if isinstance(self._obj, Series):
-            out = win.blocked_pandas(self._obj._to_frame(), [0], pd_fn, halo_rows=back, fwd_halo_rows=fwd)
-            return Series._from_frame(out)
-        df = self._obj
-        out = win.blocked_pandas(df._frame, df._numeric_positions(), pd_fn, halo_rows=back, fwd_halo_rows=fwd)
-        return DataFrame(_frame=out)
+        return _run_on(self._obj, win.blocked_pandas, pd_fn, back, fwd)
 
     def corr(self, other=None, pairwise=None):
         return self._pair(other, "corr")
@@ -246,18 +196,9 @@ class Expanding:
         self._min_periods = min_periods
 
     def _run(self, agg: str, **kw):
-        from modin_spark.pandas.dataframe import DataFrame
-
         ddof = int(kw.pop("ddof", 1)) if agg in ("var", "std", "sem") else 1
         kw.pop("numeric_only", None)
-        if isinstance(self._obj, Series):
-            fr = self._obj._to_frame()
-            out = win.expanding_agg(fr, [0], agg, self._min_periods, ddof=ddof)
-            return self._obj._rewrap(out)
-        df = self._obj
-        pos = df._numeric_positions()
-        out = win.expanding_agg(df._frame, pos, agg, self._min_periods, ddof=ddof)
-        return DataFrame(_frame=out)
+        return _run_on(self._obj, win.expanding_agg, agg, self._min_periods, ddof=ddof)
 
     def agg(self, funcs):
         """Single pass for a list of aggs (one block sort + one carry
@@ -299,24 +240,12 @@ class Expanding:
         # frame spans enough blocks that the whole-prefix blocked path's
         # O(n·#blocks) shipping explodes; small frames keep the single-
         # task pandas pass (fewer shuffles, no bucketing action)
-        from modin_spark.pandas.dataframe import DataFrame
-
         if not self._past_block_threshold():
             return self._order_exact(
-                lambda s, mp=self._min_periods: s.expanding(mp).quantile(
+                lambda d, mp=self._min_periods: d.expanding(mp).quantile(
                     q, interpolation=interpolation))
-        if isinstance(self._obj, Series):
-            out = win.expanding_quantile(
-                self._obj._to_frame(), [0], q, min_periods=self._min_periods,
-                interpolation=interpolation)
-            res = Series._from_frame(out)
-            res._name = self._obj._name  # placeholder label must not leak
-            return res
-        df = self._obj
-        out = win.expanding_quantile(
-            df._frame, df._numeric_positions(), q,
-            min_periods=self._min_periods, interpolation=interpolation)
-        return DataFrame(_frame=out)
+        return _run_on(self._obj, win.expanding_quantile, q, min_periods=self._min_periods,
+                       interpolation=interpolation)
 
     def _past_block_threshold(self) -> bool:
         """True when the frame spans enough pos blocks that whole-prefix
@@ -331,47 +260,26 @@ class Expanding:
         # core.windows.expanding_rank) once the frame spans enough blocks —
         # ranking is pure dominance counting, so no task needs the full
         # prefix; small frames keep the single-task pandas pass
-        from modin_spark.pandas.dataframe import DataFrame
-
         if method in ("average", "min", "max") and self._past_block_threshold():
-            if isinstance(self._obj, Series):
-                out = win.expanding_rank(
-                    self._obj._to_frame(), [0], method=method,
-                    ascending=ascending, pct=pct, min_periods=self._min_periods)
-                res = Series._from_frame(out)
-                res._name = self._obj._name
-                return res
-            df = self._obj
-            out = win.expanding_rank(
-                df._frame, df._numeric_positions(), method=method,
-                ascending=ascending, pct=pct, min_periods=self._min_periods)
-            return DataFrame(_frame=out)
+            return _run_on(self._obj, win.expanding_rank, method=method, ascending=ascending,
+                           pct=pct, min_periods=self._min_periods)
         return self._order_exact(
-            lambda s, mp=self._min_periods: s.expanding(mp).rank(method=method, ascending=ascending, pct=pct)
+            lambda d, mp=self._min_periods: d.expanding(mp).rank(method=method, ascending=ascending, pct=pct)
         )
 
     def apply(self, func, raw=False):
         return self._order_exact(
-            lambda s, mp=self._min_periods, f=func: s.expanding(mp).apply(f, raw=raw)
+            lambda d, mp=self._min_periods, f=func: d.expanding(mp).apply(f, raw=raw)
         )
 
     def _order_exact(self, pd_fn):
         """Non-decomposable expanding stats (median/quantile/rank/apply) via
-        per-block pandas with a whole-prefix halo (halo_rows=None).  Bound:
+        per-block pandas with a whole-prefix halo (``back=None``).  Bound:
         block k re-reads all k-1 earlier blocks, so the LAST block's task
         holds O(n) rows — inherent to exact holistic expanding stats (the
         reference is no better: it ships the full prefix to each partition
         too).  Use the algebraic family (sum..kurt) at scale."""
-        from modin_spark.pandas.dataframe import DataFrame
-
-        if isinstance(self._obj, Series):
-            out = win.blocked_pandas(self._obj._to_frame(), [0], pd_fn, halo_rows=None)
-            res = Series._from_frame(out)
-            res._name = self._obj._name
-            return res
-        df = self._obj
-        out = win.blocked_pandas(df._frame, df._numeric_positions(), pd_fn, halo_rows=None)
-        return DataFrame(_frame=out)
+        return _run_on(self._obj, win.blocked_pandas, pd_fn, None)
 
     def corr(self, other=None, pairwise=None):
         return self._pair(other, "corr")
@@ -441,8 +349,6 @@ class EWM:
         self._halo = max(8, int(math.ceil(math.log(1e-18) / math.log(1.0 - alpha))))
 
     def _run(self, method: str):
-        from modin_spark.pandas.dataframe import DataFrame
-
         if method == "sum" and not self._adjust:
             # fail driver-side with pandas' own message instead of from an
             # executor task
@@ -451,15 +357,10 @@ class EWM:
             return self._run_times(method)
         a, adj, mp = self._alpha, self._adjust, self._min_periods
 
-        def pd_fn(s):
-            return getattr(s.ewm(alpha=a, adjust=adj, min_periods=mp), method)()
+        def pd_fn(d):
+            return getattr(d.ewm(alpha=a, adjust=adj, min_periods=mp), method)()
 
-        if isinstance(self._obj, Series):
-            out = win.blocked_pandas(self._obj._to_frame(), [0], pd_fn, halo_rows=self._halo)
-            return self._obj._rewrap(out)
-        df = self._obj
-        out = win.blocked_pandas(df._frame, df._numeric_positions(), pd_fn, halo_rows=self._halo)
-        return DataFrame(_frame=out)
+        return _run_on(self._obj, win.blocked_pandas, pd_fn, self._halo)
 
     def _run_times(self, method: str):
         """``ewm(halflife=<duration>, times=...)`` — per-step decay
@@ -490,18 +391,16 @@ class EWM:
         df2 = _DF(_frame=fr)
         df2[ty] = tvals
         fr2 = df2._frame
-        px = fr2.data_cols[0]
-        py = fr2.data_cols[fr2.positions_of([ty])[0]]
         hl, adj, mp = self._halflife_td, self._adjust, self._min_periods
 
-        def fn2(sv, st):
-            t = _pd.to_datetime(st.astype("int64"), unit="us")
-            return getattr(sv.ewm(halflife=hl, times=t.values, adjust=adj,
-                                  min_periods=mp), method)()
+        def pd_fn(d):
+            t = _pd.to_datetime(d[1].astype("int64"), unit="us")
+            return getattr(d[0].ewm(halflife=hl, times=t.values, adjust=adj,
+                                    min_periods=mp), method)()
 
-        out = win.blocked_pandas_pair(fr2, px, py, fn2, None,
-                                      out_label=self._obj._name)
-        return Series._from_frame(out)
+        out = win.blocked_pandas(fr2, [0, fr2.positions_of([ty])[0]], pd_fn, None,
+                                 labels=[self._obj._name])
+        return self._obj._rewrap(out)
 
     def mean(self):
         return self._run("mean")
@@ -556,14 +455,17 @@ class EWM:
             raise NotImplementedError(f"ewm.{stat} pairwise on a DataFrame")
         if other is None:
             other = self._obj
+        import pandas as _pd
+
         fr, px, py = _pair_frame(self._obj, other)
+        fr = fr._same_rows(fr.sdf, columns=_pd.Index([0, 1]), data_cols=[px, py])
         a, adj, mp = self._alpha, self._adjust, self._min_periods
 
-        def fn2(sx, sy):
-            return getattr(sx.ewm(alpha=a, adjust=adj, min_periods=mp), stat)(sy)
+        def pd_fn(d):
+            return getattr(d[0].ewm(alpha=a, adjust=adj, min_periods=mp), stat)(d[1])
 
-        out = win.blocked_pandas_pair(fr, px, py, fn2, self._halo,
-                                      out_label=_pair_name(self._obj, other))
+        out = win.blocked_pandas(fr, [0, 1], pd_fn, self._halo,
+                                 labels=[_pair_name(self._obj, other)])
         return Series._from_frame(out)
 
 

@@ -379,3 +379,35 @@ def test_grouped_resample_grid_plan(spark):
     plan = plans.physical_plan(out._frame.sdf)
     assert "Cartesian" not in plan, plan
     assert plans.unsafe_single_partition_exchanges(out._frame.sdf) == 0, plan
+
+
+# Operator ceilings for the block+halo queries' physical plans. The halo is
+# one explode over its input: a union of filtered halo branches would
+# replay the whole upstream lineage once per branch (more scans and
+# exchanges, and a Union node).
+_HALO_PLAN_CEILINGS = {
+    "rolling_mean": {"Scan": 2, "Exchange": 5, "BroadcastExchange": 1},
+    "win_weighted_var": {"Scan": 3, "Exchange": 1, "BroadcastExchange": 1},
+    "rolling_pair_corr": {"Scan": 3, "Exchange": 9, "BroadcastExchange": 2},
+    "ewm_mean": {"Union": 0, "Scan": 6, "BroadcastExchange": 3},
+    "expanding_median_p90": {"Union": 0, "Scan": 20, "BroadcastExchange": 10},
+}
+
+
+def _plan_nodes(plan: str) -> dict:
+    """Node count by name in a physical-plan tree; every *Scan* is "Scan"."""
+    import re
+    from collections import Counter
+
+    names = (re.match(r"[\s:|+-]*(\w*)", line).group(1) for line in plan.splitlines())
+    return Counter("Scan" if "Scan" in n else n for n in names if n)
+
+
+@pytest.mark.parametrize("query", list(_HALO_PLAN_CEILINGS))
+def test_halo_plan_shape(spark, query):
+    import __spark_entry__ as entry
+
+    plan = plans.physical_plan(entry.queries()[query](spark, SF))
+    nodes = _plan_nodes(plan)
+    over = {k: nodes[k] for k, ceiling in _HALO_PLAN_CEILINGS[query].items() if nodes[k] > ceiling}
+    assert not over, plan

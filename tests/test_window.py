@@ -101,6 +101,10 @@ def _carry_input():
     return pd.DataFrame({"v": v, "w": w})
 
 
+def _short_input():
+    return _carry_input().iloc[:60]
+
+
 def _null_first_block():
     """The whole first block (and then some) is NaN: its carry is null."""
     v = np.arange(100, dtype="float64")
@@ -146,6 +150,36 @@ _BLOCK_CASES = {
     "interpolate_inside": (_carry_input, lambda d: d.interpolate(limit_area="inside")),
     "interpolate_outside_both": (
         _null_first_block, lambda d: d.interpolate(limit_direction="both", limit_area="outside")),
+    # halos: neighbour rows copied across block edges (back, forward, both)
+    "shift3": (_carry_input, lambda d: d.v.shift(3)),
+    "shift_neg3": (_carry_input, lambda d: d.v.shift(-3)),
+    "diff2": (_carry_input, lambda d: d.v.diff(2)),
+    "rolling_center_mean": (
+        _carry_input, lambda d: d.v.rolling(5, center=True, min_periods=1).mean()),
+    **{f"rolling_closed_{c}_sum": (
+        _carry_input, lambda d, c=c: d.v.rolling(4, closed=c, min_periods=1).sum())
+       for c in ("left", "both")},
+    "rolling_apply_nanmedian": (
+        _carry_input, lambda d: d.v.rolling(5, min_periods=2).apply(np.nanmedian, raw=True)),
+    # pandas needs scipy for win_type: the reference uses the closed-form
+    # triang weights [0.5, 1, 0.5]
+    "rolling_triang_sum": (
+        _carry_input, lambda d: d.v.rolling(3, win_type="triang").sum(),
+        lambda d: d.v.rolling(3).apply(lambda x: np.dot([0.5, 1.0, 0.5], x), raw=True)),
+    "rolling_corr_pair": (_carry_input, lambda d: d.v.rolling(5, min_periods=3).corr(d.w)),
+    "rolling_cov_pairwise": (_carry_input, lambda d: d.rolling(5, min_periods=3).cov()),
+    "rolling_rank": (_carry_input, lambda d: d.v.rolling(5).rank()),
+    "rolling_rank_center": (_carry_input, lambda d: d.v.rolling(5, center=True).rank()),
+    # ewm: a decay halo of ~190 rows spans about 12 blocks
+    "ewm_mean": (_carry_input, lambda d: d.v.ewm(span=9).mean()),
+    "ewm_corr_pair": (_carry_input, lambda d: d.v.ewm(span=5).corr(d.w)),
+    "ewm_times_mean": (_carry_input, lambda d: d.v.ewm(
+        halflife="3 days", times=pd.Timestamp("2024-01-01") + pd.to_timedelta(
+            np.arange(100) + np.arange(100) % 3, unit="D")).mean()),
+    # whole-prefix halo: <= 4 blocks keeps expanding order statistics on
+    # the blocked pandas path (wider frames take the bucketed one)
+    "expanding_median": (_short_input, lambda d: d.v.expanding().median()),
+    "expanding_quantile90": (_short_input, lambda d: d.v.expanding().quantile(0.9)),
 }
 
 
@@ -157,12 +191,12 @@ def test_block_boundary_correctness(spark, case):
     import modin_spark.pandas as mpd
     from modin_spark.core import windows
 
-    make, op = _BLOCK_CASES[case]
+    make, op, *ref_op = _BLOCK_CASES[case]
     p = make()
     old = windows.BLOCK
     windows.BLOCK = 16  # force many blocks
     try:
-        got, ref = op(mpd.from_pandas(p)), op(p)
+        got, ref = op(mpd.from_pandas(p)), (ref_op[0] if ref_op else op)(p)
         if isinstance(ref, pd.DataFrame):
             got = got.to_pandas()
             if isinstance(ref.index, pd.MultiIndex):  # pairwise: (row, column)
@@ -392,3 +426,30 @@ def test_rolling_time_no_single_partition(spark):
     out = ev["value"].rolling("10min").sum()
     fr = out._to_frame("__v__")
     assert plans.unsafe_single_partition_exchanges(fr.sdf) == 0, plans.physical_plan(fr.sdf)
+
+
+_NAMED_OPS = {
+    "rolling_sum": lambda s: s.rolling(3).sum(),
+    "rolling_step_sum": lambda s: s.rolling(3, step=2).sum(),
+    "rolling_quantile": lambda s: s.rolling(3).quantile(0.5),
+    "rolling_apply": lambda s: s.rolling(3).apply(np.sum, raw=True),
+    "rolling_rank": lambda s: s.rolling(3).rank(),
+    "rolling_triang_mean": lambda s: s.rolling(3, win_type="triang").mean(),
+    "rolling_corr_self": lambda s: s.rolling(3).corr(),
+    "expanding_mean": lambda s: s.expanding().mean(),
+    "expanding_median": lambda s: s.expanding().median(),
+    "expanding_rank": lambda s: s.expanding().rank(),
+    "ewm_mean": lambda s: s.ewm(span=3).mean(),
+    "ewm_corr_self": lambda s: s.ewm(span=3).corr(),
+}
+
+
+@pytest.mark.parametrize("name", [None, "v"])
+def test_window_result_keeps_series_name(spark, name):
+    """Window ops on a Series return the source's name, None included: the
+    one-column frame they run on must not leak its placeholder label."""
+    import modin_spark.pandas as mpd
+
+    m = mpd.Series(pd.Series(np.arange(40.0) % 7, name=name))
+    names = {k: op(m).name for k, op in _NAMED_OPS.items()}
+    assert {k: n for k, n in names.items() if n != name} == {}
