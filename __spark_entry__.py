@@ -1910,11 +1910,16 @@ def _apply_axis0_strings(spark, sf):
 
 
 def _apply_axis0_vcounts(spark, sf):
-    """SHAPE-CHANGING df.apply(axis=0) DISTRIBUTED (r7): per-column
-    value_counts results come back labeled by their own indexes and align
-    pandas-style (union sort) in one label-grouped conditional aggregation
-    — no driver materialization (DataFrame._apply_axis0 reshape branch).
-    Reference runs shape-changers through apply_full_axis column partitions
+    """SHAPE-CHANGING df.apply(axis=0): per-column value_counts results,
+    labeled by their own indexes and aligned pandas-style (union sort).
+    value_counts is a decomposable kernel (DataFrame._apply_axis0,
+    pandas/kernels.py): one Spark partial aggregate per (column, value) —
+    count and first position — whose few rows (at most
+    MODIN_SPARK_NATIVE_MAX_ROWS, default 5000) pandas merges on the driver,
+    Modin's TreeReduce. With the threshold at 0, or more distinct values
+    than it, the r7 reshape branch runs: one applyInPandas task per column,
+    aligned in one label-grouped conditional aggregation. Reference runs
+    shape-changers through apply_full_axis column partitions
     (modin/core/dataframe/pandas/dataframe/dataframe.py:2956)."""
     mpd = _mpd()
     li = mpd.read_parquet(f"{sf}/lineitem.parquet")[["l_returnflag", "l_linestatus"]]
@@ -2218,13 +2223,16 @@ def _transpose_agg(spark, sf):
 
 
 def _transpose_multiindex_roundtrip(spark, sf):
-    """r7 transpose capability: a 2-level-index aggregate transposes
-    DISTRIBUTED into MultiIndex COLUMNS (position-keyed melt/map —
-    DataFrame._transpose_distributed), then transposes BACK (MultiIndex
-    columns -> 2-level index), so both directions of the new multi-level
-    path are exercised; values must survive the double stringify/retype
-    round-trip exactly. Reference carries column MultiIndexes natively in
-    its partition metadata (modin/core/dataframe/pandas/dataframe/dataframe.py:161)."""
+    """r7 transpose capability: a 2-level-index aggregate transposes into
+    MultiIndex COLUMNS, then transposes BACK (MultiIndex columns -> 2-level
+    index); values must survive the round trip exactly. The aggregate has
+    far fewer rows and columns than MODIN_SPARK_NATIVE_MAX_ROWS (default
+    5000), so the first transpose is one ordered collect plus a driver
+    transpose, and the second transpose and reset_index run on its native
+    result with no Spark job. With the threshold at 0 both directions run
+    DISTRIBUTED (position-keyed melt/map — DataFrame._transpose_distributed).
+    Reference carries column MultiIndexes natively in its partition metadata
+    (modin/core/dataframe/pandas/dataframe/dataframe.py:161)."""
     mpd = _mpd()
     li = mpd.read_parquet(f"{sf}/lineitem.parquet")
     g = li.groupby(["l_returnflag", "l_linestatus"]).agg(

@@ -352,6 +352,19 @@ def native_max_rows() -> int:
         return 0
 
 
+def collect_small(sdf: SDF) -> pd.DataFrame | None:
+    """``sdf`` as driver pandas when it has at most ``native_max_rows()``
+    rows, else None. One action, ``limit(threshold + 1)``; none at threshold
+    0. A shape-deciding collect whose result is this small finishes the op
+    in pandas on the driver (the small-frame auto-switch applied to results
+    the engine has to bring back anyway)."""
+    cap = native_max_rows()
+    if cap <= 0:
+        return None
+    pdf = sdf.limit(cap + 1).toPandas()
+    return pdf if len(pdf) <= cap else None
+
+
 def _native_ingest_schema(pdf: pd.DataFrame, idx_phys: list, data_phys: list):
     """The exact Spark schema createDataFrame WOULD infer for this pandas
     frame, derived without touching the JVM — or None when any column's
@@ -1173,7 +1186,9 @@ class SparkFrame:
             return len(self.native_pdf)
         return self.sdf.count()
 
-    def to_pandas(self) -> pd.DataFrame:
+    def to_pandas(self, small: bool = False) -> pd.DataFrame | None:
+        """The frame as driver pandas. ``small``: only when it has at most
+        ``native_max_rows()`` rows (``collect_small``), else None."""
         if self._sdf is None and self.native_pdf is not None:
             # pristine deferred-ingest frame: the stored pandas object IS the
             # round-trip result (and keeps dtypes Spark would widen)
@@ -1183,10 +1198,13 @@ class SparkFrame:
         if not self.has_order:
             # natural order: toPandas collects partitions in order already
             cols = list(dict.fromkeys(self.index_cols + self.data_cols)) + lbl_extra
-            pdf = self.sdf.select(*cols).toPandas()
+            sel = self.sdf.select(*cols)
         else:
             cols = [ORDER_COL] + list(dict.fromkeys(self.index_cols + self.data_cols)) + lbl_extra
-            pdf = self.sdf.select(*cols).orderBy(ORDER_COL).toPandas()
+            sel = self.sdf.select(*cols).orderBy(ORDER_COL)
+        pdf = collect_small(sel) if small else sel.toPandas()
+        if pdf is None:
+            return None
         out = pd.DataFrame({i: pdf[p] for i, p in enumerate(self.data_cols)})
         if len(self.data_cols) == 0:
             out = pd.DataFrame(index=pdf.index)

@@ -116,12 +116,13 @@ def _block_carry(sdf, table):
     return carry_join(sdf, table, _BLK).drop(carry_key(_BLK))
 
 
-def halo(sdf, back: int | None, fwd: int = 0):
+def halo(sdf, back: int | None, fwd: int = 0, rows: int = 0):
     """Block + halo rows: each row in its own block, plus one copy in every
     other block that needs it as context — the ``back`` rows before the
-    block (``None``: the block's whole prefix) and the ``fwd`` rows after it
-    (centered windows). Copies carry ``__halo__`` true: a kernel computes
-    over block + halo and keeps only the rows whose ``__halo__`` is false.
+    block (``None``: the block's whole prefix, up to the last block of the
+    ``rows`` rows) and the ``fwd`` rows after it (centered windows). Copies
+    carry ``__halo__`` true: a kernel computes over block + halo and keeps
+    only the rows whose ``__halo__`` is false.
     Negative extents clamp to 0 (``closed='left'`` passes ``fwd=-1``).
 
     ONE projection over the input: the row at position p serves blocks
@@ -137,14 +138,13 @@ def halo(sdf, back: int | None, fwd: int = 0):
     if back is not None and back <= 0 and fwd <= 0:
         return sdf.withColumn(_HALO, F.lit(False))
     if back is None:
-        # deliberate ACTION during construction: the max block id bakes into
-        # the plan as a LITERAL, so every subsequent action on the
-        # (frequently re-executed) lineage skips the extra scan. The lazy
-        # alternative (1-row broadcast cross join) was measured WORSE
-        # end-to-end: build 1.5s -> 0.8s but exec 0.7s -> 1.7s per action,
-        # because the max-agg subjob then runs inside every action and the
-        # non-literal bound defeats pruning.
-        hi = f"{sdf.agg(F.max(_BLK)).collect()[0][0] or 0}L"
+        # the last block id is a LITERAL from the caller's row count, so
+        # every action on the (frequently re-executed) lineage skips the
+        # extra scan. The lazy alternative (1-row broadcast cross join) was
+        # measured WORSE end-to-end: build 1.5s -> 0.8s but exec 0.7s ->
+        # 1.7s per action, because the max-agg subjob then runs inside every
+        # action and the non-literal bound defeats pruning.
+        hi = f"{max(rows - 1, 0) // BLOCK}L"
     else:
         hi = f"({_POS} + {max(back, 0)}) div {BLOCK}"
     lo = f"greatest(({_POS} - {fwd}) div {BLOCK}, 0L)" if fwd > 0 else _BLK
@@ -1612,7 +1612,7 @@ def grouped_pandas_transform(frame: SparkFrame, positions: Sequence[int],
 
 
 def blocked_pandas(frame: SparkFrame, positions: Sequence[int], pd_fn, back: int | None,
-                   fwd: int = 0, labels=None) -> SparkFrame:
+                   fwd: int = 0, labels=None, rows: int | None = None) -> SparkFrame:
     """Exact pandas per block with its halo, via one applyInPandas pass:
     ``pd_fn`` maps the block + halo rows' float64 DataFrame of the
     ``positions`` columns to a DataFrame or Series (see ``_pandas_by``).
@@ -1626,14 +1626,18 @@ def blocked_pandas(frame: SparkFrame, positions: Sequence[int], pd_fn, back: int
     possible, this is the documented exact-order-statistic slow path).
     ``fwd=k``: each block also sees the k FOLLOWING rows (centered windows).
     ``labels``: the output labels, one per column ``pd_fn`` returns
-    (default: the input columns' labels).
+    (default: the input columns' labels). ``rows``: the frame's row count,
+    when the caller has it (``back=None`` needs it).
     """
+    if back is None and rows is None:
+        # shape-deciding: the row count is the whole-prefix halo's last block
+        rows = frame.count_rows()
     frame = frame.ensure_order()
     phys = [frame.data_cols[i] for i in positions]
     if labels is None:
         labels = [frame.columns[i] for i in positions]
     fr = _with_blocks(frame)
-    sdf = halo(fr.sdf.select(_POS, _BLK, *phys), back, fwd)
+    sdf = halo(fr.sdf.select(_POS, _BLK, *phys), back, fwd, rows or 0)
     return _pandas_by(fr, sdf, [_BLK], phys, labels, pd_fn)
 
 

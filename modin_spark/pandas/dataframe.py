@@ -17,8 +17,11 @@ from pyspark.sql import functions as F
 
 from modin_spark.core import compiler as qc
 from modin_spark.core import windows as win
+from modin_spark.pandas import kernels as _kernels
 from modin_spark.pandas import native as _native
-from modin_spark.core.frame import ORDER_COL, SparkFrame, pandas_dtype_to_spark, pin, unpin
+from modin_spark.core.frame import (
+    ORDER_COL, SparkFrame, collect_small, native_max_rows, pandas_dtype_to_spark, pin, unpin,
+)
 from modin_spark.pandas.series import Series, _lit
 
 _MASKED_EXT_NAMES = {"Int8", "Int16", "Int32", "Int64", "UInt8", "UInt16",
@@ -125,7 +128,10 @@ class DataFrame:
 
     # ------------------------------------------------------------ execution
     def to_pandas(self) -> pd.DataFrame:
-        pdf = self._frame.to_pandas()
+        return self._finish_pandas(self._frame.to_pandas())
+
+    def _finish_pandas(self, pdf: pd.DataFrame) -> pd.DataFrame:
+        """The wrapper-carried dtype and index overlays on a collected frame."""
         if getattr(self, "_to_pandas_convert_dtypes", False):
             pdf = pdf.convert_dtypes()
         ext = getattr(self, "_to_pandas_ext_dtypes", None)
@@ -3707,11 +3713,22 @@ class DataFrame:
         POSITION, so duplicate index labels and multi-level indexes (which
         become duplicate / MultiIndex column labels — both carried by the
         frame's positional physical names since r7) ride the same path.
-        Only over-budget frames use the driver path, under a size guard."""
+        Only over-budget frames use the driver path, under a size guard.
+
+        A frame with at most ``native_max_rows()`` rows and columns finishes
+        on the driver instead: one ordered ``collect_small`` of its index and
+        data replaces the pin, positions, header collect, melt and
+        map-collect, and the native result lets a following ``.T``,
+        ``reset_index`` or ``rename`` run with no Spark job."""
         nat = _native.maybe(self, "transpose")
         if nat is not None:
             return nat
         fr = self._frame
+        if 0 < len(fr.columns) <= native_max_rows():
+            # shape-deciding: the collect IS the transpose when it fits
+            small = fr.to_pandas(small=True)
+            if small is not None:
+                return _transpose_pandas(self._finish_pandas(small))
         if len(fr.columns) > 0:
             # the distributed path's header collect doubles as the size
             # probe (limit max_cols+1) — no separate count action. Mixed
@@ -3721,6 +3738,7 @@ class DataFrame:
             out = self._transpose_distributed()
             if out is not None:
                 return out
+        # shape-deciding: the size guard of the driver transpose
         n = fr.count_rows()
         if n > 100_000:
             raise ValueError(f"transpose of {n} rows would materialize driver-side; refusing")
@@ -3744,15 +3762,8 @@ class DataFrame:
                 "build time for driver memory",
                 stacklevel=2,
             )
-        t = self.to_pandas().T
-        # mixed source dtypes make every transposed column object-typed, which
-        # Spark can't infer — coerce each to numeric where possible else string
-        for c in t.columns:
-            if t[c].dtype == object:
-                coerced = pd.to_numeric(t[c], errors="coerce")
-                t[c] = coerced if coerced.notna().sum() == t[c].notna().sum() else t[c].astype(str)
-        t.columns = [str(c) for c in t.columns]
-        return DataFrame(t)
+        # result-required: the over-budget transpose is driver data
+        return _transpose_pandas(self.to_pandas())
 
     def _transpose_distributed(self) -> "DataFrame | None":
         """melt+pivot transpose for tall-narrow frames of ANY dtype mix.
@@ -3865,7 +3876,7 @@ class DataFrame:
             if probe_sqls:
                 # no header collect to piggyback on — still one action, but
                 # row-wise (no melt, no Exchange) instead of the old
-                # melt+groupBy probe
+                # melt+groupBy probe. shape-deciding: the column retypes
                 _types_from(sdf.selectExpr("__pos__", *probe_sqls).collect())
         else:
             # headers keep their NATIVE type (pandas T: an int index makes int
@@ -3877,6 +3888,7 @@ class DataFrame:
                 else [F.col("__pos__")]
             )
             sdf = fr.sdf
+            # shape-deciding: the transposed column labels (+ retypes)
             hdr_rows = (
                 sdf.select(
                     "__pos__",
@@ -4151,7 +4163,12 @@ class DataFrame:
         by position; reduction-shaped results (scalar per column) come back
         as a k-row aggregate -> pandas Series, matching the house reduction
         style. Non-numeric columns (or unrecognized result shapes) use the
-        declared driver fallback."""
+        declared driver fallback.
+
+        A func that is one decomposable Series call (pandas/kernels.py:
+        value_counts, nunique, count, min, max) skips all of that when its
+        per-(column, value) partial aggregate fits ``native_max_rows()``:
+        pandas merges the partials on the driver."""
         import numpy as np
         from pyspark.sql import types as T
 
@@ -4160,27 +4177,9 @@ class DataFrame:
             return self._default_to_pandas(lambda pdf: pdf.apply(func, axis=0))
         numeric = set(self._numeric_positions())
         all_numeric = len(numeric) == len(fr.columns)
-        # shape probe on a driver sample (same technique as the axis=1 path)
-        sample = self.head(100).to_pandas()
-        out_sample = sample.apply(func, axis=0)
-        reduction = isinstance(out_sample, pd.Series)
-        if not reduction and (
-            not isinstance(out_sample, pd.DataFrame)
-            or list(out_sample.columns) != list(sample.columns)
-        ):
-            return self._default_to_pandas(lambda pdf: pdf.apply(func, axis=0))
-        # shape-changing (value_counts / describe / head-like) results run
-        # distributed too (r7) — see the reshape branch below. The
-        # discriminator is INDEX equality, not length: pandas aligns
-        # per-column results on their index, and positional (transform)
-        # alignment is only equivalent when the output index IS the input's
-        # (a same-LENGTH value_counts with different labels must still
-        # reshape).
-        reshaping = not reduction and not out_sample.index.equals(sample.index)
-
-        fr2 = fr.ensure_order().with_global_position("__pos__")
+        ordered = fr.ensure_order()
         k = len(fr.data_cols)
-        sdts = dict(fr2.sdf.dtypes)
+        sdts = dict(ordered.sdf.dtypes)
 
         def in_tag(sdt: str) -> str:
             if sdt.startswith(("tinyint", "smallint", "int", "bigint")):
@@ -4222,16 +4221,6 @@ class DataFrame:
         # labels (a MultiIndex for multi-level frames) in all three
         # branches; default-index frames use the global position, which IS
         # the pandas default label
-        n_lvl = len(fr.index_cols)
-        idx_sel = [
-            f"CAST({_bq(c)} AS STRING) AS __ilbl{i}__" for i, c in enumerate(fr.index_cols)
-        ]
-        idx_pass = [f"__ilbl{i}__" for i in range(n_lvl)]
-        idx_tags = [in_tag(sdts.get(c, "")) for c in fr.index_cols]
-        melted = fr2.sdf.selectExpr(
-            "__pos__", *idx_sel, f"explode(array({entries})) AS __e__"
-        ).selectExpr("__pos__", *idx_pass, "__e__.__cid__ AS __cid__", "__e__.__v__ AS __v__")
-
         def _decode_tagged(vals: pd.Series, tag: str) -> pd.Series:
             """stringified column -> typed pandas Series (shared by value
             and index decode)."""
@@ -4249,6 +4238,74 @@ class DataFrame:
             if all_numeric:  # float-only melt: values arrive as doubles
                 return pd.Series(vals.to_numpy())
             return pd.Series(_decode_tagged(vals, tag).to_numpy())
+
+        # decomposable kernels (value_counts, nunique, count, min, max; see
+        # pandas/kernels.py): one partial aggregate per (column, value) over
+        # the melt — its count and first position — with no global
+        # positions, applyInPandas, pin or fingerprint. Dtype overlays
+        # (categorical, nullable extension) keep the generic path: their
+        # pandas answers depend on more than the stored values.
+        call = None
+        if not (getattr(self, "_to_pandas_ext_dtypes", None)
+                or getattr(self, "_to_pandas_convert_dtypes", False)):
+            call = _kernels.recognise(func)
+        if call is not None:
+            partials = ordered.sdf.selectExpr(
+                ORDER_COL, f"explode(array({entries})) AS __e__"
+            ).selectExpr(ORDER_COL, "__e__.__cid__ AS __cid__", "__e__.__v__ AS __v__")
+            partials = partials.groupBy("__cid__", "__v__").agg(
+                F.count(F.lit(1)).alias("__n__"), F.min(ORDER_COL).alias("__o__"))
+            # shape-deciding: the distinct values are the result's labels
+            parts = collect_small(partials)
+            if parts is not None and len(parts):
+                by_cid = dict(tuple(parts.groupby("__cid__")))
+                out = _kernels.finish(fr.columns, [
+                    _kernels.column_result(
+                        call,
+                        rebuild(by_cid[ci]["__v__"], in_tags[ci]).rename(fr.columns[ci]),
+                        by_cid[ci]["__n__"].to_numpy(),
+                        by_cid[ci]["__o__"].to_numpy(),
+                    )
+                    for ci in range(k)
+                ])
+                if not isinstance(out, pd.DataFrame):
+                    return out  # reductions come back as a pandas Series
+                try:
+                    return DataFrame(out)
+                except (TypeError, ValueError):
+                    # a union index of mixed label types has no Spark column
+                    # type; the generic path stringifies the labels
+                    pass
+
+        # shape-deciding: the shape probe on a driver sample (same technique
+        # as the axis=1 path)
+        sample = self.head(100).to_pandas()
+        out_sample = sample.apply(func, axis=0)
+        reduction = isinstance(out_sample, pd.Series)
+        if not reduction and (
+            not isinstance(out_sample, pd.DataFrame)
+            or list(out_sample.columns) != list(sample.columns)
+        ):
+            return self._default_to_pandas(lambda pdf: pdf.apply(func, axis=0))
+        # shape-changing (value_counts / describe / head-like) results run
+        # distributed too (r7) — see the reshape branch below. The
+        # discriminator is INDEX equality, not length: pandas aligns
+        # per-column results on their index, and positional (transform)
+        # alignment is only equivalent when the output index IS the input's
+        # (a same-LENGTH value_counts with different labels must still
+        # reshape).
+        reshaping = not reduction and not out_sample.index.equals(sample.index)
+
+        fr2 = ordered.with_global_position("__pos__")
+        n_lvl = len(fr.index_cols)
+        idx_sel = [
+            f"CAST({_bq(c)} AS STRING) AS __ilbl{i}__" for i, c in enumerate(fr.index_cols)
+        ]
+        idx_pass = [f"__ilbl{i}__" for i in range(n_lvl)]
+        idx_tags = [in_tag(sdts.get(c, "")) for c in fr.index_cols]
+        melted = fr2.sdf.selectExpr(
+            "__pos__", *idx_sel, f"explode(array({entries})) AS __e__"
+        ).selectExpr("__pos__", *idx_pass, "__e__.__cid__ AS __cid__", "__e__.__v__ AS __v__")
 
         def input_series(pdf: pd.DataFrame, cid: int) -> pd.Series:
             """func's view of one column: typed values, REAL typed index
@@ -4393,7 +4450,7 @@ class DataFrame:
             # label level is hex-encoded before joining so the \x02
             # separator can never occur inside a component (unambiguous for
             # ANY label content, any nlevels). k tiny rows decide the
-            # alignment shape.
+            # alignment shape. shape-deciding: aligned or union-sorted rows
             fp = res.groupBy("__cid__").agg(
                 F.count(F.lit(1)).alias("n"),
                 F.count_distinct(F.struct(*[F.col(lc) for lc in lbl_cols])).alias("nd"),
@@ -4474,6 +4531,7 @@ class DataFrame:
                 r = func(input_series(pdf, cid))
                 return pd.DataFrame({"__cid__": [cid], "__o__": encode_out([r])})
 
+            # result-required: the reduction is a driver Series
             rows = melted.groupBy("__cid__").applyInPandas(apply_red, schema).collect()
             vals = {r["__cid__"]: r["__o__"] for r in rows}
             if out_numeric:
@@ -5430,6 +5488,23 @@ class DataFrame:
 
     def to_orc(self, path: str, mode: str = "overwrite") -> None:
         self.to_spark(ordered=False).write.mode(mode).orc(path)
+
+
+def _transpose_pandas(pdf: pd.DataFrame) -> DataFrame:
+    """``pdf.T`` as an engine frame: the driver transpose of the small-result
+    and over-budget paths."""
+    t = pdf.T
+    # mixed source dtypes make every transposed column object-typed, which
+    # Spark can't infer — coerce each to numeric where possible else string
+    # (missing cells stay missing, as in the distributed path)
+    for j in range(t.shape[1]):
+        c = t.iloc[:, j]
+        if c.dtype == object:
+            coerced = pd.to_numeric(c, errors="coerce")
+            if coerced.notna().sum() != c.notna().sum():
+                coerced = c.map(str, na_action="ignore")
+            t.isetitem(j, coerced)
+    return DataFrame(t)
 
 
 class _ScalarIndexer:

@@ -240,17 +240,22 @@ class Expanding:
         # frame spans enough blocks that the whole-prefix blocked path's
         # O(n·#blocks) shipping explodes; small frames keep the single-
         # task pandas pass (fewer shuffles, no bucketing action)
-        if not self._past_block_threshold():
+        n = self._whole_prefix_rows()
+        if n is not None:
             return self._order_exact(
                 lambda d, mp=self._min_periods: d.expanding(mp).quantile(
-                    q, interpolation=interpolation))
+                    q, interpolation=interpolation), rows=n)
         return _run_on(self._obj, win.expanding_quantile, q, min_periods=self._min_periods,
                        interpolation=interpolation)
 
-    def _past_block_threshold(self) -> bool:
-        """True when the frame spans enough pos blocks that whole-prefix
-        shipping (O(n·#blocks)) loses to the bucketed exact machinery."""
-        return self._obj._frame.count_rows() > 4 * win.BLOCK
+    def _whole_prefix_rows(self) -> int | None:
+        """The row count while the frame spans few enough pos blocks that
+        whole-prefix shipping (O(n·#blocks)) beats the bucketed exact
+        machinery, else None."""
+        # shape-deciding: the count picks the path and, on the whole-prefix
+        # path, is the halo's last block
+        n = self._obj._frame.count_rows()
+        return n if n <= 4 * win.BLOCK else None
 
     def median(self):
         return self.quantile(0.5)
@@ -260,11 +265,15 @@ class Expanding:
         # core.windows.expanding_rank) once the frame spans enough blocks —
         # ranking is pure dominance counting, so no task needs the full
         # prefix; small frames keep the single-task pandas pass
-        if method in ("average", "min", "max") and self._past_block_threshold():
-            return _run_on(self._obj, win.expanding_rank, method=method, ascending=ascending,
-                           pct=pct, min_periods=self._min_periods)
+        n = None
+        if method in ("average", "min", "max"):
+            n = self._whole_prefix_rows()
+            if n is None:
+                return _run_on(self._obj, win.expanding_rank, method=method,
+                               ascending=ascending, pct=pct, min_periods=self._min_periods)
         return self._order_exact(
-            lambda d, mp=self._min_periods: d.expanding(mp).rank(method=method, ascending=ascending, pct=pct)
+            lambda d, mp=self._min_periods: d.expanding(mp).rank(method=method, ascending=ascending, pct=pct),
+            rows=n,
         )
 
     def apply(self, func, raw=False):
@@ -272,14 +281,15 @@ class Expanding:
             lambda d, mp=self._min_periods, f=func: d.expanding(mp).apply(f, raw=raw)
         )
 
-    def _order_exact(self, pd_fn):
+    def _order_exact(self, pd_fn, rows=None):
         """Non-decomposable expanding stats (median/quantile/rank/apply) via
         per-block pandas with a whole-prefix halo (``back=None``).  Bound:
         block k re-reads all k-1 earlier blocks, so the LAST block's task
         holds O(n) rows — inherent to exact holistic expanding stats (the
         reference is no better: it ships the full prefix to each partition
-        too).  Use the algebraic family (sum..kurt) at scale."""
-        return _run_on(self._obj, win.blocked_pandas, pd_fn, None)
+        too).  Use the algebraic family (sum..kurt) at scale.  ``rows``: the
+        row count when the caller has it already."""
+        return _run_on(self._obj, win.blocked_pandas, pd_fn, None, rows=rows)
 
     def corr(self, other=None, pairwise=None):
         return self._pair(other, "corr")

@@ -26,6 +26,15 @@ os.environ.setdefault("MODIN_SPARK_SHUFFLE_PARTITIONS", "8")
 os.environ.setdefault("MODIN_SPARK_MIN_SCAN_PARTITIONS", "8")
 
 
+@pytest.fixture(scope="module", autouse=True)
+def pins_within_cap():
+    """Persisted intermediates never outlive their FIFO bound."""
+    yield
+    from modin_spark.core import frame
+
+    assert len(frame._PINNED) <= frame.PIN_CAP, len(frame._PINNED)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from modin_spark.session import get_spark

@@ -411,3 +411,27 @@ def test_halo_plan_shape(spark, query):
     nodes = _plan_nodes(plan)
     over = {k: nodes[k] for k, ceiling in _HALO_PLAN_CEILINGS[query].items() if nodes[k] > ceiling}
     assert not over, plan
+
+
+# Spark jobs fired while each query is BUILT, at the default small-result
+# threshold: apply(axis=0) value_counts runs one partial aggregate, and the
+# T.T round trip of a 6-row aggregate one ordered collect, then pandas.
+_BUILD_JOB_CEILINGS = {"apply_axis0_vcounts": 2, "transpose_multiindex_roundtrip": 4}
+
+
+@pytest.mark.parametrize("query", list(_BUILD_JOB_CEILINGS))
+def test_build_jobs(spark, monkeypatch, query):
+    import __spark_entry__ as entry
+    from perfbench.tracing import Tracer
+
+    monkeypatch.delenv("MODIN_SPARK_NATIVE_MAX_ROWS", raising=False)
+    build = entry.queries()[query]
+    build(spark, SF)  # warm: the parquet footers are read once per session
+    tracer = Tracer(spark)
+    try:
+        op = tracer.op(0, query)
+        with tracer.phase(op, "build") as phase:
+            build(spark, SF)
+    finally:
+        tracer.close()
+    assert phase["jobs_tracked"] <= _BUILD_JOB_CEILINGS[query], phase

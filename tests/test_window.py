@@ -295,6 +295,29 @@ def test_expanding_quantile_apply(mdf, pdf):
     assert_series_equal(got, ref)
 
 
+def test_expanding_whole_prefix_build_counts_rows_once(spark):
+    # the whole-prefix path's only build action is the row count, which
+    # also gives the halo's last block (no second max-block collect)
+    import modin_spark.pandas as mpd
+
+    p = pd.Series(np.random.default_rng(1).random(1000))
+    s = mpd.Series(p)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("idle", "idle")
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, count_jobs = jobs("expanding-count", lambda: s._frame.count_rows())
+    got, median_jobs = jobs("expanding-median", lambda: s.expanding().median())
+    assert median_jobs == count_jobs, (median_jobs, count_jobs)
+    assert_series_equal(got, p.expanding().median())
+
+
 @pytest.mark.parametrize("stat", ["corr", "cov"])
 def test_expanding_pair(mdf, pdf, stat):
     got = getattr(mdf.b.expanding(min_periods=2), stat)(mdf.a)
