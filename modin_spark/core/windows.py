@@ -116,11 +116,12 @@ def _block_carry(sdf, table):
     return carry_join(sdf, table, _BLK).drop(carry_key(_BLK))
 
 
-def halo(sdf, back: int | None, fwd: int = 0, rows: int = 0):
+def halo(sdf, back: int | None, fwd: int = 0, rows: int | None = None):
     """Block + halo rows: each row in its own block, plus one copy in every
     other block that needs it as context — the ``back`` rows before the
     block (``None``: the block's whole prefix, up to the last block of the
-    ``rows`` rows) and the ``fwd`` rows after it (centered windows). Copies
+    frame's ``rows`` rows, which that case requires) and the ``fwd`` rows
+    after it (centered windows). Copies
     carry ``__halo__`` true: a kernel computes over block + halo and keeps
     only the rows whose ``__halo__`` is false.
     Negative extents clamp to 0 (``closed='left'`` passes ``fwd=-1``).
@@ -138,6 +139,8 @@ def halo(sdf, back: int | None, fwd: int = 0, rows: int = 0):
     if back is not None and back <= 0 and fwd <= 0:
         return sdf.withColumn(_HALO, F.lit(False))
     if back is None:
+        if rows is None:
+            raise ValueError("the whole-prefix halo needs the frame's row count")
         # the last block id is a LITERAL from the caller's row count, so
         # every action on the (frequently re-executed) lineage skips the
         # extra scan. The lazy alternative (1-row broadcast cross join) was
@@ -1637,7 +1640,7 @@ def blocked_pandas(frame: SparkFrame, positions: Sequence[int], pd_fn, back: int
     if labels is None:
         labels = [frame.columns[i] for i in positions]
     fr = _with_blocks(frame)
-    sdf = halo(fr.sdf.select(_POS, _BLK, *phys), back, fwd, rows or 0)
+    sdf = halo(fr.sdf.select(_POS, _BLK, *phys), back, fwd, rows)
     return _pandas_by(fr, sdf, [_BLK], phys, labels, pd_fn)
 
 

@@ -4165,10 +4165,12 @@ class DataFrame:
         style. Non-numeric columns (or unrecognized result shapes) use the
         declared driver fallback.
 
-        A func that is one decomposable Series call (pandas/kernels.py:
-        value_counts, nunique, count, min, max) skips all of that when its
-        per-(column, value) partial aggregate fits ``native_max_rows()``:
-        pandas merges the partials on the driver."""
+        A func that is one decomposable Series call (pandas/kernels.py)
+        skips all of that while ``native_max_rows()`` is on: ``count``,
+        ``nunique``, ``min`` and ``max`` of at most that many columns are
+        one row of per-column aggregates; ``value_counts`` is a
+        per-(column, value) partial aggregate, merged by pandas on the
+        driver when it fits the threshold."""
         import numpy as np
         from pyspark.sql import types as T
 
@@ -4239,9 +4241,7 @@ class DataFrame:
                 return pd.Series(vals.to_numpy())
             return pd.Series(_decode_tagged(vals, tag).to_numpy())
 
-        # decomposable kernels (value_counts, nunique, count, min, max; see
-        # pandas/kernels.py): one partial aggregate per (column, value) over
-        # the melt — its count and first position — with no global
+        # decomposable kernels (pandas/kernels.py), with no global
         # positions, applyInPandas, pin or fingerprint. Dtype overlays
         # (categorical, nullable extension) keep the generic path: their
         # pandas answers depend on more than the stored values.
@@ -4249,7 +4249,19 @@ class DataFrame:
         if not (getattr(self, "_to_pandas_ext_dtypes", None)
                 or getattr(self, "_to_pandas_convert_dtypes", False)):
             call = _kernels.recognise(func)
-        if call is not None:
+        if call is not None and call[0] in _kernels.REDUCTIONS and 0 < k <= native_max_rows():
+            # count / nunique / min / max: one row of per-column aggregates
+            aggs = [sql for ci, p in enumerate(fr.data_cols) for sql in _kernels.reduction_sql(
+                call, _bq(p), sdts.get(p, "").startswith(("float", "double")), _vt, ci)]
+            # result-required: the reduction is a driver Series
+            row = fr.sdf.selectExpr(*aggs).collect()[0]
+            return _kernels.finish(fr.columns, [
+                _kernels.reduction_result(call, row, ci, lambda v: rebuild(v, in_tags[ci]))
+                for ci in range(k)
+            ])
+        if call is not None and call[0] == "value_counts":
+            # one partial aggregate per (column, value) over the melt — its
+            # count and first position
             partials = ordered.sdf.selectExpr(
                 ORDER_COL, f"explode(array({entries})) AS __e__"
             ).selectExpr(ORDER_COL, "__e__.__cid__ AS __cid__", "__e__.__v__ AS __v__")
@@ -4260,16 +4272,14 @@ class DataFrame:
             if parts is not None and len(parts):
                 by_cid = dict(tuple(parts.groupby("__cid__")))
                 out = _kernels.finish(fr.columns, [
-                    _kernels.column_result(
-                        call,
+                    _kernels.value_counts_result(
+                        call[1],
                         rebuild(by_cid[ci]["__v__"], in_tags[ci]).rename(fr.columns[ci]),
                         by_cid[ci]["__n__"].to_numpy(),
                         by_cid[ci]["__o__"].to_numpy(),
                     )
                     for ci in range(k)
                 ])
-                if not isinstance(out, pd.DataFrame):
-                    return out  # reductions come back as a pandas Series
                 try:
                     return DataFrame(out)
                 except (TypeError, ValueError):

@@ -1,14 +1,17 @@
 """Decomposable column kernels for ``DataFrame.apply(func, axis=0)``.
 
 Reference parity: Modin's TreeReduce, a partial per split and then a merge.
-When ``func`` is one whitelisted Series call, a per-(column, value) partial
-aggregate (the value's count and its first position) decides the answer, so
-no task has to hold a whole column:
+When ``func`` is one whitelisted Series call, Spark aggregates decide the
+answer, so no task has to hold a whole column:
 
 - ``recognise`` calls ``func`` once on a recording stand-in and returns the
   call it made, or None;
-- ``finish`` rebuilds each column's answer from its partials on the driver
-  and assembles the columns with pandas' own ``apply``.
+- the reductions (``count``, ``nunique``, ``min``, ``max``) are per-column
+  aggregates (``reduction_sql``), k answers however many distinct values a
+  column has, finished by ``reduction_result``;
+- ``value_counts`` is a per-(column, value) partial aggregate (the value's
+  count and its first position), rebuilt by ``value_counts_result``;
+- ``finish`` assembles the columns with pandas' own ``apply``.
 
 Float ``sum`` and ``mean`` are left out on purpose: Spark does not add in
 numpy's pairwise order, so their partials would not merge bit-identical to
@@ -113,12 +116,44 @@ def recognise(func) -> tuple[str, dict] | None:
     return name, kw
 
 
-def column_result(call: tuple[str, dict], keys: pd.Series, counts: np.ndarray,
-                  first: np.ndarray):
-    """``call`` on the whole column, from its distinct ``keys`` (the typed
-    values, named by the column label), their ``counts`` and the position of
-    each key's ``first`` appearance."""
+REDUCTIONS = frozenset(("count", "nunique", "min", "max"))
+
+
+def reduction_sql(call: tuple[str, dict], col: str, is_float: bool, vt: str,
+                  i: int) -> list[str]:
+    """The aggregates behind a reduction ``call`` on column SQL ``col``,
+    aliased ``__a{i}__`` (and ``__b{i}__``). Each reads every row once,
+    whatever the column's number of distinct values; ``min``/``max`` come
+    back cast to ``vt``, the type the melt hands values over in."""
     name, kw = call
+    # NaN is missing to pandas, and Spark orders it above every number
+    v = f"CASE WHEN isnan({col}) THEN NULL ELSE {col} END" if is_float else col
+    if name == "count":
+        return [f"count({v}) AS __a{i}__"]
+    if name == "nunique":
+        missing = [] if kw["dropna"] else [f"count(1) > count({v}) AS __b{i}__"]
+        return [f"count(DISTINCT {v}) AS __a{i}__", *missing]
+    return [f"CAST({name}({v}) AS {vt}) AS __a{i}__"]
+
+
+def reduction_result(call: tuple[str, dict], row, i: int, decode):
+    """The reduction's answer for column ``i`` from the aggregate ``row``;
+    ``decode`` turns the melt-typed values into the column's pandas values."""
+    name, kw = call
+    if name == "count":
+        return int(row[f"__a{i}__"])
+    if name == "nunique":
+        return int(row[f"__a{i}__"]) + bool(not kw["dropna"] and row[f"__b{i}__"])
+    # the extreme as a one-value column, reduced by pandas itself: its scalar
+    # type and its all-missing answer are pandas' own
+    return getattr(decode(pd.Series([row[f"__a{i}__"]])), name)()
+
+
+def value_counts_result(kw: dict, keys: pd.Series, counts: np.ndarray,
+                        first: np.ndarray) -> pd.Series:
+    """``value_counts(**kw)`` of the whole column, from its distinct ``keys``
+    (the typed values, named by the column label), their ``counts`` and the
+    position of each key's ``first`` appearance."""
     order = np.argsort(first, kind="stable")
     keys = keys.iloc[order].reset_index(drop=True)
     # keys that pandas counts as one (NaN and null both decode to NaN) merge
@@ -127,15 +162,9 @@ def column_result(call: tuple[str, dict], keys: pd.Series, counts: np.ndarray,
     counts = np.bincount(codes, weights=counts[order]).astype("int64")
     keys = keys.iloc[np.unique(codes, return_index=True)[1]].reset_index(drop=True)
     na = keys.isna().to_numpy()
-    if name == "count":
-        return counts[~na].sum()
-    if name == "nunique":
-        return int(len(keys) - (kw["dropna"] and na.any()))
-    if name in ("min", "max"):
-        return getattr(keys, name)()
-    # value_counts: pandas' index for these keys (first-appearance order,
-    # dtype inference, the NaN key when dropna=False), then pandas' own sort
-    # of the counts in that order, which settles ties as pandas does
+    # pandas' index for these keys (first-appearance order, dtype inference,
+    # the NaN key when dropna=False), then pandas' own sort of the counts in
+    # that order, which settles ties as pandas does
     idx = keys.value_counts(normalize=kw["normalize"], sort=False, dropna=kw["dropna"])
     kept = counts[~na] if kw["dropna"] else counts
     res = pd.Series(kept, index=idx.index, name=idx.name)

@@ -5,9 +5,10 @@ its distributed path; each test here turns the threshold on for itself.
 Inputs are Spark-backed frames (ingested at once), as a parquet read is, so
 the collects under test really run.
 
-- apply(axis=0) with a decomposable kernel (value_counts, nunique, count,
-  min, max) merges a per-(column, value) partial aggregate on the driver;
-  every other func keeps the applyInPandas path.
+- apply(axis=0) with a decomposable kernel finishes from Spark aggregates:
+  count, nunique, min and max from one row of per-column aggregates,
+  value_counts from a per-(column, value) partial aggregate merged on the
+  driver; every other func keeps the applyInPandas path.
 - transpose of a frame within the threshold is one ordered collect plus a
   pandas transpose, and its native result takes the next ``.T`` with no job.
 """
@@ -162,6 +163,29 @@ def test_reduction_kernels_match_pandas(spark, small_on, no_udf, name):
     got = _spark_backed(pdf).apply(f)
     assert isinstance(got, pd.Series)
     _check(got, pdf.apply(f))
+
+
+def test_reduction_kernels_edge_values(spark, small_on, no_udf):
+    pdf = pd.DataFrame({"z": [0.0, -0.0, 1.0, np.nan], "n": [np.nan] * 4,
+                        "s": ["b", "a", None, "c"], "big": [2**62 + 1, 2**62 + 3, 5, 7]})
+    for f in (lambda s: s.nunique(), lambda s: s.nunique(dropna=False), lambda s: s.count()):
+        _check(_spark_backed(pdf).apply(f), pdf.apply(f))
+    num = pdf.drop(columns="s")
+    for f in (lambda s: s.min(), lambda s: s.max()):
+        _check(_spark_backed(num).apply(f), num.apply(f))
+
+
+def test_reduction_kernel_ignores_cardinality(spark, monkeypatch, no_udf):
+    # 300 distinct values per column against a threshold of 2: the answer
+    # is still 2 numbers, from one aggregate action (each of its shuffle
+    # stages and its result stage is one job; a distinct count shuffles twice)
+    monkeypatch.setenv("MODIN_SPARK_NATIVE_MAX_ROWS", "2")
+    pdf = pd.DataFrame({"a": np.arange(300), "b": np.arange(300) / 7})
+    m = _spark_backed(pdf)
+    for f, stages in ((lambda s: s.max(), 2), (lambda s: s.nunique(), 3)):
+        got, jobs = _jobs(spark, lambda: m.apply(f))
+        assert jobs <= stages, jobs
+        _check(got, pdf.apply(f))
 
 
 def test_kernel_runs_one_partial_aggregate(spark, small_on, no_udf):
