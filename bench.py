@@ -201,11 +201,17 @@ def main() -> None:
 
     sentinels_end = run_sentinels()
     host_noise_factor = None
+    sentinel_cores = None
     try:
         if sf != "0.1":
             raise ValueError("sentinel minima are frozen at sf0.1")
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE_SENTINELS.json")) as f:
-            frozen = json.load(f)["sentinels"]
+            frozen_all = json.load(f)
+        # the references frozen for this run's core count ("sentinels" holds
+        # the 32c minima); with none for it the factor stays null rather
+        # than compare against another core count's times
+        by_cores = {"32": frozen_all["sentinels"], **frozen_all.get("sentinels_by_cores", {})}
+        frozen = by_cores[str(ncpu)]
         # per sentinel, the best of the start/end observations: "could the
         # host hit baseline speed at any point this run?" — a sustained
         # co-tenant burst inflates both ends and IS flagged, while JIT
@@ -217,6 +223,7 @@ def main() -> None:
             if frozen.get(n)
         )
         host_noise_factor = round(factors[len(factors) // 2], 2)  # median
+        sentinel_cores = ncpu
     except Exception:
         pass
 
@@ -231,6 +238,7 @@ def main() -> None:
             "sentinels_start": sentinels_start,
             "sentinels_end": sentinels_end,
             "host_noise_factor": host_noise_factor,
+            "sentinel_cores": sentinel_cores,
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         }
     )

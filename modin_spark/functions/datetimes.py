@@ -171,28 +171,6 @@ _FREQ_TRUNC = {
 }
 
 
-def _freq_to_trunc(freq: str) -> str:
-    if freq in _FREQ_TRUNC:
-        return _FREQ_TRUNC[freq]
-    raise NotImplementedError(f"freq {freq!r}")
-
-
-_FREQ_INTERVAL = {
-    "D": "INTERVAL 1 DAY", "H": "INTERVAL 1 HOUR", "h": "INTERVAL 1 HOUR",
-    "T": "INTERVAL 1 MINUTE", "min": "INTERVAL 1 MINUTE",
-    "S": "INTERVAL 1 SECOND", "s": "INTERVAL 1 SECOND",
-}
-
-
-def _freq_to_interval(freq: str) -> str:
-    if freq in _FREQ_INTERVAL:
-        return _FREQ_INTERVAL[freq]
-    raise NotImplementedError(f"freq {freq!r}")
-
-
-_FREQ_SECONDS = {"D": 86400, "H": 3600, "h": 3600, "T": 60, "min": 60, "S": 1, "s": 1}
-
-
 def _freq_us(freq: str) -> int:
     import pandas as _pd
 

@@ -30,10 +30,6 @@ _MH_A = 0x9E3779B97F4A7C15
 _MH_B = 0xC2B2AE3D27D4EB4F
 
 
-def _normalize_text(c: Column) -> Column:
-    return F.regexp_replace(F.lower(c), r"[^a-z0-9\s]", " ")
-
-
 def _py_shingles(text: str | None, k: int) -> list[str]:
     import re
 
@@ -41,11 +37,6 @@ def _py_shingles(text: str | None, k: int) -> list[str]:
     if len(words) >= k:
         return [" ".join(words[i : i + k]) for i in range(len(words) - k + 1)]
     return [" ".join(words)]
-
-
-def _hash_shingles(sh: list[str]) -> "np.ndarray":
-    # deterministic 64-bit string hashing (pandas siphash with fixed key)
-    return pd.util.hash_array(np.asarray(sh, dtype=object)).astype(np.int64)
 
 
 # positional combine multiplier for turning k consecutive word hashes into one

@@ -7,7 +7,6 @@ is in modin_spark.core.{compiler,windows}; this layer never touches rows.
 
 from __future__ import annotations
 
-import os
 from typing import Any, Sequence
 
 import numpy as np
@@ -26,6 +25,13 @@ from modin_spark.pandas.series import Series, _lit
 
 _MASKED_EXT_NAMES = {"Int8", "Int16", "Int32", "Int64", "UInt8", "UInt16",
                      "UInt32", "UInt64", "Float32", "Float64", "boolean"}
+
+
+# the distributed transpose's width budget, in transposed columns: above it
+# the wide Spark projection leaves whole-stage codegen and the per-column
+# cost rises ~45% (the measured knee, OPTIMIZATION_profile.md "Transpose
+# width budget"); wider frames take the driver path with a warning
+TRANSPOSE_MAX_COLS = 20_000
 
 
 def _masked_ext_dtypes(pdf: pd.DataFrame) -> dict:
@@ -3744,22 +3750,20 @@ class DataFrame:
             raise ValueError(f"transpose of {n} rows would materialize driver-side; refusing")
         import warnings as _warnings
 
-        max_cols = int(os.environ.get("SPARK_GRAFT_TRANSPOSE_MAX_COLS", "20000"))
-        if n > max_cols:
+        if n > TRANSPOSE_MAX_COLS:
             # NOT silent (r7): the distributed path declined on width — the
             # guard is an empirical Spark schema budget, not a correctness
-            # limit. Measured on this JVM (tools/measure_transpose.py, r9):
-            # per-column wall cost is flat ~0.6ms/col from 10k to 20k
-            # transposed columns and rises ~45% above (30k-40k: ~0.87ms/col
-            # as the wide projection leaves whole-stage codegen), so the
-            # default sits at the 20k knee; wider still WORKS (40k measured
-            # at 35s) but grows superlinearly
+            # limit. The measured knee is in OPTIMIZATION_profile.md
+            # ("Transpose width budget"): per-column wall cost is flat
+            # ~0.6ms/col from 10k to 20k transposed columns and rises ~45%
+            # above as the wide projection leaves whole-stage codegen; wider
+            # still WORKS (40k measured at 35s) but grows superlinearly
             _warnings.warn(
                 f"transpose of {n} rows exceeds the distributed column budget "
-                f"(SPARK_GRAFT_TRANSPOSE_MAX_COLS={max_cols}); materializing "
+                f"(TRANSPOSE_MAX_COLS={TRANSPOSE_MAX_COLS}); materializing "
                 "driver-side — above ~20k columns the wide Spark projection "
-                "leaves whole-stage codegen, so widening the budget trades "
-                "build time for driver memory",
+                "leaves whole-stage codegen (OPTIMIZATION_profile.md, "
+                "\"Transpose width budget\")",
                 stacklevel=2,
             )
         # result-required: the over-budget transpose is driver data
@@ -3776,14 +3780,11 @@ class DataFrame:
         pandas-style duplicate column labels and a multi-level index becomes
         MultiIndex columns (both representable since the r7 positional-name
         label table). Returns None only when the frame exceeds the column
-        budget ($SPARK_GRAFT_TRANSPOSE_MAX_COLS, default 20k transposed
-        columns — the measured per-column-cost knee, tools/measure_transpose.py)
-        — driver path."""
-        import os as _os
-
+        budget (TRANSPOSE_MAX_COLS, 20k transposed columns — the measured
+        per-column-cost knee, OPTIMIZATION_profile.md) — driver path."""
         from modin_spark.core.frame import fresh_names
 
-        max_cols = int(_os.environ.get("SPARK_GRAFT_TRANSPOSE_MAX_COLS", "20000"))
+        max_cols = TRANSPOSE_MAX_COLS
         # persist the ORDERED input ONCE, below the position derivation: the
         # header collect, the retype probe and the final melt/pivot action
         # each replay the whole upstream plan otherwise — a T.T round trip
@@ -4288,8 +4289,8 @@ class DataFrame:
                     pass
 
         # shape-deciding: the shape probe on a driver sample (same technique
-        # as the axis=1 path)
-        sample = self.head(100).to_pandas()
+        # as the axis=1 path), under the columns' overlay dtypes
+        sample = self._copy_col_meta(self.head(100)).to_pandas()
         out_sample = sample.apply(func, axis=0)
         reduction = isinstance(out_sample, pd.Series)
         if not reduction and (
@@ -4317,9 +4318,14 @@ class DataFrame:
             "__pos__", *idx_sel, f"explode(array({entries})) AS __e__"
         ).selectExpr("__pos__", *idx_pass, "__e__.__cid__ AS __cid__", "__e__.__v__ AS __v__")
 
+        ext_dtypes = getattr(self, "_to_pandas_ext_dtypes", None) or {}
+        labels = list(fr.columns)
+
         def input_series(pdf: pd.DataFrame, cid: int) -> pd.Series:
-            """func's view of one column: typed values, REAL typed index
-            (MultiIndex for multi-level frames)."""
+            """func's view of one column: typed values under the column's
+            overlay dtype (categorical, nullable extension), REAL typed index
+            (MultiIndex for multi-level frames) and the column label as its
+            name (by position, so duplicate and tuple labels resolve)."""
             vals = rebuild(pdf["__v__"], in_tags[cid]).to_numpy()
             if n_lvl == 0:
                 idx = pdf["__pos__"].to_numpy()
@@ -4330,7 +4336,9 @@ class DataFrame:
                     _decode_tagged(pdf[f"__ilbl{i}__"], idx_tags[i]).to_numpy()
                     for i in range(n_lvl)
                 ])
-            return pd.Series(vals, index=idx)
+            out = pd.Series(vals, index=idx, name=labels[cid])
+            dtype = ext_dtypes.get(labels[cid])
+            return out if dtype is None else out.astype(dtype)
 
         # the OUTPUT codec keys on the SAMPLED result dtypes, not the input
         # melt: a float frame's func can return strings/bools/ints, which
@@ -4528,7 +4536,12 @@ class DataFrame:
                 index_cols=albls, index_names=list(out_sample.index.names),
                 has_order=True,
             )
-            return DataFrame(_frame=nf)
+            out = DataFrame(_frame=nf)
+            if isinstance(out_sample.index, pd.CategoricalIndex):
+                # a categorical column's results keep pandas' CategoricalIndex
+                out._post_to_pandas_index = (
+                    lambda ix, _d=out_sample.index.dtype: ix.astype(_d))
+            return out
 
         if reduction:
             schema = T.StructType([

@@ -2638,10 +2638,6 @@ class CategoricalMethods:
         return self.set_categories(new_categories, ordered)
 
 
-def _series_api_tail():
-    """Registered below — keeps the additions in one visually grouped block."""
-
-
 def _ser_sample(self, n=None, frac=None, replace=False, random_state=None,
                 weights=None, ignore_index=False):
     out = self.to_frame("__s__").sample(

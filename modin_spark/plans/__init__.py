@@ -116,11 +116,6 @@ def uses_broadcast_join(sdf: SDF) -> bool:
     return "BroadcastHashJoin" in physical_plan(sdf) or "BroadcastNestedLoopJoin" in physical_plan(sdf)
 
 
-def single_partition_exchanges(sdf: SDF) -> int:
-    """Count SinglePartition exchanges — the scale smell for global windows."""
-    return physical_plan(sdf).count("Exchange SinglePartition")
-
-
 def unsafe_single_partition_exchanges(sdf: SDF) -> int:
     """SinglePartition exchanges whose child is NOT an aggregate.
 

@@ -256,6 +256,24 @@ def test_minhash_bucket_cap(spark):
     assert full.where("id_a < 100").count() == 29 * 30 // 2
 
 
+def test_minhash_bucket_cap_md5(spark):
+    """The same hot-bucket star on the SQL-replayable md5 signature and its
+    value banding (the registry's and the skew rung's configuration): the
+    over-cap cluster yields exactly m-1 pairs, all anchored at its min id,
+    and dedup leaves one survivor of it."""
+    from modin_spark.operators.dedup import minhash_candidate_pairs, minhash_lsh_dedup
+
+    m = 40
+    rows = [(i, "identical boilerplate footer text shared by every page") for i in range(m)]
+    rows += [(100, "an unrelated document about shuffle partitions")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = minhash_candidate_pairs(df, "doc_id", "text", max_bucket_size=10, base_hash="md5")
+    got = {(r.id_a, r.id_b) for r in pairs.collect()}
+    assert got == {(0, j) for j in range(1, m)}, got
+    kept = minhash_lsh_dedup(df, threshold=0.8, base_hash="md5", max_bucket_size=10)
+    assert sorted(r.doc_id for r in kept.select("doc_id").collect()) == [0, 100]
+
+
 def test_simhash_bucket_cap_star(spark):
     """SimHash hot-bucket guard: identical docs share every band key, so a
     mega-cluster over the cap star-expands and still collapses to one doc."""

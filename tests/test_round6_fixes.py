@@ -199,7 +199,9 @@ def test_transpose_mixed_no_driver_materialization(spark):
 
 
 def test_transpose_guard_env(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_TRANSPOSE_MAX_COLS", "3")
+    from modin_spark.pandas import dataframe as _dataframe
+
+    monkeypatch.setattr(_dataframe, "TRANSPOSE_MAX_COLS", 3)
     pdf = pd.DataFrame({"a": [1.0, 2, 3, 4, 5], "b": [5.0, 6, 7, 8, 9]})
     got = mpd.from_pandas(pdf).T.to_pandas()  # over guard -> driver path
     assert got.shape == (2, 5)

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 import duckdb
 import numpy as np
@@ -67,17 +66,15 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
         try:
             mine = fn(spark, sf).toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: engine raised {type(e).__name__}: {str(e)[:200]}")
             continue
-        dt = time.time() - t0
         sql = oracles.get(name)
         if sql is None:
-            print(f"ROWS  {name}: {len(mine)} rows ({dt:.1f}s, no oracle)")
+            print(f"ROWS  {name}: {len(mine)} rows (no oracle)")
             continue
         try:
             ref = con.execute(sql).df()
@@ -125,7 +122,7 @@ def main():
             failures.append(name)
             print(f"FAIL  {name}: values equal but signed-zero flips (driver hash would fail): {signflips}")
         elif eq:
-            print(f"OK    {name}: {len(a)} rows ({dt:.1f}s)")
+            print(f"OK    {name}: {len(a)} rows")
         else:
             failures.append(name)
             print(f"FAIL  {name}: value mismatch")

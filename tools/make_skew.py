@@ -16,9 +16,9 @@ Planted shapes (all deterministic, hash-seeded — no RNG):
   (inverse-CDF of the continuous zipf, hash-seeded).
 - events.user_id: zipf-1.2 (window/groupby family).
 - documents: 50% of docs (2500) form ONE boilerplate mega-cluster with
-  IDENTICAL text — 5x the 500-doc bucket cap used by the skew check
-  (tools/run_skew.py) to prove minhash_candidate_pairs' hot-bucket drop
-  path end-to-end; the other 2500 docs are a 90%-duplicate corpus
+  IDENTICAL text — 5x the 500-doc bucket cap the skew rung used to prove
+  minhash_candidate_pairs' hot-bucket star path end-to-end (the tests keep
+  that proof at small N); the other 2500 docs are a 90%-duplicate corpus
   (250 unique texts x 10 exact copies).
 - region/nation/customer/supplier/part/embeddings: copied unchanged
   (dimension tables stay uniform; the skew lives in the fact keys).
