@@ -21,6 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from modin_spark.core.frame import ORDER_COL, SparkFrame, fresh_names
@@ -29,102 +30,160 @@ _MAXLONG = (1 << 62)
 
 
 # ---------------------------------------------------------------------------
-# aggregation expression table (pandas name -> Spark expression builder)
+# reduction algebra: pandas reduction name -> Spark Column
 # ---------------------------------------------------------------------------
+# The reference registers each reduction once (its Reduce / TreeReduce /
+# GroupByReduce templates) and every context reuses it. agg_expr is that one
+# owner here: whole-column, grouped, pivoted and windowed (``over=``)
+# reductions all build through it, so each pandas rule is written once below.
 
-def _sem(c: Column) -> Column:
-    return F.stddev_samp(c) / F.sqrt(F.count(c))
+def skew_from_g1(g1: Column, n: Column) -> Column:
+    """pandas' bias-corrected sample skewness G1 from the population g1 that
+    Spark's ``skewness`` (and a carried third moment) gives."""
+    return g1 * F.sqrt(n * (n - 1)) / (n - 2)
 
 
-def _skew(c: Column) -> Column:
-    # pandas uses the bias-corrected sample skewness G1 = g1*sqrt(n(n-1))/(n-2);
-    # Spark's F.skewness returns population g1.
-    n = F.count(c)
-    return F.skewness(c) * F.sqrt(n * (n - 1)) / (n - 2)
-
-
-def _kurt(c: Column) -> Column:
-    # pandas: bias-corrected sample excess kurtosis G2; Spark kurtosis = g2 (population).
-    n = F.count(c)
-    g2 = F.kurtosis(c)
+def kurt_from_g2(g2: Column, n: Column) -> Column:
+    """pandas' bias-corrected sample excess kurtosis G2 from the population
+    excess g2 that Spark's ``kurtosis`` gives."""
     return ((n - 1) / ((n - 2) * (n - 3))) * ((n + 1) * g2 + 6)
 
 
-AGG_EXPRS: dict[str, callable] = {
-    "sum": lambda c: F.sum(c),
-    "mean": lambda c: F.avg(c),
-    "avg": lambda c: F.avg(c),
-    "count": lambda c: F.count(c),
-    "size": lambda c: F.count(F.lit(1)),
-    "min": lambda c: F.min(c),
-    "max": lambda c: F.max(c),
-    "std": lambda c: F.stddev_samp(c),
-    "var": lambda c: F.var_samp(c),
-    "sem": _sem,
-    "median": lambda c: F.median(c),
-    "nunique": lambda c: F.countDistinct(c),
-    "any": lambda c: F.coalesce(F.bool_or(c.cast("boolean")), F.lit(False)),
-    "all": lambda c: F.coalesce(F.bool_and(c.cast("boolean")), F.lit(True)),
-    "prod": lambda c: F.product(c),
-    "product": lambda c: F.product(c),
-    "skew": _skew,
-    "kurt": _kurt,
-    "kurtosis": _kurt,
-    "first": lambda c: F.min_by(c, F.when(c.isNotNull(), F.col(ORDER_COL))),
-    "last": lambda c: F.max_by(c, F.when(c.isNotNull(), F.col(ORDER_COL))),
+def moving_sem(std1: Column, n: Column, ddof: int) -> Column:
+    """pandas Rolling/Expanding ``sem(ddof)``: ``std(ddof=1) / sqrt(n - ddof)``
+    (the std keeps ddof=1 whatever ddof is). At n == ddof pandas divides by
+    zero: inf, or NaN for a zero std."""
+    e = std1 / F.sqrt(n - F.lit(ddof))
+    if ddof > 1:
+        e = F.when(n == F.lit(ddof), std1 * F.lit(float("inf"))).otherwise(e)
+    return e
+
+
+# builders take the column and ``o``, which puts the window (if any) on each
+# leaf aggregate
+_REDUCTIONS: dict[str, callable] = {
+    "sum": lambda c, o: o(F.sum(c)),
+    "mean": lambda c, o: o(F.avg(c)),
+    "avg": lambda c, o: o(F.avg(c)),
+    "count": lambda c, o: o(F.count(c)),
+    "size": lambda c, o: o(F.count(F.lit(1))),
+    "min": lambda c, o: o(F.min(c)),
+    "max": lambda c, o: o(F.max(c)),
+    "std": lambda c, o: o(F.stddev_samp(c)),
+    "var": lambda c, o: o(F.var_samp(c)),
+    # reduction sem: std(ddof=1)/sqrt(n); windows use moving_sem
+    "sem": lambda c, o: o(F.stddev_samp(c)) / F.sqrt(o(F.count(c))),
+    "median": lambda c, o: o(F.median(c)),
+    "nunique": lambda c, o: o(F.countDistinct(c)),
+    "any": lambda c, o: o(F.bool_or(c.cast("boolean"))),
+    "all": lambda c, o: o(F.bool_and(c.cast("boolean"))),
+    "prod": lambda c, o: o(F.product(c)),
+    "product": lambda c, o: o(F.product(c)),
+    "skew": lambda c, o: skew_from_g1(o(F.skewness(c)), o(F.count(c))),
+    "kurt": lambda c, o: kurt_from_g2(o(F.kurtosis(c)), o(F.count(c))),
+    "kurtosis": lambda c, o: kurt_from_g2(o(F.kurtosis(c)), o(F.count(c))),
+    "first": lambda c, o: o(F.min_by(c, F.when(c.isNotNull(), F.col(ORDER_COL)))),
+    "last": lambda c, o: o(F.max_by(c, F.when(c.isNotNull(), F.col(ORDER_COL)))),
     # approximate variants (net-new vs the exact-only reference, SURVEY §2.4)
-    "approx_nunique": lambda c: F.approx_count_distinct(c),
-    "approx_median": lambda c: F.approx_percentile(c, F.lit(0.5), F.lit(10000)),
+    "approx_nunique": lambda c, o: o(F.approx_count_distinct(c)),
+    "approx_median": lambda c, o: o(F.approx_percentile(c, F.lit(0.5), F.lit(10000))),
 }
 
-# sums over all-NaN groups are 0 in pandas (min_count=0); Spark returns NULL
-_NULL_FILL_ZERO = {"sum"}
+# pandas numeric-aggregates booleans as 0/1 (bool.sum() = #True); Spark
+# refuses sum/avg over a boolean column
+_BOOL_AS_INT = frozenset({"sum", "mean", "avg", "std", "var", "sem", "median", "quantile",
+                          "prod", "product", "skew", "kurt", "kurtosis"})
+
+# pandas' result over no (non-missing) values where it is not NaN: the
+# sum/prod identities (min_count=0), empty any/all, and the counts
+_EMPTY = {"sum": 0, "prod": 1, "product": 1, "any": False, "all": True,
+          "count": 0, "size": 0, "nunique": 0}
+# the aggregates that return NULL over no values and so take _EMPTY
+_NULL_WHEN_EMPTY = frozenset({"sum", "prod", "product", "any", "all"})
+
+
+def empty_result(name: str, input_type=None) -> Column | None:
+    """pandas' value of reduction ``name`` over no values, or None for NaN."""
+    if name not in _EMPTY:
+        return None
+    if name == "sum" and isinstance(input_type, T.DayTimeIntervalType):
+        # interval sums get a type-correct zero (pandas: Timedelta(0))
+        return F.expr("INTERVAL '0' SECOND")
+    return F.lit(_EMPTY[name])
 
 
 def agg_expr(name: str, c: Column, q: float | None = None, input_type=None,
-             ddof: int | None = None, interpolation: str | None = None) -> Column:
+             ddof: int | None = None, interpolation: str | None = None, *,
+             over=None, min_count: int = 0, skipna: bool = True,
+             moving: bool = False, pivot: bool = False) -> Column:
+    """The Spark aggregate computing pandas reduction ``name`` over ``c``.
+
+    - ``input_type``: the Spark type of ``c`` (bool -> int cast, interval 0);
+    - ``over``: a window spec, put on each leaf aggregate (a composite such
+      as sem or skew cannot take ``.over`` as a whole);
+    - ``moving``: pandas Rolling/Expanding semantics where they differ from
+      a reduction's (sem, see moving_sem);
+    - ``min_count``: fewer observations (rows, for count) give NULL —
+      pandas' ``min_count`` and a window's ``min_periods``;
+    - ``skipna=False``: any missing value gives NULL;
+    - ``pivot``: the aggregate runs per pivot cell, and a cell with no rows
+      stays NULL instead of taking the sum/prod identity.
+    """
+    o = (lambda e: e.over(over)) if over is not None else (lambda e: e)
+    if name in _BOOL_AS_INT and isinstance(input_type, T.BooleanType):
+        c = c.cast("int")
+    if name == "median" and over is not None:
+        # Spark's median is not frame-window capable; percentile(0.5) is
+        name, q = "quantile", 0.5
     if name == "quantile":
         qv = float(q if q is not None else 0.5)
         if interpolation in (None, "linear"):
-            return F.percentile(c, F.lit(qv))
-        # non-linear interpolation: exact order statistics from a sorted
-        # collect — the same memory class as Spark's exact percentile
-        # buffer (both hold the group's values)
-        arr = F.array_sort(F.collect_list(c))
-        n = F.size(arr)
-        h = (n - 1) * F.lit(qv)
-        lo = F.element_at(arr, F.floor(h).cast("int") + 1).cast("double")
-        hi = F.element_at(arr, F.ceil(h).cast("int") + 1).cast("double")
-        if interpolation == "lower":
-            return lo
-        if interpolation == "higher":
-            return hi
-        if interpolation == "midpoint":
-            return (lo + hi) / 2
-        if interpolation == "nearest":
-            # numpy rounds the fractional index half-to-even
-            return F.element_at(arr, F.bround(h, 0).cast("int") + 1).cast("double")
-        raise ValueError(f"invalid interpolation {interpolation!r}")
-    if name in ("std", "var", "sem") and ddof is not None and ddof != 1:
-        n = F.count(c)
-        var = F.var_pop(c) * n / (n - F.lit(int(ddof)))
-        if name == "var":
-            return var
-        std = F.sqrt(var)
-        # pandas sem: std(ddof)/sqrt(n)
-        return std if name == "std" else std / F.sqrt(n)
-    fn = AGG_EXPRS.get(name)
-    if fn is None:
-        raise NotImplementedError(f"aggregation {name!r}")
-    e = fn(c)
-    if name in _NULL_FILL_ZERO:
-        from pyspark.sql import types as T
-
-        if isinstance(input_type, T.DayTimeIntervalType):
-            # interval sums get a type-correct zero (pandas: Timedelta(0))
-            e = F.coalesce(e, F.expr("INTERVAL '0' SECOND"))
+            e = o(F.percentile(c, F.lit(qv)))
         else:
-            e = F.coalesce(e, F.lit(0))
+            # non-linear interpolation: exact order statistics from a sorted
+            # collect — the same memory class as Spark's exact percentile
+            # buffer (both hold the group's values)
+            arr = F.array_sort(o(F.collect_list(c)))
+            n = F.size(arr)
+            h = (n - 1) * F.lit(qv)
+            lo = F.element_at(arr, F.floor(h).cast("int") + 1).cast("double")
+            hi = F.element_at(arr, F.ceil(h).cast("int") + 1).cast("double")
+            if interpolation == "lower":
+                e = lo
+            elif interpolation == "higher":
+                e = hi
+            elif interpolation == "midpoint":
+                e = (lo + hi) / 2
+            elif interpolation == "nearest":
+                # numpy rounds the fractional index half-to-even
+                e = F.element_at(arr, F.bround(h, 0).cast("int") + 1).cast("double")
+            else:
+                raise ValueError(f"invalid interpolation {interpolation!r}")
+    elif name == "sem" and moving:
+        e = moving_sem(o(F.stddev_samp(c)), o(F.count(c)), 1 if ddof is None else int(ddof))
+    elif name in ("std", "var", "sem") and ddof is not None and ddof != 1:
+        # Spark's sample stats are ddof=1: M2/(n - ddof) = var_pop * n/(n - ddof),
+        # NaN at n <= ddof (pandas)
+        n, d = o(F.count(c)), F.lit(int(ddof))
+        var = F.when(n > d, o(F.var_pop(c)) * n / (n - d))
+        e = var if name == "var" else F.sqrt(var)
+        if name == "sem":
+            # reduction sem: std(ddof)/sqrt(n)
+            e = e / F.sqrt(n)
+    else:
+        fn = _REDUCTIONS.get(name)
+        if fn is None:
+            raise NotImplementedError(f"aggregation {name!r}")
+        e = fn(c, o)
+    if min_count:
+        seen = o(F.count(F.lit(1)) if name == "count" else F.count(c))
+        e = F.when(seen >= min_count, e)
+    elif name in _NULL_WHEN_EMPTY:
+        e = F.coalesce(e, empty_result(name, input_type))
+        if pivot:
+            e = F.when(F.count(F.lit(1)) > 0, e)
+    if not skipna:
+        e = F.when(o(F.count(F.lit(1))) > o(F.count(c)), F.lit(None)).otherwise(e)
     return e
 
 
@@ -168,12 +227,8 @@ def groupby_agg(
     for (lbl, pos, name, kw), op in zip(agg_spec, out_phys):
         c = F.col(frame.data_cols[pos]) if pos is not None else F.lit(1)
         itype = frame.schema_map.get(frame.data_cols[pos]) if pos is not None else None
-        e = agg_expr(name, c, kw.get("q"), input_type=itype,
-                     ddof=kw.get("ddof"), interpolation=kw.get("interpolation"))
-        # pandas identity: prod of an all-NaN group is 1 (sum's 0 lives in
-        # agg_expr, type-aware)
-        if name == "prod":
-            e = F.coalesce(e, F.lit(1.0))
+        e = agg_expr(name, c, kw.get("q"), input_type=itype, ddof=kw.get("ddof"),
+                     interpolation=kw.get("interpolation"), min_count=kw.get("min_count") or 0)
         aggs.append(e.alias(op))
     if sort:
         # pandas sorts group keys with NaN LAST; Spark struct ordering puts
@@ -230,8 +285,6 @@ def groupby_agg_udf(
     double instead of truncating; if an unsampled group still surprises the
     inferred long dtype, the coercer is lossless (``int(v)`` only when
     ``v == int(v)``, else NULL) rather than silently truncating."""
-    from pyspark.sql import types as T
-
     key_phys = [frame.data_cols[i] for i in by_positions]
     key_labels = [frame.columns[i] for i in by_positions]
     sdf = frame.sdf
@@ -431,7 +484,6 @@ def groupby_apply(frame: SparkFrame, by_positions: Sequence[int], func,
     seq_phys, ord_phys = fresh_names(2)
 
     from modin_spark.core.frame import pandas_dtype_to_spark
-    from pyspark.sql import types as T
 
     fields = [T.StructField(k, frame.schema_map[k]) for k in key_phys]
     for k in range(n_inner):

@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from modin_spark.core import compiler as qc
 from modin_spark.core.frame import (
     CARRY_BWD, CARRY_FWD, ORDER_COL, PIN_TAG, SparkFrame, carry_join, carry_key, carry_table,
     dense_positions, fresh_names, pin, sql_name)
@@ -461,20 +462,6 @@ def interpolate_linear(frame: SparkFrame, positions: Sequence[int], x_col=None, 
 # rolling / expanding
 # ---------------------------------------------------------------------------
 
-_ROLL_AGGS = {
-    "sum": F.sum,
-    "mean": F.avg,
-    "min": F.min,
-    "max": F.max,
-    "count": F.count,
-    "std": F.stddev_samp,
-    "var": F.var_samp,
-    "median": F.median,
-    "skew": F.skewness,
-    "kurt": F.kurtosis,
-}
-
-
 def rolling_quantile(frame, positions, window, q, min_periods=None, group_phys=None, center=False):
     """rolling(w).quantile(q) — F.percentile over the row window."""
     return rolling_agg(frame, positions, window, "quantile", min_periods, group_phys, q=q, center=center)
@@ -606,40 +593,6 @@ def rolling_agg(
     """
     if min_periods is None:
         min_periods = window
-    # sem is a composite (std/sqrt(n-1)) — each aggregate needs its own .over,
-    # so the builder takes the window; simple aggs get .over on the result
-    if agg == "quantile":
-        over_fn = lambda c, w: F.percentile(c, F.lit(q)).over(w)
-    elif agg == "median":
-        # F.median is not frame-window capable; percentile(0.5) is
-        over_fn = lambda c, w: F.percentile(c, F.lit(0.5)).over(w)
-    elif agg == "sem":
-        # window sem: std/sqrt(n - ddof) (pandas window semantics)
-        def over_fn(c, w, _d=ddof):
-            n = F.count(c).over(w)
-            scale = F.sqrt((n - 1) / (n - F.lit(_d))) if _d != 1 else F.lit(1.0)
-            return F.stddev_samp(c).over(w) * scale / F.sqrt(n - _d)
-    elif agg == "skew":
-        # pandas bias-corrected G1 over the window (Spark skewness = population g1)
-        def over_fn(c, w):
-            n = F.count(c).over(w)
-            return F.skewness(c).over(w) * F.sqrt(n * (n - 1)) / (n - 2)
-    elif agg == "kurt":
-        # pandas bias-corrected excess kurtosis G2 over the window
-        def over_fn(c, w):
-            n = F.count(c).over(w)
-            return ((n - 1) / ((n - 2) * (n - 3))) * ((n + 1) * F.kurtosis(c).over(w) + 6)
-    elif agg in ("var", "std") and ddof != 1:
-        # rescale Spark's sample stats: M2/(n-1) -> M2/(n-ddof)
-        def over_fn(c, w, _a=agg, _d=ddof):
-            n = F.count(c).over(w)
-            scale = (n - 1) / (n - F.lit(_d))
-            if _a == "var":
-                return F.var_samp(c).over(w) * scale
-            return F.stddev_samp(c).over(w) * F.sqrt(scale)
-    else:
-        _fn = _ROLL_AGGS[agg]
-        over_fn = lambda c, w: _fn(c).over(w)
     frame = frame.ensure_order()
     phys = [frame.data_cols[i] for i in positions]
     labels = [frame.columns[i] for i in positions]
@@ -655,26 +608,22 @@ def rolling_agg(
             "neither": (window - 1, -1),
         }[closed]
 
-    # pandas gate: count() needs min_periods window ROWS (every row is an
-    # observation for count); every other agg needs min_periods NON-NULLs
-    def gate(p, w):
-        return (F.count(F.lit(1)) if agg == "count" else F.count(F.col(p))).over(w)
+    # min_periods is agg_expr's min_count: count() needs min_periods window
+    # ROWS (every row is an observation for count), the rest NON-NULLs
+    def agg_over(p, w):
+        return qc.agg_expr(agg, F.col(p), q, ddof=ddof, over=w, min_count=min_periods,
+                           moving=True)
 
     if group_phys:
         w = Window.partitionBy(*group_phys).orderBy(ORDER_COL).rowsBetween(-back, fwd)
-        exprs = [
-            F.when(gate(p, w) >= min_periods, over_fn(F.col(p), w)).otherwise(F.lit(None))
-            for p in phys
-        ]
-        return frame.project(labels, exprs)
+        return frame.project(labels, [agg_over(p, w) for p in phys])
 
     fr = _with_blocks(frame)
     sdf = _window_halo(fr.sdf, back, fwd)
     w = Window.partitionBy(_BLK).orderBy(_POS).rowsBetween(-back, fwd)
     out_phys = fresh_names(len(phys))
     for p, op_ in zip(phys, out_phys):
-        val = over_fn(F.col(p), w)
-        sdf = sdf.withColumn(op_, F.when(gate(p, w) >= min_periods, val).otherwise(F.lit(None)))
+        sdf = sdf.withColumn(op_, agg_over(p, w))
     sdf = _core_rows(sdf)
     out = fr._same_rows(sdf).project(labels, [F.col(op_) for op_ in out_phys])
     return _drop_aux(out)
@@ -867,22 +816,18 @@ def expanding_agg(frame: SparkFrame, positions: Sequence[int], agg, min_periods:
                 e = mn
             elif a_name == "max":
                 e = mx
-            elif a_name in ("var", "std", "sem"):
+            elif a_name in ("var", "std"):
                 var = (d2 - (d * d) / n) / (n - F.lit(ddof))
                 e = var if a_name == "var" else F.sqrt(var)
-                if a_name == "sem":
-                    # window sem: std/sqrt(n - ddof) (pandas window semantics)
-                    e = e / F.sqrt(n - F.lit(ddof))
-                min_n = max(min_periods, 2 if ddof else 1)
+                min_n = max(min_periods, ddof + 1)
+            elif a_name == "sem":
+                e = qc.moving_sem(F.sqrt((d2 - (d * d) / n) / (n - 1)), n, ddof)
+                min_n = max(min_periods, 2)
             elif a_name == "skew":
-                # pandas bias-corrected G1 (matches compiler._skew)
-                g1 = m3 / F.pow(m2, 1.5)
-                e = g1 * F.sqrt(n * (n - 1)) / (n - 2)
+                e = qc.skew_from_g1(m3 / F.pow(m2, 1.5), n)
                 min_n = max(min_periods, 3)
             elif a_name == "kurt":
-                # pandas bias-corrected excess kurtosis G2 (matches compiler._kurt)
-                g2 = m4 / (m2 * m2) - 3
-                e = ((n - 1) / ((n - 2) * (n - 3))) * ((n + 1) * g2 + 6)
+                e = qc.kurt_from_g2(m4 / (m2 * m2) - 3, n)
                 min_n = max(min_periods, 4)
             else:
                 raise NotImplementedError(f"expanding {a_name}")
@@ -1909,18 +1854,9 @@ def rolling_time_agg(
         else F.col("__ct__") < F.col("__at__")
     j = anchors.join(contrib, anchors["__ab__"] == contrib["__cb__"], "inner").where(lo & hi)
 
-    fnmap = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
-             "count": F.count, "std": F.stddev_samp, "var": F.var_samp,
-             "median": F.median}
-    if agg not in fnmap:
-        raise NotImplementedError(f"rolling(time).{agg}")
     out_phys = fresh_names(len(phys))
-    aggs = []
-    for p, op in zip(phys, out_phys):
-        cnt = F.count(F.col(p))
-        aggs.append(
-            F.when(cnt >= int(min_periods), fnmap[agg](F.col(p))).alias(op)
-        )
+    aggs = [qc.agg_expr(agg, F.col(p), min_count=int(min_periods), moving=True).alias(op)
+            for p, op in zip(phys, out_phys)]
     agged = j.groupBy("__ao__").agg(*aggs).withColumnRenamed("__ao__", ORDER_COL)
     # rows whose window had no contributor at all (possible with closed=
     # 'left'/'neither') fall out of the inner join: restore them with NULLs
@@ -1968,18 +1904,11 @@ def grouped_rolling_time_agg(
         .orderBy(epoch_col)
         .rangeBetween(lo, hi)
     )
-    fnmap = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
-             "count": F.count, "std": F.stddev_samp, "var": F.var_samp,
-             "median": F.median}
-    if agg not in fnmap:
-        raise NotImplementedError(f"groupby.rolling(time).{agg}")
     phys = [fr.data_cols[i] for i in positions]
     labels = [fr.columns[i] for i in positions]
     out_phys = fresh_names(len(phys))
     for p, op in zip(phys, out_phys):
-        cnt = F.count(F.col(p)).over(w)
-        sdf = sdf.withColumn(
-            op, F.when(cnt >= int(min_periods), fnmap[agg](F.col(p)).over(w))
-        )
+        sdf = sdf.withColumn(op, qc.agg_expr(agg, F.col(p), over=w, min_count=int(min_periods),
+                                             moving=True))
     out = fr._same_rows(sdf.drop(epoch_col))
     return out.project(labels, [F.col(op) for op in out_phys])

@@ -1038,13 +1038,13 @@ class DataFrame:
         nat = _native.maybe(self, "head", n=n)
         if nat is not None:
             return nat
-        return DataFrame(_frame=self._frame.head(n))
+        return self._copy_col_meta(DataFrame(_frame=self._frame.head(n)))
 
     def tail(self, n: int = 5) -> "DataFrame":
         nat = _native.maybe(self, "tail", n=n)
         if nat is not None:
             return nat
-        return DataFrame(_frame=self._frame.tail(n))
+        return self._copy_col_meta(DataFrame(_frame=self._frame.tail(n)))
 
     def limit(self, n: int) -> "DataFrame":
         return self.head(n)
@@ -1754,36 +1754,9 @@ class DataFrame:
         positions = self._numeric_positions() if numeric_only else list(range(len(fr.columns)))
         if not positions:
             return pd.Series(dtype="float64")
-        numeric_aggs = {"sum", "mean", "std", "var", "sem", "median", "quantile",
-                        "prod", "skew", "kurt"}
-        def col(i):
-            c = fr.scol(i)
-            # pandas numeric-aggregates booleans as 0/1; Spark refuses sum(bool)
-            if name in numeric_aggs and fr.dtype_of(i) in ("bool", "boolean"):
-                c = c.cast("int")
-            return c
-        def expr(i):
-            c = col(i)
-            ddof = kw.get("ddof")
-            if name == "sem" and ddof is not None and ddof != 1:
-                # sem(ddof) = sqrt(M2/(n-ddof))/sqrt(n); Spark's stddev_samp
-                # is ddof=1 — rescale by sqrt((n-1)/(n-ddof))
-                n = F.count(c)
-                e = F.stddev_samp(c) * F.sqrt((n - 1) / (n - F.lit(ddof))) / F.sqrt(n)
-            elif name in ("std", "var") and ddof is not None and ddof != 1:
-                # Spark's sample stats are ddof=1; rescale M2/(n-1) -> M2/(n-ddof)
-                n = F.count(c)
-                scale = (n - 1) / (n - F.lit(ddof))
-                e = F.var_samp(c) * scale if name == "var" else F.stddev_samp(c) * F.sqrt(scale)
-            else:
-                e = qc.agg_expr(name, c, kw.get("q"))
-            mc = kw.get("min_count") or 0
-            if mc > 0 and name in ("sum", "prod"):
-                # pandas min_count: fewer than min_count valid values → NaN
-                e = F.when(F.count(c) >= mc, e)
-            return e
-
-        exprs = [expr(i).alias(f"x{i}") for i in positions]
+        exprs = [qc.agg_expr(name, fr.scol(i), kw.get("q"), input_type=fr.spark_type_of(i),
+                             ddof=kw.get("ddof"), min_count=kw.get("min_count") or 0).alias(f"x{i}")
+                 for i in positions]
         row = fr.sdf.agg(*exprs).collect()[0]
         labels = [fr.columns[i] for i in positions]
         idx = (pd.MultiIndex.from_tuples(labels, names=fr.columns.names)
@@ -2104,7 +2077,7 @@ class DataFrame:
             m2 = F.aggregate(vals, F.lit(0.0), lambda a, x: a + (x - mu) * (x - mu)) / n
             m3 = F.aggregate(vals, F.lit(0.0), lambda a, x: a + (x - mu) * (x - mu) * (x - mu)) / n
             g1 = m3 / F.pow(m2, 1.5)
-            e = F.when(n > 2, g1 * F.sqrt(n * (n - 1)) / (n - 2))
+            e = F.when(n > 2, qc.skew_from_g1(g1, n))
         elif op in ("median", "quantile"):
             qq = 0.5 if q is None else float(q)
             vals = F.array_sort(F.array_compact(F.array(*[c.cast("double") for c in cols])))
@@ -2715,14 +2688,11 @@ class DataFrame:
                 # is the mean of all cells, not of the cell means): ONE tiny
                 # global aggregate job, unioned under a stringified index so
                 # the margins_name label coexists with any key dtype
-                _gmap = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
-                         "count": F.count, "median": F.median,
-                         "std": F.stddev_samp, "var": F.var_samp}
                 exprs = []
                 for k, (lbl, pos, fn, _) in enumerate(spec):
-                    if not isinstance(fn, str) or fn not in _gmap:
+                    if not isinstance(fn, str):
                         raise NotImplementedError(f"pivot_table margins with aggfunc {fn!r}")
-                    exprs.append(_gmap[fn](F.col(fr.data_cols[pos])).alias(f"__m{k}__"))
+                    exprs.append(qc.agg_expr(fn, fr.scol(pos)).alias(f"__m{k}__"))
                 if len(index) > 1:
                     raise NotImplementedError("pivot_table margins with a multi-level index")
                 mrow = fr.sdf.agg(*exprs).collect()[0]
@@ -2778,7 +2748,8 @@ class DataFrame:
             vlist = values if isinstance(values, list) else [values]
             val_phys2 = [fr.data_cols[fr.positions_of([v])[0]] for v in vlist]
             pairs = [(fn, v, p) for fn in fnlist for v, p in zip(vlist, val_phys2)]
-            aggs = [qc.AGG_EXPRS[fn](F.col(p)).alias(f"__a{i}__") for i, (fn, _v, p) in enumerate(pairs)]
+            aggs = [qc.agg_expr(fn, F.col(p), pivot=True).alias(f"__a{i}__")
+                    for i, (fn, _v, p) in enumerate(pairs)]
             pivoted = sdf2.groupBy(*idx_phys).pivot(combo_phys, pvals).agg(*aggs)
             tmp = _fn(len(pvals) * len(pairs))
             pivoted = pivoted.toDF(*idx_phys, *tmp)  # positional: names never parsed
@@ -2825,7 +2796,8 @@ class DataFrame:
                 .distinct().orderBy(col_phys).collect()
             ]
             pairs = [(fn, v, p) for fn in aggfunc for v, p in zip(vlist, val_phys2)]
-            aggs = [qc.AGG_EXPRS[fn](F.col(p)).alias(f"__a{i}__") for i, (fn, _v, p) in enumerate(pairs)]
+            aggs = [qc.agg_expr(fn, F.col(p), pivot=True).alias(f"__a{i}__")
+                    for i, (fn, _v, p) in enumerate(pairs)]
             pivoted = fr.sdf.groupBy(*idx_phys).pivot(col_phys, pvals).agg(*aggs)
             tmp = _fn(len(pvals) * len(pairs))
             pivoted = pivoted.toDF(*idx_phys, *tmp)  # positional: names never parsed
@@ -2843,7 +2815,8 @@ class DataFrame:
                 pivoted.select(*sel), pd.MultiIndex.from_tuples(labels), out_phys, idx_phys, list(index)
             )
             return DataFrame(_frame=out)
-        agg_fn = qc.AGG_EXPRS[aggfunc]
+        # pivot=True: a combination with no rows stays NaN, as in pandas
+        agg_fn = lambda c: qc.agg_expr(aggfunc, c, pivot=True)  # noqa: E731
         if not isinstance(values, list):
             val_phys = fr.data_cols[fr.positions_of([values])[0]]
             if not margins:
@@ -4290,7 +4263,7 @@ class DataFrame:
 
         # shape-deciding: the shape probe on a driver sample (same technique
         # as the axis=1 path), under the columns' overlay dtypes
-        sample = self._copy_col_meta(self.head(100)).to_pandas()
+        sample = self.head(100).to_pandas()
         out_sample = sample.apply(func, axis=0)
         reduction = isinstance(out_sample, pd.Series)
         if not reduction and (

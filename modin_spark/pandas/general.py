@@ -432,14 +432,13 @@ def crosstab(index: Series, columns: Series, values: Series | None = None,
     pvals = [r[0] for r in sdf.select("__c__").where(F.col("__c__").isNotNull())
              .distinct().orderBy("__c__").collect()]
     if values is not None:
-        _fnmap = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
-                  "count": F.count, "median": F.median,
-                  "std": F.stddev_samp, "var": F.var_samp}
-        if aggfunc not in _fnmap:
+        if not isinstance(aggfunc, str):
             raise NotImplementedError(f"crosstab aggfunc {aggfunc!r}")
         if margins and aggfunc not in ("sum", "count"):
             raise NotImplementedError("crosstab margins with a non-additive aggfunc")
-        pivoted = sdf.groupBy("__i__").pivot("__c__", pvals).agg(_fnmap[aggfunc](F.col("__v__")))
+        # pivot=True: a combination with no rows stays NaN, as in pandas
+        agg = qc.agg_expr(aggfunc, F.col("__v__"), pivot=True)
+        pivoted = sdf.groupBy("__i__").pivot("__c__", pvals).agg(agg)
     else:
         pivoted = sdf.groupBy("__i__").pivot("__c__", pvals).count().na.fill(0)
     val_cols = [c for c in pivoted.columns if c != "__i__"]
@@ -452,7 +451,7 @@ def crosstab(index: Series, columns: Series, values: Series | None = None,
         pivoted = pivoted.withColumn(
             "__all__", sum((_q(c) for c in val_cols), F.lit(0)))
         if values is not None:
-            mrow = (sdf.groupBy().pivot("__c__", pvals).agg(_fnmap[aggfunc](F.col("__v__")))
+            mrow = (sdf.groupBy().pivot("__c__", pvals).agg(agg)
                     .withColumn("__i__", F.lit(str(margins_name))))
         else:
             mrow = (sdf.groupBy().pivot("__c__").count().na.fill(0)

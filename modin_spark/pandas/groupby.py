@@ -209,25 +209,7 @@ class DataFrameGroupBy:
         return res
 
     def sum(self, numeric_only=True, min_count=0):
-        if min_count <= 0:
-            return self._agg_all("sum", numeric_only)
-        # pandas min_count: groups with fewer than min_count non-null values
-        # yield NaN — sums and counts ride ONE hash aggregate, then a mask
-        # projection
-        from modin_spark.pandas.dataframe import DataFrame
-
-        vals = self._value_positions(numeric_only)
-        spec = ([(lbl, i, "sum", {}) for lbl, i in vals]
-                + [(f"__cnt{j}__", i, "count", {}) for j, (_, i) in enumerate(vals)])
-        out = qc.groupby_agg(
-            self._df._frame, self._by_pos, spec, as_index=True,
-            dropna=self._dropna, sort=self._sort
-        )
-        n = len(vals)
-        exprs = [F.when(F.col(out.data_cols[n + j]).cast("long") >= min_count, out.scol(j))
-                 for j in range(n)]
-        res = DataFrame(_frame=out.project([lbl for lbl, _ in vals], exprs))
-        return res.reset_index() if not self._as_index else res
+        return self._agg_all("sum", numeric_only, **({"min_count": min_count} if min_count > 0 else {}))
 
     def mean(self, numeric_only=True):
         return self._agg_all("mean", numeric_only)
@@ -324,19 +306,21 @@ class DataFrameGroupBy:
         from modin_spark.pandas import native as _native
 
         nat = (_native.maybe_groupby(self, "agg", **named) if spec is None
-               else _native.maybe_groupby(self, "agg", spec))
+               else _native.maybe_groupby(self, "agg", spec, **named))
         if nat is not None:
             return nat
 
         entries: list[tuple[Any, int | None, str, dict]] = []
         fr = self._df._frame
+        # with a spec, the keywords are the aggregation's own (ddof=, q=...)
+        kw = {} if spec is None else named
         if named and spec is None:
             for out_lbl, na in named.items():
                 col, fn = (na.column, na.aggfunc) if hasattr(na, "column") else na
                 i = fr.positions_of([col])[0]
                 entries.append((out_lbl, i, fn, {}))
         elif isinstance(spec, str):
-            return self._agg_all(spec)
+            return self._agg_all(spec, **kw)
         elif isinstance(spec, dict):
             # pandas: if ANY column's spec is a list, EVERY output column
             # gets the 2-level (column, agg) label
@@ -350,11 +334,11 @@ class DataFrameGroupBy:
                         out_lbl = (col, fname)
                     else:
                         out_lbl = col
-                    entries.append((out_lbl, i, fn, {}))
+                    entries.append((out_lbl, i, fn, kw))
         elif isinstance(spec, list):
             for lbl, i in self._value_positions():
                 for fn in spec:
-                    entries.append(((lbl, fn), i, fn, {}))
+                    entries.append(((lbl, fn), i, fn, kw))
         elif callable(spec):
             # pandas applies the callable per column, output label = column
             for lbl, i in self._value_positions():
@@ -815,11 +799,6 @@ class DataFrameGroupBy:
         out = SparkFrame(agged, pd.Index([lbl for lbl, _ in vals]), out_phys, key_phys, list(self._by_labels))
         return DataFrame(_frame=out)
 
-    _TRANSFORM_AGGS = {
-        "sum", "mean", "min", "max", "count", "std", "var", "median",
-        "nunique", "first", "last", "size", "prod", "any", "all",
-    }
-
     def transform(self, func, *args, **kwargs):
         """Group aggregate broadcast back to every row.
 
@@ -833,27 +812,17 @@ class DataFrameGroupBy:
                         "cumcount", "shift", "diff", "ngroup", "ffill", "bfill"):
                 # already-length-preserving group methods ARE the transform
                 return getattr(self, func)(*args, **kwargs)
-            if func not in self._TRANSFORM_AGGS:
-                raise NotImplementedError(f"transform({func!r})")
 
             def b(c, keys):
-                w = Window.partitionBy(*keys)
-                if func == "size":
-                    return F.count(F.lit(1)).over(w)
                 if func == "nunique":  # DISTINCT aggs can't run over a window
-                    return F.size(F.collect_set(c).over(w))
-                if func == "sum":  # agg_expr's NULL->0 coalesce isn't window-able
-                    return F.coalesce(F.sum(c).over(w), F.lit(0))
+                    return F.size(F.collect_set(c).over(Window.partitionBy(*keys)))
                 if func in ("first", "last"):
                     wo = Window.partitionBy(*keys).orderBy(
                         ORDER_COL if func == "first" else F.col(ORDER_COL).desc()
                     ).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
                     return F.first(c, ignorenulls=True).over(wo)
-                if func == "any":
-                    return F.coalesce(F.bool_or(c.cast("boolean")).over(w), F.lit(False))
-                if func == "all":
-                    return F.coalesce(F.bool_and(c.cast("boolean")).over(w), F.lit(True))
-                return qc.AGG_EXPRS[func](c).over(w)
+                return qc.agg_expr(func, c, kwargs.get("q"), ddof=kwargs.get("ddof"),
+                                   over=Window.partitionBy(*keys))
 
             return DataFrame(_frame=self._window_transform(b))
 

@@ -59,24 +59,24 @@ def bucket_start(ts_col, dur: str, closed=None, offset=None):
 
 def _complete_grid(agged, key_p: str, dur: str, val_ps, agg_name):
     """pandas resample emits EVERY bucket between min and max, not just the
-    occupied ones (empty buckets: count/size/nunique -> 0, sum -> 0, prod ->
-    1, the rest NaN). Stays one plan: a 1-row min/max aggregate cross-joined
-    back, F.sequence exploded into the grid, left join of the occupied
-    buckets onto it — no driver collect, the grid is ~bucket-count rows."""
-    fills = {"count": F.lit(0), "size": F.lit(0), "nunique": F.lit(0),
-             "sum": F.lit(0), "prod": F.lit(1.0)}
+    occupied ones (an empty bucket takes compiler.empty_result: 0 for the
+    counts and sum, 1 for prod, NaN for the rest). Stays one plan: a 1-row
+    min/max aggregate cross-joined back, F.sequence exploded into the grid,
+    left join of the occupied buckets onto it — no driver collect, the grid
+    is ~bucket-count rows."""
     names = agg_name if isinstance(agg_name, list) else [agg_name] * len(val_ps)
+    fills = [qc.empty_result(n) for n in names]
     grid = (
         agged.agg(F.min(key_p).alias("__mn__"), F.max(key_p).alias("__mx__"))
         .where(F.col("__mn__").isNotNull())
         .select(F.explode(F.sequence(F.col("__mn__"), F.col("__mx__"), F.expr(f"interval {dur}"))).alias(key_p))
     )
     out = grid.join(agged, on=key_p, how="left")
-    if any(n in fills for n in names):
+    if any(f is not None for f in fills):
         out = out.select(
             key_p,
-            *[F.coalesce(F.col(p), fills[n]).alias(p) if n in fills else F.col(p)
-              for p, n in zip(val_ps, names)],
+            *[F.coalesce(F.col(p), f).alias(p) if f is not None else F.col(p)
+              for p, f in zip(val_ps, fills)],
         )
     return out
 
@@ -142,7 +142,7 @@ class Resampler:
             return self[name]
         raise AttributeError(name)
 
-    def _agg(self, name: str, numeric_only=True):
+    def _agg(self, name: str, numeric_only=True, **kw):
         from modin_spark.pandas.dataframe import DataFrame
 
         fr = self._df._frame
@@ -165,7 +165,8 @@ class Resampler:
         ]
         out_phys = fresh_names(len(positions) + 1)
         key_p, val_ps = out_phys[0], out_phys[1:]
-        aggs = [qc.agg_expr(name, F.col(fr.data_cols[i])).alias(p) for i, p in zip(positions, val_ps)]
+        aggs = [qc.agg_expr(name, F.col(fr.data_cols[i]), ddof=kw.get("ddof")).alias(p)
+                for i, p in zip(positions, val_ps)]
         agged = fr.sdf.groupBy(bucket.alias(key_p)).agg(*aggs)
         agged = _complete_grid(agged, key_p, dur, val_ps, name)
         if self._label == "right":
@@ -196,11 +197,11 @@ class Resampler:
     def max(self):
         return self._agg("max")
 
-    def std(self):
-        return self._agg("std")
+    def std(self, ddof=1):
+        return self._agg("std", ddof=ddof)
 
-    def var(self):
-        return self._agg("var")
+    def var(self, ddof=1):
+        return self._agg("var", ddof=ddof)
 
     def median(self):
         return self._agg("median")
@@ -389,12 +390,8 @@ class Resampler:
             i for i in range(len(fr.columns))
             if fr.data_cols[i] != ts_phys and fr.dtype_of(i).startswith(("int", "float"))
         ]
-        if func == "median":
-            over = lambda c: F.percentile(c, F.lit(0.5)).over(w)
-        else:
-            over = lambda c: qc.agg_expr(func, c).over(w)
         labels = [fr.columns[i] for i in positions]
-        exprs = [over(F.col(fr.data_cols[i])) for i in positions]
+        exprs = [qc.agg_expr(func, F.col(fr.data_cols[i]), over=w) for i in positions]
         return self._maybe_series(DataFrame(_frame=fr.project(labels, exprs)))
 
     def interpolate(self, method: str = "linear"):
@@ -522,8 +519,8 @@ def _rs_prod(self):
     return self._agg("prod")
 
 
-def _rs_sem(self):
-    return self._agg("sem")
+def _rs_sem(self, ddof=1):
+    return self._agg("sem", ddof=ddof)
 
 
 def _rs_quantile(self, q=0.5):
@@ -541,7 +538,7 @@ def _rs_agg_quantile(self, q):
                  if fr.data_cols[i] != ts_phys and fr.dtype_of(i).startswith(("int", "float"))]
     out_phys = fresh_names(len(positions) + 1)
     key_p, val_ps = out_phys[0], out_phys[1:]
-    aggs = [F.percentile(F.col(fr.data_cols[i]), F.lit(q)).alias(p) for i, p in zip(positions, val_ps)]
+    aggs = [qc.agg_expr("quantile", F.col(fr.data_cols[i]), q).alias(p) for i, p in zip(positions, val_ps)]
     agged = fr.sdf.groupBy(bucket.alias(key_p)).agg(*aggs).withColumn(ORDER_COL, F.col(key_p))
     labels = [fr.columns[i] for i in positions]
     on_name = self._on if self._on is not None else fr.index_names[0]

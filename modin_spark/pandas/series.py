@@ -1319,11 +1319,6 @@ class Series:
         return DatetimeMethods(self)
 
     # ----------------------------------------------------------- reductions
-    _BOOL_NUMERIC_AGGS = frozenset(
-        {"sum", "mean", "avg", "std", "var", "sem", "median", "quantile",
-         "prod", "product", "skew", "kurt", "kurtosis", "idxmax", "idxmin"}
-    )
-
     def _reduce(self, name: str, skipna: bool = True, **kw) -> Any:
         ps = _native.series_pdf_of(self)
         if ps is not None:
@@ -1332,37 +1327,12 @@ class Series:
                     return int(ps.count())
                 if name == "quantile":
                     return ps.quantile(kw.get("q", 0.5))
-                kw2 = {"ddof": kw.get("ddof", 1)} if name in ("std", "var", "sem") else {}
+                kw2 = {k: kw[k] for k in ("ddof", "min_count") if k in kw}
                 return getattr(ps, name)(skipna=skipna, **kw2)
             except Exception:
                 pass  # pandas rejected it — distributed path is authoritative
-        expr = self._expr
-        if name in self._BOOL_NUMERIC_AGGS and isinstance(self.spark_type, T.BooleanType):
-            # pandas numeric-aggregates booleans as 0/1 (bool.sum() = #True)
-            expr = expr.cast("int")
-        ddof = kw.get("ddof", 1)
-        if name in ("std", "var", "sem") and ddof != 1:
-            # Spark's sample stats are ddof=1; rescale M2/(n-1) -> M2/(n-ddof)
-            n = F.count(expr)
-            scale = (n - 1) / (n - F.lit(ddof))
-            if name == "var":
-                e = F.var_samp(expr) * scale
-            elif name == "std":
-                e = F.stddev_samp(expr) * F.sqrt(scale)
-            else:
-                e = F.stddev_samp(expr) * F.sqrt(scale) / F.sqrt(n)
-        else:
-            e = qc.agg_expr(name, expr, kw.get("q"), input_type=self.spark_type)
-        if name == "prod":
-            # pandas identity: prod of all-missing (or empty) is 1
-            e = F.coalesce(e, F.lit(1))
-        elif name == "sum" and self.dtype.kind not in ("M", "m"):
-            # pandas identity: sum of empty/all-missing is 0 (0.0 for floats)
-            zero = F.lit(0.0) if self.dtype.kind == "f" else F.lit(0)
-            e = F.coalesce(e, zero)
-        if not skipna:
-            # pandas skipna=False: any missing value poisons the aggregate
-            e = F.when(F.count(F.lit(1)) > F.count(expr), F.lit(None)).otherwise(e)
+        e = qc.agg_expr(name, self._expr, kw.get("q"), input_type=self.spark_type,
+                        ddof=kw.get("ddof"), min_count=kw.get("min_count", 0), skipna=skipna)
         row = self._frame.sdf.agg(e.alias("__r__")).collect()[0]
         val = row["__r__"]
         if val is None and name not in ("min", "max", "first", "last", "mode"):
@@ -1384,12 +1354,7 @@ class Series:
         return val
 
     def sum(self, skipna=True, min_count=0, **kw):
-        if min_count and int(min_count) > 0:
-            # pandas: fewer than min_count valid values -> NaN (one extra
-            # tiny count job, only on this rare kwarg)
-            if self._reduce("count", skipna=True) < int(min_count):
-                return float("nan")
-        return self._reduce("sum", skipna=skipna)
+        return self._reduce("sum", skipna=skipna, min_count=int(min_count or 0))
 
     def mean(self, skipna=True, **kw):
         return self._reduce("mean", skipna=skipna)

@@ -4,6 +4,7 @@ window machinery in core.windows."""
 
 from __future__ import annotations
 
+from modin_spark.core import compiler as qc
 from modin_spark.core import windows as win
 from modin_spark.pandas.series import Series
 
@@ -639,57 +640,19 @@ class GroupExpanding:
         self._min_periods = max(1, int(min_periods))
 
     def _run(self, agg: str, q: float = 0.5):
-        from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
-        from modin_spark.core.frame import ORDER_COL
         from modin_spark.pandas.dataframe import DataFrame
 
         fr = self._g._df._frame.ensure_order()
         keys = [F.col(fr.data_cols[i]) for i in self._g._by_pos]
         w = Window.partitionBy(*keys).orderBy(F.col(ORDER_COL)).rowsBetween(Window.unboundedPreceding, 0)
-        fnmap = {
-            "sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
-            "count": F.count, "var": F.var_samp, "std": F.stddev_samp,
-        }
         vals = self._g._value_positions(numeric_only=True)
-        exprs = []
-        for _, i in vals:
-            c = fr.scol(i).cast("double")
-            n = F.count(c).over(w)
-            min_n = self._min_periods
-            if agg in fnmap:
-                e = fnmap[agg](fr.scol(i)).over(w)
-                if agg in ("var", "std"):
-                    min_n = max(min_n, 2)
-            elif agg == "sem":
-                e = F.stddev_samp(c).over(w) / F.sqrt(n - 1)
-                min_n = max(min_n, 2)
-            elif agg in ("median", "quantile"):
-                # exact percentile as a window aggregate (keyed partitions,
-                # no global sort — same plan class as the other keyed aggs)
-                e = F.percentile(c, F.lit(0.5 if agg == "median" else q)).over(w)
-            elif agg in ("skew", "kurt"):
-                # same bias-corrected formulas as core.windows.expanding_agg
-                s = F.sum(c).over(w)
-                s2 = F.sum(c * c).over(w)
-                s3 = F.sum(c * c * c).over(w)
-                mu = s / n
-                m2 = s2 / n - mu * mu
-                if agg == "skew":
-                    m3 = s3 / n - 3 * mu * (s2 / n) + 2 * mu * mu * mu
-                    e = (m3 / F.pow(m2, 1.5)) * F.sqrt(n * (n - 1)) / (n - 2)
-                    min_n = max(min_n, 3)
-                else:
-                    s4 = F.sum(c * c * c * c).over(w)
-                    m4 = (s4 / n - 4 * mu * (s3 / n) + 6 * mu * mu * (s2 / n)
-                          - 3 * mu * mu * mu * mu)
-                    g2 = m4 / (m2 * m2) - 3
-                    e = ((n - 1) / ((n - 2) * (n - 3))) * ((n + 1) * g2 + 6)
-                    min_n = max(min_n, 4)
-            else:
-                raise NotImplementedError(f"groupby.expanding().{agg}")
-            exprs.append(F.when(n >= min_n, e))
+        # exact percentile / moments as window aggregates (keyed partitions,
+        # no global sort — same plan class as the other keyed aggs)
+        exprs = [qc.agg_expr(agg, fr.scol(i), q, input_type=fr.spark_type_of(i), over=w,
+                             min_count=self._min_periods, moving=True)
+                 for _, i in vals]
         out = fr.project([lbl for lbl, _ in vals], exprs)
         nf = _group_window_finish(self._g, fr, out)
         if getattr(self, "_as_series", False) and len(nf.data_cols) == 1:

@@ -83,6 +83,21 @@ def test_head_tail(mdf, pdf):
     assert_df_equal(mdf.head(-190), pdf.head(-190))
 
 
+def test_head_tail_keep_overlay_dtypes(spark):
+    """The categorical and nullable-extension dtypes ride the wrapper, not
+    Spark storage; a row slice keeps them."""
+    import modin_spark.pandas as mpd
+
+    pdf = pd.DataFrame({
+        "c": pd.Categorical(["x", "y", "x"], categories=["x", "y", "z"]),
+        "n": pd.array([1, None, 3], dtype="Int64"),
+    })
+    m = mpd.from_pandas(pdf)
+    for got, exp in ((m.head(2), pdf.head(2)), (m.tail(2), pdf.tail(2))):
+        pd.testing.assert_frame_equal(got.to_pandas().reset_index(drop=True),
+                                      exp.reset_index(drop=True))
+
+
 def test_iloc_slice(mdf, pdf):
     assert_df_equal(mdf.iloc[10:20], pdf.iloc[10:20])
     assert_df_equal(mdf.iloc[5:50:5], pdf.iloc[5:50:5])
