@@ -15,6 +15,8 @@ order machinery only requires a total order, not contiguity.
 
 from __future__ import annotations
 
+import datetime
+import math
 from typing import Sequence
 
 import numpy as np
@@ -112,34 +114,50 @@ def empty_result(name: str, input_type=None) -> Column | None:
     return F.lit(_EMPTY[name])
 
 
-def agg_expr(name: str, c: Column, q: float | None = None, input_type=None,
+_DATETIMES = (T.TimestampType, T.TimestampNTZType)
+
+
+def agg_expr(name: str, c: Column, q=None, input_type=None,
              ddof: int | None = None, interpolation: str | None = None, *,
              over=None, min_count: int = 0, skipna: bool = True,
-             moving: bool = False, pivot: bool = False) -> Column:
+             moving: bool = False, pivot: bool = False, at=None) -> Column:
     """The Spark aggregate computing pandas reduction ``name`` over ``c``.
 
-    - ``input_type``: the Spark type of ``c`` (bool -> int cast, interval 0);
+    - ``q``: the quantile fraction; a list of them at linear interpolation
+      is one percentile buffer answering an array;
+    - ``input_type``: the Spark type of ``c`` (bool -> int cast, interval 0,
+      the std of datetimes as an interval);
+    - ``at``: for idxmax/idxmin, the (label, position) columns — the label
+      of the first extreme wins;
     - ``over``: a window spec, put on each leaf aggregate (a composite such
       as sem or skew cannot take ``.over`` as a whole);
     - ``moving``: pandas Rolling/Expanding semantics where they differ from
       a reduction's (sem, see moving_sem);
     - ``min_count``: fewer observations (rows, for count) give NULL —
       pandas' ``min_count`` and a window's ``min_periods``;
-    - ``skipna=False``: any missing value gives NULL;
+    - ``skipna=False``: any missing value gives NULL, save for nunique,
+      where it counts as one more distinct value (pandas' dropna=False);
     - ``pivot``: the aggregate runs per pivot cell, and a cell with no rows
       stays NULL instead of taking the sum/prod identity.
     """
     o = (lambda e: e.over(over)) if over is not None else (lambda e: e)
     if name in _BOOL_AS_INT and isinstance(input_type, T.BooleanType):
         c = c.cast("int")
+    # pandas: the std of datetimes is a Timedelta — the std of the epoch
+    # microseconds, turned back into an interval at the end
+    as_interval = name == "std" and isinstance(input_type, _DATETIMES)
+    if as_interval:
+        c = F.unix_micros(c.cast("timestamp"))
     if name == "median" and over is not None:
         # Spark's median is not frame-window capable; percentile(0.5) is
         name, q = "quantile", 0.5
     if name == "quantile":
-        qv = float(q if q is not None else 0.5)
         if interpolation in (None, "linear"):
-            e = o(F.percentile(c, F.lit(qv)))
+            qv = (F.array(*[F.lit(float(x)) for x in q]) if isinstance(q, (list, tuple))
+                  else F.lit(float(q if q is not None else 0.5)))
+            e = o(F.percentile(c, qv))
         else:
+            qv = float(q if q is not None else 0.5)
             # non-linear interpolation: exact order statistics from a sorted
             # collect — the same memory class as Spark's exact percentile
             # buffer (both hold the group's values)
@@ -159,6 +177,12 @@ def agg_expr(name: str, c: Column, q: float | None = None, input_type=None,
                 e = F.element_at(arr, F.bround(h, 0).cast("int") + 1).cast("double")
             else:
                 raise ValueError(f"invalid interpolation {interpolation!r}")
+    elif name in ("idxmax", "idxmin"):
+        # ties go to the first position; a missing value never wins
+        label, pos = at
+        top = name == "idxmax"
+        key = F.when(c.isNotNull(), F.struct(c.alias("v"), (-pos if top else pos).alias("t")))
+        e = o((F.max_by if top else F.min_by)(label, key))
     elif name == "sem" and moving:
         e = moving_sem(o(F.stddev_samp(c)), o(F.count(c)), 1 if ddof is None else int(ddof))
     elif name in ("std", "var", "sem") and ddof is not None and ddof != 1:
@@ -183,8 +207,98 @@ def agg_expr(name: str, c: Column, q: float | None = None, input_type=None,
         if pivot:
             e = F.when(F.count(F.lit(1)) > 0, e)
     if not skipna:
-        e = F.when(o(F.count(F.lit(1))) > o(F.count(c)), F.lit(None)).otherwise(e)
+        missing = o(F.count(F.lit(1))) > o(F.count(c))
+        e = e + missing.cast("long") if name == "nunique" else F.when(missing, F.lit(None)).otherwise(e)
+    if as_interval:
+        e = F.make_dt_interval(secs=(e / 1e6).cast("decimal(18,6)"))
     return e
+
+
+# pandas' scalar contract over collected aggregates: a missing result is NaN
+# (NaT over datetimes), save a skipping min/max/first/last, which stays None
+# (a min of strings has no NaN)
+_KEEP_NONE = frozenset({"min", "max", "first", "last"})
+
+
+def _pandas_scalar(v, name: str, input_type, skipna: bool):
+    if isinstance(v, list):
+        return [_pandas_scalar(x, name, input_type, skipna) for x in v]
+    if v is None:
+        if name in _KEEP_NONE and skipna:
+            return None
+        # idxmax/idxmin answer a label, not a datetime
+        dt = isinstance(input_type, _DATETIMES) and name not in ("idxmax", "idxmin")
+        return pd.NaT if dt else np.nan
+    if isinstance(v, datetime.timedelta) and not isinstance(v, pd.Timedelta):
+        return pd.Timedelta(v)
+    return v
+
+
+def reduce_columns(sdf, specs) -> list:
+    """Whole-column reductions in ONE ``sdf.agg(...).collect()``: the
+    reference's Reduce over every (column, name) pair at once.
+
+    Each spec is ``(column, name, input_type, kw)``; ``kw`` holds agg_expr's
+    keywords (``q`` may be a list) and ``cast``, a type the aggregate is cast
+    to. Returns one pandas scalar per spec, a list for a q list."""
+    if not specs:
+        return []
+    aggs = []
+    for k, (c, name, itype, kw) in enumerate(specs):
+        e = agg_expr(name, c, input_type=itype, **{a: v for a, v in kw.items() if a != "cast"})
+        aggs.append((e.cast(kw["cast"]) if "cast" in kw else e).alias(f"__r{k}__"))
+    row = sdf.agg(*aggs).collect()[0]
+    out = []
+    for k, (_c, name, itype, kw) in enumerate(specs):
+        v, q = row[k], kw.get("q")
+        if v is None and isinstance(q, (list, tuple)):
+            v = [None] * len(q)  # no rows: no percentile array either
+        out.append(_pandas_scalar(v, name, itype, kw.get("skipna", True)))
+    return out
+
+
+def _exact_fraction(k: int, m: int) -> float:
+    """A fraction p with ``m * p == k`` in doubles, so Spark's percentile at
+    p is exactly the k-th order statistic (k/m can miss: 49 * (1/49) < 1)."""
+    p = k / m if m else 0.0
+    for cand in (p, float(np.nextafter(p, 2.0)), float(np.nextafter(p, -1.0))):
+        if float(m) * cand == k:
+            return cand
+    return p
+
+
+def order_quantiles(sdf, cols, qs, interpolation: str) -> list[list]:
+    """Whole-column quantiles at a non-linear ``interpolation`` (lower,
+    higher, nearest, midpoint), by numpy's rule: the order statistics around
+    the virtual index (n - 1) * q, nearest rounding half to even.
+
+    ``cols`` holds (column, input_type) pairs. Two passes whatever the
+    number of columns and qs: the counts, then one exact percentile buffer
+    per column at its order statistics. (agg_expr's collect_list form holds
+    a whole column in one array row; it serves grouped and window contexts.)
+    Integer columns keep integer order statistics, as in pandas."""
+    ns = reduce_columns(sdf, [(c, "count", t, {}) for c, t in cols])
+    picks = []
+    for n in ns:
+        ks = []
+        for q in qs:
+            # pandas hands numpy q * 100, which numpy divides back
+            pos = (n - 1) * (float(q) * 100.0 / 100.0)
+            lo, hi = math.floor(pos), math.ceil(pos)
+            ks.append({"lower": (lo,), "higher": (hi,), "nearest": (round(pos),),
+                       "midpoint": (lo, hi)}[interpolation])
+        picks.append(ks)
+    ords = [sorted({k for pair in ks for k in pair}) for ks in picks]
+    vals = iter(reduce_columns(sdf, [(c, "quantile", t, {"q": [_exact_fraction(k, n - 1) for k in o]})
+                                     for (c, t), n, o in zip(cols, ns, ords) if n]))
+    out = []
+    for (_, t), n, ks, o in zip(cols, ns, picks, ords):
+        at = dict(zip(o, next(vals))) if n else {}
+        row = [sum(at[k] for k in pair) / len(pair) if n else np.nan for pair in ks]
+        if n and interpolation != "midpoint" and isinstance(t, T.IntegralType):
+            row = [int(v) for v in row]
+        out.append(row)
+    return out
 
 
 # ---------------------------------------------------------------------------

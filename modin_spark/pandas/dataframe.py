@@ -21,7 +21,7 @@ from modin_spark.pandas import native as _native
 from modin_spark.core.frame import (
     ORDER_COL, SparkFrame, collect_small, native_max_rows, pandas_dtype_to_spark, pin, unpin,
 )
-from modin_spark.pandas.series import Series, _lit
+from modin_spark.pandas.series import Series, _lit, _nan_to_null, describe_columns
 
 _MASKED_EXT_NAMES = {"Int8", "Int16", "Int32", "Int64", "UInt8", "UInt16",
                      "UInt32", "UInt64", "Float32", "Float64", "boolean"}
@@ -754,15 +754,12 @@ class DataFrame:
                 return nat
         if axis in (1, "columns"):
             # drop columns containing nulls: ONE tiny aggregate row of
-            # per-column null counts, then a metadata-only projection
+            # per-column null counts and sizes, then a metadata-only projection
             fr = self._frame
-            na = self.isna()._frame
-            row = na.sdf.agg(*[F.sum(na.scol(i).cast("long")).alias(f"n{i}")
-                               for i in range(len(fr.columns))]).collect()[0]
-            total = fr.count_rows()
+            nulls, sizes = self.isna()._reduce_names(["sum", "size"], numeric_only=False)
             keep = []
             for i in range(len(fr.columns)):
-                cnt = row[f"n{i}"] or 0
+                cnt, total = nulls.iloc[i], sizes.iloc[i]
                 bad = cnt > 0 if how == "any" else cnt == total
                 if thresh is not None:
                     bad = (total - cnt) < thresh
@@ -1750,19 +1747,31 @@ class DataFrame:
 
     # ------------------------------------------------------------ reductions
     def _reduce_frame(self, name: str, numeric_only: bool = True, **kw) -> pd.Series:
+        return self._reduce_names([name], numeric_only, **kw)[0]
+
+    def _reduce_names(self, names, numeric_only: bool = True, **kw) -> list[pd.Series]:
+        """One Series per reduction name over the (numeric) columns, every
+        (name, column) pair in one aggregate pass."""
         fr = self._frame
         positions = self._numeric_positions() if numeric_only else list(range(len(fr.columns)))
         if not positions:
-            return pd.Series(dtype="float64")
-        exprs = [qc.agg_expr(name, fr.scol(i), kw.get("q"), input_type=fr.spark_type_of(i),
-                             ddof=kw.get("ddof"), min_count=kw.get("min_count") or 0).alias(f"x{i}")
-                 for i in positions]
-        row = fr.sdf.agg(*exprs).collect()[0]
+            return [pd.Series(dtype="float64") for _ in names]
+        vals = iter(self._reduce_cells([(i, name, kw) for name in names for i in positions]))
+        idx = self._label_index(positions)
+        return [pd.Series([next(vals) for _ in positions], index=idx) for _ in names]
+
+    def _reduce_cells(self, cells) -> list:
+        """``(position, name, kw)`` whole-column reductions in one pass."""
+        fr = self._frame
+        return qc.reduce_columns(fr.sdf, [(fr.scol(i), name, fr.spark_type_of(i), kw)
+                                          for i, name, kw in cells])
+
+    def _label_index(self, positions) -> pd.Index:
+        fr = self._frame
         labels = [fr.columns[i] for i in positions]
-        idx = (pd.MultiIndex.from_tuples(labels, names=fr.columns.names)
-               if isinstance(fr.columns, pd.MultiIndex)
-               else pd.Index(labels, name=fr.columns.name))
-        return pd.Series([row[f"x{i}"] for i in positions], index=idx)
+        if isinstance(fr.columns, pd.MultiIndex):
+            return pd.MultiIndex.from_tuples(labels, names=fr.columns.names)
+        return pd.Index(labels, name=fr.columns.name)
 
     def sum(self, numeric_only=True, axis=0, min_count=0, skipna=True, **kw):
         if axis in (1, "columns"):
@@ -1842,20 +1851,7 @@ class DataFrame:
 
                 e = (nonnull + any_null(nan_pos) + any_null(none_pos)).cast("long")
             return Series(fr, e, set(fr.data_cols), None)
-        if not dropna:
-            # pandas dropna=False: NaN counts as one extra distinct value —
-            # count_distinct + a has-null indicator, ONE aggregate pass
-            fr = self._frame
-            exprs = [
-                (F.count_distinct(fr.scol(i))
-                 + F.coalesce(F.max(F.when(fr.scol(i).isNull(), 1).otherwise(0)),
-                              F.lit(0))).cast("long").alias(f"__n{i}__")
-                for i in range(len(fr.columns))
-            ]
-            row = fr.sdf.agg(*exprs).collect()[0]
-            return pd.Series({fr.columns[i]: int(row[f"__n{i}__"])
-                              for i in range(len(fr.columns))})
-        return self._reduce_frame("nunique", numeric_only=False)
+        return self._reduce_frame("nunique", numeric_only=False, skipna=dropna)
 
     def prod(self, numeric_only=True, min_count=0, axis=0):
         if axis in (1, "columns"):
@@ -1980,64 +1976,21 @@ class DataFrame:
             return nat
         if axis in (1, "columns"):
             return self._row_wise("quantile", q=q)
-        if interpolation != "linear":
-            return self._quantile_interp(q, numeric_only, interpolation)
-        if isinstance(q, (list, tuple)):
-            # one aggregate per q, assembled driver-side (k×cols scalars)
-            rows = {qq: self._reduce_frame("quantile", numeric_only, q=float(qq)) for qq in q}
-            out = pd.DataFrame(rows).T
-            out.index.name = None
-            return out
-        return self._reduce_frame("quantile", numeric_only, q=q)
-
-    def _quantile_interp(self, q, numeric_only: bool, interpolation: str):
-        """Non-linear interpolations via exact order statistics: the linear
-        percentile at fraction k/(n-1) IS the k-th order statistic, so
-        lower/higher/nearest/midpoint reduce to percentile calls at adjusted
-        fractions — one tiny count aggregate, then one percentile aggregate."""
         fr = self._frame
         positions = self._numeric_positions() if numeric_only else list(range(len(fr.columns)))
         if not positions:
             return pd.Series(dtype="float64")
-        cnt_row = fr.sdf.agg(*[F.count(fr.scol(i)).alias(f"n{i}") for i in positions]).collect()[0]
         qs = list(q) if isinstance(q, (list, tuple)) else [q]
-        exprs = []
-        import math
-
-        for i in positions:
-            n = cnt_row[f"n{i}"]
-            for j, qq in enumerate(qs):
-                if n <= 1:
-                    frac_list = [0.0]
-                else:
-                    pos = float(qq) * (n - 1)
-                    lo, hi = math.floor(pos), math.ceil(pos)
-                    if interpolation == "lower":
-                        frac_list = [lo / (n - 1)]
-                    elif interpolation == "higher":
-                        frac_list = [hi / (n - 1)]
-                    elif interpolation == "nearest":
-                        k = lo if (pos - lo) <= 0.5 else hi
-                        frac_list = [k / (n - 1)]
-                    elif interpolation == "midpoint":
-                        frac_list = [lo / (n - 1), hi / (n - 1)]
-                    else:
-                        raise NotImplementedError(f"interpolation {interpolation!r}")
-                e = None
-                for f_ in frac_list:
-                    t = F.percentile(fr.scol(i).cast("double"), F.lit(f_))
-                    e = t if e is None else (e + t)
-                if len(frac_list) == 2:
-                    e = e / 2
-                exprs.append(e.alias(f"x{i}_{j}"))
-        row = fr.sdf.agg(*exprs).collect()[0]
-        labels = [fr.columns[i] for i in positions]
+        if interpolation in (None, "linear"):
+            # one percentile buffer per column answers every q
+            cols = self._reduce_cells([(i, "quantile", {"q": qs}) for i in positions])
+        else:
+            cols = qc.order_quantiles(fr.sdf, [(fr.scol(i), fr.spark_type_of(i)) for i in positions],
+                                      qs, interpolation)
+        idx = self._label_index(positions)
         if isinstance(q, (list, tuple)):
-            data = {qq: [row[f"x{i}_{j}"] for i in positions] for j, qq in enumerate(qs)}
-            out = pd.DataFrame(data, index=labels).T
-            out.index.name = None
-            return out
-        return pd.Series([row[f"x{i}_0"] for i in positions], index=labels)
+            return pd.DataFrame(dict(enumerate(cols)), index=qs).set_axis(idx, axis=1)
+        return pd.Series([c[0] for c in cols], index=idx, name=q)
 
     def _row_wise(self, op: str, q: float | None = None, ddof: int = 1,
                   skipna: bool = True) -> Series:
@@ -2148,78 +2101,58 @@ class DataFrame:
             exprs.append(F.when(c.isNotNull(), acc))
         return DataFrame(_frame=fr.project([fr.columns[i] for i in positions], exprs))
 
-    def agg(self, spec=None, axis=0, **kwargs) -> Any:
+    def agg(self, func=None, axis=0, **kwargs) -> Any:
         """df.agg("sum") / df.agg(["sum","mean"]) / df.agg({col: [fns]}) /
         df.agg(out=("col", "fn")) named tuples;
         axis=1 routes string specs to the row-wise expression reductions."""
-        if spec is None and kwargs:
+        fr = self._frame
+        if func is None and kwargs:
             # named-agg tuples: out_label=(column, fn) -> frame indexed by
             # the out labels, one cell per referenced column (pandas shape)
-            cells = {}
-            cols_order = []
-            for out_lbl, (col, fn) in kwargs.items():
-                cells[out_lbl] = (col, self[col]._reduce(fn))
-                if col not in cols_order:
-                    cols_order.append(col)
-            data = {c: [v if cc == c else np.nan for cc, v in cells.values()]
-                    for c in cols_order}
-            return pd.DataFrame(data, index=list(cells.keys()))
+            cells = list(kwargs.values())
+            vals = self._reduce_cells([(fr.positions_of([col])[0], fn, {}) for col, fn in cells])
+            data = {c: [v if cc == c else np.nan for (cc, _), v in zip(cells, vals)]
+                    for c in dict.fromkeys(col for col, _ in cells)}
+            return pd.DataFrame(data, index=list(kwargs))
         if axis in (1, "columns"):
-            if isinstance(spec, str):
-                return self._row_wise(spec)
+            if isinstance(func, str):
+                return self._row_wise(func)
             raise NotImplementedError("agg(axis=1) takes a single function name")
-        fr = self._frame
-        if isinstance(spec, str):
-            return self._reduce_frame(spec)
-        if isinstance(spec, dict):
-            if not any(isinstance(v, list) for v in spec.values()):
-                # all-scalar spec: pandas returns a Series
-                return pd.Series({lbl: self[lbl]._reduce(fn) for lbl, fn in spec.items()})
+        if isinstance(func, str):
+            return self._reduce_frame(func)
+        if isinstance(func, dict):
+            pairs = [(lbl, fn) for lbl, fns in func.items()
+                     for fn in (fns if isinstance(fns, list) else [fns])]
+            vals = self._reduce_cells([(fr.positions_of([lbl])[0], fn, {}) for lbl, fn in pairs])
+            if not any(isinstance(v, list) for v in func.values()):
+                # all-scalar dict: pandas returns a Series
+                return pd.Series({lbl: v for (lbl, _), v in zip(pairs, vals)})
             out = {}
-            for lbl, fns in spec.items():
-                fns = fns if isinstance(fns, list) else [fns]
-                s = self[lbl]
-                for fn in fns:
-                    out.setdefault(fn, {})[lbl] = s._reduce(fn)
+            for (lbl, fn), v in zip(pairs, vals):
+                out.setdefault(fn, {})[lbl] = v
             return pd.DataFrame(out).T
-        if isinstance(spec, list):
-            rows = {}
-            for fn in spec:
-                rows[fn] = self._reduce_frame(fn)
-            return pd.DataFrame(rows).T
-        raise NotImplementedError("agg spec")
+        if isinstance(func, list):
+            return pd.DataFrame(dict(zip(func, self._reduce_names(func)))).T
+        raise NotImplementedError("agg func")
 
     aggregate = agg
 
     def describe(self, include=None, exclude=None, percentiles=None) -> pd.DataFrame:
         """pandas describe: numeric stats by default; all-object frames (or
-        include='all'/'object') get count/unique/top/freq — ONE aggregate per
-        object column (count + countDistinct + mode via a k-row groupBy)."""
+        include='all'/'object') get count/unique/top/freq. One aggregate pass
+        for every column, plus one top-1 group count per object column."""
         nat = _native.maybe(self, "describe", include=include, exclude=exclude,
                             percentiles=percentiles, _raw=True)
         if nat is not None:
             return nat
         fr = self._frame
-        num_pos = self._numeric_positions()
-        obj_pos = [i for i in range(len(fr.columns)) if i not in set(num_pos)]
-        want_obj = include in ("all", "object", object) or (not num_pos)
+        # pandas describes a bool column as an object: count/unique/top/freq
+        num_pos = {i for i in self._numeric_positions() if fr.dtype_of(i) != "bool"}
+        want_obj = include in ("all", "object", object) or not num_pos
         want_num = bool(num_pos) and include not in ("object", object)
-        cols = {}
-        if want_num:
-            for i in num_pos:
-                cols[fr.columns[i]] = self._series_at(i).describe(percentiles=percentiles)
-        if want_obj:
-            for i in obj_pos:
-                c = fr.scol(i)
-                base = fr.sdf.agg(
-                    F.count(c).alias("n"), F.countDistinct(c).alias("u")
-                ).collect()[0]
-                top = (fr.sdf.where(c.isNotNull()).groupBy(c.alias("v")).count()
-                       .orderBy(F.col("count").desc(), F.col("v").asc()).limit(1).collect())
-                cols[fr.columns[i]] = pd.Series(
-                    {"count": base["n"], "unique": base["u"],
-                     "top": top[0]["v"] if top else None,
-                     "freq": top[0]["count"] if top else None})
+        cols = [(fr.scol(i), fr.spark_type_of(i), fr.columns[i], i in num_pos)
+                for i in range(len(fr.columns)) if (want_num if i in num_pos else want_obj)]
+        cols = {d.name: d for d in describe_columns(fr.sdf, cols, percentiles)}
         out = pd.DataFrame(cols)
         # pandas row order: count/unique/top/freq first, then numeric stats
         # (percentile rows in ascending order, whatever set was requested)
@@ -2234,12 +2167,24 @@ class DataFrame:
     def idxmax(self, axis=0, skipna=True, numeric_only=False) -> pd.Series:
         if axis in (1, "columns"):
             return self._row_arg_extreme(max_=True)
-        return pd.Series({self._frame.columns[i]: self._series_at(i).idxmax() for i in self._numeric_positions()})
+        return self._idx_extreme("idxmax", skipna)
 
     def idxmin(self, axis=0, skipna=True, numeric_only=False) -> pd.Series:
         if axis in (1, "columns"):
             return self._row_arg_extreme(max_=False)
-        return pd.Series({self._frame.columns[i]: self._series_at(i).idxmin() for i in self._numeric_positions()})
+        return self._idx_extreme("idxmin", skipna)
+
+    def _idx_extreme(self, name: str, skipna: bool) -> pd.Series:
+        """idxmax/idxmin of every numeric column: the labels and tie-break
+        positions are attached once, then one aggregate pass."""
+        positions = self._numeric_positions()
+        if not positions:
+            return pd.Series(dtype="float64")
+        s = self._series_at(positions[0])
+        at = (s._index_expr(), s._pos_for_ties())
+        vals = DataFrame(_frame=s._frame)._reduce_cells(
+            [(i, name, {"skipna": skipna, "at": at}) for i in positions])
+        return pd.Series(dict(zip([self._frame.columns[i] for i in positions], vals)))
 
     def _row_arg_extreme(self, max_: bool):
         """idxmax/idxmin(axis=1): rowwise arg-extreme as ONE greatest()/
@@ -2666,6 +2611,13 @@ class DataFrame:
 
         fr = self._frame
         index = index if isinstance(index, list) else [index]
+
+        def drop_empty(sdf, cols):
+            # pandas dropna=True: a row whose every cell is missing goes
+            # (before fill_value fills it)
+            if not dropna or not cols:
+                return sdf
+            return sdf.where(F.greatest(F.lit(False), *[F.col(c).isNotNull() for c in cols]))
         if columns is None:
             # no column pivot: pivot_table degenerates to ONE hash aggregate
             # (pandas shape: single aggfunc -> flat value columns; a list ->
@@ -2682,22 +2634,20 @@ class DataFrame:
                     spec.append((lbl, fr.positions_of([v])[0], fn, {}))
             out = qc.groupby_agg(fr, fr.positions_of(index), spec,
                                  as_index=True, dropna=dropna, sort=sort)
+            out = out._subset_rows(drop_empty(out.sdf, out.data_cols))
             result = DataFrame(_frame=out)
             if margins:
                 # the All row aggregates the RAW data (pandas: a margin mean
                 # is the mean of all cells, not of the cell means): ONE tiny
                 # global aggregate job, unioned under a stringified index so
                 # the margins_name label coexists with any key dtype
-                exprs = []
-                for k, (lbl, pos, fn, _) in enumerate(spec):
+                for _, _, fn, _ in spec:
                     if not isinstance(fn, str):
                         raise NotImplementedError(f"pivot_table margins with aggfunc {fn!r}")
-                    exprs.append(qc.agg_expr(fn, fr.scol(pos)).alias(f"__m{k}__"))
                 if len(index) > 1:
                     raise NotImplementedError("pivot_table margins with a multi-level index")
-                mrow = fr.sdf.agg(*exprs).collect()[0]
                 margin_pd = pd.DataFrame(
-                    [[mrow[f"__m{k}__"] for k in range(len(spec))]],
+                    [self._reduce_cells([(pos, fn, {}) for _, pos, fn, _ in spec])],
                     columns=result._frame.columns,
                     index=pd.Index([margins_name], name=index[0]))
                 # the body STAYS distributed: stringify the key level when
@@ -2752,7 +2702,7 @@ class DataFrame:
                     for i, (fn, _v, p) in enumerate(pairs)]
             pivoted = sdf2.groupBy(*idx_phys).pivot(combo_phys, pvals).agg(*aggs)
             tmp = _fn(len(pvals) * len(pairs))
-            pivoted = pivoted.toDF(*idx_phys, *tmp)  # positional: names never parsed
+            pivoted = drop_empty(pivoted.toDF(*idx_phys, *tmp), tmp)  # positional: names never parsed
             name_of = {}
             for j, t in enumerate(tmp):  # Spark: pivot value outer, agg inner
                 fn, v, _p = pairs[j % len(pairs)]
@@ -2800,7 +2750,7 @@ class DataFrame:
                     for i, (fn, _v, p) in enumerate(pairs)]
             pivoted = fr.sdf.groupBy(*idx_phys).pivot(col_phys, pvals).agg(*aggs)
             tmp = _fn(len(pvals) * len(pairs))
-            pivoted = pivoted.toDF(*idx_phys, *tmp)  # positional: names never parsed
+            pivoted = drop_empty(pivoted.toDF(*idx_phys, *tmp), tmp)  # positional: names never parsed
             name_of = {}
             for j, t in enumerate(tmp):  # Spark: pivot value outer, agg inner
                 fn, v, _p = pairs[j % len(pairs)]
@@ -2833,7 +2783,7 @@ class DataFrame:
                     agg_fn(F.col(val_phys))
                 )
                 tmp = _fn(len(pvals))
-                pivoted = pivoted.toDF(*idx_phys, *tmp)  # positional: names never parsed
+                pivoted = drop_empty(pivoted.toDF(*idx_phys, *tmp), tmp)  # positional: names never parsed
                 out_phys = _fn(len(pvals))
                 fill = (lambda c: F.coalesce(c, F.lit(fill_value))) if fill_value is not None else (lambda c: c)
                 sel = [F.struct(*[F.col(p) for p in idx_phys]).alias(ORDER_COL)]
@@ -2847,6 +2797,7 @@ class DataFrame:
                 return DataFrame(_frame=out)
             pivoted = fr.sdf.groupBy(*idx_phys).pivot(col_phys).agg(agg_fn(F.col(val_phys)))
             value_cols = [c for c in pivoted.columns if c not in set(idx_phys)]
+            pivoted = drop_empty(pivoted, ["`" + c.replace("`", "``") + "`" for c in value_cols])
             if margins:
                 row_m = fr.sdf.groupBy(*idx_phys).agg(agg_fn(F.col(val_phys)).alias("__all__"))
                 pivoted = pivoted.join(row_m, idx_phys, "left")
@@ -2896,7 +2847,7 @@ class DataFrame:
         aggs = [agg_fn(F.col(p)).alias(f"__v{i}__") for i, p in enumerate(val_phys)]
         pivoted = fr.sdf.groupBy(*idx_phys).pivot(col_phys, pvals).agg(*aggs)
         tmp = _fn(len(pvals) * len(values))
-        pivoted = pivoted.toDF(*idx_phys, *tmp)  # positional: pivot names never parsed
+        pivoted = drop_empty(pivoted.toDF(*idx_phys, *tmp), tmp)  # positional: pivot names never parsed
         # Spark emits (pivot value outer, agg inner); pandas wants (value
         # outer, pivot value inner)
         name_of = {
@@ -3140,8 +3091,6 @@ class DataFrame:
         # (the engine's missing encoding — Spark NaN is an ordinary value
         # that would corrupt downstream isna/mean/groupby); the guard also
         # catches inf/inf.
-        from modin_spark.pandas.series import _nan_to_null
-
         q = a.cast("double") / b
         return F.when(
             b.cast("double") == 0,
@@ -3478,22 +3427,24 @@ class DataFrame:
             if fr.index_cols:
                 names = [n if n is not None else f"level_{i}" for i, n in enumerate(fr.index_names)]
                 flat = DataFrame(_frame=fr.reset_index())
-                return flat.pivot_table(values=values, index=names, columns=columns, aggfunc="first")
+                return flat.pivot_table(values=values, index=names, columns=columns, aggfunc="first",
+                                        dropna=False)
             fr2 = fr.ensure_order().with_global_position("__pvi__")
             base = SparkFrame(
                 fr2.sdf, pd.Index(["__pvi__"] + list(fr.columns)),
                 ["__pvi__"] + list(fr2.data_cols), [], [None],
             )
             out = DataFrame(_frame=base).pivot_table(
-                values=values, index=["__pvi__"], columns=columns, aggfunc="first"
+                values=values, index=["__pvi__"], columns=columns, aggfunc="first", dropna=False
             )
             ofr = out._frame
             return DataFrame(_frame=ofr._same_rows(
                 ofr.sdf, columns=ofr.columns, data_cols=list(ofr.data_cols),
                 index_cols=list(ofr.index_cols), index_names=[None],
             ))
+        # a reshape keeps a row whose every cell is missing
         return self.pivot_table(values=values, index=[index] if isinstance(index, str) else index,
-                                columns=columns, aggfunc="first")
+                                columns=columns, aggfunc="first", dropna=False)
 
     def stack(self, level=-1, future_stack: bool = False, dropna: bool = True):
         """Columns → rows. Flat columns: a (index, column-label) MultiIndex
@@ -3657,7 +3608,8 @@ class DataFrame:
         if ffr.sdf.groupBy(*keyphys).count().where("count > 1").limit(1).count() > 0:
             raise ValueError("Index contains duplicate entries, cannot reshape")
         if fill_value is None:
-            out = flat.pivot_table(values=values, index=remaining, columns=moved, aggfunc="first")
+            out = flat.pivot_table(values=values, index=remaining, columns=moved, aggfunc="first",
+                               dropna=False)
             ofr0 = out._frame
             return DataFrame(_frame=ofr0._same_rows(
                 ofr0.sdf, columns=_cols_renamed(ofr0.columns),
@@ -3665,7 +3617,8 @@ class DataFrame:
         for v in value_cols:
             s = flat[v]
             flat[v] = Series(s._frame, F.struct(F.lit(1).alias("p"), s._expr.alias("v")), s._refs, None)
-        out = flat.pivot_table(values=values, index=remaining, columns=moved, aggfunc="first")
+        out = flat.pivot_table(values=values, index=remaining, columns=moved, aggfunc="first",
+                               dropna=False)
         ofr = out._frame
         exprs = [
             F.when(ofr.scol(i).isNull(), F.lit(fill_value)).otherwise(ofr.scol(i)["v"])
@@ -4224,14 +4177,22 @@ class DataFrame:
                 or getattr(self, "_to_pandas_convert_dtypes", False)):
             call = _kernels.recognise(func)
         if call is not None and call[0] in _kernels.REDUCTIONS and 0 < k <= native_max_rows():
-            # count / nunique / min / max: one row of per-column aggregates
-            aggs = [sql for ci, p in enumerate(fr.data_cols) for sql in _kernels.reduction_sql(
-                call, _bq(p), sdts.get(p, "").startswith(("float", "double")), _vt, ci)]
+            # count / nunique / min / max: one row of per-column aggregates;
+            # NaN is missing to pandas, and Spark orders it above every number;
+            # min/max come back in the type the melt hands values over in
+            kw = {"skipna": call[1].get("dropna", True)}
+            if call[0] in ("min", "max"):
+                kw["cast"] = _vt
+            specs = []
+            for ci in range(k):
+                c, t = fr.scol(ci), fr.spark_type_of(ci)
+                c = _nan_to_null(c) if isinstance(t, (T.FloatType, T.DoubleType)) else c
+                specs.append((c, call[0], t, kw))
             # result-required: the reduction is a driver Series
-            row = fr.sdf.selectExpr(*aggs).collect()[0]
+            vals = qc.reduce_columns(fr.sdf, specs)
             return _kernels.finish(fr.columns, [
-                _kernels.reduction_result(call, row, ci, lambda v: rebuild(v, in_tags[ci]))
-                for ci in range(k)
+                _kernels.reduction_result(call[0], v, lambda x: rebuild(x, in_tags[ci]))
+                for ci, v in enumerate(vals)
             ])
         if call is not None and call[0] == "value_counts":
             # one partial aggregate per (column, value) over the melt — its

@@ -137,7 +137,7 @@ class DataFrameGroupBy:
         g = SeriesGroupBy._from_frame_groupby(self, key)
         return g
 
-    def _value_positions(self, numeric_only=False) -> list[tuple[Any, int]]:
+    def _value_positions(self, numeric_only=False, datetimes=False) -> list[tuple[Any, int]]:
         fr = self._df._frame
         labels = getattr(self, "_value_labels", None)
         out = []
@@ -148,7 +148,8 @@ class DataFrameGroupBy:
             if labels is not None and lbl not in set(labels):
                 continue
             if (labels is None and numeric_only
-                    and not (fr.dtype_of(i).startswith(("int", "float")) or fr.dtype_of(i) == "bool")):
+                    and not (fr.dtype_of(i).startswith(("int", "float")) or fr.dtype_of(i) == "bool"
+                             or (datetimes and fr.dtype_of(i).startswith("datetime")))):
                 # numeric_only prunes only the implicit all-columns selection;
                 # an explicitly selected column always participates (pandas
                 # SeriesGroupBy semantics — sums of object Nones yield NaN/0,
@@ -195,14 +196,15 @@ class DataFrameGroupBy:
         if nat is not None:
             return nat
 
-        spec = [(lbl, i, name, kw) for lbl, i in self._value_positions(numeric_only)]
+        # pandas keeps datetime columns in a std (a Timedelta)
+        vals = self._value_positions(numeric_only, datetimes=name == "std")
+        spec = [(lbl, i, name, kw) for lbl, i in vals]
         out = qc.groupby_agg(
             self._df._frame, self._by_pos, spec, as_index=self._as_index, dropna=self._dropna, sort=self._sort
         )
         res = DataFrame(_frame=out)
         if self._unobserved_dtype is not None:
-            res = self._complete_unobserved(
-                res, [(lbl, name) for lbl, _ in self._value_positions(numeric_only)])
+            res = self._complete_unobserved(res, [(lbl, name) for lbl, _ in vals])
             # pandas keys a categorical groupby result by a CategoricalIndex
             res._post_to_pandas_index = (
                 lambda ix, _d=self._unobserved_dtype: ix.astype(_d))
@@ -1398,12 +1400,7 @@ def _g_resample(self, rule: str, on=None, closed=None, label=None,
 
 class _GroupedResampler:
     """pandas groupby.resample parity wrapper: runs the grouped aggregate,
-    then completes each group's time grid (pandas emits EVERY bucket between
-    a group's min and max — empty buckets fill 0 for count/size/sum, 1 for
-    prod, NaN otherwise). One extra per-keys min/max aggregate + sequence
-    explode + left join; no driver collect, no per-group loop."""
-
-    _FILLS = {"count": 0, "size": 0, "nunique": 0, "sum": 0, "prod": 1.0}
+    then completes each group's time grid with resample._complete_grid."""
 
     def __init__(self, g, dur: str, anon_ts: bool = False):
         self._g = g
@@ -1416,6 +1413,7 @@ class _GroupedResampler:
     def _complete(self, out, agg_name: str):
         from modin_spark.core.frame import ORDER_COL, SparkFrame
         from modin_spark.pandas.dataframe import DataFrame
+        from modin_spark.pandas.resample import _complete_grid
         from modin_spark.pandas.series import Series
 
         is_series = isinstance(out, Series)
@@ -1423,17 +1421,8 @@ class _GroupedResampler:
         if len(fr.index_cols) < 2:
             return out
         keys, b = list(fr.index_cols[:-1]), fr.index_cols[-1]
-        sdf = fr.sdf
-        mm = sdf.groupBy(*keys).agg(F.min(b).alias("__mn__"), F.max(b).alias("__mx__"))
-        grid = mm.where(F.col("__mn__").isNotNull()).select(
-            *keys,
-            F.explode(F.sequence(F.col("__mn__"), F.col("__mx__"),
-                                 F.expr(f"interval {self._dur}"))).alias(b))
-        joined = grid.join(sdf.select(*keys, b, *fr.data_cols), on=keys + [b], how="left")
-        fill = self._FILLS.get(agg_name)
-        if fill is not None:
-            joined = joined.select(
-                *keys, b, *[F.coalesce(F.col(p), F.lit(fill)).alias(p) for p in fr.data_cols])
+        joined = _complete_grid(fr.sdf.select(*keys, b, *fr.data_cols), b, self._dur,
+                                fr.data_cols, agg_name, keys)
         joined = joined.orderBy(*keys, b).withColumn(ORDER_COL, F.monotonically_increasing_id())
         nfr = SparkFrame(joined, fr.columns, fr.data_cols, fr.index_cols, fr.index_names)
         if is_series:

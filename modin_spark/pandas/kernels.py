@@ -7,8 +7,9 @@ answer, so no task has to hold a whole column:
 - ``recognise`` calls ``func`` once on a recording stand-in and returns the
   call it made, or None;
 - the reductions (``count``, ``nunique``, ``min``, ``max``) are per-column
-  aggregates (``reduction_sql``), k answers however many distinct values a
-  column has, finished by ``reduction_result``;
+  aggregates of the one whole-column pass (``core.compiler.reduce_columns``),
+  k answers however many distinct values a column has, finished by
+  ``reduction_result``;
 - ``value_counts`` is a per-(column, value) partial aggregate (the value's
   count and its first position), rebuilt by ``value_counts_result``;
 - ``finish`` assembles the columns with pandas' own ``apply``.
@@ -119,34 +120,14 @@ def recognise(func) -> tuple[str, dict] | None:
 REDUCTIONS = frozenset(("count", "nunique", "min", "max"))
 
 
-def reduction_sql(call: tuple[str, dict], col: str, is_float: bool, vt: str,
-                  i: int) -> list[str]:
-    """The aggregates behind a reduction ``call`` on column SQL ``col``,
-    aliased ``__a{i}__`` (and ``__b{i}__``). Each reads every row once,
-    whatever the column's number of distinct values; ``min``/``max`` come
-    back cast to ``vt``, the type the melt hands values over in."""
-    name, kw = call
-    # NaN is missing to pandas, and Spark orders it above every number
-    v = f"CASE WHEN isnan({col}) THEN NULL ELSE {col} END" if is_float else col
-    if name == "count":
-        return [f"count({v}) AS __a{i}__"]
-    if name == "nunique":
-        missing = [] if kw["dropna"] else [f"count(1) > count({v}) AS __b{i}__"]
-        return [f"count(DISTINCT {v}) AS __a{i}__", *missing]
-    return [f"CAST({name}({v}) AS {vt}) AS __a{i}__"]
-
-
-def reduction_result(call: tuple[str, dict], row, i: int, decode):
-    """The reduction's answer for column ``i`` from the aggregate ``row``;
+def reduction_result(name: str, val, decode):
+    """The reduction's answer for one column from its aggregate ``val``;
     ``decode`` turns the melt-typed values into the column's pandas values."""
-    name, kw = call
-    if name == "count":
-        return int(row[f"__a{i}__"])
-    if name == "nunique":
-        return int(row[f"__a{i}__"]) + bool(not kw["dropna"] and row[f"__b{i}__"])
+    if name in ("count", "nunique"):
+        return int(val)
     # the extreme as a one-value column, reduced by pandas itself: its scalar
     # type and its all-missing answer are pandas' own
-    return getattr(decode(pd.Series([row[f"__a{i}__"]])), name)()
+    return getattr(decode(pd.Series([val])), name)()
 
 
 def value_counts_result(kw: dict, keys: pd.Series, counts: np.ndarray,

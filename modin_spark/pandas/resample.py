@@ -57,24 +57,26 @@ def bucket_start(ts_col, dur: str, closed=None, offset=None):
     return F.window(t, dur)["start"]
 
 
-def _complete_grid(agged, key_p: str, dur: str, val_ps, agg_name):
+def _complete_grid(agged, key_p: str, dur: str, val_ps, agg_name, keys=()):
     """pandas resample emits EVERY bucket between min and max, not just the
     occupied ones (an empty bucket takes compiler.empty_result: 0 for the
-    counts and sum, 1 for prod, NaN for the rest). Stays one plan: a 1-row
-    min/max aggregate cross-joined back, F.sequence exploded into the grid,
-    left join of the occupied buckets onto it — no driver collect, the grid
-    is ~bucket-count rows."""
+    counts and sum, 1 for prod, NaN for the rest); a groupby resample does so
+    per group ``keys``. Stays one plan: a min/max aggregate (one row per
+    group), F.sequence exploded into the grid, left join of the occupied
+    buckets onto it — no driver collect, the grid is ~bucket-count rows."""
+    keys = list(keys)
     names = agg_name if isinstance(agg_name, list) else [agg_name] * len(val_ps)
     fills = [qc.empty_result(n) for n in names]
     grid = (
-        agged.agg(F.min(key_p).alias("__mn__"), F.max(key_p).alias("__mx__"))
+        agged.groupBy(*keys).agg(F.min(key_p).alias("__mn__"), F.max(key_p).alias("__mx__"))
         .where(F.col("__mn__").isNotNull())
-        .select(F.explode(F.sequence(F.col("__mn__"), F.col("__mx__"), F.expr(f"interval {dur}"))).alias(key_p))
+        .select(*keys, F.explode(F.sequence(F.col("__mn__"), F.col("__mx__"),
+                                            F.expr(f"interval {dur}"))).alias(key_p))
     )
-    out = grid.join(agged, on=key_p, how="left")
+    out = grid.join(agged, on=keys + [key_p], how="left")
     if any(f is not None for f in fills):
         out = out.select(
-            key_p,
+            *keys, key_p,
             *[F.coalesce(F.col(p), f).alias(p) if f is not None else F.col(p)
               for p, f in zip(val_ps, fills)],
         )

@@ -1320,38 +1320,18 @@ class Series:
 
     # ----------------------------------------------------------- reductions
     def _reduce(self, name: str, skipna: bool = True, **kw) -> Any:
+        return self._reduce_many([(name, dict(kw, skipna=skipna))])[0]
+
+    def _reduce_many(self, specs) -> list:
+        """``(name, kw)`` reductions of this Series, in one aggregate pass."""
         ps = _native.series_pdf_of(self)
         if ps is not None:
             try:
-                if name == "count":
-                    return int(ps.count())
-                if name == "quantile":
-                    return ps.quantile(kw.get("q", 0.5))
-                kw2 = {k: kw[k] for k in ("ddof", "min_count") if k in kw}
-                return getattr(ps, name)(skipna=skipna, **kw2)
+                return [_native_reduce(ps, name, **kw) for name, kw in specs]
             except Exception:
                 pass  # pandas rejected it — distributed path is authoritative
-        e = qc.agg_expr(name, self._expr, kw.get("q"), input_type=self.spark_type,
-                        ddof=kw.get("ddof"), min_count=kw.get("min_count", 0), skipna=skipna)
-        row = self._frame.sdf.agg(e.alias("__r__")).collect()[0]
-        val = row["__r__"]
-        if val is None and name not in ("min", "max", "first", "last", "mode"):
-            # pandas scalar contract: an empty/all-missing numeric aggregate
-            # is NaN (or NaT for datetimes), never Python None — except the
-            # order statistics, whose missing result pandas also leaves NaN
-            # but dtype-preserving callers (min of strings) expect None-like
-            import numpy as np
-
-            return pd.NaT if self.dtype.kind == "M" else np.nan
-        if val is None and not skipna:
-            import numpy as np
-
-            return pd.NaT if self.dtype.kind == "M" else np.nan
-        import datetime as _dt
-
-        if isinstance(val, _dt.timedelta) and not isinstance(val, pd.Timedelta):
-            return pd.Timedelta(val)  # pandas scalar, pandas repr
-        return val
+        t = self.spark_type
+        return qc.reduce_columns(self._frame.sdf, [(self._expr, name, t, kw) for name, kw in specs])
 
     def sum(self, skipna=True, min_count=0, **kw):
         return self._reduce("sum", skipna=skipna, min_count=int(min_count or 0))
@@ -1394,11 +1374,7 @@ class Series:
     kurtosis = kurt
 
     def nunique(self, dropna=True) -> int:
-        n = self._reduce("nunique")
-        if not dropna:
-            has_null = self._frame.sdf.where(self.isna()._expr).limit(1).count() > 0
-            n = int(n) + (1 if has_null else 0)
-        return n
+        return self._reduce("nunique", skipna=dropna)
 
     def any(self, **kw) -> bool:
         return bool(self._reduce("any"))
@@ -1407,38 +1383,18 @@ class Series:
         return bool(self._reduce("all"))
 
     def quantile(self, q=0.5, interpolation="linear"):
-        if interpolation != "linear":
-            import math
-
-            n = int(self.count())
-            qs = list(q) if isinstance(q, (list, tuple)) else [q]
-            outs = []
-            for qq in qs:
-                if n <= 1:
-                    fracs = [0.0]
-                else:
-                    pos = float(qq) * (n - 1)
-                    lo, hi = math.floor(pos), math.ceil(pos)
-                    if interpolation == "lower":
-                        fracs = [lo / (n - 1)]
-                    elif interpolation == "higher":
-                        fracs = [hi / (n - 1)]
-                    elif interpolation == "nearest":
-                        fracs = [(lo if (pos - lo) <= 0.5 else hi) / (n - 1)]
-                    elif interpolation == "midpoint":
-                        fracs = [lo / (n - 1), hi / (n - 1)]
-                    else:
-                        raise NotImplementedError(f"interpolation {interpolation!r}")
-                vals = [self._reduce("quantile", q=f_) for f_ in fracs]
-                outs.append(sum(vals) / len(vals))
-            if isinstance(q, (list, tuple)):
-                return pd.Series(outs, index=list(q), name=self._name)
-            return outs[0]
+        qs = list(q) if isinstance(q, (list, tuple)) else [q]
+        if interpolation in (None, "linear"):
+            vals = list(self._reduce("quantile", q=qs))
+        else:
+            nat = _native.maybe_series(self, "quantile", q=q, interpolation=interpolation, _raw=True)
+            if nat is not None:
+                return nat
+            vals = qc.order_quantiles(self._frame.sdf, [(self._expr, self.spark_type)], qs,
+                                      interpolation)[0]
         if isinstance(q, (list, tuple)):
-            exprs = [qc.agg_expr("quantile", self._expr, qq).alias(f"q{i}") for i, qq in enumerate(q)]
-            row = self._frame.sdf.agg(*exprs).collect()[0]
-            return pd.Series([row[f"q{i}"] for i in range(len(q))], index=list(q), name=self._name)
-        return self._reduce("quantile", q=q)
+            return pd.Series(vals, index=qs, name=self._name)
+        return vals[0]
 
     def agg(self, func=None, *args, **kwargs):
         if func is None and kwargs:
@@ -1447,20 +1403,16 @@ class Series:
             return self.agg(dict(kwargs))
         if isinstance(func, str):
             return self._reduce(func)
-        if isinstance(func, dict):
-            # pandas: {out_label: agg} -> Series indexed by the out labels
-            out = {}
-            for k, f in func.items():
-                out[k] = self._reduce(f) if isinstance(f, str) else self.agg(f)
-            return pd.Series(out, name=self._name)
-        if isinstance(func, (list, tuple)):
-            out = {}
-            for f in func:
-                if isinstance(f, str):
-                    out[f] = self._reduce(f)
-                else:
-                    out[getattr(f, "__name__", str(f))] = self.agg(f)
-            return pd.Series(out, name=self._name)
+        if isinstance(func, (dict, list, tuple)):
+            # pandas: {out_label: agg} or [agg, ...] -> Series indexed by the
+            # labels; the named reductions share one aggregate pass
+            items = (list(func.items()) if isinstance(func, dict)
+                     else [(f if isinstance(f, str) else getattr(f, "__name__", str(f)), f)
+                           for f in func])
+            named = [f for _, f in items if isinstance(f, str)]
+            vals = iter(self._reduce_many([(f, {}) for f in named]))
+            return pd.Series({lbl: next(vals) if isinstance(f, str) else self.agg(f)
+                              for lbl, f in items}, name=self._name)
         if callable(func):
             # pandas hands the whole Series to the callable; ours stays lazy,
             # so a callable written against the Series API (s.max()-s.min())
@@ -1468,12 +1420,7 @@ class Series:
             np_name = getattr(func, "__name__", "")
             if np_name in {"sum", "mean", "min", "max", "std", "var", "median", "prod"}:
                 return self._reduce(np_name)
-            res = func(self)
-            if isinstance(res, Series):
-                # callable produced a transform, not a reduction — pandas
-                # would too; materialize is the caller's choice
-                return res
-            return res
+            return func(self)
         raise NotImplementedError("Series.agg spec")
 
     aggregate = agg
@@ -1482,67 +1429,19 @@ class Series:
         nat = _native.maybe_series(self, "describe", percentiles=percentiles, _raw=True)
         if nat is not None:
             return nat
-        if self.dtype.kind in "OUSb" and self.dtype.kind != "b":
-            # object/string dtype: pandas shape is count/unique/top/freq —
-            # one count aggregate + one top-1 value count (both tiny)
-            cnt_row = self._frame.sdf.agg(
-                F.count(self._expr).alias("c"),
-                F.count_distinct(self._expr).alias("u"),
-            ).collect()[0]
-            top_rows = (self._frame.sdf.where(self._expr.isNotNull())
-                        .groupBy(self._expr.alias("v")).count()
-                        .orderBy(F.col("count").desc(), F.col("v")).limit(1).collect())
-            top, freq = (top_rows[0]["v"], top_rows[0]["count"]) if top_rows else (None, None)
-            return pd.Series([cnt_row["c"], cnt_row["u"], top, freq],
-                             index=["count", "unique", "top", "freq"], name=self._name)
-        # pandas: percentiles= replaces the quartiles; the median is always
-        # included (pandas inserts 0.5 if missing)
-        ps = sorted(set(list(percentiles) + [0.5])) if percentiles is not None else [0.25, 0.5, 0.75]
-        names = (["count", "mean", "std", "min"]
-                 + [f"{p * 100:g}%" for p in ps] + ["max"])
-        exprs = [
-            F.count(self._expr),
-            F.avg(self._expr),
-            F.stddev_samp(self._expr),
-            F.min(self._expr),
-            *[F.percentile(self._expr, F.lit(p)) for p in ps],
-            F.max(self._expr),
-        ]
-        row = self._frame.sdf.agg(*[e.alias(f"x{i}") for i, e in enumerate(exprs)]).collect()[0]
-        return pd.Series([row[f"x{i}"] for i in range(len(exprs))], index=names, name=self._name)
+        col = (self._expr, self.spark_type, self._name, self.dtype.kind not in "OUSb")
+        return describe_columns(self._frame.sdf, [col], percentiles)[0]
 
     def idxmax(self, skipna: bool = True):
-        # pandas tie-break: FIRST occurrence of the max — max_by alone picks
-        # an arbitrary tied row, so rank by (value, -frame_position)
-        idx, pos = self._index_expr(), self._pos_for_ties()
-        key = F.when(self._expr.isNotNull(), F.struct(self._expr.alias("v"), (-pos).alias("t")))
-        e = F.max_by(idx, key)
-        row = self._frame.sdf.agg(
-            e.alias("__r__"),
-            F.max(F.when(self._expr.isNull(), 1).otherwise(0)).alias("__hn__"),
-        ).collect()[0]
-        import numpy as _np
-
-        if not skipna and row["__hn__"]:
-            return _np.nan  # pandas skipna=False: any NaN poisons the result
-        val = row["__r__"]
-        return _np.nan if val is None else val  # pandas: all-NaN -> nan
+        return self._idx_extreme("idxmax", skipna)
 
     def idxmin(self, skipna: bool = True):
-        idx, pos = self._index_expr(), self._pos_for_ties()
-        key = F.when(self._expr.isNotNull(), F.struct(self._expr.alias("v"), pos.alias("t")))
-        e = F.min_by(idx, key)
-        row = self._frame.sdf.agg(
-            e.alias("__r__"),
-            F.max(F.when(self._expr.isNull(), 1).otherwise(0)).alias("__hn__"),
-        ).collect()[0]
-        import numpy as _np
+        return self._idx_extreme("idxmin", skipna)
 
-        if not skipna and row["__hn__"]:
-            return _np.nan
-        val = row["__r__"]
-
-        return _np.nan if val is None else val
+    def _idx_extreme(self, name: str, skipna: bool):
+        at = (self._index_expr(), self._pos_for_ties())
+        return qc.reduce_columns(self._frame.sdf, [(self._expr, name, self.spark_type,
+                                                    {"skipna": skipna, "at": at})])[0]
 
     def _pos_for_ties(self) -> Column:
         """A long frame-position expression for first-occurrence tie-breaks.
@@ -1832,17 +1731,11 @@ class Series:
         count expression per probe value (k is plan-time small)."""
         import numpy as np
 
-        vals = value if isinstance(value, (list, tuple, np.ndarray, pd.Series, pd.Index)) else None
-        if vals is None:
-            cmp = (self._expr < _lit(value)) if side == "left" else (self._expr <= _lit(value))
-            row = self._frame.sdf.agg(F.sum(F.when(cmp, 1).otherwise(0)).alias("n")).collect()[0]
-            return int(row["n"] or 0)
-        exprs = []
-        for k, v in enumerate(vals):
-            cmp = (self._expr < _lit(v)) if side == "left" else (self._expr <= _lit(v))
-            exprs.append(F.sum(F.when(cmp, 1).otherwise(0)).alias(f"n{k}"))
-        row = self._frame.sdf.agg(*exprs).collect()[0]
-        return np.array([int(row[f"n{k}"] or 0) for k in range(len(list(vals)))])
+        many = isinstance(value, (list, tuple, np.ndarray, pd.Series, pd.Index))
+        cmps = [(self._expr < _lit(v)) if side == "left" else (self._expr <= _lit(v))
+                for v in (value if many else [value])]
+        n = qc.reduce_columns(self._frame.sdf, [(c, "sum", T.BooleanType(), {}) for c in cmps])
+        return np.array(n) if many else int(n[0])
 
     # ------------------------------------------------------- order-dependent
     def _cum(self, kind: str, skipna: bool) -> "Series":
@@ -1982,6 +1875,42 @@ class Series:
                     g = _GroupByResultProxy(g, {}, strip_value_name="__v__")
             return g
         return SeriesGroupBy(self, by)
+
+
+def _native_reduce(ps: pd.Series, name: str, skipna: bool = True, **kw):
+    if name == "count":
+        return int(ps.count())
+    if name == "quantile":
+        return ps.quantile(kw.get("q", 0.5))
+    kw2 = {k: kw[k] for k in ("ddof", "min_count") if k in kw}
+    return getattr(ps, name)(skipna=skipna, **kw2)
+
+
+def describe_columns(sdf, cols, percentiles=None) -> list[pd.Series]:
+    """pandas describe of each ``(column, spark_type, name, numeric)`` of
+    ``sdf``, all in one aggregate pass: count/mean/std/min/percentiles/max
+    of a number, count/unique of an object, whose top/freq is one more top-1
+    group count."""
+    # pandas: percentiles= replaces the quartiles; the median is always
+    # included (pandas inserts 0.5 if missing)
+    ps = sorted(set(list(percentiles) + [0.5])) if percentiles is not None else [0.25, 0.5, 0.75]
+    num = [("count", {}), ("mean", {}), ("std", {}), ("min", {}), ("quantile", {"q": ps}), ("max", {})]
+    obj = [("count", {}), ("nunique", {})]
+    vals = iter(qc.reduce_columns(sdf, [(c, name, t, kw) for c, t, _, numeric in cols
+                                        for name, kw in (num if numeric else obj)]))
+    out = []
+    for c, _t, label, numeric in cols:
+        if numeric:
+            n, mean, std, lo, qv, hi = (next(vals) for _ in num)
+            out.append(pd.Series([n, mean, std, lo, *qv, hi], name=label, index=[
+                "count", "mean", "std", "min", *[f"{p * 100:g}%" for p in ps], "max"]))
+            continue
+        n, u = next(vals), next(vals)
+        top = (sdf.where(c.isNotNull()).groupBy(c.alias("v")).count()
+               .orderBy(F.col("count").desc(), F.col("v")).limit(1).collect())
+        top, freq = (top[0]["v"], top[0]["count"]) if top else (None, None)
+        out.append(pd.Series([n, u, top, freq], index=["count", "unique", "top", "freq"], name=label))
+    return out
 
 
 def _re_escape(sep: str) -> str:
@@ -2613,15 +2542,19 @@ def _ser_sample(self, n=None, frac=None, replace=False, random_state=None,
 
 
 def _ser_argmax(self):
-    """Position of the max value (ties -> first) — one max_by aggregate over
-    the global position, no sort."""
-    fr = self._to_frame("__v__").with_global_position("__p__")
-    return fr.sdf.agg(F.max_by(F.col("__p__"), F.col(fr.data_cols[0])).alias("r")).collect()[0]["r"]
+    """Position of the max value (ties -> first): idxmax over the global
+    positions, one aggregate, no sort."""
+    return _ser_arg_extreme(self, "idxmax")
 
 
 def _ser_argmin(self):
+    return _ser_arg_extreme(self, "idxmin")
+
+
+def _ser_arg_extreme(self, name):
     fr = self._to_frame("__v__").with_global_position("__p__")
-    return fr.sdf.agg(F.min_by(F.col("__p__"), F.col(fr.data_cols[0])).alias("r")).collect()[0]["r"]
+    p = F.col("__p__")
+    return qc.reduce_columns(fr.sdf, [(fr.scol(0), name, fr.spark_type_of(0), {"at": (p, p)})])[0]
 
 
 def _ser_items(self):
@@ -2786,17 +2719,13 @@ def _ser_is_monotonic_decreasing(self):
 
 
 def _ser_is_unique(self):
-    r = self._frame.sdf.agg(
-        F.count(self._expr).alias("n"), F.count_distinct(self._expr).alias("d")
-    ).collect()[0]
-    return r["n"] == r["d"]
+    # pandas: nunique(dropna=False) == len — two missing values repeat
+    n, size = self._reduce_many([("nunique", {"skipna": False}), ("size", {})])
+    return n == size
 
 
 def _ser_hasnans(self):
-    e = self._expr
-    cond = e.isNull()
-    r = self._frame.sdf.agg(F.max(F.when(cond, 1).otherwise(0)).alias("h")).collect()[0]["h"]
-    return bool(r)
+    return bool(self.isna().any())
 
 
 def _ser_item(self):

@@ -2,9 +2,13 @@
 them through ``core.compiler.agg_expr`` — whole-column, grouped, windowed,
 resampled and pivoted — against pandas on the same frame.
 
-The frame holds NaN, an all-NaN group (``z`` over key ``a``), ints and bools;
-std/var/sem also run at ddof 0, 1 and 2. A (context, name) pair pandas itself
-does not offer (``Rolling.prod``, ``DataFrameGroupBy.kurt``, ...) is left out.
+The frame holds NaN, an all-NaN group (``z`` over key ``a``), ints, bools and
+datetimes; std/var/sem also run at ddof 0, 1 and 2. A (context, name) pair
+pandas itself does not offer (``Rolling.prod``, ``DataFrameGroupBy.kurt``,
+...) is left out. The whole-column entry points that run several reductions
+at once (describe, quantile, agg specs, idxmax/idxmin, nunique) sweep the
+Series and frame contexts too, and each fires no more Spark jobs than one
+``sdf.agg(...).collect()``.
 """
 
 import numpy as np
@@ -45,6 +49,8 @@ CONTEXTS = {
     "series_bool": (lambda d, n, **kw: _call(d["b"], n, **kw), NAMES),
     "series_all_nan": (lambda d, n, **kw: _call(d[d.k == "a"]["z"], n, **kw), NAMES),
     "frame": (lambda d, n, **kw: _call(d[["x", "z", "i", "b"]], n, **kw), NAMES),
+    # pandas has no linear quantile of a bool column
+    "frame_numeric": (lambda d, n, **kw: _call(d[["x", "z", "i"]], n, **kw), NAMES),
     "groupby_agg": (lambda d, n, **kw: d.groupby("k")[["x", "z", "i"]].agg(n, **kw),
                     [n for n in NAMES if n != "kurt"]),
     "groupby_transform": (lambda d, n, **kw: d.groupby("k")[["x", "z", "i"]].transform(n, **kw),
@@ -58,10 +64,15 @@ CONTEXTS = {
                      ["sum", "mean", "std", "var", "sem", "prod", "median", "count"]),
     "resample_transform": (lambda d, n: d[["t", "x", "z"]].resample("1h", on="t").transform(n),
                            [n for n in NAMES if n != "kurt"]),
-    # dropna=False: the engine keeps all-NaN rows, which pandas' default drops
     "pivot_table": (lambda d, n: d.pivot_table(values="x", index="k", columns="b", aggfunc=n,
                                                dropna=False),
                     [n for n in NAMES if n != "kurt"]),
+    # the default dropna=True drops a row whose every cell is missing (``a``
+    # for the NaN-valued names). pandas also drops such a column, which the
+    # engine keeps (COVERAGE.md): std/var/sem/skew of the False cells here
+    "pivot_table_dropna": (lambda d, n: d.pivot_table(values="z", index="k", columns="b",
+                                                      aggfunc=n),
+                           [n for n in NAMES if n not in ("kurt", "std", "var", "sem", "skew")]),
 }
 DDOF_CONTEXTS = ["series", "series_int", "frame", "groupby_agg", "groupby_transform",
                  "rolling", "expanding", "resample_agg"]
@@ -148,3 +159,128 @@ def test_crosstab_cell_identity(cells, aggfunc):
     _check(got, exp)
     if aggfunc == "sum":
         assert got.loc["a", "y"] == 0.0 and np.isnan(got.loc["d", "y"])
+
+
+INTERPOLATIONS = ["linear", "lower", "higher", "nearest", "midpoint"]
+# (context, method, kwargs): entry points that answer several reductions
+PASSES = [
+    *[(ctx, m, kw) for ctx in ("series", "series_int", "frame") for m, kw in [
+        ("describe", {}),
+        ("describe", {"percentiles": [0.1, 0.9]}),
+        ("nunique", {"dropna": False}),
+        ("idxmax", {}),
+        ("idxmin", {}),
+        ("idxmax", {"skipna": False}),
+        ("agg", {"func": ["sum", "mean", "max", "count"]}),
+    ]],
+    *[(ctx, "quantile", {"q": q, "interpolation": i})
+      for ctx in ("series", "series_int", "frame_numeric")
+      for q in (0.3, [0.1, 0.5, 0.9]) for i in INTERPOLATIONS],
+    ("series", "argmax", {}),
+    ("series_int", "argmin", {}),
+    ("series", "agg", {"func": {"total": "sum", "top": "max"}}),
+    ("series", "agg", {"total": "sum", "top": "max"}),
+    ("frame", "agg", {"func": {"x": "sum", "z": "mean", "i": "max"}}),
+    ("frame", "agg", {"func": {"x": ["sum", "min"], "z": "mean", "i": ["max"]}}),
+    ("frame", "agg", {"total": ("x", "sum"), "top": ("z", "max"), "cnt": ("x", "count")}),
+]
+
+
+@pytest.mark.parametrize("ctx,method,kw", PASSES)
+def test_one_pass_entry_matches_pandas(frames, ctx, method, kw):
+    pdf, mdf = frames
+    build, _ = CONTEXTS[ctx]
+    _check(build(mdf, method, **kw), build(pdf, method, **kw))
+
+
+def test_is_unique_counts_missing_values(frames):
+    """pandas: ``is_unique`` is ``nunique(dropna=False) == len``, so two
+    missing values repeat."""
+    pdf, mdf = frames
+    for col in ("x", "i", "t"):
+        assert mdf[col].is_unique == pdf[col].is_unique, col
+        assert mdf[col].hasnans == pdf[col].hasnans, col
+
+
+@pytest.mark.parametrize("q", [0.5, [0.25, 0.5, 0.75]])
+def test_nearest_quantile_rounds_half_to_even(spark, q):
+    """numpy rounds a half-way virtual index to the even neighbour: the
+    median of [1, 2, 3, 4] at ``nearest`` is 3, not 2."""
+    import modin_spark.pandas as mpd
+
+    pdf = pd.DataFrame({"a": [1, 2, 3, 4], "b": [4.0, 1.0, 2.0, 3.5]})
+    mdf = mpd.from_pandas(pdf)
+    _check(mdf["a"].quantile(q, interpolation="nearest"), pdf["a"].quantile(q, interpolation="nearest"))
+    _check(mdf.quantile(q, interpolation="nearest"), pdf.quantile(q, interpolation="nearest"))
+
+
+def _micros(v):
+    return np.asarray(pd.to_timedelta(np.ravel(np.asarray(v, dtype=object))), dtype="int64") // 1000
+
+
+def _check_timedelta(got, exp):
+    got = got.to_pandas() if hasattr(got, "to_pandas") else got
+    g, e = _micros(got), _micros(exp)
+    assert g.shape == e.shape, (g.shape, e.shape)
+    # the engine keeps microseconds, pandas nanoseconds
+    np.testing.assert_allclose(g, e, atol=1)
+
+
+def test_std_of_datetimes(frames):
+    """pandas' std of a datetime column is a Timedelta."""
+    pdf, mdf = frames
+    _check_timedelta(mdf["t"].std(), pdf["t"].std())
+    _check_timedelta(mdf["t"].std(ddof=0), pdf["t"].std(ddof=0))
+    _check_timedelta(mdf.groupby("k")[["t"]].agg(["std"]), pdf.groupby("k")[["t"]].agg(["std"]))
+    got = mdf.groupby("k")[["x", "t"]].std().to_pandas()
+    exp = pdf.groupby("k")[["x", "t"]].std()
+    assert list(got.columns) == list(exp.columns)
+    _check_timedelta(got["t"], exp["t"])
+
+
+@pytest.fixture(scope="module")
+def tracer(spark):
+    from perfbench.tracing import Tracer
+
+    t = Tracer(spark)
+    yield t
+    t.close()
+
+
+def _jobs(tracer, fn) -> int:
+    fn()  # warm
+    with tracer.phase(tracer.op(0, "reduction"), "build") as phase:
+        fn()
+    return phase["jobs_tracked"]
+
+
+# entry point -> (call, the jobs it may fire in units of one aggregate pass)
+JOB_CASES = {
+    "describe": (lambda d: d[["x", "z", "i"]].describe(), 1),
+    "frame_agg_list": (lambda d: d[["x", "z", "i"]].agg(["sum", "mean", "max"]), 1),
+    "frame_agg_dict": (lambda d: d.agg({"x": "sum", "z": "mean", "i": "max"}), 1),
+    "frame_agg_named": (lambda d: d.agg(a=("x", "sum"), b=("z", "mean")), 1),
+    "series_agg_list": (lambda d: d["x"].agg(["sum", "mean", "max"]), 1),
+    "series_describe": (lambda d: d["x"].describe(), 1),
+    "frame_quantile_list": (lambda d: d[["x", "z", "i"]].quantile([0.1, 0.5, 0.9]), 1),
+    "series_quantile_list": (lambda d: d["x"].quantile([0.1, 0.5, 0.9]), 1),
+    "frame_quantile_nearest": (lambda d: d[["x", "z", "i"]].quantile(0.5, interpolation="nearest"), 2),
+    "series_quantile_lower": (lambda d: d["x"].quantile([0.1, 0.5, 0.9], interpolation="lower"), 2),
+    "idxmax": (lambda d: d[["x", "z", "i"]].idxmax(), 1),
+    # a distinct count is its own aggregate shape (two exchanges)
+    "series_nunique_dropna": (lambda d: d["x"].nunique(dropna=False), "distinct"),
+    "frame_nunique_dropna": (lambda d: d[["x", "z", "i"]].nunique(dropna=False), "distinct"),
+}
+
+
+@pytest.mark.parametrize("case", list(JOB_CASES))
+def test_entry_point_is_one_aggregate_pass(frames, tracer, case):
+    from pyspark.sql import functions as F
+
+    _, mdf = frames
+    fn, passes = JOB_CASES[case]
+    fr = mdf._frame
+    c = F.col(fr.data_cols[1])
+    one = F.count_distinct(c) if passes == "distinct" else F.sum(c)
+    ceiling = _jobs(tracer, lambda: fr.sdf.agg(one).collect()) * (1 if passes == "distinct" else passes)
+    assert _jobs(tracer, lambda: fn(mdf)) <= ceiling
