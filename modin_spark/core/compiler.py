@@ -1113,6 +1113,65 @@ def concat_cols(frames: list[SparkFrame], join: str = "outer") -> SparkFrame:
     return nf
 
 
+def align_frames(left: SparkFrame, right: SparkFrame, how: str = "full_outer") -> SparkFrame:
+    """Row-align two frames for an element-wise binary op: the result holds
+    ``left``'s columns, then ``right``'s, on one frame.
+
+    Frames of one lineage (same rows, same order) rebase with no join.
+    Otherwise ONE join aligns them the pandas way, on the index: the index
+    columns, or, when neither frame has one, the pandas default-index labels
+    (raw ORDER when both frames come from one derivation). ``how='full_outer'``
+    is pandas' operand alignment: the union of both indexes (a missing side is
+    NULL), ordered by the sorted union. ``how='left'`` is a lookup: left's
+    rows and order."""
+    columns = pd.Index(list(left.columns) + list(right.columns))
+    if left._lid == right._lid and left.can_rebase(right, set(right.data_cols)):
+        return left._same_rows(left.sdf, columns=columns, data_cols=left.data_cols + right.data_cols)
+    lf, rf = left.ensure_order(), right.ensure_order()
+    lab_l = lab_r = None
+    if not lf.index_cols and not rf.index_cols:
+        lab_l, lab_r = fresh_names(2)
+        lf, rf = lf.with_pandas_labels(lab_l), rf.with_pandas_labels(lab_r)
+    if lab_l is not None and (lf.order_epoch is None or lf.order_epoch != rf.order_epoch):
+        # different derivations: raw ORDER/positions are not label-true
+        # (permuted after sorts, gappy after filters) — join on the labels
+        lkey, rkey = [lab_l], [lab_r]
+    else:
+        lpos, rpos = fresh_names(2)
+        lf, lkey = lf.align_keyed_with(rf, lpos)
+        rf, rkey = rf.align_keyed_with(lf, rpos)
+    if len(lkey) != len(rkey):
+        raise NotImplementedError("alignment of indexes with different depths")
+    rk = fresh_names(len(rkey))
+    rdata = fresh_names(len(rf.data_cols))
+    rsdf = rf.sdf.select(
+        *[F.col(k).alias(n) for k, n in zip(rkey, rk)],
+        *[F.col(p).alias(n) for p, n in zip(rf.data_cols, rdata)],
+        *([F.col(lab_r)] if lab_r is not None else []),
+    )
+    cond = None
+    for k, n in zip(lkey, rk):
+        c = lf.sdf[k].eqNullSafe(rsdf[n])
+        cond = c if cond is None else (cond & c)
+    joined = lf.sdf.join(rsdf, cond, how)
+    if how != "left":
+        for k, n in zip(lkey, rk):
+            joined = joined.withColumn(k, F.coalesce(F.col(k), F.col(n)))
+        if lab_l is not None:
+            joined = joined.withColumn(lab_l, F.coalesce(F.col(lab_l), F.col(lab_r)))
+        joined = joined.orderBy(
+            *[F.col(k).asc_nulls_last() for k in lkey], F.col(ORDER_COL).asc_nulls_first()
+        ).withColumn(ORDER_COL, F.monotonically_increasing_id())
+    joined = joined.drop(*rk)
+    # a right-only index keeps its (position-keyed) rows as the index
+    idx = lkey if lf.index_cols or (how != "left" and rf.index_cols) else []
+    names = lf.index_names if lf.index_cols else (rf.index_names if idx else [None])
+    nf = SparkFrame(joined, columns, lf.data_cols + rdata, idx, names)
+    if lab_l is not None:
+        nf.labels_col = lab_l
+    return nf
+
+
 def drop_duplicates(frame: SparkFrame, subset_positions: Sequence[int] | None, keep: str = "first") -> SparkFrame:
     """Order contract: keeps first (or last) occurrence, original order.
 

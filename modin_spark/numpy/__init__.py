@@ -308,16 +308,6 @@ ceil = _unary("ceil")
 sign = _unary("sign")
 
 
-def where(condition, x=None, y=None):
-    if condition is True:
-        return x
-    if condition is False:
-        return y
-    if hasattr(condition, "where"):
-        return condition.where(x=x, y=y)
-    raise NotImplementedError(f"np.where for condition of type {type(condition)}")
-
-
 class linalg:  # namespace parity with numpy.linalg / reference linalg.py
     @staticmethod
     def norm(x, ord=None, axis=None, keepdims=False):

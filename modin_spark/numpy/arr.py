@@ -119,7 +119,8 @@ class array:
     def _coerce_other(self, other):
         """Scalar -> scalar; array -> aligned engine frame or per-column
         scalar list (a (k,) array broadcasting across a (n,k) array collects
-        only k values — column metadata by definition)."""
+        only k values — column metadata by definition — and the frame
+        operators take a list along the columns)."""
         if isinstance(other, (list, tuple, np.ndarray)):
             other = array(other)
         if not isinstance(other, array):
@@ -128,26 +129,11 @@ class array:
             vals = other._df.to_pandas().iloc[:, 0].tolist()
             if len(vals) != len(self._df.columns):
                 raise ValueError(f"operands could not be broadcast: {self.shape} vs {other.shape}")
-            return ("__percol__", vals)
+            return vals
         return other._df
 
     def _binary(self, other, op, reverse=False):
-        from modin_spark.pandas.dataframe import DataFrame
-
-        import operator as _op
-
         o = self._coerce_other(other)
-        if isinstance(o, tuple) and o and o[0] == "__percol__":
-            fn = {"add": _op.add, "sub": _op.sub, "mul": _op.mul, "div": _op.truediv,
-                  "floordiv": _op.floordiv, "pow": _op.pow, "mod": _op.mod,
-                  "gt": _op.gt, "ge": _op.ge, "lt": _op.lt, "le": _op.le,
-                  "eq": _op.eq, "ne": _op.ne}[op]
-            fr = self._df._frame
-            exprs = []
-            for i, v in enumerate(o[1]):
-                a, b = (F.lit(v), fr.scol(i)) if reverse else (fr.scol(i), F.lit(v))
-                exprs.append(fn(a, b))
-            return array(_df=DataFrame(_frame=fr.project(list(fr.columns), exprs)), _ndim=self._ndim)
         left = self._df
         name = {"add": "__add__", "sub": "__sub__", "mul": "__mul__", "div": "__truediv__",
                 "floordiv": "__floordiv__", "pow": "__pow__", "mod": "__mod__",
@@ -156,7 +142,8 @@ class array:
         if reverse:
             rname = {"__add__": "__radd__", "__sub__": "__rsub__", "__mul__": "__rmul__",
                      "__truediv__": "__rtruediv__", "__floordiv__": "__rfloordiv__",
-                     "__pow__": "__rpow__", "__mod__": "__rmod__"}.get(name, name)
+                     "__pow__": "__rpow__", "__mod__": "__rmod__", "__gt__": "__lt__",
+                     "__ge__": "__le__", "__lt__": "__gt__", "__le__": "__ge__"}.get(name, name)
             out = getattr(left, rname)(o)
         else:
             out = getattr(left, name)(o)
@@ -267,27 +254,18 @@ class array:
     _logical_not = _logical_unop
 
     def _logical_binop(self, other, op):
+        import operator as _op
+
         o = self._coerce_other(other)
         if not isinstance(o, (int, float, bool, np.bool_)) and _engine_df(o) is None:
             raise NotImplementedError("logical ops need an array or scalar")
-        if _engine_df(o) is not None:
-            # engine frames align binary ops by lineage or positional join;
-            # truth tables ride 0/1 arithmetic (and=min: a*b, or: a+b>0,
-            # xor: a+b==1) — one projection, no extra machinery
-            li = self._map(lambda c: c.cast("boolean").cast("long"))._df
-            ri = array(_df=o, _ndim=self._ndim)._map(lambda c: c.cast("boolean").cast("long"))._df
-            if op == "and":
-                out = (li * ri) > 0
-            elif op == "or":
-                out = (li + ri) > 0
-            else:
-                out = (li + ri) == 1
-            return array(_df=out, _ndim=self._ndim)
-        b = bool(o)
-        fn = {"and": (lambda c: c.cast("boolean") & F.lit(b)),
-              "or": (lambda c: c.cast("boolean") | F.lit(b)),
-              "xor": (lambda c: c.cast("boolean") != F.lit(b))}[op]
-        return self._map(fn)
+        # numpy truth values, then the frame's own &, |, ^ (per-column
+        # Series operators, one alignment)
+        left = self._map(lambda c: c.cast("boolean"))._df
+        right = (array(_df=o, _ndim=self._ndim)._map(lambda c: c.cast("boolean"))._df
+                 if _engine_df(o) is not None else bool(o))
+        out = {"and": _op.and_, "or": _op.or_, "xor": _op.xor}[op](left, right)
+        return array(_df=out, _ndim=self._ndim)
 
     def _logical_and(self, other): return self._logical_binop(other, "and")
     def _logical_or(self, other): return self._logical_binop(other, "or")

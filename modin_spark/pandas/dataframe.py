@@ -19,9 +19,12 @@ from modin_spark.core import windows as win
 from modin_spark.pandas import kernels as _kernels
 from modin_spark.pandas import native as _native
 from modin_spark.core.frame import (
-    ORDER_COL, SparkFrame, collect_small, native_max_rows, pandas_dtype_to_spark, pin, unpin,
+    ORDER_COL, SparkFrame, collect_small, fresh_names, native_max_rows, pandas_dtype_to_spark, pin,
+    unpin,
 )
-from modin_spark.pandas.series import Series, _lit, _nan_to_null, describe_columns
+from modin_spark.pandas.series import (
+    Series, _lit, _nan_to_null, _true_div, describe_columns, describe_kind,
+)
 
 _MASKED_EXT_NAMES = {"Int8", "Int16", "Int32", "Int64", "UInt8", "UInt16",
                      "UInt32", "UInt64", "Float32", "Float64", "boolean"}
@@ -39,6 +42,28 @@ def _masked_ext_dtypes(pdf: pd.DataFrame) -> dict:
     stores them as plain nullable columns; the wrapper remembers the dtype so
     to_pandas and comparison results (pd.NA, not False) stay faithful."""
     return {c: d for c, d in pdf.dtypes.items() if getattr(d, "name", "") in _MASKED_EXT_NAMES}
+
+
+def _flex(name: str):
+    """DataFrame flex method ``name``: Series ``name`` on every column."""
+    def method(self, other, axis="columns", level=None, fill_value=None):
+        kw = {} if fill_value is None else {"fill_value": fill_value}
+        return self._binary(lambda a, b: getattr(a, name)(b, **kw), other, axis)
+
+    method.__name__ = name
+    return method
+
+
+def _operator(name: str, compare: bool = False):
+    """DataFrame operator ``name``: Series ``name`` on every column.
+    Comparison operators raise on differently-labeled frames first."""
+    def method(self, other):
+        if compare:
+            self._cmp_label_check(other)
+        return self._binary(lambda a, b: getattr(a, name)(b), other)
+
+    method.__name__ = name
+    return method
 
 
 class DataFrame:
@@ -181,17 +206,20 @@ class DataFrame:
         return DataFrame(_frame=fr._same_rows(fr.sdf.repartition(*[F.col(p) for p in phys])))
 
     # -------------------------------------------------------------- selection
-    def _series_at(self, pos: int) -> Series:
-        s = Series(
-            self._frame, self._frame.scol(pos), {self._frame.data_cols[pos]}, name=self._frame.columns[pos]
-        )
-        # plain-column marker for the native fast path: ONLY a direct column
-        # extraction may be replayed as pdf[label] (derived Series keep the
-        # name through _map1 but are new objects, so the attr vanishes)
+    def _series_at(self, pos: int, frame: SparkFrame | None = None) -> Series:
+        """Column ``pos`` as a Series with this frame's dtype overlay for its
+        label. ``frame`` is a frame carrying this one's columns (an aligned
+        binary operand, ``compiler.align_frames``); ``pos`` indexes it."""
+        fr = self._frame if frame is None else frame
+        s = Series(fr, fr.scol(pos), {fr.data_cols[pos]}, name=fr.columns[pos])
+        # plain-column marker (the type comes from the frame's schema; the
+        # native fast path replays it as pdf[label]): ONLY a direct column
+        # extraction carries it (derived Series keep the name through _map1
+        # but are new objects, so the attr vanishes)
         s._native_col = pos
         ext = getattr(self, "_to_pandas_ext_dtypes", None)
         if ext:
-            d = ext.get(self._frame.columns[pos])
+            d = ext.get(fr.columns[pos])
             if isinstance(d, pd.CategoricalDtype):
                 # categorical: ordered comparisons + groupby category
                 # restoration key off _cat_dtype; comparisons stay plain bool
@@ -289,22 +317,23 @@ class DataFrame:
         keep = [i for i, c in enumerate(self._frame.columns) if c != key]
         self._frame = self._frame.select_positions(keep)
 
+    def _adopt_dtype(self, key, value) -> None:
+        """Record the dtype overlay ``value`` carries for column ``key``.
+        Categorical VALUES: the category SET rides on the wrapper (Spark
+        storage is plain string), mirrored into BOTH stores: _cat_meta feeds
+        groupby(observed=False), _to_pandas_ext_dtypes feeds column
+        extraction and to_pandas dtype restoration. A nullable extension
+        dtype (e.g. the BooleanDtype of a comparison) rides the latter."""
+        cat = value.dtype if isinstance(value, pd.Categorical) else getattr(value, "_cat_dtype", None)
+        if cat is not None:
+            self._cat_meta = {**getattr(self, "_cat_meta", {}), key: cat}
+        d = cat if cat is not None else getattr(value, "_ext_dtype", None)
+        if d is not None:
+            self._to_pandas_ext_dtypes = {**getattr(self, "_to_pandas_ext_dtypes", {}), key: d}
+
     def __setitem__(self, key, value):
         fr = self._frame
-        # categorical VALUES: the category SET rides on the wrapper (Spark
-        # storage is plain string) so groupby(observed=False) can restore
-        # unobserved categories later
-        if isinstance(value, pd.Categorical):
-            self._cat_meta = {**getattr(self, "_cat_meta", {}), key: value.dtype}
-            self._to_pandas_ext_dtypes = {
-                **getattr(self, "_to_pandas_ext_dtypes", {}), key: value.dtype}
-        elif getattr(value, "_cat_dtype", None) is not None:
-            # mirror into BOTH stores: _cat_meta feeds groupby
-            # observed=False, _to_pandas_ext_dtypes feeds column extraction
-            # and to_pandas dtype restoration
-            self._cat_meta = {**getattr(self, "_cat_meta", {}), key: value._cat_dtype}
-            self._to_pandas_ext_dtypes = {
-                **getattr(self, "_to_pandas_ext_dtypes", {}), key: value._cat_dtype}
+        self._adopt_dtype(key, value)
         if isinstance(value, Series):
             if fr.can_rebase(value._frame, value._refs):
                 self._frame = fr.with_columns([key], [value._expr], refs=set(value._refs))
@@ -977,19 +1006,15 @@ class DataFrame:
                     e = F.least(e, _lit(upper))
                 exprs.append(F.when(c.isNull(), F.lit(None)).otherwise(e))
             return DataFrame(_frame=fr.project(pd.Index(cols), exprs))
-        if isinstance(lower, DataFrame) or isinstance(upper, DataFrame):
-            # frame bounds clip per cell by matching label — rides the
-            # ordinary binary alignment (label columns, lineage/label rows);
-            # a missing/NULL bound cell leaves the value untouched (pandas)
+        if isinstance(lower, (DataFrame, pd.DataFrame)) or isinstance(upper, (DataFrame, pd.DataFrame)):
+            # frame bounds clip per cell by matching label: Series.clip per
+            # column against the aligned bound cell, on this frame's rows and
+            # columns; a missing/NULL bound cell leaves the value untouched
             out = self
             if lower is not None:
-                out = out._binary_frame(
-                    lower, lambda a, b: F.when(a.isNull(), F.lit(None))
-                    .otherwise(F.greatest(a, F.coalesce(b, a))))
+                out = out._binary(lambda a, b: a.clip(lower=b), lower, how="left")
             if upper is not None:
-                out = out._binary_frame(
-                    upper, lambda a, b: F.when(a.isNull(), F.lit(None))
-                    .otherwise(F.least(a, F.coalesce(b, a))))
+                out = out._binary(lambda a, b: a.clip(upper=b), upper, how="left")
             return out
         fr = self._frame
         exprs = []
@@ -2138,9 +2163,10 @@ class DataFrame:
     aggregate = agg
 
     def describe(self, include=None, exclude=None, percentiles=None) -> pd.DataFrame:
-        """pandas describe: numeric stats by default; all-object frames (or
-        include='all'/'object') get count/unique/top/freq. One aggregate pass
-        for every column, plus one top-1 group count per object column."""
+        """pandas describe: numeric and datetime stats by default; all-object
+        frames (or include='all'/'object') get count/unique/top/freq. One
+        aggregate pass for every column, plus one top-1 group count per
+        object column."""
         nat = _native.maybe(self, "describe", include=include, exclude=exclude,
                             percentiles=percentiles, _raw=True)
         if nat is not None:
@@ -2148,20 +2174,22 @@ class DataFrame:
         fr = self._frame
         # pandas describes a bool column as an object: count/unique/top/freq
         num_pos = {i for i in self._numeric_positions() if fr.dtype_of(i) != "bool"}
-        want_obj = include in ("all", "object", object) or not num_pos
-        want_num = bool(num_pos) and include not in ("object", object)
-        cols = [(fr.scol(i), fr.spark_type_of(i), fr.columns[i], i in num_pos)
-                for i in range(len(fr.columns)) if (want_num if i in num_pos else want_obj)]
-        cols = {d.name: d for d in describe_columns(fr.sdf, cols, percentiles)}
-        out = pd.DataFrame(cols)
-        # pandas row order: count/unique/top/freq first, then numeric stats
-        # (percentile rows in ascending order, whatever set was requested)
-        pct_rows = sorted(
-            (r for r in out.index if isinstance(r, str) and r.endswith("%")),
-            key=lambda r: float(r[:-1]),
-        )
-        order = [r for r in (["count", "unique", "top", "freq", "mean", "std", "min"]
-                             + pct_rows + ["max"]) if r in out.index]
+        kinds = [describe_kind(fr.spark_type_of(i), i in num_pos) for i in range(len(fr.columns))]
+        if include in ("object", object):
+            want = {"object"}
+        elif include == "all" or not {"number", "datetime"} & set(kinds):
+            want = {"number", "datetime", "object"}
+        else:
+            want = {"number", "datetime"}
+        cols = [(fr.scol(i), fr.spark_type_of(i), fr.columns[i], k)
+                for i, k in enumerate(kinds) if k in want]
+        described = describe_columns(fr.sdf, cols, percentiles)
+        out = pd.DataFrame({d.name: d for d in described})
+        # pandas row order: the union of the stat rows, shortest family
+        # first (object, then datetime, then number)
+        order = []
+        for d in sorted(described, key=len):
+            order += [r for r in d.index if r not in order]
         return out.loc[order]
 
     def idxmax(self, axis=0, skipna=True, numeric_only=False) -> pd.Series:
@@ -2418,7 +2446,7 @@ class DataFrame:
             for j in range(k):
                 src = j - periods
                 if 0 <= src < k:
-                    exprs.append(DataFrame._true_div(filled(j), filled(src)) - 1)
+                    exprs.append(_true_div(filled(j), filled(src)) - 1)
                 else:
                     exprs.append(F.lit(None).cast("double"))
             return DataFrame(_frame=fr.project(list(fr.columns), exprs))
@@ -2866,331 +2894,81 @@ class DataFrame:
         return DataFrame(_frame=out)
 
     # ------------------------------------------------------- frame binaries
-    def _binary_frame(self, other, op, fill_value=None, axis=None):
-        """Element-wise frame op/frame (the reference's Binary template,
-        /root/reference/modin/core/dataframe/algebra/binary.py): align columns
-        by label, rows by lineage (same frame) or by global position.
-        A Series operand broadcasts along ``axis``: 0/'index' row-aligns it
-        against every column (same-lineage rebase); the default
-        'columns' matches its index against the column labels (the series'
-        k values are column metadata — collected driver-side)."""
+    def _binary(self, op, other, axis="columns", how: str = "full_outer") -> "DataFrame":
+        """Element-wise frame op (the reference's Binary template): the
+        operand is aligned once — columns by the sorted label union, rows by
+        lineage rebase or one ``compiler.align_frames`` join — then
+        ``op(column, cell)`` runs a Series operator on each column against its
+        aligned cell, so a frame op IS the Series op per column. A Series
+        operand broadcasts along ``axis``: 'index' row-aligns it against every
+        column; 'columns' matches its labels to the column labels (k values,
+        collected). A label on one side only pairs with an all-NULL cell.
+        ``how='left'`` keeps this frame's rows and columns (reindex_like)."""
+        from modin_spark.pandas.io import from_pandas
+
+        fr = self._frame
+        rows = axis in (0, "index")
         if isinstance(other, pd.DataFrame):
-            from modin_spark.pandas.io import from_pandas as _fp
-
-            other = _fp(other)
-        if isinstance(other, pd.Series):
-            if axis in (0, "index"):
-                from modin_spark.pandas.io import from_pandas as _fp
-
-                other = _fp(other.to_frame("__o__"))["__o__"]
-            else:
-                # raw pandas Series along columns: label -> scalar literals.
-                # pandas aligns on the OUTER (sorted) union of columns and
-                # series labels — series-only labels become all-NaN columns
-                fr = self._frame
-                by_label = dict(zip(other.index, other.values))
-                out_cols = list(pd.Index(fr.columns).union(other.index))
-                have = {lbl: i for i, lbl in enumerate(fr.columns)}
-                exprs = []
-                for lbl in out_cols:
-                    if lbl in have and lbl in by_label:
-                        exprs.append(op(fr.scol(have[lbl]), F.lit(by_label[lbl])))
-                    else:
-                        exprs.append(F.lit(None).cast("double"))
-                return DataFrame(_frame=fr.project(out_cols, exprs))
-        if isinstance(other, Series):
-            fr = self._frame
-            if axis in (0, "index"):
-                if not fr.can_rebase(other._frame, other._refs):
-                    # unrelated lineage: position-align via one concat_cols
-                    # join, then the op is an ordinary projection
-                    combined = qc.concat_cols([fr, other._to_frame("__o__")])
-                    n = len(fr.columns)
-                    exprs = [op(combined.scol(i), combined.scol(n)) for i in range(n)]
-                    return DataFrame(_frame=combined.project(list(fr.columns), exprs))
-                exprs = [op(fr.scol(i), other._expr) for i in range(len(fr.columns))]
-                return DataFrame(_frame=fr.project(list(fr.columns), exprs))
-            vals = other.to_pandas()
-            by_label = dict(zip(vals.index, vals.values))
-            out_cols = list(pd.Index(fr.columns).union(vals.index))
-            have = {lbl: i for i, lbl in enumerate(fr.columns)}
-            exprs = []
-            for lbl in out_cols:
-                if lbl in have and lbl in by_label:
-                    exprs.append(op(fr.scol(have[lbl]), F.lit(by_label[lbl])))
-                else:
-                    exprs.append(F.lit(None).cast("double"))  # unmatched -> NaN
-            return DataFrame(_frame=fr.project(out_cols, exprs))
-        if isinstance(other, (list, tuple, np.ndarray)) and np.ndim(other) == 1:
-            fr = self._frame
-            vals = [v for v in other]
-            if axis in (0, "index"):
-                # row-aligned sequence: zip by global position, one array
-                # literal lookup per column (operand is driver-provided)
-                pos_fr = fr.with_global_position("__bl__")
-                arr = F.array(*[F.lit(v) for v in vals])
-                be = F.element_at(arr, (F.col("__bl__") + 1).cast("int"))
-                exprs = [op(pos_fr.scol(i), be) for i in range(len(fr.columns))]
-                return DataFrame(_frame=pos_fr.project(list(fr.columns), exprs))
-            if len(vals) != len(fr.columns):
+            other = from_pandas(other)
+        elif isinstance(other, pd.Series) and rows:
+            other = Series._from_pandas(other)
+        elif isinstance(other, Series) and not rows:
+            other = other.to_pandas()
+        cols = fr.columns
+        base, cells = fr, None
+        if isinstance(other, DataFrame):
+            base = qc.align_frames(fr, other._frame, how)
+            cells = {}
+            for j, lbl in enumerate(other.columns):
+                cells.setdefault(lbl, other._series_at(len(fr.columns) + j, base))
+            if how != "left" and not cols.equals(other.columns):
+                cols = cols.union(other.columns, sort=None)
+        elif isinstance(other, Series):
+            cell = other
+            if not (fr._lid == other._frame._lid and fr.can_rebase(other._frame, other._refs)):
+                base = qc.align_frames(fr, other._to_frame("__o__"), how)
+                cell = Series(base, base.scol(-1), {base.data_cols[-1]})
+        elif isinstance(other, pd.Series):
+            cells = dict(other.items())
+            if how != "left" and not cols.equals(other.index):
+                cols = cols.union(other.index, sort=None)
+        elif isinstance(other, (list, tuple, np.ndarray)) and np.ndim(other) == 1:
+            vals = list(other)
+            if rows:
+                # positional: zip by global position, one array literal
+                # lookup (the operand is driver-provided)
+                pos = fresh_names(1)[0]
+                base = fr.with_global_position(pos)
+                arr = F.array(*[_lit(v) for v in vals])
+                cell = Series(base, F.element_at(arr, (F.col(pos) + 1).cast("int")), {pos})
+            elif len(vals) != len(fr.columns):
                 raise ValueError(
                     f"Unable to coerce to Series, length must be "
                     f"{len(fr.columns)}: given {len(vals)}")
-            exprs = [op(fr.scol(i), F.lit(v)) for i, v in enumerate(vals)]
-            return DataFrame(_frame=fr.project(list(fr.columns), exprs))
-        if not isinstance(other, DataFrame):
-            # scalar: apply to every numeric column (fill_value fills the
-            # frame's missing cells before the op, pandas flex semantics)
-            labels, exprs = [], []
-            fr = self._frame
-            for i in range(len(fr.columns)):
-                labels.append(fr.columns[i])
-                la = fr.scol(i)
-                if fill_value is not None:
-                    la = F.coalesce(la, F.lit(fill_value))
-                exprs.append(op(la, F.lit(other)))
-            return DataFrame(_frame=fr.project(labels, exprs))
-        a, b = self._frame, other._frame
-        # pandas frame/frame column alignment: the SORTED union of both
-        # column sets (Index.union), computed once for either lineage branch
-        union_labels = list(a.columns.union(b.columns, sort=None)) if not a.columns.equals(b.columns) else list(a.columns)
-        # rebase only when both frames cover the same rows in the same order
-        # (shared lineage id) — differing row sets/orders outer-align below
-        if a.can_rebase(b, set(b.data_cols)) and a._lid == b._lid:
-            pairs = {}
-            for j, lbl in enumerate(b.columns):
-                pairs.setdefault(lbl, j)
-            labels, exprs = [], []
-            for i, lbl in enumerate(a.columns):
-                labels.append(lbl)
-                j = pairs.get(lbl)
-                if j is None:
-                    # column absent from other: with fill_value pandas still
-                    # computes op(self, fill) cell-wise (NaN only where self
-                    # is also missing); without it the column is all-NaN
-                    la = a.scol(i)
-                    exprs.append(
-                        F.when(la.isNotNull(), op(la, F.lit(fill_value)))
-                        if fill_value is not None else F.lit(None)
-                    )
-                else:
-                    la, lb = a.scol(i), b.scol(j)
-                    if fill_value is not None:
-                        # pandas flex: one-sided missing fills; BOTH missing
-                        # stays missing
-                        e = F.when(la.isNull() & lb.isNull(), F.lit(None)).otherwise(
-                            op(F.coalesce(la, F.lit(fill_value)), F.coalesce(lb, F.lit(fill_value)))
-                        )
-                    else:
-                        e = op(la, lb)
-                    exprs.append(e)
-            apos = {lbl: i for i, lbl in enumerate(a.columns)}
-            for j, lbl in enumerate(b.columns):
-                if lbl in apos:
-                    continue
-                # other-only columns join the union result, same fill rule
-                labels.append(lbl)
-                lb = b.scol(j)
-                exprs.append(
-                    F.when(lb.isNotNull(), op(F.lit(fill_value), lb))
-                    if fill_value is not None else F.lit(None)
-                )
-            if list(labels) != union_labels:
-                order = {lbl: k for k, lbl in enumerate(labels)}
-                exprs = [exprs[order[lbl]] for lbl in union_labels]
-                labels = union_labels
-            return DataFrame(_frame=a.project(labels, exprs))
-        # unaligned lineage: pandas aligns frame operands on the INDEX —
-        # label-keyed full-outer join (default-index frames key on positional
-        # labels, same align_keyed_with scheme Series._combine uses); both
-        # sides shuffle once on the key
-        from modin_spark.core.frame import fresh_names as _fn
-
-        if a.index_cols or b.index_cols:
-            lf, lkey = a.ensure_order().align_keyed_with(b, "__ba__")
-            rf, rkey = b.ensure_order().align_keyed_with(a, "__bb__")
-            if len(lkey) != len(rkey):
-                raise NotImplementedError("frame binary with mismatched index depths")
-            ap = lf
-            bsel = rf.sdf.select(
-                *[F.col(k).alias(f"__rk{i}__") for i, k in enumerate(rkey)],
-                *[F.col(p).alias(f"__r_{jj}") for jj, p in enumerate(rf.data_cols)],
-            )
-            cond = None
-            for i, k in enumerate(lkey):
-                c = lf.sdf[k].eqNullSafe(bsel[f"__rk{i}__"])
-                cond = c if cond is None else (cond & c)
-            j = lf.sdf.join(bsel, cond, "full_outer")
-            keyout = _fn(len(lkey))
-            for i, (k, ko) in enumerate(zip(lkey, keyout)):
-                j = j.withColumn(ko, F.coalesce(F.col(k), F.col(f"__rk{i}__")))
-            j = j.drop(*[f"__rk{i}__" for i in range(len(rkey))])
-            j = j.orderBy(*[F.col(ko).asc_nulls_last() for ko in keyout]).withColumn(
-                ORDER_COL, F.monotonically_increasing_id())
-            idx_cols = keyout
-            idx_names = list(a.index_names) if a.index_cols else list(b.index_names)
-        else:
-            # both default-index: join on the pandas POSITIONAL LABELS
-            # (gap-preserving through filters), result ordered/indexed by the
-            # sorted label union like pandas
-            ap = a.with_pandas_labels("__ba__")
-            bp = b.with_pandas_labels("__bb__")
-            bsel = bp.sdf.select(F.col("__bb__"), *[F.col(p).alias(f"__r_{jj}") for jj, p in enumerate(bp.data_cols)])
-            j = ap.sdf.join(bsel, ap.sdf["__ba__"] == bsel["__bb__"], "full_outer")
-            ko = _fn(1)[0]
-            j = j.withColumn(ko, F.coalesce(F.col("__ba__"), F.col("__bb__")))
-            j = j.orderBy(F.col(ko).asc_nulls_last()).withColumn(
-                ORDER_COL, F.monotonically_increasing_id())
-            idx_cols, idx_names = [ko], [None]
-        apos = {}
-        for i, lbl in enumerate(a.columns):
-            apos.setdefault(lbl, i)
-        pairs = {}
-        for jj, lbl in enumerate(b.columns):
-            pairs.setdefault(lbl, jj)
-        labels, exprs = [], []
-        for lbl in union_labels:
-            labels.append(lbl)
-            i, jj = apos.get(lbl), pairs.get(lbl)
-            la = F.col(ap.data_cols[i]) if i is not None else None
-            lb = F.col(f"__r_{jj}") if jj is not None else None
-            if la is None or lb is None:
-                present = la if la is not None else lb
-                swapped = la is None  # other-only column: op(fill, other)
-                if fill_value is not None:
-                    e = F.when(present.isNotNull(),
-                               op(F.lit(fill_value), present) if swapped
-                               else op(present, F.lit(fill_value)))
-                else:
-                    e = F.lit(None)
-            elif fill_value is not None:
-                e = F.when(la.isNull() & lb.isNull(), F.lit(None)).otherwise(
-                    op(F.coalesce(la, F.lit(fill_value)), F.coalesce(lb, F.lit(fill_value)))
-                )
             else:
-                e = op(la, lb)
-            exprs.append(e)
-        fr = SparkFrame(j, a.columns, ap.data_cols, idx_cols, idx_names)
-        return DataFrame(_frame=fr.project(labels, exprs))
-
-    def add(self, other, axis="columns", fill_value=None):
-        return self._binary_frame(other, lambda a, b: a + b, fill_value, axis=axis)
-
-    def sub(self, other, axis="columns", fill_value=None):
-        return self._binary_frame(other, lambda a, b: a - b, fill_value, axis=axis)
-
-    def mul(self, other, axis="columns", fill_value=None):
-        return self._binary_frame(other, lambda a, b: a * b, fill_value, axis=axis)
-
-    multiply = mul
-    subtract = sub
-
-    @staticmethod
-    def _true_div(a, b):
-        # pandas semantics: x/0 -> signed inf, 0/0 -> NaN. 0/0 lands as NULL
-        # (the engine's missing encoding — Spark NaN is an ordinary value
-        # that would corrupt downstream isna/mean/groupby); the guard also
-        # catches inf/inf.
-        q = a.cast("double") / b
-        return F.when(
-            b.cast("double") == 0,
-            F.when(a.cast("double") == 0, F.lit(None).cast("double"))
-             .otherwise(F.lit(float("inf")) * F.signum(a)),
-        ).otherwise(_nan_to_null(q))
-
-    def div(self, other, axis="columns", fill_value=None):
-        return self._binary_frame(other, lambda a, b: DataFrame._true_div(a, b), fill_value, axis=axis)
-
-    truediv = div
-    divide = div
-
-    def floordiv(self, other, axis="columns", fill_value=None):
-        # pandas: x // 0 -> signed inf (float result), like truediv;
-        # int columns // a nonzero int scalar keep int64 (exact, r8)
-        from modin_spark.pandas.series import _is_nonzero_int_scalar, _int_floor_div
-
-        if _is_nonzero_int_scalar(other):
-            fr = self._frame
-            sdts = dict(fr.sdf.dtypes)
-            exprs = []
-            for i in range(len(fr.columns)):
-                la = fr.scol(i)
-                if fill_value is not None:
-                    la = F.coalesce(la, F.lit(fill_value))
-                t = sdts.get(fr.data_cols[i], "")
-                if t in ("tinyint", "smallint", "int", "bigint"):
-                    exprs.append(_int_floor_div(la, F.lit(other)))
-                else:
-                    exprs.append(
-                        F.floor(la.cast("double") / F.lit(other)).cast("double")
-                    )
-            return DataFrame(_frame=fr.project(list(fr.columns), exprs))
-        return self._binary_frame(
-            other,
-            lambda a, b: F.when(b.cast("double") == 0, DataFrame._true_div(a, b))
-            .otherwise(F.floor(a.cast("double") / b).cast("double")),
-            fill_value,
-            axis=axis,
-        )
-
-    def mod(self, other, axis="columns", fill_value=None):
-        from modin_spark.pandas.series import _nan_to_null
-
-        return self._binary_frame(other, lambda a, b: _nan_to_null(F.pmod(a, b)), fill_value, axis=axis)
-
-    def pow(self, other, axis="columns", fill_value=None):
-        from modin_spark.pandas.series import _nan_to_null
-
-        return self._binary_frame(other, lambda a, b: _nan_to_null(F.pow(a, b)), fill_value, axis=axis)
-
-    # reversed flex variants (pandas rop(other) == op with operands swapped)
-    def radd(self, other, axis="columns", fill_value=None):
-        return self._binary_frame(other, lambda a, b: b + a, fill_value, axis=axis)
-
-    def rsub(self, other, axis="columns", fill_value=None):
-        return self._binary_frame(other, lambda a, b: b - a, fill_value, axis=axis)
-
-    def rmul(self, other, axis="columns", fill_value=None):
-        return self._binary_frame(other, lambda a, b: b * a, fill_value, axis=axis)
-
-    def rtruediv(self, other, axis="columns", fill_value=None):
-        return self._binary_frame(other, lambda a, b: DataFrame._true_div(b, a), fill_value, axis=axis)
-
-    rdiv = rtruediv
-
-    def rfloordiv(self, other, axis="columns", fill_value=None):
-        return self._binary_frame(
-            other,
-            lambda a, b: F.when(a.cast("double") == 0, DataFrame._true_div(b, a))
-            .otherwise(F.floor(b.cast("double") / a).cast("double")),
-            fill_value,
-            axis=axis,
-        )
-
-    def rmod(self, other, axis="columns", fill_value=None):
-        from modin_spark.pandas.series import _nan_to_null
-
-        return self._binary_frame(other, lambda a, b: _nan_to_null(F.pmod(b, a)), fill_value, axis=axis)
-
-    def rpow(self, other, axis="columns", fill_value=None):
-        from modin_spark.pandas.series import _nan_to_null
-
-        return self._binary_frame(other, lambda a, b: _nan_to_null(F.pow(b, a)), fill_value, axis=axis)
-
-    __add__ = add
-    __sub__ = sub
-    __mul__ = mul
-    __truediv__ = div
-    __floordiv__ = floordiv
-    __mod__ = mod
-    __pow__ = pow
-    __radd__ = radd
-    __rsub__ = rsub
-    __rmul__ = rmul
-    __rtruediv__ = rtruediv
-    __rfloordiv__ = rfloordiv
-    __rmod__ = rmod
-    __rpow__ = rpow
+                cells = vals
+        else:
+            cell = other
+        missing = Series(base, F.lit(None), set())
+        first = {}
+        for i, lbl in enumerate(fr.columns):
+            first.setdefault(lbl, i)
+        same = cols is fr.columns
+        results = []
+        for k, lbl in enumerate(cols):
+            i = k if same else first.get(lbl)
+            a = self._series_at(i, base) if i is not None else missing
+            if isinstance(cells, dict):
+                b = cells.get(lbl, missing)
+            else:
+                b = cells[k] if cells is not None else cell
+            results.append(op(a, b))
+        nf = base.project(cols, [r._expr for r in results])
+        nf.columns = cols  # project rebuilds a label list; keep the Index
+        out = DataFrame(_frame=nf)
+        for lbl, r in zip(cols, results):
+            out._adopt_dtype(lbl, r)
+        return out
 
     # --------------------------------------------------------- conveniences
     def pipe(self, func, *args, **kwargs):
@@ -3381,18 +3159,9 @@ class DataFrame:
         """Boolean frame: membership per cell (list), per column (dict), or
         CELL-WISE equality against an aligned frame/Series operand (pandas:
         same label = same cell; unmatched labels are False)."""
-        if isinstance(values, pd.DataFrame):
-            from modin_spark.pandas.io import from_pandas as _fp
-
-            values = _fp(values)
-        if isinstance(values, DataFrame):
-            eq = self._binary_frame(values, lambda a, b: a.eqNullSafe(b))
-            fr = eq._frame
-            keep = [i for i, lbl in enumerate(fr.columns) if lbl in set(self.columns)]
-            sub = fr.select_positions(keep)
-            exprs = [F.coalesce(sub.scol(i).cast("boolean"), F.lit(False))
-                     for i in range(len(sub.columns))]
-            return DataFrame(_frame=sub.project(list(sub.columns), exprs))
+        if isinstance(values, (DataFrame, pd.DataFrame)):
+            # pandas: self.eq(values.reindex_like(self))
+            return self._binary(lambda a, b: a.eq(b), values, how="left")
         fr = self._frame
         labels, exprs = [], []
         for i, lbl in enumerate(fr.columns):
@@ -4581,25 +4350,30 @@ class DataFrame:
         return res
 
     # ----------------------------------------------------------- API tail
-    # Comparison methods (reference qc binary family, query_compiler.py:535-619)
-    # pandas comparison semantics: NaN compares False (ne: True), never null
-    def eq(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: F.coalesce(a == b, F.lit(False)), fill_value)
-
-    def ne(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: F.coalesce(a != b, F.lit(True)), fill_value)
-
-    def gt(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: F.coalesce(a > b, F.lit(False)), fill_value)
-
-    def ge(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: F.coalesce(a >= b, F.lit(False)), fill_value)
-
-    def lt(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: F.coalesce(a < b, F.lit(False)), fill_value)
-
-    def le(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: F.coalesce(a <= b, F.lit(False)), fill_value)
+    # Binary operators: each runs the same-named Series operator per column
+    # (``_binary``); the flex methods take pandas' axis and fill_value.
+    add = _flex("add")
+    sub = subtract = _flex("sub")
+    mul = multiply = _flex("mul")
+    truediv = div = divide = _flex("truediv")
+    floordiv = _flex("floordiv")
+    mod = _flex("mod")
+    pow = _flex("pow")
+    radd = _flex("radd")
+    rsub = _flex("rsub")
+    rmul = _flex("rmul")
+    rtruediv = rdiv = _flex("rtruediv")
+    rfloordiv = _flex("rfloordiv")
+    rmod = _flex("rmod")
+    rpow = _flex("rpow")
+    # flex comparisons align on labels (pandas: only the operators raise
+    # on differently-labeled operands)
+    eq = _flex("eq")
+    ne = _flex("ne")
+    lt = _flex("lt")
+    le = _flex("le")
+    gt = _flex("gt")
+    ge = _flex("ge")
 
     # comparison DUNDERS: pandas raises on differently-labeled frames
     # (only the flex methods align). Enforced where cheap — both operands
@@ -4622,61 +4396,33 @@ class DataFrame:
                     "Can only compare identically-labeled (both index and "
                     "columns) DataFrame objects")
 
-    def __eq__(self, other):  # type: ignore[override]
-        self._cmp_label_check(other)
-        return self.eq(other)
-
-    def __ne__(self, other):  # type: ignore[override]
-        self._cmp_label_check(other)
-        return self.ne(other)
-
-    def __gt__(self, other):
-        self._cmp_label_check(other)
-        return self.gt(other)
-
-    def __ge__(self, other):
-        self._cmp_label_check(other)
-        return self.ge(other)
-
-    def __lt__(self, other):
-        self._cmp_label_check(other)
-        return self.lt(other)
-
-    def __le__(self, other):
-        self._cmp_label_check(other)
-        return self.le(other)
-
+    __eq__ = _operator("__eq__", compare=True)  # type: ignore[assignment]
+    __ne__ = _operator("__ne__", compare=True)  # type: ignore[assignment]
+    __lt__ = _operator("__lt__", compare=True)
+    __le__ = _operator("__le__", compare=True)
+    __gt__ = _operator("__gt__", compare=True)
+    __ge__ = _operator("__ge__", compare=True)
     __hash__ = None  # type: ignore[assignment]
-
-    # reversed arithmetic (r-variants)
-    def radd(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: b + a, fill_value)
-
-    def rsub(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: b - a, fill_value)
-
-    def rmul(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: b * a, fill_value)
-
-    def rtruediv(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: DataFrame._true_div(b, a), fill_value)
-
-    rdiv = rtruediv
-
-    def rfloordiv(self, other, fill_value=None):
-        # pandas: x // 0 -> signed inf (float result), like truediv
-        return self._binary_frame(
-            other,
-            lambda a, b: F.when(a.cast("double") == 0, DataFrame._true_div(b, a))
-            .otherwise(F.floor(b.cast("double") / a).cast("double")),
-            fill_value,
-        )
-
-    def rmod(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: F.pmod(b, a), fill_value)
-
-    def rpow(self, other, fill_value=None):
-        return self._binary_frame(other, lambda a, b: F.pow(b, a), fill_value)
+    __add__ = _operator("__add__")
+    __sub__ = _operator("__sub__")
+    __mul__ = _operator("__mul__")
+    __truediv__ = _operator("__truediv__")
+    __floordiv__ = _operator("__floordiv__")
+    __mod__ = _operator("__mod__")
+    __pow__ = _operator("__pow__")
+    __radd__ = _operator("__radd__")
+    __rsub__ = _operator("__rsub__")
+    __rmul__ = _operator("__rmul__")
+    __rtruediv__ = _operator("__rtruediv__")
+    __rfloordiv__ = _operator("__rfloordiv__")
+    __rmod__ = _operator("__rmod__")
+    __rpow__ = _operator("__rpow__")
+    __and__ = _operator("__and__")
+    __or__ = _operator("__or__")
+    __xor__ = _operator("__xor__")
+    __rand__ = _operator("__rand__")
+    __ror__ = _operator("__ror__")
+    __rxor__ = _operator("__rxor__")
 
     def __neg__(self) -> "DataFrame":
         fr = self._frame
@@ -5197,10 +4943,10 @@ class DataFrame:
             return Series._from_pandas(pd.Series(
                 [row[f"c{i}"] for i in pos], index=[self.columns[i] for i in pos]))
         shared = [c for c in self.columns if c in set(other.columns)]
-        prod = self[shared]._binary_frame(other[shared], lambda a, b: F.struct(a.alias("a"), b.alias("b")))
-        fr = prod._frame
-        aggs = [F.corr(fr.scol(i)["a"].cast("double"), fr.scol(i)["b"].cast("double")).alias(f"c{i}")
-                for i in range(len(shared))]
+        n = len(shared)
+        fr = qc.align_frames(self[shared]._frame, other[shared]._frame)
+        aggs = [F.corr(fr.scol(i).cast("double"), fr.scol(n + i).cast("double")).alias(f"c{i}")
+                for i in range(n)]
         row = fr.sdf.agg(*aggs).collect()[0]
         return Series._from_pandas(pd.Series([row[f"c{i}"] for i in range(len(shared))], index=shared))
 

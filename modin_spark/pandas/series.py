@@ -50,7 +50,11 @@ def _nan_to_null(e: Column) -> Column:
 
 
 def _pmod(a: Column, b: Column) -> Column:
-    return ((a % b) + b) % b
+    """numpy floor-mod: the remainder takes the divisor's sign. Spark's %
+    keeps the dividend's, so a remainder of the other sign moves by one
+    divisor (-3 % inf is inf, 3 % inf is 3); a zero remainder is +0."""
+    r = a % b
+    return F.when(r == 0, F.abs(r)).when((r < 0) != (b < 0), r + b).otherwise(r)
 
 
 # types through which the computed-NaN guard is safe AND useful: numeric
@@ -96,6 +100,12 @@ def _interval_micros(c: Column) -> Column:
     return F.unix_micros(F.to_timestamp(F.lit("1970-01-01")) + c)
 
 
+def _pow(a: Column, b: Column) -> Column:
+    """numpy power: x ** 0 and 1 ** y are 1 even when the other operand is
+    missing (NaN); a computed NaN (negative ** fraction) is missing."""
+    return F.when((b == 0) | (a == 1), F.lit(1.0)).otherwise(_nan_to_null(F.pow(a, b)))
+
+
 def _true_div(a: Column, b: Column) -> Column:
     # pandas semantics: x/0 -> signed inf, 0/0 -> NaN (Spark yields NULL).
     # 0/0 lands as NULL (the engine's missing encoding, == pandas NaN after
@@ -109,13 +119,16 @@ def _true_div(a: Column, b: Column) -> Column:
 
 
 def _floor_div(a: Column, b: Column) -> Column:
-    # pandas: x // 0 -> signed inf (float result), 0 // 0 -> NaN; an
-    # INFINITE dividend floors to NaN (numpy floor_divide).  The floor is
-    # computed as q - pmod(q, 1) entirely in the double domain — Spark's
-    # FLOOR returns a LONG, which overflows to Long.MaxValue on infinity.
-    q = a.cast("double") / b.cast("double")
-    fl = q - F.pmod(q, F.lit(1.0))
-    return F.when(b.cast("double") == 0, _true_div(a, b)).otherwise(_nan_to_null(fl))
+    """numpy floor_divide in the double domain: x // 0 is a signed inf and
+    0 // 0 NaN (as truediv); an infinite dividend gives NaN, an infinite
+    divisor -1 or 0 by sign (-3 // inf is -1). The quotient is (a - r) / b
+    with the truncated remainder r, one lower where r's sign differs from
+    b's, rounded to the nearest integer against float error; Spark's FLOOR
+    would return a LONG, which overflows on infinity."""
+    a, b = a.cast("double"), b.cast("double")
+    r = a % b
+    q = (a - r) / b - F.when((r != 0) & ((r < 0) != (b < 0)), 1).otherwise(0)
+    return F.when(b == 0, _true_div(a, b)).otherwise(_nan_to_null(F.rint(q)))
 
 
 def _int_floor_div(a: Column, b: Column) -> Column:
@@ -472,62 +485,10 @@ class Series:
             pdf["__r__"] = ra.values
             fr = SparkFrame.from_pandas(pdf)
             return fr, fr.scol(0), fr.scol(1), set(fr.data_cols)
-        # alignment join (pandas semantics: align on index; default index ->
-        # contiguous global position — raw ORDER_COL is not cross-frame comparable)
-        from modin_spark.core.frame import fresh_names as _fnames
-
-        lf0 = self._to_frame("__l__").ensure_order()
-        rf0 = other._to_frame("__r__").ensure_order()
-        # default-index frames: the TRUE pandas labels must survive the join
-        # (the alignment key may be a raw ORDER/position that the result's
-        # fresh ORDER would orphan — permuted labels after sorts, gaps after
-        # filters, would otherwise silently renumber)
-        lab_l = lab_r = None
-        if not lf0.index_cols and not rf0.index_cols:
-            lab_l, lab_r = _fnames(2)
-            lf0 = lf0.with_pandas_labels(lab_l)
-            rf0 = rf0.with_pandas_labels(lab_r)
-        if lab_l is not None and (lf0.order_epoch is None
-                                  or lf0.order_epoch != rf0.order_epoch):
-            # DIFFERENT derivations: raw ORDER/positions are not label-true
-            # (permuted after sorts, gappy after filters) — join on the
-            # pandas labels themselves
-            lf, lkey = lf0, [lab_l]
-            rf, rkey = rf0, [lab_r]
-        else:
-            lf, lkey = lf0.align_keyed_with(rf0, "__alp__")
-            rf, rkey = rf0.align_keyed_with(lf0, "__arp__")
-        rsdf = rf.sdf.select(
-            *[F.col(k).alias(f"__rk{i}__") for i, k in enumerate(rkey)],
-            rf.data_cols[0],
-            *([F.col(lab_r)] if lab_r is not None else []),
-        )
-        cond = None
-        for i, k in enumerate(lkey):
-            c = lf.sdf[k].eqNullSafe(rsdf[f"__rk{i}__"])
-            cond = c if cond is None else (cond & c)
-        # pandas OUTER-aligns binary operands: the result carries the union
-        # of both indexes (missing side -> NaN), ordered as the sorted union
-        # (pandas keeps the original order only for already-equal indexes —
-        # those are usually sorted anyway; divergence documented).
-        # how='left' is a lookup: self's rows and order, unchanged.
-        joined = lf.sdf.join(rsdf, cond, how)
-        if how != "left":
-            for i, k in enumerate(lkey):
-                joined = joined.withColumn(k, F.coalesce(F.col(k), F.col(f"__rk{i}__")))
-        if lab_l is not None:
-            joined = joined.withColumn(lab_l, F.coalesce(F.col(lab_l), F.col(lab_r)))
-        joined = joined.drop(*[f"__rk{i}__" for i in range(len(rkey))])
-        if how != "left":
-            sort_keys = [F.col(k).asc_nulls_last() for k in lkey] + [F.col(ORDER_COL).asc_nulls_first()]
-            joined = joined.orderBy(*sort_keys).withColumn(ORDER_COL, F.monotonically_increasing_id())
-        if "__alp__" in joined.columns:
-            joined = joined.drop("__alp__")
-        fr = SparkFrame(joined, lf.columns, lf.data_cols, lf.index_cols, lf.index_names)
-        if lab_l is not None:
-            fr.labels_col = lab_l
-            fr.order_is_position = False
-        return fr, F.col(lf.data_cols[0]), F.col(rf.data_cols[0]), {lf.data_cols[0], rf.data_cols[0]}
+        # one alignment join of the two one-column frames (pandas aligns
+        # binary operands on the index)
+        fr = qc.align_frames(self._to_frame("__l__"), other._to_frame("__r__"), how)
+        return fr, fr.scol(0), fr.scol(1), set(fr.data_cols)
 
     def _cmp_scalar_kind_guard(self, o, fn, op=None):
         """pandas scalar-comparison type rules: a numeric/bool series
@@ -661,7 +622,9 @@ class Series:
     def _plus_fn(self, o):
         """``+`` on STRING series is pandas concatenation (null-propagating),
         not arithmetic — Spark's numeric ``+`` would null every row."""
-        if (isinstance(o, str) or isinstance(o, Series)) and isinstance(
+        import numpy as _np
+
+        if isinstance(o, (str, Series, list, tuple, _np.ndarray)) and isinstance(
                 self.spark_type, T.StringType):
             return lambda a, b: F.concat(a, b)
         return lambda a, b: a + b
@@ -834,6 +797,9 @@ class Series:
     def __floordiv__(self, o):
         return self._binary(o, self._floordiv_op(o))
 
+    def __rfloordiv__(self, o):
+        return self._binary(o, _floor_div, reverse=True)
+
     def _floordiv_op(self, o):
         """int series // nonzero int scalar keeps int64 (pandas); any zero
         divisor, float operand, or series divisor (data-dependent dtype in
@@ -849,10 +815,10 @@ class Series:
         return self._binary(o, self._arith_fn(o, _pmod), reverse=True)
 
     def __pow__(self, o):
-        return self._binary(o, lambda a, b: _nan_to_null(F.pow(a, b)))
+        return self._binary(o, _pow)
 
     def __rpow__(self, o):
-        return self._binary(o, lambda a, b: _nan_to_null(F.pow(a, b)), reverse=True)
+        return self._binary(o, _pow, reverse=True)
 
     def add(self, other, level=None, fill_value=None, axis=0):
         return self._flex(other, self._arith_fn(other, self._plus_fn(other)), fill_value=fill_value)
@@ -886,7 +852,7 @@ class Series:
         return o // self, o % self
 
     def pow(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, lambda a, b: _nan_to_null(F.pow(a, b)), fill_value=fill_value)
+        return self._flex(other, _pow, fill_value=fill_value)
 
     def radd(self, other, level=None, fill_value=None, axis=0):
         return self._flex(other, self._arith_fn(other, self._plus_fn(other)), reverse=True, fill_value=fill_value)
@@ -901,7 +867,7 @@ class Series:
         return self._flex(other, self._arith_fn(other, _pmod), reverse=True, fill_value=fill_value)
 
     def rpow(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, lambda a, b: _nan_to_null(F.pow(a, b)), reverse=True, fill_value=fill_value)
+        return self._flex(other, _pow, reverse=True, fill_value=fill_value)
 
     def __eq__(self, o):  # type: ignore[override]
         return self._binary(o, lambda a, b: a == b, comparison=True, strict=True, op="eq")
@@ -963,6 +929,10 @@ class Series:
 
     def __xor__(self, o):
         return self._binary(o, lambda a, b: F.coalesce(a, F.lit(False)) != F.coalesce(b, F.lit(False)))
+
+    __rand__ = __and__
+    __ror__ = __or__
+    __rxor__ = __xor__
 
     def __invert__(self):
         sj = getattr(self, "_semijoin", None)
@@ -1429,7 +1399,8 @@ class Series:
         nat = _native.maybe_series(self, "describe", percentiles=percentiles, _raw=True)
         if nat is not None:
             return nat
-        col = (self._expr, self.spark_type, self._name, self.dtype.kind not in "OUSb")
+        kind = describe_kind(self.spark_type, self.dtype.kind not in "OUSb")
+        col = (self._expr, self.spark_type, self._name, kind)
         return describe_columns(self._frame.sdf, [col], percentiles)[0]
 
     def idxmax(self, skipna: bool = True):
@@ -1886,31 +1857,64 @@ def _native_reduce(ps: pd.Series, name: str, skipna: bool = True, **kw):
     return getattr(ps, name)(skipna=skipna, **kw2)
 
 
+def describe_kind(spark_type: T.DataType, numeric: bool) -> str:
+    """pandas describe's statistics family for a column: ``datetime``,
+    ``number`` or ``object`` (strings and bools)."""
+    if isinstance(spark_type, (T.TimestampType, T.TimestampNTZType)):
+        return "datetime"
+    return "number" if numeric else "object"
+
+
 def describe_columns(sdf, cols, percentiles=None) -> list[pd.Series]:
-    """pandas describe of each ``(column, spark_type, name, numeric)`` of
-    ``sdf``, all in one aggregate pass: count/mean/std/min/percentiles/max
-    of a number, count/unique of an object, whose top/freq is one more top-1
-    group count."""
+    """pandas describe of each ``(column, spark_type, name, kind)`` of
+    ``sdf`` (``kind`` from describe_kind), all in one aggregate pass:
+    count/mean/std/min/percentiles/max of a number, the same without std of
+    a datetime (mean and percentiles over its epoch microseconds),
+    count/unique of an object, whose top/freq is one more top-1 group
+    count."""
     # pandas: percentiles= replaces the quartiles; the median is always
     # included (pandas inserts 0.5 if missing)
     ps = sorted(set(list(percentiles) + [0.5])) if percentiles is not None else [0.25, 0.5, 0.75]
-    num = [("count", {}), ("mean", {}), ("std", {}), ("min", {}), ("quantile", {"q": ps}), ("max", {})]
-    obj = [("count", {}), ("nunique", {})]
-    vals = iter(qc.reduce_columns(sdf, [(c, name, t, kw) for c, t, _, numeric in cols
-                                        for name, kw in (num if numeric else obj)]))
+    pct = [f"{p * 100:g}%" for p in ps]
+    stats = {
+        "number": [("count", {}), ("mean", {}), ("std", {}), ("min", {}), ("quantile", {"q": ps}),
+                   ("max", {})],
+        "datetime": [("count", {}), ("mean", {}), ("min", {}), ("quantile", {"q": ps}), ("max", {})],
+        "object": [("count", {}), ("nunique", {})],
+    }
+    rows = {"number": ["count", "mean", "std", "min", *pct, "max"],
+            "datetime": ["count", "mean", "min", *pct, "max"]}
+
+    def spec(c, t, kind, name, kw):
+        if kind == "datetime" and name in ("mean", "quantile"):
+            return F.unix_micros(c.cast("timestamp")), name, T.LongType(), kw
+        return c, name, t, kw
+
+    vals = iter(qc.reduce_columns(sdf, [spec(c, t, kind, name, kw) for c, t, _, kind in cols
+                                        for name, kw in stats[kind]]))
     out = []
-    for c, _t, label, numeric in cols:
-        if numeric:
-            n, mean, std, lo, qv, hi = (next(vals) for _ in num)
-            out.append(pd.Series([n, mean, std, lo, *qv, hi], name=label, index=[
-                "count", "mean", "std", "min", *[f"{p * 100:g}%" for p in ps], "max"]))
+    for c, _t, label, kind in cols:
+        got = [next(vals) for _ in stats[kind]]
+        if kind == "object":
+            top = (sdf.where(c.isNotNull()).groupBy(c.alias("v")).count()
+                   .orderBy(F.col("count").desc(), F.col("v")).limit(1).collect())
+            top, freq = (top[0]["v"], top[0]["count"]) if top else (None, None)
+            out.append(pd.Series([*got, top, freq], index=["count", "unique", "top", "freq"], name=label))
             continue
-        n, u = next(vals), next(vals)
-        top = (sdf.where(c.isNotNull()).groupBy(c.alias("v")).count()
-               .orderBy(F.col("count").desc(), F.col("v")).limit(1).collect())
-        top, freq = (top[0]["v"], top[0]["count"]) if top else (None, None)
-        out.append(pd.Series([n, u, top, freq], index=["count", "unique", "top", "freq"], name=label))
+        n, *mid, qv, hi = got
+        if kind == "datetime":  # mean and percentiles came back in µs
+            mid = [_stamp(mid[0], 1000), _stamp(mid[1])]
+            qv, hi = [_stamp(v, 1000) for v in qv], _stamp(hi)
+        out.append(pd.Series([n, *mid, *qv, hi], name=label, index=rows[kind]))
     return out
+
+
+def _stamp(v, ns_per_unit=None):
+    """A collected datetime statistic as a pd.Timestamp (NaT if missing);
+    ``ns_per_unit`` scales a number of epoch units to nanoseconds."""
+    if v is None or v != v:
+        return pd.NaT
+    return pd.Timestamp(round(v * ns_per_unit)) if ns_per_unit else pd.Timestamp(v)
 
 
 def _re_escape(sep: str) -> str:
@@ -2527,9 +2531,6 @@ class CategoricalMethods:
         keep = list(new_categories)
         out = Series(s._frame, F.when(s._expr.isin(keep), s._expr), s._refs, s._name)
         return self._with_dtype(out, pd.CategoricalDtype(keep, ordered=ordered))
-
-    def reorder_categories(self, new_categories, ordered=False) -> Series:
-        return self.set_categories(new_categories, ordered)
 
 
 def _ser_sample(self, n=None, frac=None, replace=False, random_state=None,

@@ -238,6 +238,25 @@ def test_std_of_datetimes(frames):
     _check_timedelta(got["t"], exp["t"])
 
 
+def test_describe_datetimes(frames):
+    """pandas 2.2 describes a datetime column with count, mean, min,
+    percentiles and max (a NaN std beside numbers), in the same pass. The
+    timestamps compare at the microsecond: pandas' mean sums nanoseconds in
+    float64 and lands a few hundred ns off."""
+    pdf, mdf = frames
+
+    def us(d):
+        return d.map(lambda v: v.round("us") if isinstance(v, pd.Timestamp) else v)
+
+    for cols in (["x", "t"], ["t"], ["k", "t"], ["k", "x", "z", "i", "b", "t"]):
+        for kw in ({}, {"include": "all"}, {"percentiles": [0.1, 0.9]}):
+            got, exp = mdf[cols].describe(**kw), pdf[cols].describe(**kw)
+            assert list(got.index) == list(exp.index), (cols, kw)
+            pd.testing.assert_frame_equal(us(got), us(exp), check_dtype=False)
+    pd.testing.assert_series_equal(us(mdf["t"].describe()), us(pdf["t"].describe()),
+                                   check_dtype=False)
+
+
 @pytest.fixture(scope="module")
 def tracer(spark):
     from perfbench.tracing import Tracer
