@@ -1125,8 +1125,22 @@ def align_frames(left: SparkFrame, right: SparkFrame, how: str = "full_outer") -
     NULL), ordered by the sorted union. ``how='left'`` is a lookup: left's
     rows and order."""
     columns = pd.Index(list(left.columns) + list(right.columns))
-    if left._lid == right._lid and left.can_rebase(right, set(right.data_cols)):
-        return left._same_rows(left.sdf, columns=columns, data_cols=left.data_cols + right.data_cols)
+    if left._lid == right._lid:
+        data_cols = left.data_cols + right.data_cols
+        if left.can_rebase(right, set(right.data_cols)):
+            return left._same_rows(left.sdf, columns=columns, data_cols=data_cols)
+        if right.can_rebase(left, left._available_cols()):
+            # right was derived from left (``df.where(df > 0)``): its plan
+            # still carries every column of left's
+            return right._same_rows(right.sdf, columns=columns, data_cols=data_cols,
+                                    index_cols=left.index_cols, index_names=left.index_names)
+        if right._projection is not None:
+            src, pairs = right._projection
+            if left.can_rebase(src, src._available_cols()):
+                # right is one projection of a frame whose columns left's plan
+                # carries (``df.where(df > 0, -df)``): replay it there
+                sdf = left.sdf.select("*", *[e.alias(p) for p, e in pairs])
+                return left._same_rows(sdf, columns=columns, data_cols=data_cols)
     lf, rf = left.ensure_order(), right.ensure_order()
     lab_l = lab_r = None
     if not lf.index_cols and not rf.index_cols:
@@ -1241,8 +1255,7 @@ def duplicated(frame: SparkFrame, subset_positions: Sequence[int] | None, keep: 
 def dropna(frame: SparkFrame, how: str = "any", thresh: int | None = None, subset_positions: Sequence[int] | None = None) -> SparkFrame:
     positions = subset_positions if subset_positions is not None else range(len(frame.columns))
     cols = [frame.scol(i) for i in positions]
-    checks = [c.isNull() | (F.isnan(c) if isinstance(frame.spark_type_of(i), _FLOATING) else F.lit(False))
-              for i, c in zip(positions, cols)]
+    checks = [null_or_nan(c, frame.spark_type_of(i)) for i, c in zip(positions, cols)]
     nonnull = sum((F.when(~chk, 1).otherwise(0) for chk in checks), F.lit(0))
     if thresh is not None:
         cond = nonnull >= thresh
@@ -1258,22 +1271,8 @@ from pyspark.sql import types as _T
 _FLOATING = (_T.FloatType, _T.DoubleType)
 
 
-def _null_or_nan(c: Column, spark_type) -> Column:
+def null_or_nan(c: Column, spark_type) -> Column:
+    """pandas' missing test for one column: NULL, or NaN for a float type."""
     if isinstance(spark_type, _FLOATING):
         return c.isNull() | F.isnan(c)
     return c.isNull()
-
-
-def fillna_value(frame: SparkFrame, value, positions: Sequence[int] | None = None) -> SparkFrame:
-    positions = positions if positions is not None else range(len(frame.columns))
-    labels, exprs = [], []
-    for i in positions:
-        c = frame.scol(i)
-        v = value.get(frame.columns[i], None) if isinstance(value, dict) else value
-        if v is None:
-            e = c
-        else:
-            e = F.when(_null_or_nan(c, frame.spark_type_of(i)), F.lit(v)).otherwise(c)
-        labels.append(frame.columns[i])
-        exprs.append(e)
-    return frame.project(labels, exprs)

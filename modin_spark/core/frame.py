@@ -434,6 +434,9 @@ def pandas_dtype_to_spark(dtype) -> T.DataType:
 class SparkFrame:
     """Immutable distributed frame: pyspark DataFrame + order/index/label metadata."""
 
+    # set by ``project`` on its result: (source frame, [(physical name, Column)])
+    _projection = None
+
     def __init__(
         self,
         sdf: SDF,
@@ -811,7 +814,11 @@ class SparkFrame:
             labels = self.columns
         phys = fresh_names(len(labels))
         sdf = self.sdf.select("*", *[e.alias(p) for e, p in zip(exprs, phys)])
-        return self._same_rows(sdf, columns=labels, data_cols=phys)
+        nf = self._same_rows(sdf, columns=labels, data_cols=phys)
+        # a sibling frame of one lineage replays this projection on its own
+        # plan (compiler.align_frames)
+        nf._projection = (self, list(zip(phys, exprs)))
+        return nf
 
     def select_positions(self, positions: Sequence[int]) -> "SparkFrame":
         labels = pd.Index([self.columns[i] for i in positions])

@@ -194,28 +194,13 @@ class array:
         exprs = [fn(fr.scol(i)) for i in range(len(fr.columns))]
         return array(_df=DataFrame(_frame=fr.project(list(fr.columns), exprs)), _ndim=self._ndim)
 
-    def exp(self, *a, **kw): return self._map(lambda c: F.exp(c))
-    def sqrt(self, *a, **kw): return self._map(lambda c: F.sqrt(c))
-    def tanh(self, *a, **kw): return self._map(lambda c: F.tanh(c))
-    def log(self, *a, **kw): return self._map(lambda c: F.log(c))
-    def log2(self, *a, **kw): return self._map(lambda c: F.log2(c))
-    def log10(self, *a, **kw): return self._map(lambda c: F.log10(c))
-    def log1p(self, *a, **kw): return self._map(lambda c: F.log1p(c))
-    def expm1(self, *a, **kw): return self._map(lambda c: F.expm1(c))
-    def sin(self, *a, **kw): return self._map(lambda c: F.sin(c))
-    def cos(self, *a, **kw): return self._map(lambda c: F.cos(c))
-    def tan(self, *a, **kw): return self._map(lambda c: F.tan(c))
-    def arcsin(self, *a, **kw): return self._map(lambda c: F.asin(c))
-    def arccos(self, *a, **kw): return self._map(lambda c: F.acos(c))
-    def arctan(self, *a, **kw): return self._map(lambda c: F.atan(c))
-    def sinh(self, *a, **kw): return self._map(lambda c: F.sinh(c))
-    def cosh(self, *a, **kw): return self._map(lambda c: F.cosh(c))
-    def floor(self, *a, **kw): return self._map(lambda c: F.floor(c).cast("double"))
-    def ceil(self, *a, **kw): return self._map(lambda c: F.ceil(c).cast("double"))
-    def sign(self, *a, **kw): return self._map(lambda c: F.signum(c))
+    def _ufunc(self, ufunc) -> "array":
+        """A unary numpy ufunc: the engine frame's, which runs the Series
+        ufunc table (``pandas.series._UFUNC_EXPRS``) on each column."""
+        return array(_df=ufunc(self._df), _ndim=self._ndim)
 
     def _isnan(self, *a, **kw):
-        return self._map(lambda c: c.isNull() | (F.isnan(c) if self.dtype.kind == "f" else F.lit(False)))
+        return array(_df=self._df.isna(), _ndim=self._ndim)
 
     # NaN ingests as NULL engine-wide (pandas NaN-as-missing semantics), so
     # every predicate treats NULL as NaN explicitly
@@ -523,19 +508,15 @@ class array:
 
     def __array_ufunc__(self, ufunc, method, *inputs, **kwargs):
         """Delegate the numpy ufunc protocol to per-element expressions."""
+        from modin_spark.pandas.series import _UFUNC_EXPRS
+
         name = ufunc.__name__
-        simple = {"exp": self.exp, "sqrt": self.sqrt, "tanh": self.tanh,
-                  "absolute": self.__abs__, "isnan": self._isnan,
-                  "isinf": self._isinf, "isfinite": self._isfinite,
-                  "log": self.log, "log2": self.log2, "log10": self.log10,
-                  "log1p": self.log1p, "expm1": self.expm1,
-                  "sin": self.sin, "cos": self.cos, "tan": self.tan,
-                  "arcsin": self.arcsin, "arccos": self.arccos,
-                  "arctan": self.arctan, "sinh": self.sinh, "cosh": self.cosh,
-                  "floor": self.floor, "ceil": self.ceil, "sign": self.sign,
-                  "negative": self.__neg__}
-        if method == "__call__" and name in simple and inputs[0] is self:
-            return simple[name]()
+        simple = {"isnan": self._isnan, "isinf": self._isinf, "isfinite": self._isfinite}
+        if method == "__call__" and len(inputs) == 1 and inputs[0] is self:
+            if name in simple:
+                return simple[name]()
+            if name in _UFUNC_EXPRS:
+                return self._ufunc(ufunc)
         binops = {"add": "add", "subtract": "sub", "multiply": "mul",
                   "true_divide": "div", "floor_divide": "floordiv",
                   "power": "pow", "remainder": "mod",
@@ -552,3 +533,12 @@ class array:
         head = self._df.head(10).to_pandas().to_numpy()
         return f"array({head if self._ndim == 2 else head.ravel()}...)" if len(self._df) > 10 else (
             f"array({self._to_numpy()})")
+
+
+# the ufunc methods (``a.exp()``, ``a.log()``, ...): the ufunc of the same
+# name, run through the Series ufunc table
+for _name in ("exp", "sqrt", "tanh", "log", "log2", "log10", "log1p", "expm1",
+              "sin", "cos", "tan", "arcsin", "arccos", "arctan", "sinh", "cosh",
+              "floor", "ceil", "sign"):
+    setattr(array, _name, lambda self, *a, _u=getattr(np, _name), **kw: self._ufunc(_u))
+del _name

@@ -220,7 +220,7 @@ class DataFrame:
         ext = getattr(self, "_to_pandas_ext_dtypes", None)
         if ext:
             d = ext.get(fr.columns[pos])
-            if isinstance(d, pd.CategoricalDtype):
+            if isinstance(d, pd.CategoricalDtype) and d.categories is not None:
                 # categorical: ordered comparisons + groupby category
                 # restoration key off _cat_dtype; comparisons stay plain bool
                 s._cat_dtype = d
@@ -687,36 +687,45 @@ class DataFrame:
         return out
 
     def astype(self, dtype, copy: bool = True, errors: str = "raise") -> "DataFrame":
+        nat = _native.maybe(self, "astype", dtype, errors=errors)
+        if nat is not None:
+            return nat
         fr = self._frame
-        if not isinstance(dtype, dict):
+        blockwise = not isinstance(dtype, dict)
+        if blockwise:
             dtype = {c: dtype for c in fr.columns}
-        if errors == "ignore" and dtype:
-            # pandas: a column whose conversion fails keeps its ORIGINAL
-            # values (all-or-nothing per column). Failure is data-dependent
-            # but the output schema must be static, so decide with ONE small
-            # aggregate probe: any value that casts to NULL from non-NULL
-            # marks the column as failed and its cast is skipped.
-            probes, cand = [], []
-            for i, lbl in enumerate(fr.columns):
-                if lbl in dtype:
-                    e = fr.scol(i)
-                    t = pandas_dtype_to_spark(dtype[lbl])
-                    probes.append(
-                        F.max((e.isNotNull() & e.cast(t).isNull()).cast("int")).alias(f"__p{i}__")
-                    )
-                    cand.append((i, lbl))
-            if probes:
-                row = fr.sdf.agg(*probes).collect()[0]
-                failed = {lbl for (i, lbl) in cand if row[f"__p{i}__"]}
-                dtype = {k: v for k, v in dtype.items() if k not in failed}
-        labels, exprs = [], []
-        for i, lbl in enumerate(fr.columns):
-            e = fr.scol(i)
-            if lbl in dtype:
-                e = e.cast(pandas_dtype_to_spark(dtype[lbl]))
-            labels.append(lbl)
-            exprs.append(e)
-        return DataFrame(_frame=fr.project(labels, exprs))
+        cols = [self._series_at(i) for i in range(len(fr.columns))]
+        cast = [i for i, s in enumerate(cols) if s._name in dtype]
+        # ONE aggregate answers every data-dependent question of the casts:
+        # with errors="ignore", whether a column has a value that casts to
+        # NULL from non-NULL (pandas then keeps that column's original
+        # values: all-or-nothing per column); and for a string cast, each
+        # datetime/timedelta column's array-wide render
+        fails = {}
+        if errors == "ignore":
+            for i in cast:
+                e = cols[i]._expr
+                t = pandas_dtype_to_spark(dtype[cols[i]._name])
+                fails[i] = F.max((e.isNotNull() & e.cast(t).isNull()).cast("int"))
+        probes = {i: cols[i]._str_probes(dtype[cols[i]._name]) for i in cast}
+        aggs = list(fails.values()) + [p for ps in probes.values() for p in ps]
+        if aggs:
+            row = iter(fr.sdf.agg(*[a.alias(f"__p{k}__") for k, a in enumerate(aggs)]).collect()[0])
+            failed = {i for i in fails if next(row)}
+            cast = [i for i in cast if i not in failed]
+            for i, ps in probes.items():
+                cols[i]._str_probed = [next(row) for _ in ps]
+            if blockwise:
+                # pandas casts a frame's columns of one dtype as one block:
+                # they share one render
+                for kind in "Mm":
+                    same = [cols[i] for i, ps in probes.items() if ps and cols[i].dtype.kind == kind]
+                    joint = [max(v or 0 for v in vals) for vals in zip(*(s._str_probed for s in same))]
+                    for s in same:
+                        s._str_probed = joint
+        for i in cast:
+            cols[i] = cols[i].astype(dtype[cols[i]._name])
+        return self._gather(fr, fr.columns, cols)
 
     def select_dtypes(self, include=None, exclude=None) -> "DataFrame":
         inc = [include] if isinstance(include, str) else (include or [])
@@ -766,10 +775,16 @@ class DataFrame:
                 out = self.bfill(limit=limit)
             else:
                 raise NotImplementedError(f"fillna method {method!r}")
+        elif value is None:
+            raise ValueError("must specify a fill value or method")
+        elif isinstance(value, (DataFrame, pd.DataFrame)):
+            out = self._binary(lambda a, b: a.fillna(b), value, how="left")
         else:
-            if value is None:
-                raise ValueError("must specify a fill value or method")
-            out = DataFrame(_frame=qc.fillna_value(self._frame, value))
+            if isinstance(value, (Series, pd.Series)):
+                # a Series value is keyed by column label, like a dict
+                value = (value.to_pandas() if isinstance(value, Series) else value).to_dict()
+            fill = value.get if isinstance(value, dict) else (lambda _: value)
+            out = self._map(lambda s: s if fill(s._name) is None else s.fillna(fill(s._name)))
         return self._maybe_inplace(out, inplace)
 
     def dropna(self, axis=0, how="any", thresh=None, subset=None, inplace=False,
@@ -803,22 +818,12 @@ class DataFrame:
         return self._maybe_inplace(out, inplace)
 
     def isna(self) -> "DataFrame":
-        fr = self._frame
-        from pyspark.sql import types as T
-
-        exprs = []
-        for i in range(len(fr.columns)):
-            c = fr.scol(i)
-            t = fr.spark_type_of(i)
-            exprs.append(c.isNull() | F.isnan(c) if isinstance(t, (T.FloatType, T.DoubleType)) else c.isNull())
-        return DataFrame(_frame=fr.project(fr.columns, exprs))
+        return self._map(Series.isna)
 
     isnull = isna
 
     def notna(self) -> "DataFrame":
-        na = self.isna()
-        fr = na._frame
-        return DataFrame(_frame=fr.project(fr.columns, [~fr.scol(i) for i in range(len(fr.columns))]))
+        return self._map(Series.notna)
 
     notnull = notna
 
@@ -852,208 +857,70 @@ class DataFrame:
         if to_replace is None and isinstance(regex, (dict, str)):
             # pandas regex= form: the patterns ARE the to_replace spec
             to_replace, regex = regex, True
-        out = DataFrame(_frame=self._frame)
         if isinstance(to_replace, dict) and any(isinstance(v, dict) for v in to_replace.values()):
             # pandas nested form {col: {old: new}} — per-column maps
-            for col, mapping in to_replace.items():
-                out[col] = self[col].replace(mapping, value, regex=regex)
-            return out
-        # type-incompatible columns are untouched (pandas: replacing "x" in
-        # an int column is a no-op, NOT a stringifying cast)
-        keys = list(to_replace.keys()) if isinstance(to_replace, dict) else (
-            to_replace if isinstance(to_replace, list) else [to_replace])
-
-        def applicable(dt: str) -> bool:
-            if regex:
-                return dt.startswith(("object", "string"))
-            is_str_col = dt.startswith(("object", "string"))
-            has_str = any(isinstance(k, str) for k in keys)
-            has_num = any(isinstance(k, (int, float)) and not isinstance(k, bool) for k in keys)
-            if is_str_col:
-                return has_str
-            if dt.startswith(("int", "float", "bool")):
-                return has_num or any(isinstance(k, bool) for k in keys)
-            return True  # datetimes/others: let the series kernel decide
-
-        for i, lbl in enumerate(self._frame.columns):
-            if not applicable(self._frame.dtype_of(i)):
-                continue
-            out[lbl] = self._series_at(i).replace(to_replace, value, regex=regex)
-        return out
+            return self._map(lambda s: s.replace(to_replace[s._name], value, regex=regex)
+                             if s._name in to_replace else s)
+        return self._map(lambda s: s.replace(to_replace, value, regex=regex))
 
     def where(self, cond: "DataFrame | Series", other=None) -> "DataFrame":
         if callable(cond):
             cond = cond(self)
         if callable(other):
             other = other(self)
-        fr = self._frame
+        src, other_cols = self, None
+        if isinstance(other, (DataFrame, pd.DataFrame)):
+            # a frame ``other`` is aligned onto this frame's rows and columns
+            # first; its columns ride hidden beside this frame's
+            from modin_spark.pandas.io import from_pandas
 
-        def other_expr(lbl, fallback):
-            # other may be a scalar, a Series (same lineage), or a frame
-            # aligned by label — all stay expressions, no materialize
-            if isinstance(other, DataFrame):
-                of = other._frame
-                opos = {l: j for j, l in enumerate(of.columns)}
-                return of.scol(opos[lbl]) if lbl in opos else F.lit(None)
-            if isinstance(other, Series):
-                return other._expr
-            return _lit(other) if other is not None else fallback
+            of = (other if isinstance(other, DataFrame) else from_pandas(other))._frame
+            both = qc.align_frames(self._frame, of, "left")
+            n = len(self._frame.columns)
+            other_cols = {}
+            for lbl, phys in zip(of.columns, both.data_cols[n:]):
+                other_cols.setdefault(lbl, phys)
+            src = self._copy_col_meta(DataFrame(_frame=both.select_positions(range(n))))
 
-        if isinstance(cond, Series):
-            exprs = [F.when(cond._expr, fr.scol(i)).otherwise(other_expr(fr.columns[i], F.lit(None)))
-                     for i in range(len(fr.columns))]
-            return DataFrame(_frame=fr.project(fr.columns, exprs))
-        if isinstance(cond, DataFrame):
-            # per-column condition frame, aligned by label; the cond frame is
-            # typically derived from self (``df.where(df > 0)``), so its sdf
-            # still carries self's physical columns — evaluate there
-            cf = cond._frame
-            other_f = other._frame if isinstance(other, DataFrame) else None
-            cond_rebases = cf.can_rebase(fr, set(fr.data_cols))
-            other_rebases = other_f is None or cf.can_rebase(other_f, set(other_f.data_cols))
-            if not (cond_rebases and other_rebases):
-                # cond (and/or other) branched from an unrelated lineage:
-                # align everything by position (one concat_cols join), then
-                # the when() is an ordinary projection on the combined frame
-                combined = qc.concat_cols([fr, cf] + ([other_f] if other_f is not None else []))
-                n, m = len(fr.columns), len(cf.columns)
-                cpos = {lbl: j for j, lbl in enumerate(cf.columns)}
-                opos = {lbl: j for j, lbl in enumerate(other_f.columns)} if other_f is not None else {}
-                exprs = []
-                for i, lbl in enumerate(fr.columns):
-                    if lbl in cpos:
-                        c = F.coalesce(combined.scol(n + cpos[lbl]), F.lit(False))
-                        if other_f is not None:
-                            o = combined.scol(n + m + opos[lbl]) if lbl in opos else F.lit(None)
-                        else:
-                            o = _lit(other) if other is not None else F.lit(None)
-                        exprs.append(F.when(c, combined.scol(i)).otherwise(o))
-                    else:
-                        exprs.append(F.lit(None))
-                return DataFrame(_frame=combined.project(list(fr.columns), exprs))
-            cpos = {lbl: j for j, lbl in enumerate(cf.columns)}
-            exprs = []
-            for i, lbl in enumerate(fr.columns):
-                if lbl in cpos:
-                    c = F.coalesce(cf.scol(cpos[lbl]), F.lit(False))
-                    exprs.append(F.when(c, F.col(fr.data_cols[i])).otherwise(other_expr(lbl, F.lit(None))))
-                else:
-                    exprs.append(F.lit(None))  # pandas: missing cond column -> all-NaN
-            return DataFrame(_frame=cf.project(list(fr.columns), exprs))
-        raise NotImplementedError("where cond must be Series or DataFrame")
+        def op(a, c):
+            if other_cols is None:
+                return a.where(c, other)
+            phys = other_cols.get(a._name)
+            return a.where(c, None if phys is None else Series(a._frame, F.col(phys), {phys}))
+
+        return src._binary(op, cond, axis="index", how="left")
 
     def mask(self, cond: "DataFrame | Series", other=None) -> "DataFrame":
         if callable(cond):
             cond = cond(self)
-        if isinstance(cond, Series):
-            inv = Series(cond._frame, ~F.coalesce(cond._expr, F.lit(False)), cond._refs, cond._name)
-            return self.where(inv, other)
-        cf = cond._frame
-        inv = DataFrame(_frame=cf.project(
-            list(cf.columns),
-            [~F.coalesce(cf.scol(i), F.lit(False)) for i in range(len(cf.columns))],
-        ))
-        return self.where(inv, other)
+        return self.where(~cond, other)
 
     def clip(self, lower=None, upper=None, axis=None) -> "DataFrame":
-        if isinstance(lower, pd.Series) or isinstance(upper, pd.Series):
-            from modin_spark.pandas.io import from_pandas as _fp
-
-            lower = Series._from_pandas(lower) if isinstance(lower, pd.Series) else lower
-            upper = Series._from_pandas(upper) if isinstance(upper, pd.Series) else upper
-        if isinstance(lower, Series) or isinstance(upper, Series):
-            if axis in (1, "columns"):
-                # per-COLUMN scalar bounds keyed by label: driver metadata
-                lo = lower.to_pandas() if isinstance(lower, Series) else None
-                hi = upper.to_pandas() if isinstance(upper, Series) else None
-                fr = self._frame
-                exprs = []
-                for i, lbl in enumerate(fr.columns):
-                    c, e = fr.scol(i), fr.scol(i)
-                    lv = lo.get(lbl) if lo is not None else lower
-                    uv = hi.get(lbl) if hi is not None else upper
-                    if lv is not None and not pd.isna(lv):
-                        e = F.greatest(e, _lit(lv))
-                    if uv is not None and not pd.isna(uv):
-                        e = F.least(e, _lit(uv))
-                    exprs.append(F.when(c.isNull(), F.lit(None)).otherwise(e))
-                return DataFrame(_frame=fr.project(fr.columns, exprs))
-            # axis=0 (pandas default for Series bounds): per-ROW bounds —
-            # align the bound series in as a hidden column (tested setitem
-            # path), clip every column against it, then drop it
-            out = self.copy()
-            cols = list(out.columns)
-            tmp_lo, tmp_hi = "__clip_lo__", "__clip_hi__"
-            if isinstance(lower, Series):
-                out[tmp_lo] = lower
-            if isinstance(upper, Series):
-                out[tmp_hi] = upper
-            fr = out._frame
-            pos = {c: i for i, c in enumerate(fr.columns)}
-            lo_c = fr.scol(pos[tmp_lo]) if isinstance(lower, Series) else None
-            hi_c = fr.scol(pos[tmp_hi]) if isinstance(upper, Series) else None
-            exprs = []
-            for lbl in cols:
-                c = fr.scol(pos[lbl])
-                e = c
-                if lo_c is not None:
-                    e = F.greatest(e, F.coalesce(lo_c, e))
-                elif lower is not None:
-                    e = F.greatest(e, _lit(lower))
-                if hi_c is not None:
-                    e = F.least(e, F.coalesce(hi_c, e))
-                elif upper is not None:
-                    e = F.least(e, _lit(upper))
-                exprs.append(F.when(c.isNull(), F.lit(None)).otherwise(e))
-            return DataFrame(_frame=fr.project(pd.Index(cols), exprs))
-        if isinstance(lower, (DataFrame, pd.DataFrame)) or isinstance(upper, (DataFrame, pd.DataFrame)):
-            # frame bounds clip per cell by matching label: Series.clip per
-            # column against the aligned bound cell, on this frame's rows and
-            # columns; a missing/NULL bound cell leaves the value untouched
-            out = self
-            if lower is not None:
-                out = out._binary(lambda a, b: a.clip(lower=b), lower, how="left")
-            if upper is not None:
-                out = out._binary(lambda a, b: a.clip(upper=b), upper, how="left")
-            return out
-        fr = self._frame
-        exprs = []
-        for i in range(len(fr.columns)):
-            c = fr.scol(i)
-            e = c
-            if lower is not None:
-                e = F.greatest(e, _lit(lower))
-            if upper is not None:
-                e = F.least(e, _lit(upper))
-            # greatest/least IGNORE nulls; pandas clip keeps NaN as NaN
-            exprs.append(F.when(c.isNull(), F.lit(None)).otherwise(e))
-        return DataFrame(_frame=fr.project(fr.columns, exprs))
+        # scalar bounds in one projection; a Series or frame bound is aligned
+        # like a binary operand (a missing bound cell leaves the value as is)
+        scalar = {k: v for k, v in (("lower", lower), ("upper", upper)) if v is not None and np.ndim(v) == 0}
+        out = self._map(lambda s: s.clip(**scalar)) if scalar else self
+        for k, v in (("lower", lower), ("upper", upper)):
+            if v is not None and k not in scalar:
+                out = out._binary(lambda a, b, k=k: a.clip(**{k: b}), v,
+                                  axis="columns" if axis in (1, "columns") else "index", how="left")
+        return out
 
     def abs(self) -> "DataFrame":
-        fr = self._frame
-        return DataFrame(_frame=fr.project(fr.columns, [F.abs(fr.scol(i)) for i in range(len(fr.columns))]))
+        return self._map(Series.abs)
 
     def round(self, decimals=0) -> "DataFrame":
         nat = _native.maybe(self, "round", decimals=decimals)
         if nat is not None:
             return nat
-        fr = self._frame
         if isinstance(decimals, (pd.Series, Series)):
-            vals = decimals.to_pandas() if isinstance(decimals, Series) else decimals
-            decimals = {k: int(v) for k, v in vals.items()}
-        if isinstance(decimals, dict):
-            dec = {k: int(v) for k, v in decimals.items()}
-            exprs = [
-                F.bround(fr.scol(i), dec[fr.columns[i]])
-                if fr.columns[i] in dec and fr.dtype_of(i).startswith("float") else fr.scol(i)
-                for i in range(len(fr.columns))
-            ]
-        else:
-            exprs = [
-                F.bround(fr.scol(i), decimals) if fr.dtype_of(i).startswith("float") else fr.scol(i)
-                for i in range(len(fr.columns))
-            ]
-        return DataFrame(_frame=fr.project(fr.columns, exprs))
+            decimals = (decimals.to_pandas() if isinstance(decimals, Series) else decimals).to_dict()
+
+        def rnd(s):
+            d = decimals.get(s._name) if isinstance(decimals, dict) else decimals
+            return s.round(int(d)) if d is not None and s.dtype.kind in "iuf" else s
+
+        return self._map(rnd)
 
     # ----------------------------------------------------------------- rows
     def head(self, n: int = 5) -> "DataFrame":
@@ -2963,12 +2830,24 @@ class DataFrame:
             else:
                 b = cells[k] if cells is not None else cell
             results.append(op(a, b))
+        return self._gather(base, cols, results)
+
+    @staticmethod
+    def _gather(base: SparkFrame, cols: pd.Index, results) -> "DataFrame":
+        """One projection on ``base`` of the per-column Series ``results``
+        (labelled ``cols``), each keeping its dtype overlay."""
         nf = base.project(cols, [r._expr for r in results])
         nf.columns = cols  # project rebuilds a label list; keep the Index
         out = DataFrame(_frame=nf)
         for lbl, r in zip(cols, results):
             out._adopt_dtype(lbl, r)
         return out
+
+    def _map(self, fn) -> "DataFrame":
+        """Elementwise method (the reference's Map template): ``fn`` runs a
+        Series method on each column, gathered into one projection."""
+        fr = self._frame
+        return self._gather(fr, fr.columns, [fn(self._series_at(i)) for i in range(len(fr.columns))])
 
     # --------------------------------------------------------- conveniences
     def pipe(self, func, *args, **kwargs):
@@ -3162,29 +3041,9 @@ class DataFrame:
         if isinstance(values, (DataFrame, pd.DataFrame)):
             # pandas: self.eq(values.reindex_like(self))
             return self._binary(lambda a, b: a.eq(b), values, how="left")
-        fr = self._frame
-        labels, exprs = [], []
-        for i, lbl in enumerate(fr.columns):
-            vals = values.get(lbl, []) if isinstance(values, dict) else list(values)
-            labels.append(lbl)
-            # pandas: a missing sentinel IN the list matches missing cells
-            # (SQL IN never matches NULL); sentinels don't cross-match —
-            # float columns hit only on float NaN, object columns only on
-            # None. Same contract as Series.isin.
-            from pyspark.sql import types as T
-
-            has_none = any(v is None for v in vals)
-            has_nan = any(isinstance(v, float) and v != v for v in vals)
-            rest = [v for v in vals
-                    if not (v is None or (isinstance(v, float) and v != v))]
-            c = fr.scol(i)
-            e = F.coalesce(c.isin(rest), F.lit(False)) if rest else F.lit(False)
-            floaty = isinstance(fr.schema_map[fr.data_cols[i]],
-                                (T.FloatType, T.DoubleType))
-            if has_nan if floaty else has_none:
-                e = e | ((c.isNull() | F.isnan(c)) if floaty else c.isNull())
-            exprs.append(e)
-        return DataFrame(_frame=fr.project(labels, exprs))
+        if not isinstance(values, dict):
+            values = list(values)
+        return self._map(lambda s: s.isin(values.get(s._name, []) if isinstance(values, dict) else values))
 
     def pivot(self, index=None, columns=None, values=None) -> "DataFrame":
         """Reshape without aggregation (errors on duplicates in pandas; here
@@ -4425,15 +4284,13 @@ class DataFrame:
     __rxor__ = _operator("__rxor__")
 
     def __neg__(self) -> "DataFrame":
-        fr = self._frame
-        return DataFrame(_frame=fr.project(fr.columns, [-fr.scol(i) for i in range(len(fr.columns))]))
+        return self._map(Series.__neg__)
 
     def __pos__(self) -> "DataFrame":
-        return self
+        return self._map(Series.__pos__)
 
     def __invert__(self) -> "DataFrame":
-        fr = self._frame
-        return DataFrame(_frame=fr.project(fr.columns, [~fr.scol(i) for i in range(len(fr.columns))]))
+        return self._map(Series.__invert__)
 
     def pad(self):
         return self.ffill()
@@ -4950,9 +4807,6 @@ class DataFrame:
         row = fr.sdf.agg(*aggs).collect()[0]
         return Series._from_pandas(pd.Series([row[f"c{i}"] for i in range(len(shared))], index=shared))
 
-    def applymap(self, func):
-        return self.map(func)
-
     def transform(self, func):
         """Shape-preserving transform: named/elementwise funcs stay JVM-side
         (method dispatch — abs/sqrt/cumsum/... are Catalyst projections);
@@ -5237,12 +5091,9 @@ class _ScalarIndexer:
 
 
 def _df_map(self, func, na_action=None):
-    """Elementwise callable over every column — one Arrow pandas_udf per
-    column, all fused into a single projection (one pass)."""
-    cols = [self._series_at(i).apply(func) for i in range(len(self._frame.columns))]
-    fr = self._frame
-    # all mapped Series share self's frame lineage; project their exprs
-    return DataFrame(_frame=fr.project(list(fr.columns), [c._expr for c in cols]))
+    """Elementwise callable over every column — Series.map per column (one
+    Arrow pandas_udf each), all fused into a single projection (one pass)."""
+    return self._map(lambda s: s.map(func, na_action=na_action))
 
 
 def _df_values(self):
@@ -5350,17 +5201,13 @@ del _wrap_inplace, _nm
 
 # ------------------------------------------------------- numpy ufunc protocol
 def _df_array_ufunc(self, ufunc, method, *inputs, **kwargs):
-    from modin_spark.pandas.series import _UFUNC_EXPRS
+    """A unary ufunc is the Series ufunc on each column."""
+    from modin_spark.pandas.series import _UFUNC_EXPRS, _ser_array_ufunc
 
-    if method != "__call__" or kwargs.get("out") is not None or len(inputs) != 1:
+    if method != "__call__" or kwargs.get("out") is not None or len(inputs) != 1 \
+            or ufunc.__name__ not in _UFUNC_EXPRS:
         return NotImplemented
-    fn = _UFUNC_EXPRS.get(ufunc.__name__)
-    if fn is None:
-        return NotImplemented
-    fr = self._frame
-    return DataFrame(_frame=fr.project(
-        list(fr.columns), [fn(fr.scol(i).cast("double")) for i in range(len(fr.columns))]
-    ))
+    return self._map(lambda s: _ser_array_ufunc(s, ufunc, method, s))
 
 
 DataFrame.__array_ufunc__ = _df_array_ufunc

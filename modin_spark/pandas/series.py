@@ -175,6 +175,41 @@ def _probe_type(schema_map: dict, expr: Column) -> T.DataType:
     return empty.select(expr.alias("__t__")).schema.fields[0].dataType
 
 
+def _replace_key_fits(k, st: T.DataType) -> bool:
+    """Whether ``replace`` key ``k`` can equal a value of Spark type ``st``
+    (pandas: the column can hold it): strings in string columns, bools in
+    bool columns, other numbers in numeric columns, dates and datetimes in
+    datetime columns. A missing key (None/NaN) is kept."""
+    import datetime as _dt
+
+    import numpy as _np
+
+    if k is None or (isinstance(k, float) and k != k):
+        return True
+    if isinstance(st, T.StringType):
+        return isinstance(k, str)
+    if isinstance(st, T.BooleanType):
+        return isinstance(k, (bool, _np.bool_))
+    if isinstance(st, T.NumericType):
+        return isinstance(k, (int, float, _np.number)) and not isinstance(k, bool)
+    if isinstance(st, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+        return isinstance(k, (_dt.date, _np.datetime64))
+    return True
+
+
+def _flex_method(op: str, fn_of, reverse: bool = False):
+    """Series flex method of operator ``op``: the operator itself, or, with
+    ``fill_value``, the column function ``fn_of(self, other)`` on the
+    filled operands."""
+    def method(self, other, level=None, fill_value=None, axis=0):
+        if fill_value is None:
+            return getattr(self, op)(other)
+        return self._fill_binary(other, fn_of(self, other), reverse, fill_value)
+
+    method.__name__ = op.strip("_")
+    return method
+
+
 class Series:
     def __init__(self, data=None, index=None, dtype=None, name=None, copy=None, filter_expr: Column | None = None):
         """Dual-mode constructor.
@@ -424,6 +459,15 @@ class Series:
                 setattr(out, attr, v)
         return out
 
+    def _keep_meta(self, out: "Series", new) -> "Series":
+        """``out`` (this Series with some cells set to ``new``) keeps this
+        Series' dtype metadata, unless ``new`` may lie outside a categorical's
+        categories (pandas raises there; the engine answers plain values)."""
+        cd = getattr(self, "_cat_dtype", None)
+        if cd is not None and new is not None and (isinstance(new, Series) or new not in set(cd.categories)):
+            return out
+        return self._copy_scalar_meta(out)
+
     def __getitem__(self, key):
         """pandas Series selection: boolean-Series/array masks filter rows,
         int slices are positional, lists and scalars are label lookups."""
@@ -593,11 +637,9 @@ class Series:
             e = F.coalesce(e, F.lit(False))
         return Series(target, e, refs, name=name, filter_expr=filter_expr)
 
-    def _flex(self, other, fn, reverse=False, fill_value=None) -> "Series":
-        """pandas flex-arithmetic: with ``fill_value`` a one-sided missing
+    def _fill_binary(self, other, fn, reverse, fill_value) -> "Series":
+        """pandas flex arithmetic with ``fill_value``: a one-sided missing
         value is replaced before the op; both-missing stays missing."""
-        if fill_value is None:
-            return self._binary(other, fn, reverse=reverse)
         fv = F.lit(fill_value)
 
         def wrapped(a, b):
@@ -820,54 +862,26 @@ class Series:
     def __rpow__(self, o):
         return self._binary(o, _pow, reverse=True)
 
-    def add(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, self._arith_fn(other, self._plus_fn(other)), fill_value=fill_value)
-
-    def sub(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, self._arith_fn(other, lambda a, b: a - b), fill_value=fill_value)
-
-    subtract = sub
-
-    def mul(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, self._arith_fn(other, lambda a, b: a * b), fill_value=fill_value)
-
-    multiply = mul
-
-    def truediv(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, _true_div, fill_value=fill_value)
-
-    div = truediv
-    divide = truediv
-
-    def floordiv(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, self._floordiv_op(other), fill_value=fill_value)
-
-    def mod(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, self._arith_fn(other, _pmod), fill_value=fill_value)
+    add = _flex_method("__add__", lambda s, o: s._arith_fn(o, s._plus_fn(o)))
+    radd = _flex_method("__radd__", lambda s, o: s._arith_fn(o, s._plus_fn(o)), reverse=True)
+    sub = subtract = _flex_method("__sub__", lambda s, o: s._arith_fn(o, lambda a, b: a - b))
+    rsub = _flex_method("__rsub__", lambda s, o: s._arith_fn(o, lambda a, b: a - b), reverse=True)
+    mul = multiply = _flex_method("__mul__", lambda s, o: s._arith_fn(o, lambda a, b: a * b))
+    rmul = _flex_method("__rmul__", lambda s, o: s._arith_fn(o, lambda a, b: a * b), reverse=True)
+    truediv = div = divide = _flex_method("__truediv__", lambda s, o: _true_div)
+    rtruediv = rdiv = _flex_method("__rtruediv__", lambda s, o: _true_div, reverse=True)
+    floordiv = _flex_method("__floordiv__", lambda s, o: s._floordiv_op(o))
+    rfloordiv = _flex_method("__rfloordiv__", lambda s, o: _floor_div, reverse=True)
+    mod = _flex_method("__mod__", lambda s, o: s._arith_fn(o, _pmod))
+    rmod = _flex_method("__rmod__", lambda s, o: s._arith_fn(o, _pmod), reverse=True)
+    pow = _flex_method("__pow__", lambda s, o: _pow)
+    rpow = _flex_method("__rpow__", lambda s, o: _pow, reverse=True)
 
     def __divmod__(self, o):
         return self // o, self % o
 
     def __rdivmod__(self, o):
         return o // self, o % self
-
-    def pow(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, _pow, fill_value=fill_value)
-
-    def radd(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, self._arith_fn(other, self._plus_fn(other)), reverse=True, fill_value=fill_value)
-
-    def rsub(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, self._arith_fn(other, lambda a, b: a - b), reverse=True, fill_value=fill_value)
-
-    def rmul(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, self._arith_fn(other, lambda a, b: a * b), reverse=True, fill_value=fill_value)
-
-    def rmod(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, self._arith_fn(other, _pmod), reverse=True, fill_value=fill_value)
-
-    def rpow(self, other, level=None, fill_value=None, axis=0):
-        return self._flex(other, _pow, reverse=True, fill_value=fill_value)
 
     def __eq__(self, o):  # type: ignore[override]
         return self._binary(o, lambda a, b: a == b, comparison=True, strict=True, op="eq")
@@ -934,22 +948,33 @@ class Series:
     __ror__ = __or__
     __rxor__ = __xor__
 
+    def _is_integral(self) -> bool:
+        return isinstance(self.spark_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
+
     def __invert__(self):
         sj = getattr(self, "_semijoin", None)
+        # a comparison result (it carries its filter predicate) is boolean
+        # by construction; integers invert bitwise, as in numpy
+        if self._filter_expr is None and sj is None and self._is_integral():
+            return self._map1(F.bitwise_not)
         s = Series(self._frame, ~self._expr.cast("boolean"), self._refs, self._name)
         if sj is not None:  # ~isin(Series) flips to an anti-join
             s._semijoin = (sj[0], sj[1], not sj[2])
         return s
 
     def __neg__(self):
-        return Series(self._frame, -self._expr, self._refs, self._name)
+        if isinstance(self.spark_type, T.BooleanType):
+            return self._map1(lambda c: ~c)  # pandas negates bool by inversion
+        return self._map1(lambda c: -c)
 
     def __pos__(self):
         # pandas +s: numeric identity (values unchanged)
-        return Series(self._frame, self._expr, self._refs, self._name)
+        return self._map1(lambda c: c)
 
     def __abs__(self):
-        return Series(self._frame, F.abs(self._expr), self._refs, self._name)
+        if isinstance(self.spark_type, T.BooleanType):
+            return self._map1(lambda c: c)
+        return self._map1(F.abs)
 
     abs = __abs__
 
@@ -959,9 +984,7 @@ class Series:
 
     def isna(self) -> "Series":
         st = self.spark_type
-        if isinstance(st, (T.FloatType, T.DoubleType)):
-            return self._map1(lambda c: c.isNull() | F.isnan(c))
-        return self._map1(lambda c: c.isNull())
+        return self._map1(lambda c: qc.null_or_nan(c, st))
 
     isnull = isna
 
@@ -981,17 +1004,48 @@ class Series:
         if value is None:
             raise ValueError("must specify a fill value or method")
         st = self.spark_type
-        nullchk = (lambda c: c.isNull() | F.isnan(c)) if isinstance(st, (T.FloatType, T.DoubleType)) else (lambda c: c.isNull())
         if isinstance(value, Series):
             # fill from a Series aligned by label — a LOOKUP: self's rows
             # and order are kept (never the outer union binary ops use)
             target, le, re_, refs = self._combine(value, how="left")
-            return Series(target, F.when(nullchk(le), re_).otherwise(le), refs, name=self._name)
-        return self._map1(lambda c: F.when(nullchk(c), _lit(value)).otherwise(c))
+            out = Series(target, F.when(qc.null_or_nan(le, st), re_).otherwise(le), refs, name=self._name)
+        else:
+            out = self._map1(lambda c: F.when(qc.null_or_nan(c, st), _lit(value)).otherwise(c))
+        return self._keep_meta(out, value)
 
     def dropna(self) -> "Series":
         cond = self.notna()
         return Series._from_frame(self._frame.filter(cond._expr).project([self._name if self._name is not None else 0], [self._expr]))
+
+    def _str_probes(self, dtype) -> list:
+        """The aggregates ``astype(dtype)`` reads to pick pandas' array-wide
+        string render: whether any datetime has a time of day and whether
+        any has sub-second digits, or whether any timedelta is not whole
+        days. Empty when the cast reads none."""
+        if isinstance(dtype, pd.api.extensions.ExtensionDtype) or dtype in ("object", "string"):
+            return []
+        try:
+            if not isinstance(pandas_dtype_to_spark(dtype), T.StringType):
+                return []
+        except TypeError:
+            return []
+        if getattr(self, "_astype_str_null", None) is not None:
+            return []
+        c, kind = self._expr, self.dtype.kind
+        if kind == "M" and getattr(self, "_tz_meta", None) is None:
+            return [F.max(F.when(c != F.date_trunc("day", c), 1).otherwise(0)),
+                    F.max(F.when(c != F.date_trunc("second", c), 1).otherwise(0))]
+        if kind == "m":
+            return [F.max(F.when(_interval_micros(c) % F.lit(86400000000) != 0, 1).otherwise(0))]
+        return []
+
+    def _str_probe_row(self) -> list:
+        """The values of ``_str_probes(str)``: prefetched by a frame-wide
+        astype (one aggregate for every column), else one aggregate here."""
+        row = getattr(self, "_str_probed", None)
+        if row is None:
+            row = list(self._frame.sdf.agg(*self._str_probes(str)).collect()[0])
+        return row
 
     def astype(self, dtype, errors: str = "raise") -> "Series":
         import numpy as _np
@@ -1026,24 +1080,28 @@ class Series:
             ps = _native.series_pdf_of(self)
             if ps is not None:
                 return Series._from_pandas(ps.astype(dtype))
+        if isinstance(dtype, str) and (dtype in ("category", "string") or dtype in _MASKED_EXT_NAMES):
+            dtype = pd.api.types.pandas_dtype(dtype)
         if isinstance(dtype, pd.CategoricalDtype):
-            # physical storage stays string; the dtype (category ORDER for
-            # ordered comparisons) rides on the Series object
-            out = self._map1(lambda c: c.cast("string"))
-            out._cat_dtype = dtype
+            if dtype.categories is None:
+                # categories inferred from the values (pandas): storage is
+                # unchanged, the dtype is inferred on materialization
+                out = self._map1(lambda c: c)
+                out._ext_dtype = dtype
+            else:
+                # physical storage is string; the dtype (category ORDER for
+                # ordered comparisons) rides on the Series object
+                out = self._map1(lambda c: c.cast("string"))
+                out._cat_dtype = dtype
+            out._post_to_pandas = lambda s, _d=dtype: s.astype(_d)
             return out
-        if dtype == "string" or isinstance(dtype, pd.StringDtype):
-            # pandas EXTENSION string dtype: nulls stay <NA> (not 'nan' text)
-            # and materialization carries StringDtype
-            out = self._map1(lambda c: c.cast("string"))
-            out._post_to_pandas = lambda s: s.astype("string")
-            return out
-        if dtype in ("Int64", "Int32", "Float64", "boolean") or (
-            isinstance(dtype, pd.api.extensions.ExtensionDtype)
-        ):
-            # numeric/bool extension dtypes: nullable storage is native in
-            # Spark; reconstruct the pandas dtype on materialization
-            out = self._map1(lambda c: c.cast(pandas_dtype_to_spark(dtype)))
+        if isinstance(dtype, pd.api.extensions.ExtensionDtype):
+            # extension dtypes (string, nullable numeric/bool): nullable
+            # storage is native in Spark — nulls stay <NA>, not 'nan' text —
+            # and the pandas dtype is rebuilt on materialization
+            st = T.StringType() if isinstance(dtype, pd.StringDtype) else pandas_dtype_to_spark(dtype)
+            out = self._map1(lambda c: c.cast(st))
+            out._ext_dtype = dtype
             out._post_to_pandas = lambda s, _d=dtype: s.astype(_d)
             return out
         spark_t = pandas_dtype_to_spark(dtype)
@@ -1054,8 +1112,20 @@ class Series:
             if marker is not None:
                 return self._map1(lambda c: F.coalesce(c.cast("string"), F.lit(marker)))
             kind = self.dtype.kind
-            if kind in "fiu":
+            if kind == "f":
+                # numpy's float repr: 'inf', '-inf', 'nan'
+                return self._map1(lambda c: F.coalesce(
+                    F.when(c == F.lit(float("inf")), F.lit("inf"))
+                    .when(c == F.lit(float("-inf")), F.lit("-inf"))
+                    .when(F.isnan(c), F.lit("nan"))
+                    .otherwise(c.cast("string")), F.lit("nan")))
+            if kind in "iu" or getattr(self, "_cat_dtype", None) is not None:
                 return self._map1(lambda c: F.coalesce(c.cast("string"), F.lit("nan")))
+            if kind == "b":
+                return self._map1(lambda c: F.when(c, F.lit("True")).when(~c, F.lit("False")))
+            if isinstance(self.spark_type, T.StringType):
+                # an object column's missing value is None (pandas: 'None')
+                return self._map1(lambda c: F.coalesce(c, F.lit("None")))
             if kind == "M":
                 tzm = getattr(self, "_tz_meta", None)
                 if tzm is not None:
@@ -1077,17 +1147,9 @@ class Series:
                         )
 
                     return self._map1(_tz_str)
-                # pandas renders at the ARRAY's coarsest lossless unit
-                # (all-midnight -> dates, second-aligned -> seconds, else
-                # microseconds) — ONE probe aggregate decides the format
-                row = self._frame.sdf.agg(
-                    F.max(F.when(self._expr != F.date_trunc("day", self._expr), 1)
-                          .otherwise(0)).alias("t"),
-                    F.max(F.when(self._expr != F.date_trunc("second", self._expr), 1)
-                          .otherwise(0)).alias("us"),
-                ).collect()[0]
-                fmt = ("yyyy-MM-dd" if not row["t"] else
-                       "yyyy-MM-dd HH:mm:ss" if not row["us"] else
+                timed, subsecond = self._str_probe_row()
+                fmt = ("yyyy-MM-dd" if not timed else
+                       "yyyy-MM-dd HH:mm:ss" if not subsecond else
                        "yyyy-MM-dd HH:mm:ss.SSSSSS")
                 return self._map1(lambda c: F.coalesce(F.date_format(c, fmt), F.lit("NaT")))
             if kind == "m":
@@ -1097,16 +1159,11 @@ class Series:
                 # array renders "{d} days" alone, and the fractional suffix
                 # is per-element (only when that element has microseconds).
                 # Spark's native interval cast would render "INTERVAL
-                # '2 00:00:00' DAY TO SECOND" instead. ONE probe aggregate
-                # (same pattern as the datetime branch above) decides the
-                # array-wide day-aligned fast form.
+                # '2 00:00:00' DAY TO SECOND" instead. The probe aggregate
+                # decides the array-wide day-aligned fast form.
                 day_us = F.lit(86400000000)
-                probe_rem = _interval_micros(self._expr) % day_us
-                day_aligned = self._frame.sdf.agg(
-                    F.max(F.when(probe_rem != 0, 1).otherwise(0)).alias("t")
-                ).collect()[0]["t"] in (0, None)
 
-                def _td_str(c, _days_only=day_aligned):
+                def _td_str(c, _days_only=not self._str_probe_row()[0]):
                     m = _interval_micros(c)
                     d = F.floor(m / day_us).cast("long")
                     if _days_only:
@@ -1177,15 +1234,14 @@ class Series:
         has_none = any(v is None for v in vals)
         has_nan = any(isinstance(v, float) and v != v for v in vals)
         rest = [v for v in vals if not (v is None or (isinstance(v, float) and v != v))]
-        floaty = isinstance(self.spark_type, (T.FloatType, T.DoubleType))
-        match_missing = has_nan if floaty else has_none
+        st = self.spark_type
+        match_missing = has_nan if isinstance(st, (T.FloatType, T.DoubleType)) else has_none
         if not match_missing:
             return self._map1(lambda c: F.coalesce(c.isin(rest), F.lit(False)))
 
         def f(c):
             hit = F.coalesce(c.isin(rest), F.lit(False)) if rest else F.lit(False)
-            miss = (c.isNull() | F.isnan(c)) if floaty else c.isNull()
-            return hit | miss
+            return hit | qc.null_or_nan(c, st)
 
         return self._map1(f)
 
@@ -1205,17 +1261,20 @@ class Series:
         if callable(other) and not isinstance(other, Series):
             other = other(self)
         target, le, ce, refs = self._combine(cond)
-        if isinstance(other, Series):
-            if target.can_rebase(other._frame, other._refs) and target._lid == other._frame._lid:
-                return Series(target, F.when(ce, le).otherwise(other._expr),
-                              refs | other._refs, self._name)
+        ce = ce.cast("boolean")  # an all-missing cond cell is a typeless NULL
+        if not isinstance(other, Series):
+            out = Series(target, F.when(ce, le).otherwise(_lit(other)), refs, self._name)
+        elif target.can_rebase(other._frame, other._refs) and target._lid == other._frame._lid:
+            out = Series(target, F.when(ce, le).otherwise(other._expr),
+                         refs | other._refs, self._name)
+        else:
             # misaligned replacement source: pandas reindexes other to SELF's
             # labels — pack (value, cond) into one struct so both ride the
             # single lookup join
             packed = Series(target, F.struct(le.alias("v"), ce.alias("c")), set(refs))
             t2, pe, oe, refs2 = packed._combine(other, how="left")
-            return Series(t2, F.when(pe["c"], pe["v"]).otherwise(oe), refs2, self._name)
-        return Series(target, F.when(ce, le).otherwise(_lit(other)), refs, self._name)
+            out = Series(t2, F.when(pe["c"], pe["v"]).otherwise(oe), refs2, self._name)
+        return self._keep_meta(out, other)
 
     def mask(self, cond: "Series", other=None) -> "Series":
         if callable(cond) and not isinstance(cond, Series):
@@ -1224,7 +1283,10 @@ class Series:
         return self.where(inv, other)
 
     def replace(self, to_replace, value=None, regex: bool = False) -> "Series":
+        st = self.spark_type
         if regex:
+            if not isinstance(st, T.StringType):
+                return self._map1(lambda c: c)  # pandas: patterns match strings only
             # value-level regex replace (pandas Series.replace(regex=True)):
             # full regexp_replace over string values
             items = (list(to_replace.items()) if isinstance(to_replace, dict)
@@ -1248,6 +1310,11 @@ class Series:
                 items = list(zip(tr, value))
             else:
                 items = [(t, value) for t in tr]
+        # a key that cannot equal a value of this column's type is a no-op
+        # (pandas), not a comparison Spark would coerce or reject
+        items = [(k, v) for k, v in items if _replace_key_fits(k, st)]
+        if not items:
+            return self._map1(lambda c: c)
 
         def f(c):
             e = None
@@ -2821,17 +2888,6 @@ Series.transpose = lambda self: self
 Series.squeeze = lambda self: self.item() if len(self) == 1 else self
 
 
-# reversed division parity (class-level rmul/rmod/rpow already take
-# fill_value; division routes through the pandas div-by-zero expressions)
-Series.rtruediv = lambda self, o, level=None, fill_value=None, axis=0: self._flex(
-    o, _true_div, reverse=True, fill_value=fill_value
-)
-Series.rdiv = Series.rtruediv
-Series.rfloordiv = lambda self, o, level=None, fill_value=None, axis=0: self._flex(
-    o, _floor_div, reverse=True, fill_value=fill_value
-)
-
-
 def _ser_case_when(self, caselist):
     """pandas 2.2 Series.case_when: list of (condition, replacement)."""
     e = None
@@ -3021,13 +3077,19 @@ def _log_fn(base_fn, zero_arg):
     return f
 
 
+def _finite(fn):
+    """``fn`` on finite values; ±inf and NaN pass through (Spark's floor and
+    ceil return a long, which would clamp them)."""
+    return lambda c: F.when(F.isnan(c) | (F.abs(c) == F.lit(float("inf"))), c).otherwise(fn(c))
+
+
 # NaN-minting funcs (sqrt/asin/acos of out-of-domain, trig of ±inf) route
 # through _nan_to_null: Spark NaN is not the engine's missing encoding
 _UFUNC_EXPRS = {
     "sqrt": lambda c: _nan_to_null(F.sqrt(c)), "exp": F.exp, "expm1": F.expm1,
     "log": _log_fn(F.log, 0.0), "log1p": _log_fn(F.log1p, -1.0),
     "log10": _log_fn(F.log10, 0.0), "log2": _log_fn(F.log2, 0.0),
-    "absolute": F.abs, "fabs": F.abs, "floor": F.floor, "ceil": F.ceil,
+    "absolute": F.abs, "fabs": F.abs, "floor": _finite(F.floor), "ceil": _finite(F.ceil),
     "sin": lambda c: _nan_to_null(F.sin(c)),
     "cos": lambda c: _nan_to_null(F.cos(c)),
     "tan": lambda c: _nan_to_null(F.tan(c)),
@@ -3036,7 +3098,7 @@ _UFUNC_EXPRS = {
     "arctan": F.atan, "sinh": F.sinh, "cosh": F.cosh,
     "tanh": F.tanh, "sign": F.signum, "negative": lambda c: -c,
     "rint": lambda c: F.round(c, 0), "square": lambda c: c * c,
-    "isnan": F.isnan, "cbrt": F.cbrt,
+    "isnan": lambda c: qc.null_or_nan(c, T.DoubleType()), "cbrt": F.cbrt,
 }
 def _ufunc_greatest(a, b, which):
     # np.maximum/minimum(series, other): same-lineage expression pairing
@@ -3063,6 +3125,10 @@ def _ser_array_ufunc(self, ufunc, method, *inputs, **kwargs):
     name = ufunc.__name__
     if len(inputs) == 1 and name in _UFUNC_EXPRS:
         fn = _UFUNC_EXPRS[name]
+        if name in ("absolute", "negative", "sign", "square") and self._is_integral():
+            # numpy keeps an integer dtype through these
+            st = self.spark_type
+            return self._map1(lambda c: fn(c).cast(st))
         if name in ("floor", "ceil", "rint"):
             # pandas keeps float dtype through these
             return self._map1(lambda c: fn(c.cast("double")).cast("double"))

@@ -11,6 +11,9 @@ Three contracts:
    materializes, so mixing native and Spark ops never forks semantics.
 """
 
+import contextlib
+import threading
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -21,6 +24,27 @@ import modin_spark.pandas as mpd
 @pytest.fixture()
 def native_on(monkeypatch):
     monkeypatch.setenv("MODIN_SPARK_NATIVE_MAX_ROWS", "5000")
+
+
+@contextlib.contextmanager
+def _py4j_commands():
+    """Count the py4j commands sent from the calling thread while the block
+    runs; JVM housekeeping on other threads does not count."""
+    import py4j.clientserver as cs
+
+    me, count = threading.get_ident(), [0]
+    orig = cs.ClientServerConnection.send_command
+
+    def patched(self, *a, **k):
+        if threading.get_ident() == me:
+            count[0] += 1
+        return orig(self, *a, **k)
+
+    cs.ClientServerConnection.send_command = patched
+    try:
+        yield count
+    finally:
+        cs.ClientServerConnection.send_command = orig
 
 
 def _pdf():
@@ -141,22 +165,10 @@ def test_native_merge(native_on, spark):
 
 
 def test_native_chain_never_touches_jvm(native_on, spark):
-    import py4j.clientserver as cs
-
     p = _pdf()
     m = mpd.from_pandas(p)
-    count = [0]
-    orig = cs.ClientServerConnection.send_command
-
-    def patched(self, *a, **k):
-        count[0] += 1
-        return orig(self, *a, **k)
-
-    cs.ClientServerConnection.send_command = patched
-    try:
+    with _py4j_commands() as count:
         out = (m.fillna(0).sort_values("b").head(10).round(3)).to_pandas()
-    finally:
-        cs.ClientServerConnection.send_command = orig
     want = p.fillna(0).sort_values("b").head(10).round(3)
     pd.testing.assert_frame_equal(out, want, check_dtype=False)
     assert count[0] == 0, f"native chain crossed the bridge {count[0]} times"
@@ -235,28 +247,15 @@ def test_native_series_ops_match_pandas(native_on, spark):
 
 
 def test_native_series_chain_zero_jvm(native_on, spark):
-    import py4j.clientserver as cs
-
     p = _pdf()
     m = mpd.from_pandas(p)
-    count = [0]
-    orig = cs.ClientServerConnection.send_command
-
-    def patched(self, *a, **k):
-        count[0] += 1
-        return orig(self, *a, **k)
-
-    cs.ClientServerConnection.send_command = patched
-    try:
+    with _py4j_commands() as count:
         total = m["b"].sum()
         vc = m["k"].value_counts().to_pandas()
         top = m["b"].nlargest(3).to_pandas()
-    finally:
-        cs.ClientServerConnection.send_command = orig
     # Series extraction builds a Column object (a few constant py4j calls,
-    # ~1ms) but must run ZERO jobs: the source frame stays un-ingested.
-    # The call count is a noisy proxy (JVM heartbeats share the connection
-    # under concurrent load); the _sdf-is-None check below is the real gate.
+    # ~1ms) but must run ZERO jobs: the source frame stays un-ingested —
+    # the _sdf-is-None check below is the real gate.
     assert count[0] < 80, count[0]
     assert m._frame._sdf is None, "Series chain must not ingest the frame"
     assert abs(total - p["b"].sum()) < 1e-9
@@ -265,32 +264,13 @@ def test_native_series_chain_zero_jvm(native_on, spark):
 
 
 def test_native_groupby_agg_zero_jvm(native_on, spark):
-    import py4j.clientserver as cs
-
     p = pd.DataFrame({"k": list("xyxzy"), "v": [1.0, 2, 3, 4, 5]})
     m = mpd.from_pandas(p)
-    count = [0]
-    orig = cs.ClientServerConnection.send_command
-
-    def patched(self, *a, **k):
-        count[0] += 1
-        return orig(self, *a, **k)
-
-    # JVM housekeeping threads (accumulator/GC callbacks) can issue
-    # send_command asynchronously under load — retry the measured block so
-    # background chatter doesn't fail the zero-jobs invariant spuriously
-    for _attempt in range(3):
-        count[0] = 0
-        cs.ClientServerConnection.send_command = patched
-        try:
-            r1 = m.groupby("k").agg(s=("v", "sum")).reset_index().to_pandas()
-            r2 = m.groupby("k").sum().to_pandas()
-            r3 = m.groupby("k")["v"].agg(["sum", "mean"]).to_pandas()
-            r4 = m.groupby("k", as_index=False, sort=False).mean().to_pandas()
-        finally:
-            cs.ClientServerConnection.send_command = orig
-        if count[0] == 0:
-            break
+    with _py4j_commands() as count:
+        r1 = m.groupby("k").agg(s=("v", "sum")).reset_index().to_pandas()
+        r2 = m.groupby("k").sum().to_pandas()
+        r3 = m.groupby("k")["v"].agg(["sum", "mean"]).to_pandas()
+        r4 = m.groupby("k", as_index=False, sort=False).mean().to_pandas()
     assert count[0] == 0, count[0]
     assert r1.values.tolist() == p.groupby("k").agg(s=("v", "sum")).reset_index().values.tolist()
     assert r2.values.tolist() == p.groupby("k").sum().values.tolist()
