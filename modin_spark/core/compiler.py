@@ -1135,8 +1135,9 @@ def align_frames(left: SparkFrame, right: SparkFrame, how: str = "full_outer") -
             return right._same_rows(right.sdf, columns=columns, data_cols=data_cols,
                                     index_cols=left.index_cols, index_names=left.index_names)
         if right._projection is not None:
-            src, pairs = right._projection
-            if left.can_rebase(src, src._available_cols()):
+            lid, pairs = right._projection
+            src_cols = right._available_cols() - {p for p, _ in pairs}
+            if lid in left._chain and src_cols <= left._available_cols():
                 # right is one projection of a frame whose columns left's plan
                 # carries (``df.where(df > 0, -df)``): replay it there
                 sdf = left.sdf.select("*", *[e.alias(p) for p, e in pairs])

@@ -434,7 +434,9 @@ def pandas_dtype_to_spark(dtype) -> T.DataType:
 class SparkFrame:
     """Immutable distributed frame: pyspark DataFrame + order/index/label metadata."""
 
-    # set by ``project`` on its result: (source frame, [(physical name, Column)])
+    # set by ``project`` on its result: (source lineage id, [(physical
+    # name, Column)]). The source's columns are this plan's others, so the
+    # source frame itself is not kept alive.
     _projection = None
 
     def __init__(
@@ -817,7 +819,7 @@ class SparkFrame:
         nf = self._same_rows(sdf, columns=labels, data_cols=phys)
         # a sibling frame of one lineage replays this projection on its own
         # plan (compiler.align_frames)
-        nf._projection = (self, list(zip(phys, exprs)))
+        nf._projection = (self._lid, list(zip(phys, exprs)))
         return nf
 
     def select_positions(self, positions: Sequence[int]) -> "SparkFrame":

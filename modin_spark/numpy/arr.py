@@ -181,13 +181,15 @@ class array:
     absolute = __abs__
 
     def __invert__(self) -> "array":
-        return self._map(lambda c: ~c.cast("boolean") if str(self.dtype) == "bool" else ~c.cast("long"))
+        return array(_df=~self._df, _ndim=self._ndim)
 
     def __neg__(self) -> "array":
-        return self._map(lambda c: -c)
+        return array(_df=-self._df, _ndim=self._ndim)
 
     # ---------------------------------------------------------- elementwise
     def _map(self, fn) -> "array":
+        """A constant or a cast on each column (elementwise math runs the
+        frame's Series methods and ufunc table)."""
         from modin_spark.pandas.dataframe import DataFrame
 
         fr = self._df._frame
@@ -199,33 +201,27 @@ class array:
         ufunc table (``pandas.series._UFUNC_EXPRS``) on each column."""
         return array(_df=ufunc(self._df), _ndim=self._ndim)
 
+    # NaN ingests as NULL engine-wide (pandas NaN-as-missing semantics): the
+    # frame's isna and the ufunc table's predicates count NULL as NaN
     def _isnan(self, *a, **kw):
         return array(_df=self._df.isna(), _ndim=self._ndim)
 
-    # NaN ingests as NULL engine-wide (pandas NaN-as-missing semantics), so
-    # every predicate treats NULL as NaN explicitly
     def _isfinite(self, *a, **kw):
-        if self.dtype.kind != "f":
-            return self._map(lambda c: F.lit(True))
-        return self._map(lambda c: c.isNotNull() & ~F.isnan(c) & (F.abs(c) != F.lit(float("inf"))))
+        return self._ufunc(np.isfinite)
 
     def _isinf(self, *a, **kw):
-        if self.dtype.kind != "f":
-            return self._map(lambda c: F.lit(False))
-        return self._map(lambda c: F.coalesce(F.abs(c) == F.lit(float("inf")), F.lit(False)))
+        return self._ufunc(np.isinf)
 
     def _isneginf(self, *a, **kw):
-        return self._map(lambda c: F.coalesce(c == F.lit(float("-inf")), F.lit(False))
-                         if self.dtype.kind == "f" else F.lit(False))
+        return self == float("-inf")
 
     def _isposinf(self, *a, **kw):
-        return self._map(lambda c: F.coalesce(c == F.lit(float("inf")), F.lit(False))
-                         if self.dtype.kind == "f" else F.lit(False))
+        return self == float("inf")
 
     def _isnat(self, *a, **kw):
         if self.dtype.kind != "M":
             raise TypeError("isnat only supports datetime arrays")
-        return self._map(lambda c: c.isNull())
+        return self._isnan()
 
     def _iscomplex(self):
         return self._map(lambda c: F.lit(False))
@@ -234,7 +230,7 @@ class array:
         return self._map(lambda c: F.lit(self.dtype.kind in "iuf b".replace(" ", "")))
 
     def _logical_unop(self):
-        return self._map(lambda c: ~c.cast("boolean"))
+        return self._ufunc(np.logical_not)
 
     _logical_not = _logical_unop
 
@@ -385,10 +381,9 @@ class array:
     def _norm(self, ord=None, axis=None, keepdims=False):
         if ord not in (None, 2):
             raise NotImplementedError("only the Frobenius/L2 norm")
-        sq = self._map(lambda c: c * c)
-        s = sq.sum(axis=axis)
+        s = (self * self).sum(axis=axis)
         if isinstance(s, array):
-            return s._map(lambda c: F.sqrt(c))
+            return s._ufunc(np.sqrt)
         return float(np.sqrt(s))
 
     # ------------------------------------------------------------- shaping
@@ -511,12 +506,8 @@ class array:
         from modin_spark.pandas.series import _UFUNC_EXPRS
 
         name = ufunc.__name__
-        simple = {"isnan": self._isnan, "isinf": self._isinf, "isfinite": self._isfinite}
-        if method == "__call__" and len(inputs) == 1 and inputs[0] is self:
-            if name in simple:
-                return simple[name]()
-            if name in _UFUNC_EXPRS:
-                return self._ufunc(ufunc)
+        if method == "__call__" and len(inputs) == 1 and inputs[0] is self and name in _UFUNC_EXPRS:
+            return self._ufunc(ufunc)
         binops = {"add": "add", "subtract": "sub", "multiply": "mul",
                   "true_divide": "div", "floor_divide": "floordiv",
                   "power": "pow", "remainder": "mod",

@@ -197,6 +197,18 @@ def _replace_key_fits(k, st: T.DataType) -> bool:
     return True
 
 
+# value-semantics dtype metadata a Series can carry past its Spark type
+_META_ATTRS = ("_cat_dtype", "_post_to_pandas", "_astype_str_null", "_ext_dtype", "_tz_meta")
+
+
+def _nullable(x) -> bool:
+    """``x`` carries a pandas nullable extension dtype (NA compares as NA).
+    An inferred categorical's dtype rides the same attribute but compares
+    as plain values."""
+    d = getattr(x, "_ext_dtype", None)
+    return d is not None and not isinstance(d, pd.CategoricalDtype)
+
+
 def _flex_method(op: str, fn_of, reverse: bool = False):
     """Series flex method of operator ``op``: the operator itself, or, with
     ``fill_value``, the column function ``fn_of(self, other)`` on the
@@ -452,8 +464,7 @@ class Series:
         """Carry value-semantics metadata (categorical dtype, astype-str
         null marker, tz meta, ext dtype) onto a ROW-SUBSET result: the
         values are unchanged, so the declared dtype must survive."""
-        for attr in ("_cat_dtype", "_post_to_pandas", "_astype_str_null",
-                     "_ext_dtype", "_tz_meta"):
+        for attr in _META_ATTRS:
             v = getattr(self, attr, None)
             if v is not None and getattr(out, attr, None) is None:
                 setattr(out, attr, v)
@@ -461,12 +472,31 @@ class Series:
 
     def _keep_meta(self, out: "Series", new) -> "Series":
         """``out`` (this Series with some cells set to ``new``) keeps this
-        Series' dtype metadata, unless ``new`` may lie outside a categorical's
-        categories (pandas raises there; the engine answers plain values)."""
+        Series' dtype metadata when ``new`` fits it: a missing value, one of
+        a categorical's categories, a value pandas can store in an extension
+        dtype (or a Series of that dtype), or, for the other metadata, a
+        value that leaves the Spark type as it was. Otherwise pandas upcasts
+        or raises; the engine answers plain values."""
         cd = getattr(self, "_cat_dtype", None)
-        if cd is not None and new is not None and (isinstance(new, Series) or new not in set(cd.categories)):
-            return out
-        return self._copy_scalar_meta(out)
+        ed = getattr(self, "_ext_dtype", None)
+        if new is None or (pd.api.types.is_scalar(new) and pd.isna(new)):
+            fits = True
+        elif cd is not None:
+            fits = not isinstance(new, Series) and new in set(cd.categories)
+        elif isinstance(new, Series):
+            fits = getattr(new, "_ext_dtype", None) == ed if ed is not None else (
+                any(getattr(self, a, None) is not None for a in _META_ATTRS)
+                and out.spark_type == self.spark_type)
+        elif ed is not None:
+            try:
+                pd.array([new], dtype=ed)
+                fits = True
+            except (TypeError, ValueError):
+                fits = False
+        else:
+            fits = (any(getattr(self, a, None) is not None for a in _META_ATTRS)
+                    and out.spark_type == self.spark_type)
+        return self._copy_scalar_meta(out) if fits else out
 
     def __getitem__(self, key):
         """pandas Series selection: boolean-Series/array masks filter rows,
@@ -624,17 +654,16 @@ class Series:
         name = self._name if not isinstance(other, Series) or other._name == self._name else None
         if comparison:
             filter_expr = e  # raw pushdown-friendly predicate
-            ext = (getattr(self, "_ext_dtype", None) is not None
-                   or getattr(other, "_ext_dtype", None) is not None)
-            if ext:
+            if _nullable(self) or _nullable(other):
                 # pandas nullable-dtype comparison: NA stays NA (BooleanDtype)
                 # — the mask VALUE keeps Spark's 3VL NULL; used as a filter it
                 # drops NULL rows, exactly pandas' NA-is-False mask indexing
                 out = Series(target, e, refs, name=name, filter_expr=filter_expr)
                 out._ext_dtype = pd.BooleanDtype()
                 out._post_to_pandas = lambda x: x.astype("boolean")
-                return out
-            e = F.coalesce(e, F.lit(False))
+                return out._as_bool()
+            return Series(target, F.coalesce(e, F.lit(False)), refs, name=name,
+                          filter_expr=filter_expr)._as_bool()
         return Series(target, e, refs, name=name, filter_expr=filter_expr)
 
     def _fill_binary(self, other, fn, reverse, fill_value) -> "Series":
@@ -887,8 +916,7 @@ class Series:
         return self._binary(o, lambda a, b: a == b, comparison=True, strict=True, op="eq")
 
     def __ne__(self, o):  # type: ignore[override]
-        if (getattr(self, "_ext_dtype", None) is not None
-                or getattr(o, "_ext_dtype", None) is not None):
+        if _nullable(self) or _nullable(o):
             return self._binary(o, lambda a, b: a != b, comparison=True, strict=True, op="ne")
         return self._binary(o, lambda a, b: ~F.coalesce(a == b, F.lit(False)), comparison=True, strict=True, op="ne")
 
@@ -910,8 +938,7 @@ class Series:
         return self._binary(o, lambda a, b: a == b, comparison=True, op="eq")
 
     def ne(self, o):
-        if (getattr(self, "_ext_dtype", None) is not None
-                or getattr(o, "_ext_dtype", None) is not None):
+        if _nullable(self) or _nullable(o):
             # nullable ext dtype: NA != x stays NA (3VL), like __ne__
             return self._binary(o, lambda a, b: a != b, comparison=True, op="ne")
         return self._binary(o, lambda a, b: ~F.coalesce(a == b, F.lit(False)), comparison=True, op="ne")
@@ -929,20 +956,20 @@ class Series:
         return self._binary(o, lambda a, b: a >= b, comparison=True, op="ge")
 
     def __and__(self, o):
-        out = self._binary(o, lambda a, b: F.coalesce(a, F.lit(False)) & F.coalesce(b, F.lit(False)))
+        out = self._binary(o, lambda a, b: F.coalesce(a, F.lit(False)) & F.coalesce(b, F.lit(False)))._as_bool()
         if isinstance(o, Series) and self._filter_expr is not None and o._filter_expr is not None:
             # 3VL AND filters identically to the coalesced version
             out._filter_expr = self._filter_expr & o._filter_expr
         return out
 
     def __or__(self, o):
-        out = self._binary(o, lambda a, b: F.coalesce(a, F.lit(False)) | F.coalesce(b, F.lit(False)))
+        out = self._binary(o, lambda a, b: F.coalesce(a, F.lit(False)) | F.coalesce(b, F.lit(False)))._as_bool()
         if isinstance(o, Series) and self._filter_expr is not None and o._filter_expr is not None:
             out._filter_expr = self._filter_expr | o._filter_expr
         return out
 
     def __xor__(self, o):
-        return self._binary(o, lambda a, b: F.coalesce(a, F.lit(False)) != F.coalesce(b, F.lit(False)))
+        return self._binary(o, lambda a, b: F.coalesce(a, F.lit(False)) != F.coalesce(b, F.lit(False)))._as_bool()
 
     __rand__ = __and__
     __ror__ = __or__
@@ -951,16 +978,22 @@ class Series:
     def _is_integral(self) -> bool:
         return isinstance(self.spark_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
 
+    def _as_bool(self) -> "Series":
+        """Mark this predicate result as boolean: a later ``~`` or ``-``
+        reads its type without an analysis round trip."""
+        object.__setattr__(self, "_stype_cache", (self._frame, T.BooleanType()))
+        return self
+
     def __invert__(self):
         sj = getattr(self, "_semijoin", None)
-        # a comparison result (it carries its filter predicate) is boolean
-        # by construction; integers invert bitwise, as in numpy
-        if self._filter_expr is None and sj is None and self._is_integral():
+        # integers invert bitwise, as in numpy; a predicate (marked by
+        # _as_bool) answers this without a type probe
+        if sj is None and self._is_integral():
             return self._map1(F.bitwise_not)
         s = Series(self._frame, ~self._expr.cast("boolean"), self._refs, self._name)
         if sj is not None:  # ~isin(Series) flips to an anti-join
             s._semijoin = (sj[0], sj[1], not sj[2])
-        return s
+        return s._as_bool()
 
     def __neg__(self):
         if isinstance(self.spark_type, T.BooleanType):
@@ -984,13 +1017,13 @@ class Series:
 
     def isna(self) -> "Series":
         st = self.spark_type
-        return self._map1(lambda c: qc.null_or_nan(c, st))
+        return self._map1(lambda c: qc.null_or_nan(c, st))._as_bool()
 
     isnull = isna
 
     def notna(self) -> "Series":
         inv = self.isna()
-        return Series(inv._frame, ~inv._expr, inv._refs, inv._name)
+        return Series(inv._frame, ~inv._expr, inv._refs, inv._name)._as_bool()
 
     notnull = notna
 
@@ -1225,7 +1258,7 @@ class Series:
             # /root/reference/modin/core/storage_formats/pandas/query_compiler.py:2009)
             s = Series(self._frame, F.lit(False), self._refs, self._name)
             s._semijoin = (values, self._expr, False)
-            return s
+            return s._as_bool()
         vals = list(values)
         # pandas: a missing sentinel IN the values list matches missing
         # elements (SQL IN never matches NULL) — and the sentinels don't
@@ -1237,13 +1270,13 @@ class Series:
         st = self.spark_type
         match_missing = has_nan if isinstance(st, (T.FloatType, T.DoubleType)) else has_none
         if not match_missing:
-            return self._map1(lambda c: F.coalesce(c.isin(rest), F.lit(False)))
+            return self._map1(lambda c: F.coalesce(c.isin(rest), F.lit(False)))._as_bool()
 
         def f(c):
             hit = F.coalesce(c.isin(rest), F.lit(False)) if rest else F.lit(False)
             return hit | qc.null_or_nan(c, st)
 
-        return self._map1(f)
+        return self._map1(f)._as_bool()
 
     def between(self, left, right, inclusive="both") -> "Series":
         ops = {
@@ -1252,7 +1285,7 @@ class Series:
             "left": lambda c: (c >= _lit(left)) & (c < _lit(right)),
             "right": lambda c: (c > _lit(left)) & (c <= _lit(right)),
         }
-        return self._map1(lambda c: F.coalesce(ops[inclusive](c), F.lit(False)))
+        return self._map1(lambda c: F.coalesce(ops[inclusive](c), F.lit(False)))._as_bool()
 
     def where(self, cond: "Series", other=None) -> "Series":
         # pandas accepts callables for cond/other (applied to self)
@@ -2055,6 +2088,12 @@ def _optional_groups(pat: str, flags: int = 0) -> set:
     return opts
 
 
+# str methods whose result is boolean
+_STR_PREDICATES = frozenset({
+    "contains", "startswith", "endswith", "match", "fullmatch", "isalpha", "isdigit",
+    "isdecimal", "isnumeric", "isalnum", "isspace", "islower", "isupper", "istitle"})
+
+
 class StringMethods:
     def __init__(self, s: Series):
         self._s = s
@@ -2299,7 +2338,8 @@ class StringMethods:
             raise NotImplementedError(f"str.{name}")
 
         def call(*args, **kwargs):
-            return self._s._map1(lambda c: STR_FUNCS[name](c, *args, **kwargs))
+            out = self._s._map1(lambda c: STR_FUNCS[name](c, *args, **kwargs))
+            return out._as_bool() if name in _STR_PREDICATES else out
 
         return call
 
@@ -3099,6 +3139,9 @@ _UFUNC_EXPRS = {
     "tanh": F.tanh, "sign": F.signum, "negative": lambda c: -c,
     "rint": lambda c: F.round(c, 0), "square": lambda c: c * c,
     "isnan": lambda c: qc.null_or_nan(c, T.DoubleType()), "cbrt": F.cbrt,
+    "isinf": lambda c: F.coalesce(F.abs(c) == F.lit(float("inf")), F.lit(False)),
+    "isfinite": lambda c: F.coalesce(~F.isnan(c) & (F.abs(c) != F.lit(float("inf"))), F.lit(False)),
+    "logical_not": lambda c: ~c.cast("boolean"),
 }
 def _ufunc_greatest(a, b, which):
     # np.maximum/minimum(series, other): same-lineage expression pairing

@@ -228,6 +228,58 @@ def test_divergence(spark, case):
     _check(build(mpd, mpd.from_pandas), build(pd, lambda p: p), check_dtype=check_dtype)
 
 
+def test_inferred_category_compares_as_values(spark):
+    """An inferred categorical's missing cell compares as pandas does: False
+    for ``==``, True for ``!=``, and a mask keeps plain bool."""
+    import modin_spark.pandas as mpd
+
+    p = DATA["str"].astype("category")
+    m = mpd.from_pandas(DATA["str"]).astype("category")
+    _check(m["x"] == "a", p["x"] == "a", check_dtype=True)
+    _check(m["x"] != "a", p["x"] != "a", check_dtype=True)
+    _check(m["y"].ne("c"), p["y"].ne("c"), check_dtype=True)
+    _check(m[m["x"] != "a"], p[p["x"] != "a"])
+
+
+def test_extension_overlay_kept_only_where_the_value_fits(spark):
+    """where/mask/fillna keep an Int64 column's dtype for a value Int64 can
+    hold; a float replacement gives plain float values (pandas 2.2 raises
+    there), not a failing Int64 cast."""
+    import modin_spark.pandas as mpd
+
+    p = pd.DataFrame({"i": pd.array([1, None, 3, 4], dtype="Int64")})
+    m = mpd.from_pandas(p)
+    cond = pd.DataFrame({"i": [True, False, True, False]})
+    _check(m.where(mpd.from_pandas(cond), 7), p.where(cond, 7), check_dtype=True)
+    _check(m.where(mpd.from_pandas(cond)), p.where(cond), check_dtype=True)
+    _check(m.fillna(0), p.fillna(0), check_dtype=True)
+    plain = p.astype("float64")
+    _check(m.where(mpd.from_pandas(cond), 0.5), plain.where(cond, 0.5), check_dtype=True)
+    _check(m.mask(mpd.from_pandas(cond), 0.5), plain.mask(cond, 0.5), check_dtype=True)
+    _check(m["i"].fillna(0.5), plain["i"].fillna(0.5), check_dtype=True)
+
+
+def test_predicate_invert_needs_no_type_probe(spark, monkeypatch):
+    """``~`` of a predicate (comparison, isna, isin, str test, &) reads its
+    boolean type without an analysis round trip."""
+    import modin_spark.pandas as mpd
+    from modin_spark.pandas.series import Series
+
+    m = mpd.from_pandas(DATA["float"].assign(s=DATA["str"]["x"]))
+    v = m["x"] * 2
+    masks = [v > 1, v.isna(), v.notna(), v.isin([2.5]), m["s"].str.contains("d", na=False),
+             (v > 1) & (v < 5), ~(v > 1)]
+    probes = []
+    real = Series._spark_type_uncached
+    monkeypatch.setattr(Series, "_spark_type_uncached",
+                        lambda self, fr: probes.append(1) or real(self, fr))
+    inverted = [~mask for mask in masks]
+    assert probes == []
+    exp_v = DATA["float"]["x"] * 2
+    _check(inverted[3], ~exp_v.isin([2.5]))
+    _check(inverted[4], ~DATA["str"]["x"].str.contains("d", na=False).rename("s"))
+
+
 # ------------------------------------------------------------ plan shape
 @pytest.fixture(scope="module")
 def tracer(spark):
@@ -282,3 +334,22 @@ def test_same_lineage_operands_stay_one_plan(spark, tracer):
     assert _joins(m.where(m > 0)) == 0 and _joins(m.mask(m > 0, 0)) == 0
     _check(clip(), p.clip(lower=p["y"] * 2, axis=0))
     _check(where(), p.where(p > 0, -p))
+
+
+def test_projection_keeps_no_source_frame_alive(spark):
+    """A projection remembers how to replay itself on a sibling plan, not
+    the frame it was projected from: a chain of column ops frees each
+    intermediate frame."""
+    import gc
+    import weakref
+
+    import modin_spark.pandas as mpd
+
+    m = mpd.from_pandas(DATA["float"])
+    step = m * 1.01
+    first = weakref.ref(step._frame)
+    for _ in range(3):
+        step = step * 1.01
+    gc.collect()
+    assert first() is None
+    assert _joins(m.where(m > 0, -m)) == 0

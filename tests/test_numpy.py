@@ -159,3 +159,23 @@ def test_ufunc_tail(arrs):
     frac = mnp.array(np.array([0.1, 0.5, 0.9]))
     assert close(mnp.arcsin(frac), np.arcsin(np.array([0.1, 0.5, 0.9])))
     assert close(mnp.arccos(frac), np.arccos(np.array([0.1, 0.5, 0.9])))
+
+
+def test_unary_operators_and_predicates_match_numpy(spark):
+    """``-a``/``~a`` run the frame's Series operators, the inf/finite
+    predicates and logical_not the Series ufunc table, as np.negative does."""
+    i, f = np.array([1, -2, 3]), np.array([1.0, np.inf, -np.inf, np.nan])
+    b = np.array([True, False, True])
+    mi, mf, mb = mnp.array(i), mnp.array(f), mnp.array(b)
+    for got, want in [(-mi, -i), (np.negative(mi), np.negative(i)), (~mi, ~i), (~mb, ~b),
+                      (-mf, -f), (mnp.isinf(mf), np.isinf(f)), (mnp.isfinite(mf), np.isfinite(f)),
+                      (mnp.isposinf(mf), np.isposinf(f)), (mnp.isneginf(mf), np.isneginf(f)),
+                      (mnp.isinf(mi), np.isinf(i)), (mnp.isfinite(mi), np.isfinite(i)),
+                      (mnp.isposinf(mi), np.isposinf(i)), (np.isinf(mf), np.isinf(f)),
+                      (mnp.logical_not(mnp.array([1.0, 0.0])), np.logical_not([1.0, 0.0]))]:
+        got = got._to_numpy()
+        np.testing.assert_array_equal(got, want)
+        assert got.dtype == want.dtype
+    t = np.array(["2020-01-01", "NaT"], dtype="M8[ns]")
+    np.testing.assert_array_equal(mnp.isnat(mnp.array(t))._to_numpy(), np.isnat(t))
+    assert close(mnp.linalg.norm(mnp.array(B), axis=1), np.linalg.norm(B, axis=1))
